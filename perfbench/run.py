@@ -8,8 +8,11 @@ Usage (from the repository root):
 
 The first run builds graft and the harness with sbt (perfbench/build.sbt)
 and caches the classpath under perfbench/target; later runs reuse it
-until a source file changes. Every run works in a fresh directory under
-.perfbench_work/ and removes it at the end.
+until a source file changes. Every run writes its generated inputs to a
+fresh directory under .perfbench_work/, and the benchmark process keeps
+Spark scratch, the warehouse and the server roots in a directory of its
+own under graft's scratch tier (graft.Scratch.localDir: tmpfs when there
+is one); both are removed at the end.
 
 Output: a `report {...}` line with the workload's named metrics, a
 `host {...}` line (nproc, heap, Spark version, seed, CPU steal share),
@@ -79,15 +82,6 @@ def ensure_build():
     return lines[-1].strip()
 
 
-def cpu_ticks():
-    try:
-        with open("/proc/stat") as f:
-            vals = [int(v) for v in f.readline().split()[1:]]
-        return (vals[7] if len(vals) > 7 else 0), sum(vals)
-    except OSError:
-        return 0, 0
-
-
 def heap_arg():
     """A quarter of physical memory, between 2 and 4 GiB."""
     try:
@@ -138,20 +132,18 @@ def main():
                "-Dspark.ui.enabled=false", *ADD_OPENS, "-cp", classpath,
                "graft.perfbench.Main", *jvm_args]
         limit = None if (a.queries == "all" or a.record) else max(30.0, RUN_LIMIT_S - (time.monotonic() - t_start))
-        steal0, total0 = cpu_ticks()
         try:
             proc = subprocess.run(cmd, cwd=work, stdout=subprocess.PIPE, text=True, timeout=limit)
         except subprocess.TimeoutExpired:
             fail(f"run exceeded {limit:.0f} s", 4)
-        steal1, total1 = cpu_ticks()
         lines = proc.stdout.strip().splitlines()
         if proc.returncode != 0 or not lines:
             sys.stderr.write(proc.stdout[-4000:])
             fail(f"benchmark process exited with {proc.returncode}", 5)
         result = json.loads(lines[-1])
         report = next(json.loads(l[len("report "):]) for l in lines if l.startswith("report "))
-        host = {k: report[k] for k in ("nproc", "heap_max_mb", "spark_version", "seed", "workload", "traced")}
-        host["steal_frac"] = (steal1 - steal0) / (total1 - total0) if total1 > total0 else 0.0
+        host = {k: report[k] for k in ("nproc", "heap_max_mb", "spark_version", "seed", "workload", "traced",
+                                       "steal_frac")}
         host["wall_s"] = round(time.monotonic() - t_start, 3)
         if a.trace and os.path.exists(os.path.join(work, "spans.jsonl")):
             spans = os.path.join(ROOT, ".perfbench_work", f"spans-{a.workload}-{a.seed}.jsonl")
@@ -161,6 +153,12 @@ def main():
         print("host " + json.dumps(host))
         print(json.dumps(result))
     finally:
+        scratch_note = os.path.join(work, "scratch_dir")
+        if os.path.exists(scratch_note):
+            with open(scratch_note) as f:
+                scratch = f.read().strip()
+            if os.path.basename(scratch).startswith("perfbench-"):
+                shutil.rmtree(scratch, ignore_errors=True)
         shutil.rmtree(work, ignore_errors=True)
 
 

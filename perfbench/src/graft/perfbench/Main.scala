@@ -63,18 +63,20 @@ object Main {
   /** Any failure ends the process with a non-zero code and no result
     * line; `System.exit` also stops Spark's and the server's threads. */
   def main(args: Array[String]): Unit = {
+    var scratch: File = null
     val code =
-      try { run(args); 0 }
+      try { run(args, dir => scratch = dir); 0 }
       catch { case e: Throwable =>
         System.err.println(s"[perfbench] run failed: $e")
         e.printStackTrace()
         1
       }
+      finally if (scratch != null) org.apache.commons.io.FileUtils.deleteQuietly(scratch)
     System.out.flush()
     System.exit(code)
   }
 
-  private def run(args: Array[String]): Unit = {
+  private def run(args: Array[String], created: File => Unit): Unit = {
     val opts = args.grouped(2).collect { case Array(k, v) if k.startsWith("--") => k.drop(2) -> v }.toMap
     def opt(k: String) = opts.getOrElse(k, throw new IllegalArgumentException(s"missing --$k"))
     val workload = opt("workload")
@@ -82,10 +84,18 @@ object Main {
     val seed = opt("seed").toLong
     val seconds = opt("seconds").toDouble
     val traced = opt("trace") == "1"
-    val workDir = new File(opt("work")).getAbsoluteFile
     val nproc = Runtime.getRuntime.availableProcessors
+    val (steal0, ticks0) = cpuTicks()
 
-    redirectScratch(new File(workDir, "scratch"))
+    // Spark scratch, the warehouse and the server roots live where graft
+    // puts its own scratch files (tmpfs when there is one); the path is
+    // left in the --work directory so the launcher can remove it should
+    // this process be killed.
+    val workDir = java.nio.file.Files.createTempDirectory(
+      Paths.get(graft.Scratch.localDir), s"perfbench-$workload-").toFile
+    created(workDir)
+    java.nio.file.Files.write(Paths.get(opt("work"), "scratch_dir"),
+      workDir.getPath.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val spark = SparkSession.builder().master(s"local[$nproc]")
       .appName(s"perfbench-$workload")
       .config("spark.sql.shuffle.partitions", nproc.toString)
@@ -113,6 +123,8 @@ object Main {
     }
     val setupS = sessionS + res.setupS
     val correct = res.failed == 0
+    val (steal1, ticks1) = cpuTicks()
+    val stealFrac = if (ticks1 > ticks0) (steal1 - steal0).toDouble / (ticks1 - ticks0) else 0.0
 
     val host = Map(
       "nproc" -> nproc.toString,
@@ -120,7 +132,8 @@ object Main {
       "spark_version" -> spark.version,
       "seed" -> seed.toString,
       "workload" -> workload,
-      "traced" -> traced.toString)
+      "traced" -> traced.toString,
+      "steal_frac" -> f"$stealFrac%.4f")
     val reportMetrics = (Metric("setup_s", setupS, "s") +:
       Metric("failed_frac", res.failed.toDouble / math.max(1L, res.attempted), "ratio") +: res.report)
     println("report " + Json.obj(host).dropRight(1) + ",\"metrics\":" + metricsJson(reportMetrics) + "}")
@@ -129,10 +142,11 @@ object Main {
       if (!traced) Metric("setup_s", setupS, "s") +: res.e2e
       else {
         val spans = link(tracer.allSpans)
-        val spansFile = new File(workDir, "spans.jsonl")
+        val spansFile = new File(opt("work"), "spans.jsonl")
         tracer.writeSpans(spans, spansFile.toPath)
         System.err.println(s"[perfbench] ${spans.size} spans written to $spansFile")
-        val measured = (res.layer ++ sparkTrace.metrics(res.ops) ++ selfTimes(spans)).map(m => m.name -> m).toMap
+        val measured = (res.layer ++ sparkTrace.metrics(res.ops) ++ selfTimes(spans) :+
+          Metric("host.steal_frac", stealFrac, "ratio")).map(m => m.name -> m).toMap
         LayerMetrics.map(n => measured.getOrElse(n, Metric(n, 0.0, unitOf(n))))
       }
     println(s"""{"correct":$correct,"attempted":${res.attempted},"failed":${res.failed},"metrics":${metricsJson(metrics)}}""")
@@ -192,15 +206,14 @@ object Main {
         Metric("trace.spans", spans.size, "count"))
   }
 
-  /** graft keeps scratch files under `graft.Scratch.localDir`, which it
-    * resolves on first use; point it into the run's work directory
-    * before anything touches it, so the run writes only there. */
-  private def redirectScratch(dir: File): Unit = {
-    dir.mkdirs()
-    val cls = graft.Scratch.getClass
-    val field = cls.getDeclaredField("localDir"); field.setAccessible(true)
-    val flag = cls.getDeclaredField("bitmap$0"); flag.setAccessible(true)
-    field.set(null, dir.getAbsolutePath); flag.setBoolean(null, true)
-    require(graft.Scratch.localDir == dir.getAbsolutePath, "could not redirect graft.Scratch.localDir")
-  }
+  /** (steal ticks, total ticks) from the aggregate `cpu` line of
+    * /proc/stat; zeros where that file does not exist. */
+  def cpuTicks(): (Long, Long) =
+    try {
+      val src = scala.io.Source.fromFile("/proc/stat")
+      try {
+        val f = src.getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
+        (if (f.length > 7) f(7) else 0L, f.sum)
+      } finally src.close()
+    } catch { case _: Exception => (0L, 0L) }
 }

@@ -192,12 +192,18 @@ object QueryLibrary {
     val lat = perQuery.map { case (_, (c, a)) => c + a }
     val totalS = lat.sum
     val p50 = Stats.median(pooled) * 1000; val p95 = Stats.pct(lat, 0.95) * 1000
+    // construction alone (`fn(spark, dir)`, before the action), pooled
+    val constructs = names.flatMap(n => samples.getOrElse(n, Nil).map(_._1))
+    val constructP50 = Stats.median(constructs) * 1000
+    val constructMean = Stats.mean(constructs) * 1000
     val warehouse = Service.du(new java.io.File(ctx.work("warehouse")))
     val input = Service.du(new java.io.File(dataDir))
     val report = Seq(
       Metric("query_total_s", totalS, "s"),
       Metric("query_p50_ms", p50, "ms"),
       Metric("query_p95_ms", p95, "ms"),
+      Metric("construct_p50_ms", constructP50, "ms"),
+      Metric("construct_mean_ms", constructMean, "ms"),
       Metric("build_s", buildS, "s"),
       Metric("query_passes", passes, "count"),
       Metric("queries", names.size, "count"))
@@ -215,6 +221,7 @@ object QueryLibrary {
       e2e = Seq(
         Metric("op_p50_ms", p50, "ms"),
         Metric("op_tail_ms", p95, "ms"),
+        Metric("second_mean_ms", constructMean, "ms"),
         Metric("work_per_s", names.size / totalS, "1/s"),
         Metric("side_work_s", buildS, "s"),
         Metric("space_amp", (warehouse + input).toDouble / input, "ratio")),

@@ -129,6 +129,7 @@ object Service {
     }
     def samples: Seq[Double] = lat.asScala.toSeq.map(_.doubleValue)
     def pct(q: Double): Double = Stats.pct(samples, q)
+    def mean: Double = Stats.mean(samples)
   }
 
   /** Run `clients` until `until` (nanoTime) or their own end; a client
@@ -184,27 +185,31 @@ object Service {
 
   /** Open a server on the root a closed server left, and compare every
     * session's row count with the rows acknowledged for it, reading
-    * with `clients` threads. Returns the number of sessions that
-    * disagree and the reopen-and-read time. */
+    * with `clients` threads. Each of these first reads after the reopen
+    * (an empty plan cache) is recorded in `cold`; returns the time from
+    * the reopen until the server has answered its login and
+    * container requests. */
   def reopenCheck(ctx: Ctx, root: String, gens: Seq[SessionGen], rotationBytes: Long,
-                  clients: Int): (Int, Double) = {
+                  clients: Int, cold: Ops): Double = {
     val t0 = System.nanoTime()
     val again = new Rig(ctx, root, rotationBytes)
+    val s = (System.nanoTime() - t0) / 1e9
     try {
-      val bad = new AtomicLong(0)
       parallel(clients) { c =>
         gens.indices.filter(_ % clients == c).map(gens).foreach { g =>
-          val r = again.get(g.name, None)
-          if (!(r.code == 200 && totalRows(r.body).contains(g.ackedRows))) {
-            bad.incrementAndGet()
-            System.err.println(s"[perfbench] after reopen bench/${g.name}: ${r.code} " +
-              s"rows=${totalRows(r.body)} acknowledged=${g.ackedRows}")
-          }
+          val g0 = System.nanoTime()
+          val r = try again.get(g.name, None) catch { case e: Exception => Resp(-1, String.valueOf(e)) }
+          if (r.code == 200 && totalRows(r.body).contains(g.ackedRows)) cold.ok((System.nanoTime() - g0) / 1e6)
+          else cold.fail(s"after reopen bench/${g.name}: ${r.code} rows=${totalRows(r.body)} acknowledged=${g.ackedRows}")
         }
       }
-      (bad.get.toInt, (System.nanoTime() - t0) / 1e9)
+      System.err.println(f"[perfbench] reopen: $s%.3f s, then read back: ${(System.nanoTime() - t0) / 1e9 - s}%.3f s")
+      s
     } finally again.close()
   }
+
+  /** Server reopens after the window; `restart_s` is their median. */
+  val Reopens = 5
 
   /** Bytes of every file under `dir`. */
   def du(dir: java.io.File): Long =
@@ -351,11 +356,10 @@ object Service {
         Seq(Metric("api.err_frac", ops.failed.get.toDouble / math.max(1L, ops.attempted.get), "ratio"))
     val userBytes = gens.map(_.ackedBytes).sum.toDouble
     val spaceAmp = du(new java.io.File(rig.root, "data")) / userBytes
-    // restart three times: close, reopen on the same root, read back
+    // restart: close, reopen on the same root, read back
     rig.close()
-    val restarts = (0 until 3).map { _ => reopenCheck(ctx, rig.root, gens, rotation, clients) }
-    val badSessions = restarts.map(_._1).sum
-    val restartS = Stats.median(restarts.map(_._2))
+    val cold = new Ops
+    val restartS = Stats.median((0 until Reopens).map { _ => reopenCheck(ctx, rig.root, gens, rotation, clients, cold) })
     val done = ops.attempted.get - ops.failed.get
     val report = Seq(
       Metric("read_per_s", done / windowS, "1/s"),
@@ -363,13 +367,16 @@ object Service {
       Metric("read_p95_ms", ops.pct(0.95), "ms"),
       Metric("read_p99_ms", ops.pct(0.99), "ms"),
       Metric("read_samples", ops.attempted.get, "count"),
+      Metric("cold_read_p50_ms", cold.pct(0.5), "ms"),
+      Metric("cold_read_mean_ms", cold.mean, "ms"),
       Metric("restart_s", restartS, "s"))
     Result(
-      attempted = ops.attempted.get + gens.size, failed = ops.failed.get + badSessions,
+      attempted = ops.attempted.get + cold.attempted.get, failed = ops.failed.get + cold.failed.get,
       setupS = setup,
       e2e = Seq(
         Metric("op_p50_ms", ops.pct(0.5), "ms"),
         Metric("op_tail_ms", ops.pct(0.95), "ms"),
+        Metric("second_mean_ms", cold.mean, "ms"),
         Metric("work_per_s", done / windowS, "1/s"),
         Metric("side_work_s", restartS, "s"),
         Metric("space_amp", spaceAmp, "ratio")),
@@ -452,6 +459,7 @@ object Service {
     val w0 = System.nanoTime()
     burst(WarmupBurstS, warm, warm)
     val warmupS = (System.nanoTime() - w0) / 1e9
+    val warmupRows = gens.map(_.ackedRows.toLong).sum
 
     rig.server.readTimings.clear()
     rig.server.recordReadTimings = tracer.enabled
@@ -478,27 +486,29 @@ object Service {
         Seq(Metric("api.err_frac",
           (posts.failed.get + fresh.failed.get).toDouble / math.max(1L, posts.attempted.get + fresh.attempted.get), "ratio"))
     rig.close()
-    val restarts = (0 until 3).map { _ => reopenCheck(ctx, rig.root, gens, rotation, writers + 1) }
-    val badSessions = restarts.map(_._1).sum
-    val restartS = Stats.median(restarts.map(_._2))
-    val rowsPerS = gens.map(_.ackedRows.toLong).sum / writeS
+    val cold = new Ops
+    val restartS = Stats.median((0 until Reopens).map { _ => reopenCheck(ctx, rig.root, gens, rotation, writers + 1, cold) })
+    // rows acknowledged inside the timed bursts, over their write time
+    val rowsPerS = (gens.map(_.ackedRows.toLong).sum - warmupRows) / writeS
     val report = Seq(
       Metric("ingest_rows_per_s", rowsPerS, "rows/s"),
       Metric("post_p50_ms", posts.pct(0.5), "ms"),
       Metric("post_p99_ms", posts.pct(0.99), "ms"),
       Metric("post_samples", posts.attempted.get, "count"),
       Metric("fresh_read_p50_ms", fresh.pct(0.5), "ms"),
+      Metric("fresh_read_mean_ms", fresh.mean, "ms"),
       Metric("fresh_read_samples", fresh.attempted.get, "count"),
       Metric("settle_s", settleS, "s"),
       Metric("restart_s", restartS, "s"),
       Metric("space_amp", spaceAmp, "ratio"))
     Result(
-      attempted = posts.attempted.get + fresh.attempted.get + warm.attempted.get + gens.size,
-      failed = posts.failed.get + fresh.failed.get + warm.failed.get + badSessions + unreadable,
+      attempted = posts.attempted.get + fresh.attempted.get + warm.attempted.get + cold.attempted.get + gens.size,
+      failed = posts.failed.get + fresh.failed.get + warm.failed.get + cold.failed.get + unreadable,
       setupS = setup + warmupS,
       e2e = Seq(
         Metric("op_p50_ms", posts.pct(0.5), "ms"),
         Metric("op_tail_ms", posts.pct(0.99), "ms"),
+        Metric("second_mean_ms", fresh.mean, "ms"),
         Metric("work_per_s", rowsPerS, "1/s"),
         Metric("side_work_s", restartS, "s"),
         Metric("space_amp", spaceAmp, "ratio")),

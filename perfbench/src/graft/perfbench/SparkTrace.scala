@@ -10,8 +10,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Spark- and JVM-layer instruments for one measured window: a
   * `QueryExecutionListener` for Catalyst phase times and a
-  * `SparkListener` for jobs, stages and task metrics, plus GC time,
-  * heap peak and host CPU steal. Events are counted only between
+  * `SparkListener` for jobs, stages and task metrics, plus GC time and
+  * heap peak. Events are counted only between
   * [[begin]] and [[end]]. A job's parent span is the `perfbench.span`
   * local property of the thread that submitted it; a Catalyst span gets
   * the parent of its execution's jobs at [[end]]. */
@@ -85,7 +85,6 @@ final class SparkTrace(spark: SparkSession, tracer: Tracer, slots: Int) {
     .filter(_.getType == java.lang.management.MemoryType.HEAP)
   private def gcMs: Long = gcBeans.map(b => math.max(0L, b.getCollectionTime)).sum
   private var gc0 = 0L
-  private var steal0 = (0L, 0L)
   private var t0 = 0L
   var windowS = 0.0
 
@@ -103,12 +102,12 @@ final class SparkTrace(spark: SparkSession, tracer: Tracer, slots: Int) {
   def begin(): Unit = {
     org.apache.spark.sql.PerfbenchHooks.drain(spark.sparkContext)
     heapPools.foreach(_.resetPeakUsage())
-    gc0 = gcMs; steal0 = SparkTrace.cpuTicks(); t0 = System.nanoTime()
+    gc0 = gcMs; t0 = System.nanoTime()
     active = tracer.enabled
     tracer.recording = true
   }
 
-  /** Close the window: drain the listener bus, then fold the JVM/host
+  /** Close the window: drain the listener bus, then fold the JVM
     * figures and the Catalyst spans into the tracer and stop recording. */
   def end(): Unit = {
     windowS = (System.nanoTime() - t0) / 1e9
@@ -116,9 +115,6 @@ final class SparkTrace(spark: SparkSession, tracer: Tracer, slots: Int) {
     active = false
     tracer.addSum("jvm.gc_ms", (gcMs - gc0).toDouble)
     tracer.addSum("jvm.heap_peak_bytes", heapPools.map(_.getPeakUsage.getUsed).sum.toDouble)
-    val (steal1, total1) = SparkTrace.cpuTicks()
-    val dTotal = total1 - steal0._2
-    tracer.addSum("host.steal_frac", if (dTotal > 0) (steal1 - steal0._1).toDouble / dTotal else 0.0)
     phaseSpans.asScala.foreach { case (query, s) =>
       val parent =
         if (queryExec.containsKey(query) && execParent.containsKey(queryExec.get(query)))
@@ -148,8 +144,7 @@ final class SparkTrace(spark: SparkSession, tracer: Tracer, slots: Int) {
       ("spark.shuffle_read_bytes", tracer.sum("spark.shuffle_read_bytes"), "bytes"),
       ("spark.spill_bytes", tracer.sum("spark.spill_bytes"), "bytes"),
       ("jvm.gc_s", tracer.sum("jvm.gc_ms") / 1000.0, "s"),
-      ("jvm.heap_peak_mb", tracer.sum("jvm.heap_peak_bytes") / (1024.0 * 1024.0), "MB"),
-      ("host.steal_frac", tracer.sum("host.steal_frac"), "ratio")).map(Metric.tupled)
+      ("jvm.heap_peak_mb", tracer.sum("jvm.heap_peak_bytes") / (1024.0 * 1024.0), "MB")).map(Metric.tupled)
   }
 }
 
@@ -159,15 +154,4 @@ object SparkTrace {
 
   def setParent(spark: SparkSession, span: Long): Unit =
     spark.sparkContext.setLocalProperty(SpanProperty, span.toString)
-
-  /** (steal ticks, total ticks) from the aggregate `cpu` line of
-    * /proc/stat; zeros where that file does not exist. */
-  def cpuTicks(): (Long, Long) =
-    try {
-      val src = scala.io.Source.fromFile("/proc/stat")
-      try {
-        val f = src.getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
-        (if (f.length > 7) f(7) else 0L, f.sum)
-      } finally src.close()
-    } catch { case _: Exception => (0L, 0L) }
 }

@@ -81,6 +81,8 @@ object Stats {
     }
   def median(xs: Seq[Double]): Double = pct(xs, 0.5)
 
+  def mean(xs: Seq[Double]): Double = if (xs.isEmpty) Double.NaN else xs.sum / xs.size
+
   /** Total length of the union of intervals, each clipped to [lo, hi]. */
   def covered(intervals: Seq[(Long, Long)], lo: Long, hi: Long): Long = {
     val clipped = intervals.map { case (a, b) => (math.max(a, lo), math.min(b, hi)) }
