@@ -82,6 +82,20 @@ def ensure_build():
     return lines[-1].strip()
 
 
+def check_manifest(result, traced):
+    """Fail unless the result holds exactly the metrics BENCHMARK.json
+    declares for this mode (per-layer when traced), each in its unit."""
+    path = os.path.join(ROOT, "BENCHMARK.json")
+    if not os.path.exists(path):
+        return
+    with open(path) as f:
+        declared = {m["name"]: m["unit"] for m in json.load(f)["per_layer" if traced else "end_to_end"]}
+    got = {k: v.get("unit") for k, v in result.get("metrics", {}).items()}
+    if got != declared:
+        diff = sorted(set(got.items()) ^ set(declared.items()))
+        fail(f"result metrics do not match BENCHMARK.json: {diff}", 6)
+
+
 def heap_arg():
     """A quarter of physical memory, between 2 and 4 GiB."""
     try:
@@ -141,6 +155,7 @@ def main():
             sys.stderr.write(proc.stdout[-4000:])
             fail(f"benchmark process exited with {proc.returncode}", 5)
         result = json.loads(lines[-1])
+        check_manifest(result, a.trace)
         report = next(json.loads(l[len("report "):]) for l in lines if l.startswith("report "))
         host = {k: report[k] for k in ("nproc", "heap_max_mb", "spark_version", "seed", "workload", "traced",
                                        "steal_frac")}

@@ -36,29 +36,34 @@ final class Ctx(val spark: SparkSession, val tracer: Tracer, val sparkTrace: Spa
 object Main {
   val Workloads = Seq("query_library", "service_read", "service_mixed")
 
-  /** Every per-layer metric, in report order; a traced run prints all
-    * of them, with 0 for a layer the workload does not reach. */
-  val LayerMetrics: Seq[String] = Seq(
-    "catalog.verify_token_p50_ms", "catalog.verify_token_p99_ms",
-    "catalog.session_access_p50_ms", "catalog.session_access_p99_ms",
-    "api.render_p50_ms", "api.render_p99_ms", "api.err_frac",
-    "ingest.read_flush_p50_ms", "ingest.read_flush_p99_ms", "ingest.flushes",
-    "ingest.posts_per_flush", "ingest.buffered_bytes_max",
-    "storage.append_p50_ms", "storage.append_p99_ms", "storage.append_busy_s",
-    "storage.read_plan_ms", "storage.read_plan_reuse", "storage.tier_stats_ms",
-    "storage.compactions", "storage.compact_busy_s", "storage.compact_bytes_retired",
-    "storage.bytes_written_per_user_byte", "storage.manifest_versions_max",
-    "storage.files_per_session",
-    "engine.read_query_p50_ms", "engine.read_query_p99_ms",
-    "ops.construct_s", "ops.action_s", "ops.relational_s", "ops.log_s", "ops.dedup_s",
-    "ops.similarity_s", "ops.text_s", "ops.multimodal_s", "ops.pipeline_s", "ops.builds_failed",
-    "spark.analysis_ms", "spark.optimization_ms", "spark.planning_ms",
-    "spark.jobs_per_op", "spark.stages_per_op", "spark.tasks_per_op", "spark.job_wait_ms",
-    "spark.executor_run_s", "spark.executor_cpu_s", "spark.slot_busy_frac",
-    "spark.shuffle_write_bytes", "spark.shuffle_read_bytes", "spark.spill_bytes",
-    "jvm.gc_s", "jvm.heap_peak_mb", "host.steal_frac",
-    "self.api_s", "self.storage_s", "self.catalyst_s", "self.spark_job_s", "self.ops_s",
-    "trace.spans")
+  /** Every per-layer metric with its unit, in report order; a traced
+    * run prints all of them, with 0 for a layer the workload does not
+    * reach. */
+  val LayerMetrics: Seq[(String, String)] = Seq(
+    "catalog.verify_token_p50_ms" -> "ms", "catalog.verify_token_p99_ms" -> "ms",
+    "catalog.session_access_p50_ms" -> "ms", "catalog.session_access_p99_ms" -> "ms",
+    "api.render_p50_ms" -> "ms", "api.render_p99_ms" -> "ms", "api.err_frac" -> "ratio",
+    "ingest.read_flush_p50_ms" -> "ms", "ingest.read_flush_p99_ms" -> "ms", "ingest.flushes" -> "count",
+    "ingest.posts_per_flush" -> "ratio", "ingest.buffered_bytes_max" -> "bytes",
+    "storage.append_p50_ms" -> "ms", "storage.append_p99_ms" -> "ms", "storage.append_busy_s" -> "s",
+    "storage.read_plan_ms" -> "ms", "storage.read_plan_reuse" -> "ratio", "storage.tier_stats_ms" -> "ms",
+    "storage.compactions" -> "count", "storage.compact_busy_s" -> "s",
+    "storage.compact_bytes_retired" -> "bytes", "storage.bytes_written_per_user_byte" -> "ratio",
+    "storage.manifest_versions_max" -> "count", "storage.files_per_session" -> "count",
+    "engine.read_query_p50_ms" -> "ms", "engine.read_query_p99_ms" -> "ms",
+    "ops.construct_s" -> "s", "ops.action_s" -> "s", "ops.relational_s" -> "s", "ops.log_s" -> "s",
+    "ops.dedup_s" -> "s", "ops.similarity_s" -> "s", "ops.text_s" -> "s", "ops.multimodal_s" -> "s",
+    "ops.pipeline_s" -> "s", "ops.builds_failed" -> "count",
+    "spark.analysis_ms" -> "ms", "spark.optimization_ms" -> "ms", "spark.planning_ms" -> "ms",
+    "spark.jobs_per_op" -> "count", "spark.stages_per_op" -> "count", "spark.tasks_per_op" -> "count",
+    "spark.job_wait_ms" -> "ms", "spark.executor_run_s" -> "s", "spark.executor_cpu_s" -> "s",
+    "spark.slot_busy_frac" -> "ratio", "spark.shuffle_write_bytes" -> "bytes",
+    "spark.shuffle_read_bytes" -> "bytes", "spark.spill_bytes" -> "bytes",
+    "jvm.gc_s" -> "s", "jvm.heap_peak_mb" -> "MB",
+    "host.steal_frac" -> "ratio",
+    "self.api_s" -> "s", "self.storage_s" -> "s", "self.catalyst_s" -> "s", "self.spark_job_s" -> "s",
+    "self.ops_s" -> "s",
+    "trace.spans" -> "count")
 
   /** Any failure ends the process with a non-zero code and no result
     * line; `System.exit` also stops Spark's and the server's threads. */
@@ -147,20 +152,13 @@ object Main {
         System.err.println(s"[perfbench] ${spans.size} spans written to $spansFile")
         val measured = (res.layer ++ sparkTrace.metrics(res.ops) ++ selfTimes(spans) :+
           Metric("host.steal_frac", stealFrac, "ratio")).map(m => m.name -> m).toMap
-        LayerMetrics.map(n => measured.getOrElse(n, Metric(n, 0.0, unitOf(n))))
+        LayerMetrics.map { case (n, unit) => measured.getOrElse(n, Metric(n, 0.0, unit)) }
       }
     println(s"""{"correct":$correct,"attempted":${res.attempted},"failed":${res.failed},"metrics":${metricsJson(metrics)}}""")
     System.out.flush()
     System.err.println(f"[perfbench] result after ${(System.currentTimeMillis() - ManagementFactory.getRuntimeMXBean.getStartTime) / 1000.0}%.3f s")
     spark.stop()
   }
-
-  private def unitOf(name: String): String =
-    if (name.endsWith("_ms")) "ms" else if (name.endsWith("_s")) "s"
-    else if (name.endsWith("_bytes") || name.endsWith("_retired") || name.endsWith("bytes_max")) "bytes"
-    else if (name.endsWith("_mb")) "MB"
-    else if (name.endsWith("_frac") || name.endsWith("_reuse") || name.contains("_per_")) "ratio"
-    else "count"
 
   private def metricsJson(ms: Seq[Metric]): String =
     ms.map(m => s"""${Json.str(m.name)}:{"value":${Json.num(finite(m.value))},"unit":${Json.str(m.unit)}}""")
