@@ -176,8 +176,8 @@ object Bench {
     // restores a combined number comparable to the pre-r14 definition
     // so cross-round tooling can't silently compare two different
     // metrics; `timing` names the sampling policy.
-    // builds_wall_sec (round-17, additive key): wall-clock of the
-    // overlapped build pass; builds_sec remains the per-row SUM so the
+    // builds_wall_sec (additive key): wall-clock of the serial build
+    // pass; builds_sec remains the per-row SUM so the
     // cross-round definition is unchanged. total_with_builds keeps
     // charging the SUM (the conservative, history-comparable number).
     val counts = s""""metric_version":2,"timing":"min2+3@10pct",""" +

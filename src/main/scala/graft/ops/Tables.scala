@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated test tables (TESTDATA.md).
   *
@@ -53,6 +54,34 @@ object Tables {
     * the loser is just unreferenced blocks the ContextCleaner reaps. */
   private val relCache =
     new java.util.concurrent.ConcurrentHashMap[(String, SparkSession, String), DataFrame]()
+
+  /** Resolved Parquet schema of each input table, keyed like [[relCache]]
+    * — (table, session, data dir) — plus the session's values of the
+    * confs that steer Parquet schema inference, so a conf change (say
+    * `spark.sql.legacy.parquet.nanosAsLong`) re-infers instead of
+    * serving a stale schema. Only the schema is cached, never the
+    * DataFrame: every [[load]] builds a fresh relation with new
+    * expression ids and a fresh file listing, so self-joins stay
+    * unambiguous and appended files are seen, but no schema-inference
+    * job runs after the first load. Entries share the memo's lifecycle:
+    * [[evictStopped]], [[invalidate]] and [[invalidateDir]] drop them
+    * with the relations. */
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, SparkSession, String, Seq[Option[String]]), StructType]()
+
+  /** The SQL confs Spark's Parquet schema inference reads. */
+  private val parquetInferenceConfs = Seq(
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled")
+
   private[ops] def memoized(rel: String, s: SparkSession, dir: String)
                            (build: => DataFrame): DataFrame = {
     evictStopped()
@@ -111,49 +140,60 @@ object Tables {
     * graph for the life of the process (a long-lived server or a test
     * harness cycling sessions grows the map monotonically). Blocks
     * can't be unpersisted through a stopped context — dropping the
-    * reference is the whole cleanup. Runs on every [[memoized]] call;
-    * the map holds O(relations × live sessions) entries, so the sweep
-    * is trivially cheap. */
-  private def evictStopped(): Unit = {
-    val it = relCache.keySet().iterator()
-    while (it.hasNext) if (it.next()._2.sparkContext.isStopped) it.remove()
+    * reference is the whole cleanup. Runs on every [[memoized]] and
+    * [[load]] call; the maps hold O(tables × live sessions) entries,
+    * so the sweep is trivially cheap. `stopped` is the eviction test,
+    * a parameter only so a spec can sweep a live session. */
+  private[ops] def evictStopped(
+      stopped: SparkSession => Boolean = _.sparkContext.isStopped): Unit = {
+    forget((s, _) => stopped(s)); ()
   }
 
-  /** Release every memoized relation belonging to `s`: evict the map
-    * entries and UNPERSIST the backing checkpoint blocks (eagerly, not
-    * waiting for the ContextCleaner — a long-lived session that has
-    * finished a curation run gets its executor memory back NOW). Wired
-    * to the service tier's graceful shutdown; safe to call at any time:
-    * the next [[memoized]] call simply rebuilds, and a concurrent query
-    * already holding a released DataFrame recomputes from lineage-free
-    * blocks... which are gone — so callers must not race invalidate
-    * with in-flight queries on the same session (the server calls it
-    * after quiescing its HTTP executor). Returns the number of
-    * relations released. */
-  def invalidate(s: SparkSession): Int = {
+  /** Remove every schema and relation entry whose (session, dir)
+    * matches `drop`, unpersisting the relations' checkpoint blocks
+    * while their session is alive. Returns the relations released. */
+  private def forget(drop: (SparkSession, String) => Boolean): Int = {
+    schemaCache.keySet().removeIf(k => drop(k._2, k._3))
     val it = relCache.entrySet().iterator()
     var n = 0
     while (it.hasNext) {
       val e = it.next()
-      if (e.getKey._2 eq s) {
+      val (_, s, dir) = e.getKey
+      if (drop(s, dir)) {
         it.remove(); n += 1
-        if (!s.sparkContext.isStopped) unpersistCheckpoint(e.getValue)
+        if (!s.sparkContext.isStopped)
+          try unpersistCheckpoint(e.getValue) catch { case _: Exception => () }
       }
     }
     n
   }
 
-  /** CACHE COHERENCE ON STORE MUTATION (round-12 verdict #2): the memo
-    * layer's stated contract is that a key's data dir is immutable for
-    * the life of a session — true for every parquet scan of the test
-    * tables, and violated by exactly one thing in the engine: the
-    * row-level purge ([[graft.storage.ManifestLog.rewriteExcluding]] /
+  /** Release every memoized relation and resolved schema belonging to
+    * `s`: evict the map entries and UNPERSIST the backing checkpoint
+    * blocks (eagerly, not waiting for the ContextCleaner — a long-lived
+    * session that has finished a curation run gets its executor memory
+    * back NOW). Wired to the service tier's graceful shutdown; safe to
+    * call at any time: the next [[memoized]] or [[load]] call simply
+    * rebuilds, and a concurrent query already holding a released
+    * DataFrame recomputes from lineage-free blocks... which are gone —
+    * so callers must not race invalidate with in-flight queries on the
+    * same session (the server calls it after quiescing its HTTP
+    * executor). Returns the number of relations released. */
+  def invalidate(s: SparkSession): Int = forget((owner, _) => owner eq s)
+
+  /** CACHE COHERENCE ON STORE MUTATION: the memo layer's stated
+    * contract is that a key's data dir is immutable for the life of a
+    * session — true for every parquet scan of the test tables, and
+    * violated by exactly one thing in the engine: the row-level purge
+    * ([[graft.storage.ManifestLog.rewriteExcluding]] /
     * [[graft.storage.LogStore.rewriteExcluding]]), which is the first
     * in-store MUTATOR. Without this hook a long-lived serving process
     * that purges and then reads a memoized derived relation keeps
     * serving the purged rows until restart — a right-to-be-forgotten
     * hole at the cache layer. Both purge paths call this with their
-    * store root after a successful swap.
+    * store root after a successful swap. A caller that rewrites an
+    * input table in place must call it too, so the next [[load]]
+    * re-infers the table's schema.
     *
     * Scope: every entry whose key dir OVERLAPS the mutated dir (equal,
     * contains it, or is contained by it — a relation memoized over a
@@ -161,29 +201,18 @@ object Tables {
     * EVERY session (the mutation is to shared storage, not to one
     * session's view). Compaction does NOT invalidate: its rewrite is
     * bag-equal by contract, so memoized VALUES stay correct and the
-    * checkpoint blocks hold rows, not file references. Returns entries
-    * dropped. */
+    * checkpoint blocks hold rows, not file references. Returns the
+    * relations dropped. */
   def invalidateDir(dir: String): Int = {
     def norm(p: String): String = {
       val u = new org.apache.hadoop.fs.Path(p).toUri.getPath
       if (u.length > 1 && u.endsWith("/")) u.dropRight(1) else u
     }
     val d = norm(dir)
-    def overlaps(other: String): Boolean = {
+    forget { (_, other) =>
       val o = norm(other)
       o == d || o.startsWith(d + "/") || d.startsWith(o + "/")
     }
-    val it = relCache.entrySet().iterator()
-    var n = 0
-    while (it.hasNext) {
-      val e = it.next()
-      if (overlaps(e.getKey._3)) {
-        it.remove(); n += 1
-        if (!e.getKey._2.sparkContext.isStopped)
-          try unpersistCheckpoint(e.getValue) catch { case _: Exception => () }
-      }
-    }
-    n
   }
 
   /** A localCheckpoint'ed DataFrame's plan is a LogicalRDD over the
@@ -196,8 +225,22 @@ object Tables {
       case _ => ()
     }
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Read input table `name` under `dir`. The first load per session
+    * (and set of inference confs) infers the schema, which costs a
+    * Spark job; later loads read with that schema — see
+    * [[schemaCache]]. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    evictStopped()
+    val path = s"$dir/$name.parquet"
+    val key = (name, spark, dir, parquetInferenceConfs.map(spark.conf.getOption))
+    val resolved = schemaCache.get(key)
+    if (resolved != null) spark.read.schema(resolved).parquet(path)
+    else {
+      val df = spark.read.parquet(path)
+      schemaCache.put(key, df.schema)
+      df
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

@@ -663,16 +663,19 @@ final class ManifestLog(spark: SparkSession, root: String,
     * would defeat the reproducibility contract. */
   def readAt(container: String, session: String, version: Long): DataFrame = {
     val p = new Path(manifestDir(container, session), f"v$version%020d")
-    // Plan cache keyed by the full (container, session, version) triple
-    // (round-17, guide §1/§5 — driver-side work): a pinned version is an
-    // immutable file set, so the PLAN is reusable by construction; the
-    // lifecycle runs re-plan the same pinned prior-run snapshot on every
-    // invocation, and the seal's replay citation re-planned the identical
-    // version twice per run. Only the unexecuted plan is cached — every
-    // execution still reads the files, so the seal's replay proof keeps
-    // reading disk. The hit path re-checks the manifest file exists, so
-    // an expired version fails as loudly as the uncached path did.
-    val key = (container, session + f"@v$version%020d")
+    // Plan cache keyed by the typed (container, session, version)
+    // triple: a pinned version is an immutable file set, so the PLAN is
+    // reusable by construction; the lifecycle runs re-plan the same
+    // pinned prior-run snapshot on every invocation, and the seal's
+    // replay citation plans the identical version twice per run. Only
+    // the unexecuted plan is cached — every execution still reads the
+    // files, so the seal's replay proof keeps reading disk.
+    // The hit path checks only that the manifest file still exists: an
+    // expired version fails as loudly as the uncached path, but a
+    // manifest damaged after its first read keeps serving the cached
+    // plan instead of failing integrity checks in readEntries. A plan
+    // enters the cache only once readEntries has accepted the manifest.
+    val key = (container, session, version)
     val hit = readAtCache.get(key)
     if (hit != null && fs.exists(p)) hit
     else {
@@ -693,9 +696,9 @@ final class ManifestLog(spark: SparkSession, root: String,
   /** Bounded LRU of [[readAt]] plans — see the cache note there. */
   private val readAtCache =
     java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, String), DataFrame](64, 0.75f, true) {
+      new java.util.LinkedHashMap[(String, String, Long), DataFrame](64, 0.75f, true) {
         override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, String), DataFrame]): Boolean =
+            e: java.util.Map.Entry[(String, String, Long), DataFrame]): Boolean =
           size() > ReadCacheMax
       })
 
