@@ -339,15 +339,6 @@ object ServiceScaleCheck {
     sb ++= "reads per session, so a larger FRACTION of its reads pay the\n"
     sb ++= "first-touch flush. Manifest resolve and the shared catalog are\n"
     sb ++= "measured OFF the critical path (stats and token rows).\n"
-    sb ++= "Round-12 note: IngestBuffer's idle-triggered concurrent flush\n"
-    sb ++= "drains quiet sessions ~25-50 ms after quiesce, so any reader\n"
-    sb ++= "arriving later pays zero flush (spec-pinned, deterministic —\n"
-    sb ++= "previously a 100 ms-timer race). THIS bench's settled phase\n"
-    sb ++= "deliberately starts within milliseconds of quiesce, inside any\n"
-    sb ++= "idle horizon, so its first GETs still pay the storage append —\n"
-    sb ++= "the irreducible read-your-writes term someone must pay; the p99\n"
-    sb ++= "movement here reflects only the parallel-drain convoy fix plus\n"
-    sb ++= "host jitter.\n"
     sb ++= "\nGC-sweep dedup under the maintenance lease (two gateways, one\n"
     sb ++= "manifest root, 100 ms maintenance cadence, ~2 s window; sweeps are\n"
     sb ++= "CAS-side idempotent so the unleased duplication is waste, not a\n"

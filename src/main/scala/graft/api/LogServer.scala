@@ -28,10 +28,11 @@ import graft.storage.{LogStore, LogTier, ManifestLog}
   * Scale note: the server is a thin driver-side gateway. Reads stream
   * via `toLocalIterator` (one partition resident at a time) and writes
   * go through a per-session write-behind buffer
-  * ([[graft.ingest.IngestBuffer]] — one Spark hot-tier append per
-  * flushed batch, not per POST) with size-triggered async compaction
-  * ([[Compactor]]), so the HTTP layer never materializes a dataset and
-  * never pays a per-request Spark job.
+  * ([[graft.ingest.IngestBuffer]] — one hot-tier append per flushed
+  * batch, not per POST) with size-triggered async compaction
+  * ([[Compactor]]), so the HTTP layer never materializes a dataset. A
+  * flush starts no Spark job on the [[ManifestLog]] tier: the batch's
+  * rows are already on the driver and are written there.
   */
 final class LogServer(spark: SparkSession, root: String, port: Int = 0,
                       bufferSizeLimit: Long = 10L * 1024 * 1024,
@@ -453,7 +454,7 @@ final class LogServer(spark: SparkSession, root: String, port: Int = 0,
       val o = mapper.createObjectNode()
       o.put("container", c); o.put("session", s)
       val arr = o.putArray("logs")
-      rows.foreach(r => arr.add(mapper.readTree(QueryEngine.rowToJson(r))))
+      rows.foreach(r => QueryEngine.putRow(arr.addObject(), r))
       o.put("total_rows", rows.length)
       o.put("files_scanned", filesScanned)
       val f = o.putObject("filter")
@@ -480,7 +481,7 @@ final class LogServer(spark: SparkSession, root: String, port: Int = 0,
         return error(ex, 400, e.getMessage)
       }
     // Buffered ack (reference main.py:330-337: 201 = buffered, not
-    // archived) — one Spark append per flushed batch, not per POST.
+    // archived) — one storage append per flushed batch, not per POST.
     ingestBuffer.add(c, s, rows)
     val o = mapper.createObjectNode()
     o.put("container", c); o.put("session", s)

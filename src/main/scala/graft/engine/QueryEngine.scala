@@ -133,20 +133,23 @@ final class QueryEngine(store: LogTier) {
 
 object QueryEngine {
   import com.fasterxml.jackson.databind.ObjectMapper
+  import com.fasterxml.jackson.databind.node.ObjectNode
   private val mapper = new ObjectMapper()
 
-  /** One log row → the reference's response-log JSON object shape:
-    * 5 keys, timestamp in Python-isoformat with +00:00 offset
-    * (reader.py:139-141, README.md:205-215). */
-  def rowToJson(r: org.apache.spark.sql.Row): String = {
-    val n = mapper.createObjectNode()
-    n.put("timestamp", graft.model.LogSchema.formatIso(r.getTimestamp(0).toInstant))
-    n.put("level", r.getString(1))
-    n.put("message", r.getString(2))
-    n.put("container", r.getString(3))
-    n.put("session", r.getString(4))
-    mapper.writeValueAsString(n)
+  /** Fills `node` with one log row in the reference's response-log
+    * JSON object shape: 5 keys, timestamp in Python-isoformat with
+    * +00:00 offset (reader.py:139-141, README.md:205-215). */
+  def putRow(node: ObjectNode, r: org.apache.spark.sql.Row): ObjectNode = {
+    node.put("timestamp", graft.model.LogSchema.formatIso(r.getTimestamp(0).toInstant))
+    node.put("level", r.getString(1))
+    node.put("message", r.getString(2))
+    node.put("container", r.getString(3))
+    node.put("session", r.getString(4))
   }
+
+  /** One log row → its [[putRow]] object, serialized. */
+  def rowToJson(r: org.apache.spark.sql.Row): String =
+    mapper.writeValueAsString(putRow(mapper.createObjectNode(), r))
 }
 
 final case class LogSummary(filesScanned: Long, totalRows: Long,

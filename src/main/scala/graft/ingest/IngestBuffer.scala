@@ -17,12 +17,14 @@ import org.apache.spark.sql.Row
   * sessions, and a periodic timer, and closed entirely on graceful
   * shutdown ([[close]] drains everything or throws).
   *
-  * Why it exists: a Spark parquet append is a (small) distributed job
-  * with ~tens of ms of fixed dispatch cost. Paying it once per 40-row
-  * POST caps the service path at ~20 appends/s regardless of cluster
-  * size; paying it once per flushed BATCH amortizes the dispatch over
-  * hundreds of posts, which is exactly how the reference reaches its
-  * throughput (one Arrow IPC write per 10 MiB of buffered rows).
+  * Why it exists: every storage append publishes one hot file and
+  * commits one manifest version. Appending per 40-row POST would leave
+  * a session with thousands of tiny files and versions for compaction
+  * and expiry to work through; one append per flushed BATCH bounds both
+  * by the flush cadence, which is how the reference batches too (one
+  * Arrow IPC write per 10 MiB of buffered rows). The append itself is
+  * cheap: a batch's rows are already on the driver, so the store writes
+  * them without a Spark job (10–20 ms on a 4-core host).
   *
   * Memory bound: `flushBytes` caps ONE session, but N hot sessions
   * would otherwise hold ~N·flushBytes on the gateway heap between timer
@@ -52,15 +54,13 @@ import org.apache.spark.sql.Row
   */
 final class IngestBuffer(flushBytes: Long = 4L * 1024 * 1024,
                          flushIntervalMs: Long = 100,
-                         globalFlushBytes: Long = 64L * 1024 * 1024,
-                         idleFlushMs: Long = 25)
+                         globalFlushBytes: Long = 64L * 1024 * 1024)
                         (flushFn: (String, String, Seq[Row]) => Unit)
     extends AutoCloseable {
 
   private final class Buf {
     val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
     var bytes = 0L
-    var lastAddNanos = System.nanoTime()
   }
 
   private val bufs = new ConcurrentHashMap[(String, String), Buf]()
@@ -101,7 +101,6 @@ final class IngestBuffer(flushBytes: Long = 4L * 1024 * 1024,
       // it can never slip in after the final drain.
       if (closed) throw new IllegalStateException("ingest buffer is closed")
       buf.rows ++= rows
-      buf.lastAddNanos = System.nanoTime()
       val b = rows.iterator.map(rowBytes).sum
       buf.bytes += b
       totalBytes.addAndGet(b)
@@ -171,15 +170,6 @@ final class IngestBuffer(flushBytes: Long = 4L * 1024 * 1024,
             throw e
         }
       }
-      // reaching here — a successful flush OR an already-empty buffer —
-      // proves the session is drained, so clear any idle-backoff
-      // marker. Clearing on the EMPTY case too closes a race (third
-      // review pass): a failing idle flush's marker-put can land after
-      // a concurrent timer flush drained its re-buffered rows; the
-      // timer's flushAll revisits every buffered session each tick and
-      // lands here with an empty snapshot, so such a raced-in marker
-      // lives at most one tick, never until close().
-      idleFailedAt.remove((container, session))
     }
   }
 
@@ -193,88 +183,11 @@ final class IngestBuffer(flushBytes: Long = 4L * 1024 * 1024,
     * metrics surface for the gateway's admission bound). */
   def bufferedBytes: Long = totalBytes.get()
 
-  /** IDLE-TRIGGERED early flush (round-12 verdict #5): flush sessions
-    * that have gone quiet for `idleFlushMs`, AHEAD of their first GET.
-    * The read path's p99 was the read-your-writes flush on first-touch
-    * reads — a GET landing inside the `flushIntervalMs` window pays
-    * the session's whole remaining buffer synchronously. A session
-    * still posting is never idle, so hot-session batching (and with it
-    * ingest throughput) is untouched; a session that just went quiet
-    * drains on the sweeper's dime instead of the first reader's. The
-    * cost is one cheap lock-and-check per buffered session per sweep
-    * plus the flushes themselves, which the 100 ms timer would have
-    * paid anyway — just later, and on the read path.
-    *
-    * Idle flushes dispatch CONCURRENTLY on a small pool (at most one
-    * in flight per session — the set guard): when a whole fleet of
-    * writers goes quiet at once (end of an ingest wave, exactly the
-    * measured first-touch shape), a sequential sweep would drain N
-    * sessions at one storage-append latency EACH, and first readers
-    * keep blocking on the per-session flush mutex for the whole
-    * convoy; overlapping the appends bounds the drain at ~one append
-    * latency total. What this does and does not buy is MEASURED
-    * (SURVEY §17): a reader arriving ≥ idle horizon + append latency
-    * after the session quiesced now pays ZERO flush (spec-pinned —
-    * pre-change it raced the 100 ms timer); a reader arriving INSIDE
-    * that window still pays the append, because read-your-writes
-    * means someone must, and that residual IS the bench's p99 term
-    * (its settled-read phase starts within ms of quiesce). */
-  private def flushIdle(): Unit = {
-    val now = System.nanoTime()
-    val horizon = now - idleFlushMs * 1000000L
-    // a session whose LAST idle flush failed backs off to the periodic
-    // timer's cadence (review-caught): quietFlush re-buffers on
-    // failure without touching lastAddNanos, so without this guard a
-    // storage outage would have the sweeper re-dispatching (and
-    // error-logging) every quiet session's doomed flush at the 25 ms
-    // cadence — 4× the retry pressure of the 100 ms timer, against a
-    // backend that is already struggling
-    val retryHorizon = now - flushIntervalMs * 1000000L
-    bufs.entrySet().asScala.foreach { e =>
-      val key = e.getKey
-      val idle = e.getValue.synchronized(
-        e.getValue.rows.nonEmpty && e.getValue.lastAddNanos < horizon)
-      val backedOff = {
-        val f = idleFailedAt.get(key)
-        f != null && f.longValue > retryHorizon
-      }
-      if (idle && !backedOff && idleInFlight.add(key))
-        try idlePool.execute { () =>
-          // success clears the backoff marker inside flush() itself
-          try flush(key._1, key._2)
-          catch {
-            case scala.util.control.NonFatal(e2) =>
-              idleFailedAt.put(key, System.nanoTime())
-              System.err.println(s"[ingest] idle flush ${key._1}/${key._2} " +
-                s"failed (buffered, backing off to timer cadence): ${e2.getMessage}")
-          } finally idleInFlight.remove(key)
-        } catch {
-          // pool shut down by close() while this sweep was mid-iteration
-          // (the only rejection path of an unbounded-queue fixed pool):
-          // the task never ran, so ITS key cleanup never ran — release
-          // the in-flight claim here, and don't let the rejection abort
-          // the scheduled sweep task (round-12 advice: the leaked key
-          // would pin the session out of idle flushing forever if the
-          // sweeper were ever reused past a close/reopen cycle)
-          case _: java.util.concurrent.RejectedExecutionException =>
-            idleInFlight.remove(key)
-        }
-    }
-  }
-
-  private val idleInFlight = ConcurrentHashMap.newKeySet[(String, String)]()
-  private val idleFailedAt = new ConcurrentHashMap[(String, String), java.lang.Long]()
-  private val idlePool = Executors.newFixedThreadPool(4, r => {
-    val t = new Thread(r, "graft-ingest-idle"); t.setDaemon(true); t
-  })
-
   private val timer = Executors.newSingleThreadScheduledExecutor(r => {
     val t = new Thread(r, "graft-ingest-flush"); t.setDaemon(true); t
   })
   timer.scheduleWithFixedDelay(() => flushAll(),
     flushIntervalMs, flushIntervalMs, TimeUnit.MILLISECONDS)
-  timer.scheduleWithFixedDelay(() => flushIdle(),
-    idleFlushMs, idleFlushMs, TimeUnit.MILLISECONDS)
 
   /** Stop the timer, then drain everything — after close() returns
     * normally, every acked row is durable (the T5 graceful-shutdown
@@ -289,11 +202,7 @@ final class IngestBuffer(flushBytes: Long = 4L * 1024 * 1024,
   override def close(): Unit = {
     closed = true // new add()s reject from here; buffered rows drain below
     timer.shutdown()
-    idlePool.shutdown() // queued idle flushes still run; the lock barrier below waits them out
-    try {
-      timer.awaitTermination(30, TimeUnit.SECONDS)
-      idlePool.awaitTermination(30, TimeUnit.SECONDS)
-    }
+    try timer.awaitTermination(30, TimeUnit.SECONDS)
     catch { case _: InterruptedException => Thread.currentThread.interrupt() }
     var attempt = 0
     while (totalBytes.get() > 0 && attempt < 3) {
@@ -322,6 +231,6 @@ final class IngestBuffer(flushBytes: Long = 4L * 1024 * 1024,
     if (stranded.nonEmpty)
       throw new IllegalStateException(
         s"ingest close(): acked rows still buffered after retries — ${stranded.mkString(", ")}")
-    bufs.clear(); flushLocks.clear(); idleFailedAt.clear()
+    bufs.clear(); flushLocks.clear()
   }
 }

@@ -3,8 +3,13 @@ package graft.storage
 import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import graft.model.LogSchema
 
 /** MANIFEST-SWAP log store — the multi-node form of [[LogStore]]'s
@@ -531,19 +536,27 @@ final class ManifestLog(spark: SparkSession, root: String,
       if (committedTags(resolve(container, session)._2).contains(t)) return -1L
     }
     val staging = new Path(s"$root/.staging-${UUID.randomUUID()}")
-    df.select("timestamp", "level", "message")
-      // repartition(1), NOT coalesce(1): coalesce collapses the whole
-      // final stage of the appended plan into one task, so a derived
-      // batch (a curation run's decision relation, a delta's correction
-      // join) computes single-threaded just to land in one staging
-      // file. The keyless repartition keeps the derivation at full
-      // parallelism and moves only the batch-sized rows through one
-      // tiny exchange; assignment is deterministic per run (sort-
-      // before-repartition, SPARK-23207) and row order inside a
-      // manifest file is not a contract (citation/shard digests are
-      // order-free, readers filter or sort).
-      .repartition(1)
-      .write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    val batch = df.select("timestamp", "level", "message")
+    batch.queryExecution.optimizedPlan match {
+      // Rows already on the driver (every HTTP ingest flush): write them
+      // here. A Spark write of a local batch costs two jobs, a shuffle
+      // and task serialization — ~100 ms for a few KB of rows.
+      case local: LocalRelation => writeLocal(local, new Path(staging, "part-00000.parquet"))
+      case _ =>
+        batch
+          // repartition(1), NOT coalesce(1): coalesce collapses the whole
+          // final stage of the appended plan into one task, so a derived
+          // batch (a curation run's decision relation, a delta's correction
+          // join) computes single-threaded just to land in one staging
+          // file. The keyless repartition keeps the derivation at full
+          // parallelism and moves only the batch-sized rows through one
+          // tiny exchange; assignment is deterministic per run (sort-
+          // before-repartition, SPARK-23207) and row order inside a
+          // manifest file is not a contract (citation/shard digests are
+          // order-free, readers filter or sort).
+          .repartition(1)
+          .write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    }
     val st = walk(staging).headOption.getOrElse(
       throw new java.io.IOException(s"append: staging $staging produced no visible file"))
     val target = new Path(s"$hotDir/container=$container/session=$session")
@@ -593,6 +606,26 @@ final class ManifestLog(spark: SparkSession, root: String,
     }
     if (committed) st.getLen else -1L
   }
+
+  /** Writes a driver-resident batch to one Parquet `file` on the calling
+    * thread, through the writer a Spark write task would use. Running it
+    * under the session's SQLConf applies the same codec, timestamp type,
+    * time zone and rebase mode, so the file matches a Spark-written one
+    * (LocalAppendSpec compares the footers). */
+  private def writeLocal(batch: LocalRelation, file: Path): Unit =
+    SQLConf.withExistingConf(spark.sessionState.conf) {
+      val conf = spark.sessionState.newHadoopConf()
+      if (fs.getScheme == "file") {
+        conf.setClass("fs.file.impl", classOf[ManifestLog.NioLocalFileSystem], classOf[FileSystem])
+        conf.setBoolean("fs.file.impl.disable.cache", true)
+      }
+      val job = Job.getInstance(conf)
+      val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, batch.schema)
+      val task = new TaskAttemptContextImpl(job.getConfiguration,
+        new TaskAttemptID(new TaskID(new JobID("graft-append", 0), TaskType.MAP, 0), 0))
+      val writer = factory.newInstance(file.toString, batch.schema, task)
+      try batch.data.foreach(writer.write) finally writer.close()
+    }
 
   /** Data entries (no `#tag` tombstones) of the latest manifest. */
   private def dataEntries(container: String, session: String): Seq[String] =
@@ -1158,4 +1191,19 @@ object ManifestLog {
   /** A version file without a valid `#commit` footer. */
   final class IncompleteManifestException(path: String)
     extends java.io.IOException(s"manifest $path has no valid commit footer")
+
+  /** The local filesystem for driver-side staging writes. Without
+    * Hadoop's native library, the stock local filesystem forks a `chmod`
+    * process for every file and directory it creates: three forks (the
+    * staging dir, the file, its checksum sidecar), about 9 ms of a
+    * 17 ms append on a 4-core host. This one sets permissions through
+    * java.nio and writes no checksum sidecar, which publishing leaves
+    * behind anyway. */
+  private[storage] final class NioLocalFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+    override def setPermission(p: Path, permission: org.apache.hadoop.fs.permission.FsPermission): Unit =
+      java.nio.file.Files.setPosixFilePermissions(pathToFile(p).toPath,
+        java.nio.file.attribute.PosixFilePermissions.fromString(
+          Seq(permission.getUserAction, permission.getGroupAction, permission.getOtherAction)
+            .map(_.SYMBOL).mkString))
+  }
 }

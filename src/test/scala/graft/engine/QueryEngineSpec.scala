@@ -113,6 +113,19 @@ class QueryEngineSpec extends SparkSuite {
     assert(jsons.head.contains("\"container\":\"c\""))
   }
 
+  test("putRow renders a batch body byte-identical to re-parsing each rowToJson") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val rows = Seq(
+      Row(Timestamp.from(Instant.parse("2024-01-02T00:00:00.000001Z")), "INFO",
+        "quote \" backslash \\ tab \t newline \n nul \u0000 é ✓ 😀", "c", "s"),
+      Row(Timestamp.from(Instant.parse("1970-01-01T00:00:00Z")), "", "</script>", "c-1", "s_2"))
+    val direct = mapper.createArrayNode()
+    rows.foreach(r => QueryEngine.putRow(direct.addObject(), r))
+    val roundTrip = mapper.createArrayNode()
+    rows.foreach(r => roundTrip.add(mapper.readTree(QueryEngine.rowToJson(r))))
+    assert(mapper.writeValueAsString(direct) === mapper.writeValueAsString(roundTrip))
+  }
+
   test("formatIso matches Python isoformat: fraction only when non-zero") {
     assert(LogSchema.formatIso(Instant.parse("2024-01-02T00:00:00Z")) === "2024-01-02T00:00:00+00:00")
     assert(LogSchema.formatIso(Instant.parse("2024-01-02T00:00:00.123456Z")) === "2024-01-02T00:00:00.123456+00:00")

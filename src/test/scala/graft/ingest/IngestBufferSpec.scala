@@ -17,7 +17,7 @@ class IngestBufferSpec extends AnyFunSuite {
   test("byte threshold triggers a synchronous flush; small adds stay buffered") {
     var flushed = Vector.empty[(String, Seq[String])]
     // huge timer interval: only the size path can flush in this test
-    val buf = new IngestBuffer(flushBytes = 200, flushIntervalMs = 3600000, idleFlushMs = 3600000)({
+    val buf = new IngestBuffer(flushBytes = 200, flushIntervalMs = 3600000)({
       (c, s, rows) => flushed :+= (s"$c/$s", rows.map(_.getString(2)))
     })
     try {
@@ -32,7 +32,7 @@ class IngestBufferSpec extends AnyFunSuite {
   test("a failing flush re-buffers the snapshot ahead of newer rows and rethrows") {
     var fail = true
     var flushed = Vector.empty[Seq[String]]
-    val buf = new IngestBuffer(flushBytes = Long.MaxValue, flushIntervalMs = 3600000, idleFlushMs = 3600000)({
+    val buf = new IngestBuffer(flushBytes = Long.MaxValue, flushIntervalMs = 3600000)({
       (_, _, rows) =>
         if (fail) throw new java.io.IOException("disk on fire")
         else flushed :+= rows.map(_.getString(2))
@@ -54,7 +54,7 @@ class IngestBufferSpec extends AnyFunSuite {
 
   test("close() drains every session's buffered rows exactly once") {
     var flushed = Map.empty[String, Seq[String]]
-    val buf = new IngestBuffer(flushBytes = Long.MaxValue, flushIntervalMs = 3600000, idleFlushMs = 3600000)({
+    val buf = new IngestBuffer(flushBytes = Long.MaxValue, flushIntervalMs = 3600000)({
       (c, s, rows) => flushed += s"$c/$s" -> rows.map(_.getString(2))
     })
     buf.add("c1", "s", Seq(row("x")))
@@ -75,8 +75,7 @@ class IngestBufferSpec extends AnyFunSuite {
     val peak = new java.util.concurrent.atomic.AtomicLong(0L)
     @volatile var bufRef: IngestBuffer = null
     val buf: IngestBuffer = new IngestBuffer(
-      flushBytes = Long.MaxValue, flushIntervalMs = 3600000, idleFlushMs = 3600000,
-      globalFlushBytes = 4096)({ (_, _, _) => () })
+      flushBytes = Long.MaxValue, flushIntervalMs = 3600000, globalFlushBytes = 4096)({ (_, _, _) => () })
     bufRef = buf
     try {
       (1 to 64).foreach { i =>
@@ -94,7 +93,7 @@ class IngestBufferSpec extends AnyFunSuite {
   test("add() survives a failing size-triggered flush (rows stay buffered for the timer)") {
     var fail = true
     var flushed = Vector.empty[Seq[String]]
-    val buf = new IngestBuffer(flushBytes = 100, flushIntervalMs = 3600000, idleFlushMs = 3600000)({
+    val buf = new IngestBuffer(flushBytes = 100, flushIntervalMs = 3600000)({
       (_, _, rows) =>
         if (fail) throw new java.io.IOException("disk on fire")
         else flushed :+= rows.map(_.getString(2))
@@ -112,48 +111,13 @@ class IngestBufferSpec extends AnyFunSuite {
   }
 
   test("close() throws when storage stays down, instead of dropping acked rows") {
-    val buf = new IngestBuffer(flushBytes = Long.MaxValue, flushIntervalMs = 3600000, idleFlushMs = 3600000)({
+    val buf = new IngestBuffer(flushBytes = Long.MaxValue, flushIntervalMs = 3600000)({
       (_, _, _) => throw new java.io.IOException("storage permanently down")
     })
     buf.add("c", "s", Seq(row("doomed?")))
     val e = intercept[IllegalStateException] { buf.close() }
     assert(e.getMessage.contains("c/s"),
       "close() must name the sessions still holding acked rows")
-  }
-
-  test("idle-triggered flush drains a quiet session ahead of its first read (round-12 verdict #5)") {
-    val seen = new java.util.concurrent.CountDownLatch(1)
-    // periodic timer far away: only the idle path can flush here
-    val buf = new IngestBuffer(flushBytes = Long.MaxValue,
-      flushIntervalMs = 3600000, idleFlushMs = 10)({ (_, _, _) => seen.countDown() })
-    try {
-      buf.add("c", "s", Seq(row("quiet")))
-      // deterministic, not timer-phase-lucky: the session went quiet, so
-      // within a few idle horizons the buffer MUST be empty — a read
-      // arriving after that pays zero flush (pre-change it raced the
-      // 100 ms flushAll cadence: ~50% odds of paying the full append)
-      assert(seen.await(5, java.util.concurrent.TimeUnit.SECONDS),
-        "idle sweeper never flushed a quiet session")
-      val t0 = System.nanoTime()
-      while (buf.bufferedBytes > 0 && System.nanoTime() - t0 < 5e9) Thread.sleep(5)
-      assert(buf.bufferedBytes == 0, "quiet session still buffered after the idle flush")
-    } finally buf.close()
-  }
-
-  test("a hot session is never idle-flushed: batching (and ingest throughput) is untouched") {
-    val flushes = new java.util.concurrent.atomic.AtomicInteger(0)
-    // 10× margin between the add cadence (~20 ms) and the idle horizon
-    // (500 ms): a scheduler hiccup long enough to fake idleness here
-    // would be a half-second stall, not normal CI jitter
-    val buf = new IngestBuffer(flushBytes = Long.MaxValue,
-      flushIntervalMs = 3600000, idleFlushMs = 500)({ (_, _, _) => flushes.incrementAndGet() })
-    try {
-      (1 to 15).foreach { i =>
-        buf.add("c", "hot", Seq(row(s"m$i"))); Thread.sleep(20)
-      }
-      assert(flushes.get() == 0,
-        s"idle sweeper flushed a session that never went quiet (${flushes.get()} times)")
-    } finally buf.close()
   }
 
   test("timer flushes a lingering buffer without any further adds") {

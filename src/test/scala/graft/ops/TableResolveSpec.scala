@@ -1,13 +1,9 @@
 package graft.ops
 
 import graft.SparkSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 /** Input-table schema resolution in `Tables.load`: the first load of a
   * table per session infers its Parquet schema (one Spark job); later
@@ -31,37 +27,6 @@ class TableResolveSpec extends SparkSuite {
     (0L until 5L).map(k => (k, s"REGION$k")).toDF("r_regionkey", "r_name")
       .write.parquet(s"$dir/region.parquet")
     dir
-  }
-
-  /** Runs `body` and counts the Spark jobs it started on this thread.
-    * Suites share one SparkContext and run in parallel, so jobs are
-    * told apart by a job group; a sentinel job in the same group,
-    * started after `body`, marks the end — listener events arrive in
-    * order, so once the sentinel is seen every job of `body` is too. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"table-resolve-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger(0)
-    val sentinelSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
-          if (e.properties.getProperty("spark.job.description") == "sentinel") sentinelSeen.countDown()
-          else jobs.incrementAndGet()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "probe")
-      val result = body
-      sc.setJobGroup(group, "sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      assert(sentinelSeen.await(60, TimeUnit.SECONDS), "listener never saw the sentinel job")
-      (result, jobs.get())
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
   }
 
   private def rows(df: org.apache.spark.sql.DataFrame) =
