@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Timed ingest-while-query benchmark over the REFERENCE'S one real
   * workload: the full HTTP service path (auth → containers/sessions →
-  * concurrent POST /logs + GET /logs) against the two-tier LogStore,
+  * concurrent POST /logs + GET /logs) against the ManifestLog store,
   * with the buffer threshold forced low enough that size-triggered
   * rotation and async compaction run MID-TRAFFIC — the measured number
   * is the serving path, not a quiet store. Reported on STDERR as a
@@ -32,15 +32,11 @@ object ServiceBench {
     spark.stop()
   }
 
-  /** Measure BOTH storage tiers end-to-end: the single-node LogStore
-    * (the reference-parity path, label unchanged for round-over-round
-    * comparability) and the cluster ManifestLog (manifest-commit-per-
-    * flush is its extra cost — measured, not guessed; round-8), plus
-    * TWO gateways sharing one manifest root (every commit races the
+  /** Measure the service end-to-end on one gateway, then on TWO
+    * gateways sharing one manifest root (every commit races the
     * version CAS — the multi-node scaling number). */
   def run(spark: SparkSession): Unit = {
-    runTier(spark, "local")
-    runTier(spark, "manifest")
+    runTier(spark, nWriters = 8, nBatches = 50, labelSuffix = "")
     runManifestDualGateway(spark)
   }
 
@@ -116,7 +112,7 @@ object ServiceBench {
     } finally servers.foreach(s => try s.close() catch { case _: Exception => () })
   }
 
-  /** One tier run's headline numbers — rows ingested over the write
+  /** One service run's headline numbers — rows ingested over the write
     * window, post latency percentiles, settled-read throughput +
     * latency (the version-keyed plan cache's serving numbers), errors.
     * `ServiceScaleCheck` compares these across a 10× session/volume
@@ -130,23 +126,16 @@ object ServiceBench {
     def rowsPerSec: Double = rows / math.max(dtWrite, 1e-9)
   }
 
-  def runTier(spark: SparkSession, tier: String): Unit = {
-    runTier(spark, tier, nWriters = 8, nBatches = 50, labelSuffix = "")
-    ()
-  }
-
-  def runTier(spark: SparkSession, tier: String, nWriters: Int, nBatches: Int,
+  def runTier(spark: SparkSession, nWriters: Int, nBatches: Int,
               labelSuffix: String): Option[TierResult] = {
-    val root = Scratch.localDir + s"/svcbench-$tier-${System.nanoTime()}"
-    val label = (if (tier == "local") "log_service_throughput"
-                 else s"log_service_throughput_$tier") + labelSuffix
+    val root = Scratch.localDir + s"/svcbench-manifest-${System.nanoTime()}"
+    val label = "log_service_throughput_manifest" + labelSuffix
     // server startup stays INSIDE the try: a bind/scratch failure must
     // degrade to the FAILED detail line, never escape past the bench's
     // already-printed stdout JSON and kill the process
     var server: api.LogServer = null
     try {
-      server = new api.LogServer(spark, root, bufferSizeLimit = 64 * 1024,
-        makeTier = api.LogServer.tierNamed(tier)).start()
+      server = new api.LogServer(spark, root, bufferSizeLimit = 64 * 1024).start()
       val client = HttpClient.newHttpClient()
       val base = s"http://localhost:${server.boundPort}"
       def send(method: String, path: String, body: Option[String],
@@ -230,10 +219,9 @@ object ServiceBench {
       val dt = (System.nanoTime() - t0) / 1e9
       // Post-write READ-ONLY phase: CONCURRENT GETs over settled
       // sessions — the stable read-throughput number (mid-write reads
-      // above race the ingest window and vary with scheduling). On the
-      // manifest tier this measures the version-keyed plan cache: an
-      // unchanged session's GET skips file-index construction entirely
-      // (round-9); the local tier re-plans every GET for contrast.
+      // above race the ingest window and vary with scheduling). This
+      // measures the version-keyed plan cache: an unchanged session's
+      // GET skips file-index construction entirely (round-9).
       // Every session is read at least twice (first GET fills the
       // plan-cache entry, the rest hit it) from 8 parallel clients —
       // the 10× scale-up (80 sessions) exercises 80 distinct cache
@@ -273,7 +261,7 @@ object ServiceBench {
       roRunners.foreach(_.start()); roRunners.foreach(_.join(300000))
       server.recordReadTimings = false
       // a reader hung past the join timeout would let the stats below
-      // be computed while threads still append to readNanos — the tier
+      // be computed while threads still append to readNanos — the run
       // must FAIL loudly instead of publishing silently-wrong numbers
       val stragglers = roRunners.count(_.isAlive)
       require(stragglers == 0,

@@ -251,9 +251,9 @@ object ServiceScaleCheck {
         f"[svc-scale] catalog @ $n%6d mutations: commit $cMs%8.3f ms, " +
         f"read $rMs%8.3f ms, fresh-gateway $fMs%8.3f ms, delta $dB%5d B, checkpoint $cB%9d B")
     }
-    val base = ServiceBench.runTier(spark, "manifest", nWriters = 8, nBatches = 50,
+    val base = ServiceBench.runTier(spark, nWriters = 8, nBatches = 50,
       labelSuffix = "")
-    val scaled = ServiceBench.runTier(spark, "manifest", nWriters = 80, nBatches = 50,
+    val scaled = ServiceBench.runTier(spark, nWriters = 80, nBatches = 50,
       labelSuffix = "_10x")
     val (ua, ub, la, lb) = leaseBench(spark)
     System.err.println(

@@ -15,11 +15,11 @@ import graft.catalog.CatalogService
 import graft.engine.{Compactor, QueryEngine}
 import graft.ingest.JsonIngest
 import graft.model.LogSchema
-import graft.storage.{LogStore, LogTier, ManifestLog}
+import graft.storage.{LogTier, ManifestLog}
 
 /** The reference's HTTP surface (main.py:51-347, P1-P10) over the Spark
   * engine: token auth, container/session CRUD with ownership, and
-  * GET/POST log endpoints wired to [[QueryEngine]]/[[LogStore]], with the
+  * GET/POST log endpoints wired to [[QueryEngine]]/[[ManifestLog]], with the
   * same status-code contract — 400 validation, 401 authN, 403 authZ,
   * 409 conflict, 500 fallback — and the same response shapes (README.md:
   * 106-299). Runs on the JDK's built-in HttpServer: the service layer is
@@ -31,14 +31,15 @@ import graft.storage.{LogStore, LogTier, ManifestLog}
   * ([[graft.ingest.IngestBuffer]] — one hot-tier append per flushed
   * batch, not per POST) with size-triggered async compaction
   * ([[Compactor]]), so the HTTP layer never materializes a dataset. A
-  * flush starts no Spark job on the [[ManifestLog]] tier: the batch's
-  * rows are already on the driver and are written there.
+  * flush starts no Spark job: the batch's rows are already on the
+  * driver and are written there.
   */
 final class LogServer(spark: SparkSession, root: String, port: Int = 0,
                       bufferSizeLimit: Long = 10L * 1024 * 1024,
                       ingestFlushBytes: Long = 4L * 1024 * 1024,
                       ingestFlushMs: Long = 100,
-                      makeTier: (SparkSession, String) => LogTier = LogServer.localTier,
+                      makeTier: (SparkSession, String) => LogTier =
+                        (sp, dir) => new ManifestLog(sp, dir),
                       maxBodyBytes: Int = 32 * 1024 * 1024,
                       makeCatalog: (SparkSession, String) => CatalogService = LogServer.localCatalog,
                       maxStreamMs: Long = 10 * 60 * 1000L,
@@ -58,10 +59,9 @@ final class LogServer(spark: SparkSession, root: String, port: Int = 0,
     * story. `root` here is the SERVER root; the shared factory closes
     * over the cluster root instead. */
   val catalog: CatalogService = makeCatalog(spark, root)
-  /** Constructor-injected storage tier (round-8): the SAME service
-    * binary runs over the single-node [[LogStore]] (default) or the
-    * cluster [[ManifestLog]] — every handler below talks to the
-    * [[LogTier]] trait only. */
+  /** Constructor-injected store: a [[ManifestLog]] on `<root>/data` by
+    * default, or any [[LogTier]] (a shared root, a traced decorator) —
+    * every handler below talks to the trait only. */
   val store: LogTier = makeTier(spark, s"$root/data")
   val engine = new QueryEngine(store)
   val compactor = new Compactor(store, bufferSizeLimit)
@@ -77,8 +77,8 @@ final class LogServer(spark: SparkSession, root: String, port: Int = 0,
   /** Forces streaming responses past [[maxStreamMs]] to abort even when
     * the handler thread is parked in a blocked `write` (a client that
     * stopped reading its socket) — closing the exchange fails the write
-    * with an IOException, which releases the tier's view lock through
-    * the normal mid-stream abort path. The in-loop deadline check alone
+    * with an IOException, which ends the response through the normal
+    * mid-stream abort path. The in-loop deadline check alone
     * cannot reach that state. */
   private val streamWatchdog =
     Executors.newSingleThreadScheduledExecutor(r => {
@@ -360,16 +360,9 @@ final class LogServer(spark: SparkSession, root: String, port: Int = 0,
 
     if (streaming) {
       // Chunked emission, one JSON log object at a time (main.py:266-274).
-      // The tier's read snapshot spans the WHOLE stream (round-8 review:
-      // the DataFrame's file listing resolves ONCE at plan time, so a
-      // compaction landing between per-element lock windows deleted
-      // already-listed hot files — FileNotFound mid-body, a truncated
-      // response for a healthy session). On ManifestLog the snapshot is
-      // free (immutable manifest + grace-window GC keep the listed files
-      // live for any stream duration, lock-free); on LogStore it holds
-      // the session's view read lock for the response, so a slow client
-      // delays THAT session's compaction — the single-node trade, and
-      // one more reason the cluster tier is the deployment shape.
+      // The tier's read snapshot spans the WHOLE stream: the DataFrame's
+      // file listing resolves ONCE at plan time, so the listed files must
+      // stay live until the last row is sent.
       //
       // Error contract (round-7 review — a broad per-element swallow
       // turned ANY first-fetch failure into a plausible empty 200,
@@ -382,7 +375,7 @@ final class LogServer(spark: SparkSession, root: String, port: Int = 0,
       // two-layer stream bound: the in-loop deadline catches a SLOW
       // client; the watchdog catches a STOPPED one (handler parked in a
       // blocked write never reaches the deadline check — closing the
-      // exchange fails the write and the abort path releases the lock)
+      // exchange fails the write and the abort path ends the response)
       val guard = streamWatchdog.schedule(new Runnable {
         def run(): Unit = try ex.close() catch { case _: Exception => () }
       }, maxStreamMs + 1000, java.util.concurrent.TimeUnit.MILLISECONDS)
@@ -398,15 +391,10 @@ final class LogServer(spark: SparkSession, root: String, port: Int = 0,
         val out = ex.getResponseBody
         def w(str: String): Unit = out.write(str.getBytes(StandardCharsets.UTF_8))
         w(s"""{"container":${mapper.writeValueAsString(c)},"session":${mapper.writeValueAsString(s)},"logs":[""")
-        // Bounded window (round-8 advice): on the LogStore tier this
-        // loop holds the session's view read lock for the whole
-        // client-paced response — a stalled client would otherwise
-        // block that session's compaction publish INDEFINITELY (and a
-        // queued writer then blocks subsequent readers too). Past the
-        // cap the stream aborts through the mid-stream error contract
-        // below: no closing "]}", so the client sees truncation, never
-        // a complete-looking response. (On ManifestLog the snapshot is
-        // lock-free and the cap is just a slow-client hygiene bound.)
+        // Bounded window: a client-paced response must not hold the
+        // handler thread forever. Past the cap the stream aborts through
+        // the mid-stream error contract below: no closing "]}", so the
+        // client sees truncation, never a complete-looking response.
         val deadline = System.nanoTime() + maxStreamMs * 1000000L
         try {
           head.foreach(w)
@@ -600,22 +588,6 @@ object LogServer {
   val ReadStages: Seq[String] =
     Seq("token", "auth", "flush", "stats", "query", "render")
 
-  /** Default tier: the single-node two-tier [[LogStore]]. */
-  val localTier: (SparkSession, String) => LogTier =
-    (sp, dataRoot) => new LogStore(sp, dataRoot)
-  /** Cluster tier: the CAS-committed [[ManifestLog]] — safe for many
-    * service instances sharing one storage root. */
-  val manifestTier: (SparkSession, String) => LogTier =
-    (sp, dataRoot) => new ManifestLog(sp, dataRoot)
-
-  /** Resolve a tier by config name (`local` | `manifest`). */
-  def tierNamed(name: String): (SparkSession, String) => LogTier = name match {
-    case "local" => localTier
-    case "manifest" => manifestTier
-    case other => throw new IllegalArgumentException(
-      s"unknown storage tier '$other' (expected local|manifest)")
-  }
-
   /** Default control plane: per-gateway local JSON catalog under the
     * server's own root (the reference's single-process availability
     * model, auth.py:17-19). */
@@ -686,14 +658,24 @@ object LogServer {
   }
 }
 
-/** Standalone entry point:
-  * `runMain graft.api.ServerMain [root] [port] [tier]` — tier is
-  * `local` (default) or `manifest`, also settable via GRAFT_TIER. */
+/** Standalone entry point: `runMain graft.api.ServerMain [root] [port]`.
+  * Data lives in a [[ManifestLog]] under `<root>/data`; the catalog is
+  * per gateway unless GRAFT_CATALOG=shared. */
 object ServerMain {
   def main(args: Array[String]): Unit = {
+    // The storage-tier selector (a third argument or this variable) is
+    // gone. Refuse it rather than ignore it: `manifest` used to imply the
+    // shared catalog, so a gateway started with it would silently get a
+    // per-gateway catalog and split auth across gateways.
+    val removedTierVar = "GRAFT_TIER"
+    if (args.length > 2 || sys.env.contains(removedTierVar)) {
+      System.err.println(s"ServerMain takes [root] [port] only: the storage tier " +
+        s"selector (third argument / $removedTierVar) was removed and every server " +
+        "runs on ManifestLog. For several gateways on one root set GRAFT_CATALOG=shared.")
+      sys.exit(2)
+    }
     val root = args.headOption.getOrElse("/tmp/graft-server")
     val port = args.lift(1).map(_.toInt).getOrElse(5123)
-    val tier = args.lift(2).orElse(sys.env.get("GRAFT_TIER")).getOrElse("local")
     // Validate BEFORE anything starts: a malformed value crashing main
     // after http.start() would leave a degraded server running (the
     // dispatcher thread is non-daemon) with no maintenance loop and no
@@ -717,11 +699,9 @@ object ServerMain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Control plane follows the tier by default: the manifest tier is
-    // the multi-gateway deployment, so its catalog is the shared one on
-    // the same data root (override with GRAFT_CATALOG=local|shared).
-    val catalogMode = sys.env.get("GRAFT_CATALOG").getOrElse(
-      if (tier == "manifest") "shared" else "local")
+    // Per-gateway catalog by default; GRAFT_CATALOG=shared puts it on
+    // the data root so several gateways share logins and ownership.
+    val catalogMode = sys.env.getOrElse("GRAFT_CATALOG", "local")
     val makeCatalog = catalogMode match {
       case "local" => LogServer.localCatalog
       case "shared" => LogServer.sharedCatalog(s"$root/data")
@@ -736,7 +716,7 @@ object ServerMain {
     // deduplicated cluster-wide through this CAS lease on the shared
     // root: one gateway owns the GC window, the others skip it,
     // ownership migrates on shutdown/crash (MaintenanceLeaseSpec).
-    val gcLease = gcGrace.filter(_ => tier == "manifest").map { _ =>
+    val gcLease = gcGrace.map { _ =>
       val leaseDir = new org.apache.hadoop.fs.Path(s"$root/data/_maintenance/gc-sweep")
       val fs = leaseDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val holder = s"${java.net.InetAddress.getLocalHost.getHostName}:" +
@@ -747,16 +727,13 @@ object ServerMain {
       // lease lapse between renewals and thrash ownership
       new graft.storage.MaintenanceLease(fs, leaseDir, holder, ttlMs = 3 * 3600 * 1000L)
     }
-    val server = new LogServer(spark, root, port,
-      makeTier = LogServer.tierNamed(tier), makeCatalog = makeCatalog).start()
-    // periodic rotation check; marker and TTL sweeps stay opt-in — a
-    // time-based marker sweep can break streaming exactly-once when an
-    // outage outlasts the horizon, and retention deletes data. On the
-    // manifest tier, GRAFT_GC_GRACE_HOURS opts into snapshot GC (the
-    // horizon must exceed the longest reader scan / publish stall).
+    val server = new LogServer(spark, root, port, makeCatalog = makeCatalog).start()
+    // periodic rotation check; GRAFT_GC_GRACE_HOURS opts into snapshot
+    // GC (the horizon must exceed the longest reader scan / publish
+    // stall).
     server.compactor.startMaintenance(java.time.Duration.ofSeconds(60),
       manifestGcGrace = gcGrace, gcLease = gcLease)
-    println(s"graft log server listening on port ${server.boundPort}, root=$root, tier=$tier, catalog=$catalogMode")
+    println(s"graft log server listening on port ${server.boundPort}, root=$root, catalog=$catalogMode")
     // close() THROWS on a lossy ingest drain (by contract) — Spark must
     // still stop deterministically after the server's cleanup, not race
     // it from Spark's own internal shutdown hook

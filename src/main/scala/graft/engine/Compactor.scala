@@ -1,11 +1,11 @@
 package graft.engine
 
 import java.util.concurrent.{ConcurrentHashMap, Executors, TimeUnit}
-import graft.storage.{LogStore, LogTier}
+import graft.storage.{LogTier, ManifestLog}
 
 /** Storage lifecycle driver — the reference's rotation + async-flush
-  * machinery (writer.py:233-335) re-expressed for the two-tier Parquet
-  * store:
+  * machinery (writer.py:233-335) re-expressed for the hot/cold
+  * [[graft.storage.ManifestLog]]:
   *
   *  - T2 size-based rotation: after an append, when a session's hot tier
   *    reaches `thresholdBytes` (reference: 10 MiB, main.py:28) the
@@ -16,8 +16,8 @@ import graft.storage.{LogStore, LogTier}
   *  - T5 graceful shutdown: `close()` drains the queue and synchronously
   *    compacts every remaining hot session (main.py:350-365).
   *
-  * Exactly-once is the store's job (snapshot compaction, LogStore), so a
-  * duplicate trigger is merely a no-op compaction of an empty hot dir.
+  * Exactly-once is the store's job (the manifest swap), so a duplicate
+  * trigger is merely a no-op compaction of an empty hot tier.
   * At cluster scale each compaction is a distributed Spark job; the pool
   * here only bounds how many such jobs are in flight at once.
   */
@@ -44,7 +44,7 @@ final class Compactor(store: LogTier,
   }
   @volatile private var closed = false
 
-  /** Record an append's published byte count (LogStore.append's return)
+  /** Record an append's published byte count (`LogTier.append`'s return)
     * and queue compaction when the accumulated hot size crosses the
     * rotation threshold (writer.py:252-259 semantics). */
   def noteAppend(container: String, session: String, bytes: Long): Unit = {
@@ -115,26 +115,17 @@ final class Compactor(store: LogTier,
   /** Background maintenance loop — the operational completeness around
     * rotation: every `period`, each known session gets a listing-based
     * rotation check ([[maybeCompact]], catching sessions whose appends
-    * bypassed byte accounting), and, when enabled, marker / TTL sweeps.
+    * bypassed byte accounting), and, when enabled, snapshot GC.
     *
-    * BOTH sweeps are opt-in:
-    *  - `tagHorizon` ([[graft.storage.LogStore.tagSweep]]): a streaming
-    *    micro-batch can replay at ANY wall-clock distance — Structured
-    *    Streaming reruns the last uncommitted batch however long the
-    *    stream was down — so a time-based marker sweep is only safe when
-    *    the operator can bound outage length; it is never on by default.
-    *  - `retention` ([[graft.storage.LogStore.retentionSweep]]): deletes
-    *    data (file-level TTL), inherently a policy decision.
-    *  - `manifestGcGrace` ([[graft.storage.ManifestLog.expire]], the
-    *    manifest tier's counterpart): snapshot GC of retired files and
-    *    superseded manifests older than the grace horizon — without it
-    *    a served manifest tier grows forever. Opt-in because a horizon
-    *    shorter than the longest reader scan / publish stall deletes
-    *    files in use. The sweep re-reads the manifest history under
-    *    the session's manifest lock, so it runs on its own COARSER
-    *    cadence (~grace/24, capped at hourly, at least every tick) —
-    *    sweeping at the rotation period would buy nothing and block
-    *    append commits behind each scan.
+    * `manifestGcGrace` ([[graft.storage.ManifestLog.expire]]) sweeps
+    * retired files and superseded manifests older than the grace
+    * horizon — without it a served store grows forever. Opt-in because
+    * a horizon shorter than the longest reader scan / publish stall
+    * deletes files in use. The sweep re-reads the manifest history
+    * under the session's manifest lock, so it runs on its own COARSER
+    * cadence (~grace/24, capped at hourly, at least every tick) —
+    * sweeping at the rotation period would buy nothing and block
+    * append commits behind each scan.
     *
     * Failures are contained per session per operation: one corrupt
     * footer or unlistable directory must not starve every other session
@@ -172,8 +163,6 @@ final class Compactor(store: LogTier,
     * engine tier stays ignorant of the ops tier's index machinery, and
     * the gate's own lease/thrash discipline lives with the gate. */
   def startMaintenance(period: java.time.Duration,
-                       retention: Option[java.time.Duration] = None,
-                       tagHorizon: Option[java.time.Duration] = None,
                        manifestGcGrace: Option[java.time.Duration] = None,
                        gcLease: Option[graft.storage.MaintenanceLease] = None,
                        annDrift: Option[() => Option[(Long, Long)]] = None,
@@ -183,10 +172,7 @@ final class Compactor(store: LogTier,
     synchronized {
       if (closed || maintenance.isDefined) return
       leaseToRelease = gcLease
-      if ((tagHorizon.isDefined || retention.isDefined) && !store.isInstanceOf[LogStore])
-        System.err.println("[compactor] tag/retention sweeps requested but the " +
-          "storage tier is not a LogStore — use manifestGcGrace for snapshot GC; sweeps ignored")
-      if (manifestGcGrace.isDefined && !store.isInstanceOf[graft.storage.ManifestLog])
+      if (manifestGcGrace.isDefined && !store.isInstanceOf[ManifestLog])
         System.err.println("[compactor] manifestGcGrace requested but the storage " +
           "tier is not a ManifestLog; GC sweep ignored")
       val sched = java.util.concurrent.Executors.newSingleThreadScheduledExecutor(r => {
@@ -237,7 +223,7 @@ final class Compactor(store: LogTier,
             // this tick", never abort the whole tick before the
             // per-session rotation checks even run (review-caught)
             val gcOwner = gcTick && manifestGcGrace.isDefined &&
-              store.isInstanceOf[graft.storage.ManifestLog] &&
+              store.isInstanceOf[ManifestLog] &&
               gcLease.forall(l =>
                 try l.tryAcquire() catch { case e: Exception =>
                   System.err.println(s"[compactor] gc lease acquire failed: ${e.getMessage}")
@@ -246,16 +232,8 @@ final class Compactor(store: LogTier,
             if (gcOwner) gcSweepTicks.incrementAndGet()
             store.sessions().foreach { case (c, s) =>
               guarded("rotation", c, s)(maybeCompact(c, s))
-              // marker/TTL sweeps are LogStore machinery (side-channel
-              // tag markers, file-level TTL); the manifest tier's
-              // lifecycle sweep is snapshot GC via expire
               store match {
-                case ls: LogStore =>
-                  tagHorizon.foreach(h =>
-                    guarded("tag sweep", c, s)(ls.tagSweep(c, s, now.minus(h))))
-                  retention.foreach(r =>
-                    guarded("retention", c, s)(ls.retentionSweep(c, s, now.minus(r))))
-                case ml: graft.storage.ManifestLog if gcOwner =>
+                case ml: ManifestLog if gcOwner =>
                   manifestGcGrace.foreach(g =>
                     guarded("manifest gc", c, s)(ml.expire(c, s, now.minus(g))))
                 case _ => ()

@@ -116,8 +116,7 @@ final class QueryEngine(store: LogTier) {
     * reference's get_summary scans with no filter (reader.py:227-231) —
     * while file/byte counts come from the file index, not a scan.
     * Stats and rows derive from ONE consistent storage view
-    * ([[graft.storage.LogTier.statsAndRows]] — lock window for
-    * LogStore, single manifest resolve for ManifestLog). */
+    * ([[graft.storage.LogTier.statsAndRows]]: one manifest resolve). */
   def summary(container: String, session: String): LogSummary = {
     val ((coldFiles, coldBytes, hotFiles, hotBytes), totalRows) =
       store.statsAndRows(container, session)

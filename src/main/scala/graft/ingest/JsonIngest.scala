@@ -28,7 +28,7 @@ object JsonIngest {
   private val Required = Seq("timestamp", "level", "message")
 
   /** Validate the decoded `logs` value and build typed rows
-    * (timestamp, level, message) for [[graft.storage.LogStore.append]]. */
+    * (timestamp, level, message) for [[graft.storage.LogTier.append]]. */
   def toRows(logs: JsonNode): Seq[Row] = {
     if (logs == null || logs.isNull) fail("Empty logs array")
     if (!logs.isArray) fail("\"logs\" must be an array")

@@ -68,9 +68,8 @@ object LogQueries {
            max(col("timestamp")).as("max_ts"))
       .orderBy(col("container"))
 
-  /** S10/O2-style partition-pruned read: one (container, session) slice.
-    * Against the partitioned LogStore layout this prunes to one
-    * directory; here it exercises the same predicate shape. */
+  /** S10/O2-style namespace read: one (container, session) slice of
+    * the flat events table, the predicate shape a store read applies. */
   def logPartitionSlice(s: SparkSession, dir: String): DataFrame =
     logsView(s, dir)
       .filter(col("container") === "c1" && col("session") === "s5")
@@ -209,7 +208,7 @@ object LogQueries {
 
   /** The storage engine itself under the oracle (S1/S4/S7/S8/T4/U1): rows
     * for three sessions are physically written through
-    * [[graft.storage.LogStore.append]] into a fresh two-tier store, one
+    * [[graft.storage.ManifestLog.append]] into a fresh store, one
     * session is compacted hot→cold, one is left hot, one is split across
     * BOTH tiers by appending again after compaction — then everything is
     * read back through [[graft.engine.QueryEngine.readLogs]] with an
@@ -219,13 +218,13 @@ object LogQueries {
     * corruption) turns this CORRECTNESS row red. */
   def logStoreRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import graft.engine.QueryEngine
-    import graft.storage.LogStore
+    import graft.storage.ManifestLog
     // Store files live on the scratch tier (tmpfs when available) — the
     // roundtrip measures the engine's append/compact/read path, not the
     // harness VM's disk-writeback throughput.
     val root = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get(graft.Scratch.localDir), "graft-roundtrip").toString
-    val store = new LogStore(s, root)
+    val store = new ManifestLog(s, root)
     val src = logsView(s, dir)
       .filter(col("session").isin("s1", "s5", "s9"))
       .select(col("timestamp"), col("level"), col("message"), col("container"), col("session"))

@@ -185,13 +185,12 @@ object Tables {
     * contract is that a key's data dir is immutable for the life of a
     * session — true for every parquet scan of the test tables, and
     * violated by exactly one thing in the engine: the row-level purge
-    * ([[graft.storage.ManifestLog.rewriteExcluding]] /
-    * [[graft.storage.LogStore.rewriteExcluding]]), which is the first
+    * ([[graft.storage.ManifestLog.rewriteExcluding]]), which is the first
     * in-store MUTATOR. Without this hook a long-lived serving process
     * that purges and then reads a memoized derived relation keeps
     * serving the purged rows until restart — a right-to-be-forgotten
-    * hole at the cache layer. Both purge paths call this with their
-    * store root after a successful swap. A caller that rewrites an
+    * hole at the cache layer. The purge calls this with its store
+    * root after a successful swap. A caller that rewrites an
     * input table in place must call it too, so the next [[load]]
     * re-infers the table's schema.
     *

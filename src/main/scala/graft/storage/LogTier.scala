@@ -2,21 +2,16 @@ package graft.storage
 
 import org.apache.spark.sql.DataFrame
 
-/** The read-path storage surface [[graft.engine.QueryEngine]] serves
-  * from — the seam that makes the single-node store ([[LogStore]]) and
-  * the cluster store ([[ManifestLog]]) interchangeable behind the same
-  * query engine: a user of one can switch to the other without
-  * touching a query.
+/** The storage surface [[graft.engine.QueryEngine]], the HTTP service
+  * and the [[graft.engine.Compactor]] talk to. [[ManifestLog]] is the
+  * store; the trait is the seam a decorator (tracing, fault injection)
+  * wraps without the callers changing.
   *
-  * The visibility contract differs by implementation and that is the
-  * point: [[LogStore]] guards scans against compaction's publish phase
-  * with a per-session read lock, so [[withReadSnapshot]] wraps the
-  * materializing action; [[ManifestLog]] reads are snapshot-isolated
-  * by construction (a resolved manifest's files are immutable until
-  * grace-window GC), so its [[withReadSnapshot]] is a no-op — the
-  * default here. Both deliver the same guarantee the engine needs:
-  * the file set a query scans stays live for the duration of the
-  * action. */
+  * Visibility contract: the file set a query scans stays live for the
+  * duration of the action. [[withReadSnapshot]] wraps every
+  * materializing action; on [[ManifestLog]] it is a no-op, because a
+  * resolved manifest names immutable files that only grace-window GC
+  * deletes. */
 trait LogTier {
 
   /** The session's rows (bag semantics, duplicates preserved). */
@@ -49,22 +44,15 @@ trait LogTier {
   def withReadSnapshot[T](container: String, session: String)(f: => T): T = f
 
   /** Tier stats and unfiltered row count from ONE consistent view of
-    * the session — the summary endpoint's contract. The default wraps
-    * both calls in a single [[withReadSnapshot]] window, which is
-    * sufficient for lock-based stores; snapshot stores (one manifest
-    * resolve per call) override to derive both from a single resolve
-    * (round-7 advice: two independent resolves could mix file counts
-    * and row totals from different snapshots). */
-  def statsAndRows(container: String, session: String): ((Long, Long, Long, Long), Long) =
-    withReadSnapshot(container, session) {
-      (tierStats(container, session), read(container, session).count())
-    }
+    * the session — the summary endpoint's contract: two independent
+    * reads could mix file counts and row totals from different
+    * snapshots. */
+  def statsAndRows(container: String, session: String): ((Long, Long, Long, Long), Long)
 }
 
-/** Listing rules shared by both stores (one definition, so the tiers
-  * can never diverge on which staged files count as publishable):
-  * recursive descent, hidden (`_`/`.`) names skipped, parquet files
-  * only, vanished directories treated as empty. */
+/** Listing rule for staged and published data files: recursive
+  * descent, hidden (`_`/`.`) names skipped, parquet files only,
+  * vanished directories treated as empty. */
 private[graft] object StoreFiles {
   def walkParquet(fs: org.apache.hadoop.fs.FileSystem,
                   dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] = {

@@ -12,14 +12,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import graft.model.LogSchema
 
-/** MANIFEST-SWAP log store — the multi-node form of [[LogStore]]'s
-  * reader-visibility design (SURVEY §11: "on a cluster the view lock
-  * becomes a manifest/snapshot swap", now executable).
-  *
-  * [[LogStore]] makes the DIRECTORY the source of truth and excludes
-  * readers during compaction's publish phase with an in-JVM
-  * read/write lock — correct on one node, meaningless across nodes.
-  * Here the source of truth is a versioned MANIFEST per session:
+/** MANIFEST-SWAP log store: graft's one storage tier, hot append files
+  * and cold compacted archives behind a versioned MANIFEST per session
+  * (the reference's hot buffers + cold archives + SQLite catalog,
+  * writer.py / reader.py / metadata.py, as one multi-node-safe store).
+  * The manifest, not the directory, is the source of truth, so readers
+  * never need a lock — on one node or many:
   *
   * {{{
   *   <root>/hot/container=<c>/session=<s>/append-<uuid>.parquet
@@ -102,9 +100,9 @@ final class ManifestLog(spark: SparkSession, root: String,
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   // Orphaned staging dirs from a crashed writer are garbage (their data
-  // was never referenced) — but unlike LogStore, this store has no
-  // single-instance-per-root assumption (the whole point is multi-node
-  // operation), so a second instance constructed mid-append must NOT
+  // was never referenced) — but this store has no single-instance-per-
+  // root assumption (the whole point is multi-node operation), so a
+  // second instance constructed mid-append must NOT
   // clobber a live writer's staging dir. Sweep only dirs old enough
   // that no in-flight write can still own them (round-7 review: the
   // unguarded sweep deleted a concurrent instance's staging between
@@ -472,15 +470,14 @@ final class ManifestLog(spark: SparkSession, root: String,
 
   /** [[append]] with a caller-supplied idempotency tag — the
     * exactly-once hook for streaming `foreachBatch` replay (tag =
-    * batch id), like [[LogStore.appendIdempotent]] but with NO
-    * side-channel marker files: the MANIFEST is the replay ledger.
+    * batch id), with NO side-channel marker files: the MANIFEST is
+    * the replay ledger.
     * Tagged files publish as `tag-<tag>.parquet`; a replay checks the
     * committed-tag set first and no-ops (returns -1). Compaction
     * retires the FILE but the tag is also recorded as a tombstone
     * entry (`#tag <tag>`) the readers skip — so a tag stays committed
     * for the life of the session no matter how many rewrites its rows
-    * survive, the same property LogStore gets from its `tags/` dir,
-    * here for free because the manifest swap is already atomic. */
+    * survive, for free because the manifest swap is already atomic. */
   def appendIdempotent(df: DataFrame, container: String, session: String,
                        tag: String): Long = {
     // the tag becomes a FILENAME component; beyond '/' and whitespace,
@@ -795,8 +792,15 @@ final class ManifestLog(spark: SparkSession, root: String,
       val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
       val df = spark.read.schema(LogSchema.fileSchema).parquet(snapshot.map(abs): _*)
       val staging = new Path(s"$root/.staging-${UUID.randomUUID()}")
-      // same layout rationale as LogStore.compact: range-cluster by time
-      // so cold footers prune, message as tiebreak for degenerate keys
+      // Range-cluster by timestamp (not hash-repartition): each cold file
+      // covers a tight, mostly non-overlapping time slice, so its parquet
+      // footer min/max actually prunes and time-range reads skip whole
+      // files. Same row multiset either way; this is purely a layout
+      // choice, and at 100 TB layout IS the read path (the reference gets
+      // it for free only because each buffer flush is one contiguous
+      // ingest slice, writer.py:300-335). Message is the range tiebreak:
+      // a snapshot whose rows share one timestamp must still split into
+      // nOut sized files.
       df.repartitionByRange(nOut, col("timestamp"), col("message"))
         .sortWithinPartitions(col("timestamp"))
         .write.mode(SaveMode.Overwrite).parquet(staging.toString)
@@ -1164,9 +1168,7 @@ final class ManifestLog(spark: SparkSession, root: String,
     }
   }
 
-  /** Recursive parquet listing — the one shared definition
-    * ([[StoreFiles.walkParquet]]), so the two tiers can never diverge
-    * on which staged files count as publishable. */
+  /** Recursive parquet listing ([[StoreFiles.walkParquet]]). */
   private def walk(dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
     StoreFiles.walkParquet(fs, dir)
 }

@@ -5,13 +5,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.engine.Compactor
-import graft.storage.LogStore
+import graft.storage.ManifestLog
 
 /** Continuous ingest as Structured Streaming (SURVEY §2.8): the
   * reference's micro-batch append loop (writer.py:233-259) re-expressed
   * as `readStream` over a drop directory of JSON-lines files →
   * validation/cast transform → `foreachBatch` publishing into the
-  * two-tier [[LogStore]].
+  * [[ManifestLog]].
   *
   * Semantics:
   *  - each input line is `{"timestamp","level","message","container",
@@ -22,12 +22,12 @@ import graft.storage.LogStore
   *    `rejects/` dead-letter dir as JSON instead of poisoning the batch
   *    (a stream cannot return HTTP 400 — the dead letter IS the
   *    validation surface);
-  *  - publishing uses [[LogStore.appendIdempotent]] keyed on
+  *  - publishing uses [[ManifestLog.appendIdempotent]] keyed on
   *    (batchId): with the file-source checkpoint this makes ingest
-  *    exactly-once end-to-end — a replayed micro-batch finds the tag's
-  *    durable commit marker (under `<root>/tags/`, untouched by
-  *    compaction — the marker, not the hot file, is the replay check)
-  *    and skips;
+  *    exactly-once end-to-end — a replayed micro-batch finds its tag
+  *    already committed in the session's manifest (compaction keeps it
+  *    as a tombstone entry, so the manifest is the replay ledger) and
+  *    skips;
   *  - every publish pokes the [[Compactor]], so size-triggered rotation
   *    runs exactly as in the HTTP path.
   *
@@ -36,7 +36,7 @@ import graft.storage.LogStore
   * reference's per-session buffer map); the data path — parse, cast,
   * partition write — is distributed.
   */
-final class StreamingIngest(spark: SparkSession, store: LogStore,
+final class StreamingIngest(spark: SparkSession, store: ManifestLog,
                             compactor: Compactor, inputDir: String,
                             checkpointDir: String, rejectsDir: String) {
 
@@ -100,8 +100,8 @@ final class StreamingIngest(spark: SparkSession, store: LogStore,
                 col("container"), col("session"))
       val keys = good.select(col("container"), col("session")).distinct()
         .collect().map(r => (r.getString(0), r.getString(1)))
-      // Per-key appends are independent (LogStore locks per session,
-      // Compactor counters are atomic), so a batch touching many
+      // Per-key appends are independent (each commits its own session's
+      // manifest, Compactor counters are atomic), so a batch touching many
       // tenants drains on a bounded pool instead of serializing —
       // Spark job submission is thread-safe, and a failed append still
       // fails the whole batch (get() below rethrows) so the replayed

@@ -15,7 +15,7 @@ class PlanAuditSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
   // these run real work (storage writes / convergence loops) during
-  // DataFrame construction — audited in LogStoreSpec / DupComponentsSpec
+  // DataFrame construction — audited in ManifestLogSpec / DupComponentsSpec
   private val constructive = Set("log_store_roundtrip", "dedup_components",
     // build a ManifestLog fixture (appends + compaction + GC) while
     // constructing their results — audited in ManifestLogSpec

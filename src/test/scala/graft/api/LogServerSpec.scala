@@ -11,18 +11,9 @@ import graft.SparkSuite
 /** Golden end-to-end API tests: the README "Complete Workflow Example"
   * (README.md:248-299) and "Testing Access Control" recipes
   * (README.md:350-366) replayed against the Spark-backed server, plus
-  * the 400/401/403/409/413 contract and the streaming read path.
-  *
-  * The whole matrix runs over BOTH storage tiers (round-8): the
-  * single-node [[graft.storage.LogStore]] ([[LogServerSpec]]) and the
-  * cluster [[graft.storage.ManifestLog]] ([[LogServerManifestSpec]]) —
-  * the service layer talks to the [[graft.storage.LogTier]] trait only,
-  * and these twins prove a deployment can switch stores without a
-  * client seeing any difference. */
-abstract class LogServerContractSpec extends SparkSuite with BeforeAndAfterAll {
-
-  /** `local` | `manifest` — which LogTier backs the server under test. */
-  protected def tierName: String
+  * the 400/401/403/409/413 contract and the streaming read path, all
+  * on the server's default [[graft.storage.ManifestLog]] store. */
+class LogServerSpec extends SparkSuite with BeforeAndAfterAll {
 
   private var server: LogServer = _
   private def base = s"http://localhost:${server.boundPort}"
@@ -30,8 +21,7 @@ abstract class LogServerContractSpec extends SparkSuite with BeforeAndAfterAll {
   private val mapper = new ObjectMapper()
 
   override def beforeAll(): Unit = {
-    server = new LogServer(spark, tempDir("server"),
-      makeTier = LogServer.tierNamed(tierName)).start()
+    server = new LogServer(spark, tempDir("server")).start()
   }
   override def afterAll(): Unit = server.close()
 
@@ -215,8 +205,7 @@ abstract class LogServerContractSpec extends SparkSuite with BeforeAndAfterAll {
 
   test("413 contract: oversized body gets a distinct status and the connection stays usable") {
     // dedicated server with a tiny cap so the test body stays small
-    val small = new LogServer(spark, tempDir("server-413"),
-      makeTier = LogServer.tierNamed(tierName), maxBodyBytes = 4096).start()
+    val small = new LogServer(spark, tempDir("server-413"), maxBodyBytes = 4096).start()
     try {
       val smallBase = s"http://localhost:${small.boundPort}"
       def sreq(method: String, path: String, body: Option[String],
@@ -252,8 +241,7 @@ abstract class LogServerContractSpec extends SparkSuite with BeforeAndAfterAll {
     // dedicated server with a 2-row batch cap: 3 rows must 413 on the
     // batch path but stream completely — the bound protects the
     // gateway heap, not the data
-    val capped = new LogServer(spark, tempDir("server-rowcap"),
-      makeTier = LogServer.tierNamed(tierName), maxNonStreamRows = 2).start()
+    val capped = new LogServer(spark, tempDir("server-rowcap"), maxNonStreamRows = 2).start()
     try {
       val cbase = s"http://localhost:${capped.boundPort}"
       def creq(method: String, path: String, body: Option[String],
@@ -297,8 +285,7 @@ abstract class LogServerContractSpec extends SparkSuite with BeforeAndAfterAll {
   }
 
   test("maxNonStreamRows <= 0 restores the reference-compatible UNCAPPED batch read (declared deviation opt-out)") {
-    val uncapped = new LogServer(spark, tempDir("server-nocap"),
-      makeTier = LogServer.tierNamed(tierName), maxNonStreamRows = 0).start()
+    val uncapped = new LogServer(spark, tempDir("server-nocap"), maxNonStreamRows = 0).start()
     try {
       val cbase = s"http://localhost:${uncapped.boundPort}"
       def creq(method: String, path: String, body: Option[String],
@@ -327,8 +314,7 @@ abstract class LogServerContractSpec extends SparkSuite with BeforeAndAfterAll {
     // dedicated server with a zero cap: the first loop iteration after
     // the head row trips the deadline — the body must be cut off before
     // the closing "]}…" so the client can never mistake it for complete
-    val capped = new LogServer(spark, tempDir("server-cap"),
-      makeTier = LogServer.tierNamed(tierName), maxStreamMs = 0L).start()
+    val capped = new LogServer(spark, tempDir("server-cap"), maxStreamMs = 0L).start()
     try {
       val cbase = s"http://localhost:${capped.boundPort}"
       def creq(method: String, path: String, body: Option[String],
@@ -354,7 +340,7 @@ abstract class LogServerContractSpec extends SparkSuite with BeforeAndAfterAll {
       // truncation means that footer never arrives
       assert(!r.body.contains("files_scanned"),
         s"capped stream returned a complete-looking body: ${r.body}")
-      // the view lock was released at abort: a write + batch read proceed
+      // the aborted stream left the session usable: a write + batch read proceed
       assert(creq("POST", "/api/logs/cap/s",
         Some("""{"logs":[{"level":"INFO","message":"r4","timestamp":"2025-01-01T00:00:03Z"}]}"""),
         Some(token)).statusCode === 201)
@@ -363,16 +349,4 @@ abstract class LogServerContractSpec extends SparkSuite with BeforeAndAfterAll {
         mapper.readTree(back.body).get("total_rows").asInt === 4)
     } finally capped.close()
   }
-}
-
-/** The full contract over the single-node [[graft.storage.LogStore]]. */
-class LogServerSpec extends LogServerContractSpec {
-  protected def tierName = "local"
-}
-
-/** The SAME contract over the cluster [[graft.storage.ManifestLog]]
-  * (round-8: the service actually runs on the tier a 100-TB deployment
-  * would use, not just the engine surface in isolation). */
-class LogServerManifestSpec extends LogServerContractSpec {
-  protected def tierName = "manifest"
 }

@@ -6,17 +6,17 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.Row
 import graft.SparkSuite
 import graft.model.LogSchema
-import graft.storage.LogStore
+import graft.storage.ManifestLog
 
 class CompactorSpec extends SparkSuite {
 
-  private def append(store: LogStore, n: Int, c: String = "c", s: String = "s"): Unit =
+  private def append(store: ManifestLog, n: Int, c: String = "c", s: String = "s"): Unit =
     store.append(spark.createDataFrame(
       (1 to n).map(i => Row(Timestamp.from(Instant.parse("2024-01-01T00:00:00Z")), "INFO", s"row$i")).asJava,
       LogSchema.fileSchema), c, s)
 
   test("size-triggered rotation: hot drains to cold once the threshold is crossed, counts identical") {
-    val store = new LogStore(spark, tempDir("compactor"))
+    val store = new ManifestLog(spark, tempDir("compactor"))
     val compactor = new Compactor(store, thresholdBytes = 1) // any append triggers
     try {
       append(store, 10)
@@ -34,7 +34,7 @@ class CompactorSpec extends SparkSuite {
   }
 
   test("below threshold: no compaction queued") {
-    val store = new LogStore(spark, tempDir("compactor"))
+    val store = new ManifestLog(spark, tempDir("compactor"))
     val compactor = new Compactor(store, thresholdBytes = Long.MaxValue)
     try {
       append(store, 3)
@@ -47,13 +47,13 @@ class CompactorSpec extends SparkSuite {
 
   test("noteAppend: counter-based rotation triggers only once the accumulated bytes cross the threshold") {
     // probe: measure the size of one batch file, then start clean
-    val probeStore = new LogStore(spark, tempDir("compactor-probe"))
+    val probeStore = new ManifestLog(spark, tempDir("compactor-probe"))
     val oneBatch = probeStore.append(spark.createDataFrame(
       (1 to 3).map(i => Row(Timestamp.from(Instant.parse("2024-01-01T00:00:00Z")), "INFO", s"row$i")).asJava,
       LogSchema.fileSchema), "c", "s")
     assert(oneBatch > 0)
 
-    val store = new LogStore(spark, tempDir("compactor"))
+    val store = new ManifestLog(spark, tempDir("compactor"))
     // threshold just above one batch: the first noteAppend must NOT
     // trigger, the second (accumulated) must
     val compactor = new Compactor(store, thresholdBytes = oneBatch + 1)
@@ -74,7 +74,7 @@ class CompactorSpec extends SparkSuite {
 
   test("maintenance loop over a ManifestLog: rotation + opt-in snapshot GC collect retired files") {
     val root = tempDir("maint-ml")
-    val store = new graft.storage.ManifestLog(spark, root)
+    val store = new ManifestLog(spark, root)
     val compactor = new Compactor(store, thresholdBytes = 1)
     try {
       val b = spark.createDataFrame(
@@ -107,41 +107,27 @@ class CompactorSpec extends SparkSuite {
     } finally compactor.close()
   }
 
-  test("maintenance loop rotates hot sessions and sweeps expired idempotency markers") {
-    val store = new LogStore(spark, tempDir("maint"))
+  test("maintenance loop rotates hot sessions whose appends bypassed byte accounting") {
+    val store = new ManifestLog(spark, tempDir("maint"))
     val compactor = new Compactor(store, thresholdBytes = 1) // any hot byte rotates
     try {
-      val b = spark.createDataFrame(
-        Seq(Row(Timestamp.from(Instant.parse("2024-01-01T00:00:00Z")), "INFO", "x")).asJava,
-        LogSchema.fileSchema)
-      // appended WITHOUT noteAppend — only the maintenance listing can see it
-      store.appendIdempotent(b, "c", "s", "stream-old")
-      compactor.startMaintenance(java.time.Duration.ofMillis(100),
-        tagHorizon = Some(java.time.Duration.ZERO)) // opt-in: markers expire immediately
-      // rotation + marker sweep both observed once a replay of the old tag
-      // is ACCEPTED again (hot file compacted away, marker swept).
+      append(store, 1) // WITHOUT noteAppend — only the maintenance listing can see it
+      compactor.startMaintenance(java.time.Duration.ofMillis(100))
       // Deliberately huge deadline: suites run in parallel on ONE shared
       // SparkSession, so this test's compaction job can be starved for
       // minutes behind other suites' FIFO-queued jobs; the common case
       // exits in a few seconds.
       val deadline = System.currentTimeMillis + 480000
-      var replayed = -1L
-      while (replayed <= 0 && System.currentTimeMillis < deadline) {
+      while (store.tierStats("c", "s")._3 > 0 && System.currentTimeMillis < deadline)
         Thread.sleep(200)
-        // replay may race the marker sweep: hot can drain a beat before the
-        // sweep removes the old tag, making appendIdempotent return 0 (still
-        // suppressed, no side effect) — keep retrying until it is accepted
-        if (store.tierStats("c", "s")._3 == 0)
-          replayed = store.appendIdempotent(b, "c", "s", "stream-old")
-      }
-      assert(replayed > 0, "maintenance should have rotated the session and swept the marker")
+      assert(store.tierStats("c", "s")._3 === 0, "maintenance should have rotated the session")
       assert(store.tierStats("c", "s")._1 > 0, "rows landed cold")
-      assert(store.read("c", "s").count() === 2) // original + accepted replay
+      assert(store.read("c", "s").count() === 1)
     } finally compactor.close()
   }
 
   test("close() performs the shutdown flush (T5): all hot sessions compacted synchronously") {
-    val store = new LogStore(spark, tempDir("compactor"))
+    val store = new ManifestLog(spark, tempDir("compactor"))
     val compactor = new Compactor(store, thresholdBytes = Long.MaxValue)
     append(store, 2, "c1", "s1")
     append(store, 2, "c2", "s2")

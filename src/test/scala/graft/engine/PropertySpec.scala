@@ -7,7 +7,7 @@ import org.apache.spark.sql.Row
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.SparkSuite
 import graft.model.LogSchema
-import graft.storage.LogStore
+import graft.storage.ManifestLog
 
 /** SURVEY §5.3 property tests (ScalaCheck):
   *
@@ -35,7 +35,7 @@ class PropertySpec extends SparkSuite {
     val model = (1 to 60).map { i =>
       (base.plusSeconds(rnd.nextInt(30 * 24 * 3600).toLong), levels(rnd.nextInt(levels.length)), s"m$i")
     }
-    val store = new LogStore(spark, tempDir("prop"))
+    val store = new ManifestLog(spark, tempDir("prop"))
     val (a, b) = model.splitAt(30)
     store.append(toDf(a), "c", "s"); store.compact("c", "s") // half cold
     store.append(toDf(b), "c", "s") // half hot
@@ -68,7 +68,7 @@ class PropertySpec extends SparkSuite {
     var caseNo = 0
     check(Prop.forAll(genSchedule) { schedule =>
       caseNo += 1
-      val store = new LogStore(spark, tempDir("propsched"), targetFileBytes = 2048)
+      val store = new ManifestLog(spark, tempDir("propsched"), targetFileBytes = 2048)
       var expected = Vector.empty[String]
       var n = 0
       schedule.foreach { case (k, doCompact) =>

@@ -6,12 +6,12 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.Row
 import graft.SparkSuite
 import graft.model.LogSchema
-import graft.storage.LogStore
+import graft.storage.ManifestLog
 
 class QueryEngineSpec extends SparkSuite {
 
-  private def seeded(): (LogStore, QueryEngine) = {
-    val store = new LogStore(spark, tempDir("qe"))
+  private def seeded(): (ManifestLog, QueryEngine) = {
+    val store = new ManifestLog(spark, tempDir("qe"))
     val rows = Seq(
       ("2024-01-01T00:00:00Z", "INFO", "start"),
       ("2024-01-01T06:00:00Z", "ERROR", "boom"),

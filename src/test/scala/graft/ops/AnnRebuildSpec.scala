@@ -256,7 +256,7 @@ class AnnRebuildSpec extends SparkSuite {
     assume(hasTestData)
     val fix = mkDriftFixture(blobSize = 15)
     val floor = gateRecall(fix) + 0.01
-    val store = new graft.storage.LogStore(spark, tempDir("drift-maint"))
+    val store = new graft.storage.ManifestLog(spark, tempDir("drift-maint"))
     val compactor = new graft.engine.Compactor(store)
     try {
       compactor.startMaintenance(java.time.Duration.ofMillis(100),
@@ -292,7 +292,7 @@ class AnnRebuildSpec extends SparkSuite {
     // verdict's "non-owner instance sweeps 0".
     val foreign = IndexTables.compactionLease(spark, fix, "foreign-gc-holder")
     assert(foreign.tryAcquire(), "foreign holder could not take the lease")
-    val store = new graft.storage.LogStore(spark, tempDir("anngc-maint"))
+    val store = new graft.storage.ManifestLog(spark, tempDir("anngc-maint"))
     val compactor = new graft.engine.Compactor(store)
     try {
       compactor.startMaintenance(java.time.Duration.ofMillis(100),

@@ -244,7 +244,7 @@ class PostingsIndexSpec extends SparkSuite {
     // compaction must decline, count nothing, and change nothing
     val foreign = IndexTables.compactionLease(spark, dir, "foreign-postings-holder")
     assert(foreign.tryAcquire(), "foreign holder could not take the lease")
-    val store = new graft.storage.LogStore(spark, tempDir("postings-maint"))
+    val store = new graft.storage.ManifestLog(spark, tempDir("postings-maint"))
     val compactor = new graft.engine.Compactor(store)
     try {
       compactor.startMaintenance(java.time.Duration.ofMillis(100),

@@ -12,8 +12,8 @@ import graft.model.LogSchema
 /** Physical row-level purge (round-12 verdict #1): a deletion request
   * against the store's own rows must be honorable end-to-end — the
   * ANN tombstones mask the index and the curation takedown fixes the
-  * derived artifacts, but only [[ManifestLog.rewriteExcluding]] /
-  * [[LogStore.rewriteExcluding]] remove the stored rows themselves.
+  * derived artifacts, but only [[ManifestLog.rewriteExcluding]]
+  * removes the stored rows themselves.
   * The contract proven here:
   *  - matching rows are gone from the CURRENT version immediately,
   *    survivors preserved exactly, untouched files never rewritten;
@@ -137,33 +137,5 @@ class RewriteExcludingSpec extends SparkSuite {
     val pred = when(col("message") === "target", lit(true))
     assert(log.rewriteExcluding("c", "s", pred) == 1L)
     assert(msgs(log.read("c", "s")) == Seq("other"))
-  }
-
-  test("logstore: purge spans both tiers, backfills replay markers, and leaves no matching row on disk") {
-    val root = tempDir("purge")
-    val store = new LogStore(spark, root)
-    // cold tier: compacted mixed batch; hot tier: a tagged all-match batch
-    store.append(batch(("2024-01-01T10:00:00Z", "error", "bad1"),
-                       ("2024-01-01T10:01:00Z", "info", "keep1")), "c", "s")
-    store.compact("c", "s")
-    store.appendIdempotent(batch(("2024-01-01T10:02:00Z", "error", "bad2")), "c", "s", "b2")
-    // and one untouched hot file that must not be rewritten
-    store.append(batch(("2024-01-01T10:03:00Z", "info", "keep2")), "c", "s")
-    val untouched = dataFiles(root).filter(_.getName.startsWith("append-"))
-    assert(store.rewriteExcluding("c", "s", col("level") === "error") == 2L)
-    assert(msgs(store.read("c", "s")) == Seq("keep1", "keep2"))
-    val left = dataFiles(root)
-    assert(untouched.forall(left.contains), "an unaffected file was rewritten")
-    val onDisk = spark.read.schema(LogSchema.fileSchema)
-      .parquet(left.map(_.toString): _*)
-    assert(onDisk.filter(col("level") === "error").count() == 0L,
-      "purged rows physically present on disk")
-    // the retired tagged file's marker was backfilled: replay no-ops
-    assert(store.appendIdempotent(
-      batch(("2024-01-01T10:02:00Z", "error", "bad2")), "c", "s", "b2") == -1L)
-    assert(msgs(store.read("c", "s")) == Seq("keep1", "keep2"),
-      "a replayed batch resurrected purged rows")
-    // idempotent re-run
-    assert(store.rewriteExcluding("c", "s", col("level") === "error") == 0L)
   }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Paths}
 import graft.SparkSuite
 import graft.engine.Compactor
-import graft.storage.LogStore
+import graft.storage.ManifestLog
 
 class StreamingIngestSpec extends SparkSuite {
 
@@ -14,7 +14,7 @@ class StreamingIngestSpec extends SparkSuite {
     val root = tempDir("stream")
     val in = tempDir("stream-in")
     val rejects = s"$root/rejects"
-    val store = new LogStore(spark, s"$root/data")
+    val store = new ManifestLog(spark, s"$root/data")
     val compactor = new Compactor(store, thresholdBytes = Long.MaxValue)
     val ingest = new StreamingIngest(spark, store, compactor, in,
       s"$root/ckpt", rejects)
@@ -54,7 +54,7 @@ class StreamingIngestSpec extends SparkSuite {
   test("a many-tenant batch drains keys concurrently, not serially") {
     val root = tempDir("stream-par")
     val in = tempDir("stream-par-in")
-    val store = new LogStore(spark, s"$root/data")
+    val store = new ManifestLog(spark, s"$root/data")
     val compactor = new Compactor(store, thresholdBytes = Long.MaxValue)
     val ingest = new StreamingIngest(spark, store, compactor, in,
       s"$root/ckpt", s"$root/rejects")
@@ -80,7 +80,7 @@ class StreamingIngestSpec extends SparkSuite {
     import java.time.Instant
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.Row
-    val store = new LogStore(spark, tempDir("idem"))
+    val store = new ManifestLog(spark, tempDir("idem"))
     val df = spark.createDataFrame(Seq(
       Row(Timestamp.from(Instant.parse("2025-03-01T10:00:00Z")), "INFO", "once")).asJava,
       graft.model.LogSchema.fileSchema)
