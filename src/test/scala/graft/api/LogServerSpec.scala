@@ -5,15 +5,25 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.net.http.HttpRequest.BodyPublishers
 import java.net.http.HttpResponse.BodyHandlers
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import graft.SparkSuite
+import graft.catalog.CatalogService
 
 /** Golden end-to-end API tests: the README "Complete Workflow Example"
   * (README.md:248-299) and "Testing Access Control" recipes
   * (README.md:350-366) replayed against the Spark-backed server, plus
   * the 400/401/403/409/413 contract and the streaming read path, all
-  * on the server's default [[graft.storage.ManifestLog]] store. */
-class LogServerSpec extends SparkSuite with BeforeAndAfterAll {
+  * on the server's default [[graft.storage.ManifestLog]] store.
+  *
+  * The whole contract runs once per control plane a gateway can start
+  * with: the per-gateway JSON catalog ([[LogServerSpec]]) and the
+  * CAS-committed shared catalog ([[LogServerManifestSpec]]). A client
+  * must not see which one it is talking to. */
+abstract class LogServerContractSpec extends SparkSuite with BeforeAndAfterAll {
+
+  /** The control plane of every server this suite starts. */
+  protected def makeCatalog: (SparkSession, String) => CatalogService
 
   private var server: LogServer = _
   private def base = s"http://localhost:${server.boundPort}"
@@ -21,7 +31,7 @@ class LogServerSpec extends SparkSuite with BeforeAndAfterAll {
   private val mapper = new ObjectMapper()
 
   override def beforeAll(): Unit = {
-    server = new LogServer(spark, tempDir("server")).start()
+    server = new LogServer(spark, tempDir("server"), makeCatalog = makeCatalog).start()
   }
   override def afterAll(): Unit = server.close()
 
@@ -205,7 +215,8 @@ class LogServerSpec extends SparkSuite with BeforeAndAfterAll {
 
   test("413 contract: oversized body gets a distinct status and the connection stays usable") {
     // dedicated server with a tiny cap so the test body stays small
-    val small = new LogServer(spark, tempDir("server-413"), maxBodyBytes = 4096).start()
+    val small = new LogServer(spark, tempDir("server-413"), maxBodyBytes = 4096,
+      makeCatalog = makeCatalog).start()
     try {
       val smallBase = s"http://localhost:${small.boundPort}"
       def sreq(method: String, path: String, body: Option[String],
@@ -241,7 +252,8 @@ class LogServerSpec extends SparkSuite with BeforeAndAfterAll {
     // dedicated server with a 2-row batch cap: 3 rows must 413 on the
     // batch path but stream completely — the bound protects the
     // gateway heap, not the data
-    val capped = new LogServer(spark, tempDir("server-rowcap"), maxNonStreamRows = 2).start()
+    val capped = new LogServer(spark, tempDir("server-rowcap"), maxNonStreamRows = 2,
+      makeCatalog = makeCatalog).start()
     try {
       val cbase = s"http://localhost:${capped.boundPort}"
       def creq(method: String, path: String, body: Option[String],
@@ -285,7 +297,8 @@ class LogServerSpec extends SparkSuite with BeforeAndAfterAll {
   }
 
   test("maxNonStreamRows <= 0 restores the reference-compatible UNCAPPED batch read (declared deviation opt-out)") {
-    val uncapped = new LogServer(spark, tempDir("server-nocap"), maxNonStreamRows = 0).start()
+    val uncapped = new LogServer(spark, tempDir("server-nocap"), maxNonStreamRows = 0,
+      makeCatalog = makeCatalog).start()
     try {
       val cbase = s"http://localhost:${uncapped.boundPort}"
       def creq(method: String, path: String, body: Option[String],
@@ -314,7 +327,8 @@ class LogServerSpec extends SparkSuite with BeforeAndAfterAll {
     // dedicated server with a zero cap: the first loop iteration after
     // the head row trips the deadline — the body must be cut off before
     // the closing "]}…" so the client can never mistake it for complete
-    val capped = new LogServer(spark, tempDir("server-cap"), maxStreamMs = 0L).start()
+    val capped = new LogServer(spark, tempDir("server-cap"), maxStreamMs = 0L,
+      makeCatalog = makeCatalog).start()
     try {
       val cbase = s"http://localhost:${capped.boundPort}"
       def creq(method: String, path: String, body: Option[String],
@@ -349,4 +363,18 @@ class LogServerSpec extends SparkSuite with BeforeAndAfterAll {
         mapper.readTree(back.body).get("total_rows").asInt === 4)
     } finally capped.close()
   }
+}
+
+/** The contract on the default per-gateway JSON catalog. */
+class LogServerSpec extends LogServerContractSpec {
+  protected def makeCatalog = LogServer.localCatalog
+}
+
+/** The SAME contract on the shared catalog, laid out as
+  * `ServerMain` does with GRAFT_CATALOG=shared: catalog and manifests
+  * both under `<root>/data`, as every gateway of a multi-gateway
+  * deployment runs. */
+class LogServerManifestSpec extends LogServerContractSpec {
+  protected def makeCatalog: (SparkSession, String) => CatalogService =
+    (sp, serverRoot) => LogServer.sharedCatalog(s"$serverRoot/data")(sp, serverRoot)
 }

@@ -7,6 +7,12 @@ import org.apache.spark.sql.{DataFrame, Row}
 import graft.SparkSuite
 import graft.model.LogSchema
 
+/** What every caller of the log store relies on: read-your-writes with
+  * the (container, session) columns recovered, compaction that keeps
+  * the row multiset exactly once, and idempotent appends that stay
+  * idempotent after compaction has moved the batch cold. Driven through
+  * [[LogTier]] on [[ManifestLog]], the store every entry point builds;
+  * the manifest mechanics themselves are pinned in [[ManifestLogSpec]]. */
 class LogStoreSpec extends SparkSuite {
 
   private def batch(rows: (String, String, String)*): DataFrame =
@@ -21,7 +27,7 @@ class LogStoreSpec extends SparkSuite {
       r.getString(1), r.getString(2), r.getString(3), r.getString(4))).sorted
 
   test("append then read is read-your-writes with partition columns recovered") {
-    val store = new LogStore(spark, tempDir("store"))
+    val store: LogTier = new ManifestLog(spark, tempDir("store"))
     store.append(batch(("2024-01-01T10:00:00Z", "INFO", "a"),
                        ("2024-01-01T10:01:00Z", "ERROR", "b")), "app", "run1")
     assert(contents(store.read("app", "run1")) === Seq(
@@ -29,28 +35,8 @@ class LogStoreSpec extends SparkSuite {
       ("2024-01-01T10:01:00Z", "ERROR", "b", "app", "run1")))
   }
 
-  test("reads are isolated per (container, session) and union both tiers") {
-    val store = new LogStore(spark, tempDir("store"))
-    store.append(batch(("2024-01-01T10:00:00Z", "INFO", "x")), "app", "run1")
-    store.append(batch(("2024-01-01T11:00:00Z", "INFO", "y")), "app", "run2")
-    store.append(batch(("2024-01-01T12:00:00Z", "INFO", "z")), "other", "run1")
-    store.compact("app", "run1") // run1 rows now cold
-    store.append(batch(("2024-01-01T13:00:00Z", "WARN", "w")), "app", "run1") // hot again
-    assert(contents(store.read("app", "run1")).map(_._3) === Seq("x", "w")) // sorted by timestamp
-    assert(contents(store.read("app", "run2")).map(_._3) === Seq("y"))
-    assert(store.read().count() === 4)
-  }
-
-  test("duplicates are preserved (bag semantics, reader.py:488-510)") {
-    val store = new LogStore(spark, tempDir("store"))
-    val b = batch(("2024-01-01T10:00:00Z", "INFO", "same"))
-    store.append(b, "c", "s")
-    store.append(b, "c", "s")
-    assert(store.read("c", "s").count() === 2)
-  }
-
   test("compact preserves the row multiset exactly once — the reference's restart double-count bug must not exist") {
-    val store = new LogStore(spark, tempDir("store"))
+    val store: LogTier = new ManifestLog(spark, tempDir("store"))
     // Random-ish workload: interleave appends and compactions, including
     // duplicate rows, then verify the multiset is intact.
     val rnd = new scala.util.Random(42)
@@ -70,180 +56,13 @@ class LogStoreSpec extends SparkSuite {
     assert(hotFiles === 0 && coldFiles > 0)
   }
 
-  test("tierStats counts files and bytes per tier from the file index") {
-    val store = new LogStore(spark, tempDir("store"))
-    store.append(batch(("2024-01-01T10:00:00Z", "INFO", "a")), "c", "s")
-    val (cf0, cb0, hf0, hb0) = store.tierStats("c", "s")
-    assert((cf0, cb0) === (0L, 0L) && hf0 === 1L && hb0 > 0)
-    store.compact("c", "s")
-    val (cf1, cb1, hf1, hb1) = store.tierStats("c", "s")
-    assert(cf1 === 1L && cb1 > 0 && (hf1, hb1) === (0L, 0L))
-  }
-
-  test("sessions() lists namespaces across both tiers") {
-    val store = new LogStore(spark, tempDir("store"))
-    store.append(batch(("2024-01-01T10:00:00Z", "INFO", "a")), "c1", "s1")
-    store.append(batch(("2024-01-01T10:00:00Z", "INFO", "b")), "c2", "s2")
-    store.compact("c1", "s1")
-    assert(store.sessions() === Seq(("c1", "s1"), ("c2", "s2")))
-  }
-
-  test("append rejects invalid ids") {
-    val store = new LogStore(spark, tempDir("store"))
-    intercept[IllegalArgumentException] {
-      store.append(batch(("2024-01-01T10:00:00Z", "INFO", "a")), "bad/id", "s")
-    }
-  }
-
-  test("reopen after restart preserves the row multiset exactly once (T6)") {
-    val root = tempDir("reopen")
-    val store1 = new LogStore(spark, root)
-    store1.append(batch(("2024-01-01T10:00:00Z", "INFO", "cold-row")), "c", "s")
-    store1.compact("c", "s")
-    store1.append(batch(("2024-01-01T11:00:00Z", "INFO", "hot-row")), "c", "s")
-    // "restart": a fresh store instance over the same root — no reload
-    // step exists to double-count (the reference's writer.py:181-231 bug)
-    val store2 = new LogStore(spark, root)
-    assert(store2.read("c", "s").count() === 2)
-    store2.compact("c", "s")
-    assert(store2.read("c", "s").count() === 2)
-    val store3 = new LogStore(spark, root)
-    assert(store3.read("c", "s").count() === 2)
-  }
-
-  test("youngestArchive returns the most recent cold file (A8)") {
-    val store = new LogStore(spark, tempDir("young"))
-    assert(store.youngestArchive("c", "s").isEmpty)
-    store.append(batch(("2024-01-01T10:00:00Z", "INFO", "a")), "c", "s")
-    store.compact("c", "s")
-    val first = store.youngestArchive("c", "s")
-    assert(first.isDefined && first.get._2 > 0)
-    Thread.sleep(1100) // mtime granularity
-    store.append(batch(("2024-01-01T11:00:00Z", "INFO", "b")), "c", "s")
-    store.compact("c", "s")
-    val second = store.youngestArchive("c", "s")
-    assert(second.isDefined && second.get._1 != first.get._1)
-  }
-
-  test("retentionSweep deletes cold files entirely below the cutoff via footer stats, no scan") {
-    val store = new LogStore(spark, tempDir("retention"))
-    // two separately-compacted cold files: one all-old, one mixed
-    store.append(batch(("2023-01-01T00:00:00Z", "INFO", "old1"),
-                       ("2023-06-01T00:00:00Z", "INFO", "old2")), "c", "s")
-    store.compact("c", "s")
-    store.append(batch(("2023-12-01T00:00:00Z", "INFO", "borderline"),
-                       ("2024-06-01T00:00:00Z", "INFO", "fresh")), "c", "s")
-    store.compact("c", "s")
-    assert(store.tierStats("c", "s")._1 === 2)
-    val deleted = store.retentionSweep("c", "s", java.time.Instant.parse("2024-01-01T00:00:00Z"))
-    assert(deleted === 1) // only the all-old file goes; the mixed file stays whole
-    val remaining = store.read("c", "s").collect().map(_.getString(2)).sorted
-    assert(remaining === Array("borderline", "fresh"))
-    // idempotent: nothing else is below the cutoff
-    assert(store.retentionSweep("c", "s", java.time.Instant.parse("2024-01-01T00:00:00Z")) === 0)
-  }
-
   test("idempotent replay is still a no-op AFTER compaction moved the batch cold (round-2 exactly-once hole)") {
-    val store = new LogStore(spark, tempDir("idem"))
+    val store = new ManifestLog(spark, tempDir("idem"))
     val b = batch(("2024-01-01T10:00:00Z", "INFO", "once"))
     assert(store.appendIdempotent(b, "c", "s", "stream-7") > 0)
-    store.compact("c", "s") // hot file stream-7.parquet is gone; marker must survive
+    store.compact("c", "s") // the tagged hot file is gone; its tag must survive
     assert(store.tierStats("c", "s")._3 === 0, "hot tier drained")
     assert(store.appendIdempotent(b, "c", "s", "stream-7") === -1L, "replay must skip")
     assert(store.read("c", "s").count() === 1)
-  }
-
-  test("tagSweep prunes old idempotency markers; fresh ones keep guarding replays") {
-    val store = new LogStore(spark, tempDir("tagsweep"))
-    val b = batch(("2024-01-01T10:00:00Z", "INFO", "x"))
-    store.appendIdempotent(b, "c", "s", "stream-1")
-    store.appendIdempotent(b, "c", "s", "stream-2")
-    // future cutoff: every marker is "old"
-    assert(store.tagSweep("c", "s", java.time.Instant.now.plusSeconds(3600)) === 2)
-    assert(store.tagSweep("c", "s", java.time.Instant.now.plusSeconds(3600)) === 0)
-    // past cutoff: nothing swept, marker still blocks the replay
-    store.appendIdempotent(b, "c", "s", "stream-3")
-    assert(store.tagSweep("c", "s", java.time.Instant.now.minusSeconds(3600)) === 0)
-    assert(store.appendIdempotent(b, "c", "s", "stream-3") === -1L)
-  }
-
-  test("idempotent replay skips across a store restart") {
-    val root = tempDir("idem-restart")
-    val b = batch(("2024-01-01T10:00:00Z", "INFO", "once"))
-    val store1 = new LogStore(spark, root)
-    assert(store1.appendIdempotent(b, "c", "s", "stream-3") > 0)
-    store1.compact("c", "s")
-    val store2 = new LogStore(spark, root)
-    assert(store2.appendIdempotent(b, "c", "s", "stream-3") === -1L)
-    assert(store2.read("c", "s").count() === 1)
-  }
-
-  test("partition pruning reaches the scan: (container, session) predicates become PartitionFilters") {
-    val store = new LogStore(spark, tempDir("prune"))
-    store.append(batch(("2024-01-01T10:00:00Z", "INFO", "a")), "c1", "s1")
-    store.append(batch(("2024-01-01T10:00:00Z", "INFO", "b")), "c2", "s2")
-    store.compact("c1", "s1")
-    // the scan prints its PartitionFilters truncated at
-    // maxMetadataStringLength (default 100) — late in a full-suite run
-    // the session's accumulated expression ids are long enough to push
-    // the session clause past the cut, failing the regex on a plan that
-    // is actually pruned (order-dependent flake). Widen for this plan.
-    val prev = spark.conf.get("spark.sql.maxMetadataStringLength")
-    spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
-    val plan =
-      try store.read("c1", "s1").queryExecution.executedPlan.toString
-      finally spark.conf.set("spark.sql.maxMetadataStringLength", prev)
-    // the namespace predicate must prune DIRECTORIES (PartitionFilters on
-    // the scan), not run as a post-scan row filter — this is what replaces
-    // the reference's SQLite file catalog lookup (metadata.py:44-53)
-    assert(raw"PartitionFilters: \[[^\]]*container[^\]]*c1".r.findFirstIn(plan).isDefined,
-      s"container predicate not pushed to partition pruning:\n${plan.take(2000)}")
-    assert(raw"PartitionFilters: \[[^\]]*session[^\]]*s1".r.findFirstIn(plan).isDefined)
-  }
-
-  test("compact range-clusters by timestamp: cold files cover disjoint time slices (footer-prunable)") {
-    val root = tempDir("cluster")
-    val store = new LogStore(spark, root, targetFileBytes = 1L)
-    // 40 rows over 40 distinct minutes, appended in SHUFFLED order —
-    // clustering must come from compaction, not ingest order
-    val rows = new scala.util.Random(7).shuffle((0 until 40).toVector)
-      .map(i => (f"2024-01-01T10:$i%02d:00Z", "INFO", s"m$i"))
-    store.append(batch(rows: _*), "c", "s")
-    store.compact("c", "s")
-    // read each cold file's timestamp min/max from its parquet footer
-    import scala.jdk.CollectionConverters._
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = spark.sparkContext.hadoopConfiguration
-    val coldFiles = new java.io.File(s"$root/cold/container=c/session=s")
-      .listFiles().filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).toSeq
-    assert(coldFiles.size > 1, "tiny target ⇒ multiple cold files")
-    val ranges = coldFiles.map { p =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p), conf))
-      try {
-        val stats = r.getFooter.getBlocks.asScala
-          .flatMap(_.getColumns.asScala.find(_.getPath.toDotString == "timestamp"))
-          .map(_.getStatistics)
-        val mins = stats.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue)
-        val maxs = stats.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue)
-        (mins.min, maxs.max)
-      } finally r.close()
-    }.sortBy(_._1)
-    // consecutive files must not interleave: each file's max < next file's min
-    ranges.sliding(2).foreach {
-      case Seq((_, aMax), (bMin, _)) =>
-        assert(aMax < bMin, s"file time ranges overlap: $ranges")
-      case _ => ()
-    }
-  }
-
-  test("compact sizes output files by targetFileBytes") {
-    val store = new LogStore(spark, tempDir("store"), targetFileBytes = 1L) // force 1 file per byte-bucket
-    store.append(batch((1 to 50).map(i => ("2024-01-01T10:00:00Z", "INFO", s"m$i")): _*), "c", "s")
-    store.compact("c", "s")
-    val (coldFiles, _, _, _) = store.tierStats("c", "s")
-    assert(coldFiles > 1) // tiny target ⇒ multiple sized outputs
-    assert(store.read("c", "s").count() === 50)
   }
 }
