@@ -411,10 +411,14 @@ object ScaleCheck {
     // fixed-overhead-bound, so 8-vs-32-core ratios sit at ≈1 from job
     // dispatch alone. Here the measured family (plus the segmented
     // ngram pair path, the one inverse-scaling row of r16) runs on the
-    // 10× tier at BOTH core counts, each in a FRESH session so the two
-    // sweeps are symmetric (cold memo relations, warm persisted
-    // tables): ratio = t(8 cores) / t(32 cores) — >1 means more cores
-    // help, ≈1 fixed-overhead-bound, <1 over-partitioned.
+    // 10× tier at BOTH core counts, each in a FRESH session. A fresh
+    // session's catalog is empty, so its first ensure of a persisted
+    // index drops and rebuilds the table; each sweep therefore forces
+    // every persisted idx_* row of Prebuild.builds UNTIMED first, so no
+    // timed query pays an index build (the memo relations those builds
+    // derive from are then warm too, in both sweeps alike; the others
+    // stay cold): ratio = t(8 cores) / t(32 cores) — >1 means more
+    // cores help, ≈1 fixed-overhead-bound, <1 over-partitioned.
     val CoreQueryNames = QueryNames ++ Seq("dedup_ngram_indexed", "dedup_ngram_seg")
     def coreSweep(nCores: Int): Seq[(String, Double)] = {
       val s = SparkSession.builder()
@@ -427,6 +431,9 @@ object ScaleCheck {
         .config("spark.ui.enabled", "false")
         .getOrCreate()
       s.sparkContext.setLogLevel("WARN")
+      ops.Prebuild.builds.foreach { case (name, force) =>
+        if (name.startsWith("idx_")) force(s, dst)
+      }
       val r = CoreQueryNames.map { name =>
         val t0 = System.nanoTime()
         SparkEntry.queries(name)(s, dst).count()
@@ -459,8 +466,10 @@ object ScaleCheck {
     sb ++= f"| **total** | $bt%.3f | $st%.3f | ${st / bt}%.1f× |\n\n"
     sb ++= "## Core scaling at the 10× tier (round-17 verdict #5)\n\n"
     sb ++= "The measured family re-run on the SCALED tier at 32 and 8 cores,\n"
-    sb ++= "each sweep in a fresh session (cold memo relations, warm persisted\n"
-    sb ++= "tables — symmetric by construction). ratio = t(8c)/t(32c): > 1 means\n"
+    sb ++= "each sweep in a fresh session whose persisted `idx_*` tables (the\n"
+    sb ++= "build pass's index rows) are rebuilt untimed before timing, so no row\n"
+    sb ++= "pays an index build; memo relations those builds derive from are warm,\n"
+    sb ++= "the rest cold, alike in both sweeps. ratio = t(8c)/t(32c): > 1 means\n"
     sb ++= "extra cores buy wall time, ≈ 1 fixed-overhead-bound at this size,\n"
     sb ++= "< 1 over-partitioned (the r16 `dedup_ngram_seg` suspicion, measured\n"
     sb ++= "here where partitions carry real data). The lifecycle runs\n"

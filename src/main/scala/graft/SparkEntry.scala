@@ -103,6 +103,8 @@ object SparkEntry {
     // corpus version, every report probes it by doc_id)
     "dedup_semantic_indexed" -> ((s: SparkSession, d: String) => Similarity.semanticDedupIndexed(s, d)),
     "dedup_components"     -> ((s: SparkSession, d: String) => Dedup.dupComponents(s, d)),
+    // The six dedup_hamming* entries are fixed layouts of one Hamming
+    // pair planner (Dedup.Blocking): same rows, one shared oracle.
     "dedup_hamming"        -> ((s: SparkSession, d: String) => Dedup.hammingNearDup(s, d)),
     // persisted-index consumers (SURVEY §11): same rows as their twins,
     // but candidate generation reads the bucketed index tables and
@@ -115,18 +117,13 @@ object SparkEntry {
     // segment-merge shingle index: appends per batch, DF cap at read
     // time over summed per-segment stats (round-9 incremental form)
     "dedup_ngram_seg"      -> (Dedup.ngramJaccardSegmented _),
-    // skew-guarded twin: hot signature blocks hash-split so no task owns
-    // a quadratic block (the blockStats forecast, operationalized)
-    "dedup_hamming_salted" -> ((s: SparkSession, d: String) => Dedup.hammingNearDupSalted(s, d)),
-    // wide-blocking twin: pair-of-chunks keys (2^26 key space) kill the
-    // birthday-collision candidate growth SCALECHECK measured at 10x
-    "dedup_hamming_wide"   -> ((s: SparkSession, d: String) => Dedup.hammingNearDupWide(s, d)),
-    // the 10^9+-doc deployment shape: wide keys AND the salt fallback
-    // for combo keys that are still hot (round-8, SCALECHECK's
-    // "combine them" note made executable)
-    "dedup_hamming_wide_salted" -> ((s: SparkSession, d: String) => Dedup.hammingNearDupWideSalted(s, d)),
-    // forecast-driven layout selection: two metadata-priced block-stats
-    // aggregates choose single/wide × plain/salted per corpus (round-9)
+    // skew guard: hot blocks hash-split so no task owns a quadratic block
+    "dedup_hamming_salted" -> ((s: SparkSession, d: String) => Dedup.hammingNearDup(s, d, Dedup.Salted)),
+    // pair-of-chunks keys (2^26 key space): no birthday-collision growth
+    "dedup_hamming_wide"   -> ((s: SparkSession, d: String) => Dedup.hammingNearDup(s, d, Dedup.Wide)),
+    // wide keys plus the skew guard for pair keys that are still hot
+    "dedup_hamming_wide_salted" -> ((s: SparkSession, d: String) => Dedup.hammingNearDup(s, d, Dedup.WideSalted)),
+    // layout chosen per corpus from the two block-stats forecasts
     "dedup_hamming_auto"   -> ((s: SparkSession, d: String) => Dedup.hammingNearDupAuto(s, d)),
     "dedup_admission"      -> ((s: SparkSession, d: String) => Dedup.admissionGate(s, d)),
     // the deployed ingest-gate shape: probes the PERSISTED chunk index
@@ -705,11 +702,11 @@ object SparkEntry {
 
   // Shared DuckDB CTE pair (depends on shash): the 4×16-bit pigeonhole
   // chunk relation and the blocked candidate pairs — mirrors
-  // graft.ops.Dedup.chunkRelation/blockedCandidates with
+  // graft.ops.Dedup.blockKeys/candidates under Dedup.Plain:
   // SimHashBits=64, nChunks=4 (maxDist 3). Shift amounts 0/16/32/48
   // with a 16-bit mask never touch sign-extension bits, so the chunk
   // keys are engine-independent.
-  // The pigeonhole chunk relation alone (Dedup.chunkRelation in SQL) —
+  // The pigeonhole chunk relation alone (Dedup.blockKeys in SQL) —
   // the ONE place the 16-bit shift/mask chunk key is written; every
   // blocked-join oracle (cand below, the admission split) reuses it.
   private val chunkRelCte =

@@ -431,14 +431,13 @@ object Dedup {
       .select(col("doc_id"), col("b.bi").as("bi"), col("b.bk").as("bk"))
   }
 
-  /** SimHash signature width in bits. The round-≤4 design hardwired 16
-    * bits: only 2¹⁶ distinct signatures and (with 4-bit pigeonhole
-    * chunks) 64 block keys, so candidate generation was structurally
-    * n²/16 at ANY corpus size — a hardwired scale ceiling. At 64 bits
-    * the signature space is 2⁶⁴ and every pigeonhole chunk key ranges
-    * over 2¹⁶ values, so block sizes — and therefore candidate pairs —
-    * track real near-duplicate density instead of the birthday bound.
-    * All 32 md5 hex chars are available; 64 uses the first 16. */
+  /** SimHash signature width in bits. At 64 bits the signature space
+    * is 2⁶⁴ and every pigeonhole chunk key of the [[Plain]] layout
+    * ranges over 2¹⁶ values, so block sizes — and therefore candidate
+    * pairs — track real near-duplicate density instead of the birthday
+    * bound (a 16-bit signature with 4-bit chunks would have 64 block
+    * keys, making candidate generation n²/16 at any corpus size). All
+    * 32 md5 hex chars are available; 64 uses the first 16. */
   private[ops] val SimHashBits = 64
 
   /** 64-bit SimHash per document, frequency-weighted over tokens —
@@ -522,71 +521,110 @@ object Dedup {
     }
   }
 
-  /** (doc_id, simhash, j, ck): the signature split into `nChunks`
-    * pigeonhole chunks — the blocking relation under [[hammingNearDup]],
-    * [[fuzzyEditDistance]] and [[blockStats]], and the SCHEMA of the
-    * persisted chunk-index table ([[IndexTables.ensureChunkIndex]]). */
-  private[ops] def chunkRelation(sh: DataFrame, nChunks: Int): DataFrame = {
-    val chunkExprs = chunkBounds(nChunks).zipWithIndex.map { case ((lo, mask), j) =>
-      struct(lit(j).as("j"), expr(s"CAST((simhash >> $lo) & $mask AS BIGINT)").as("ck"))
+  /** The skew guard of a [[Blocking]]: a block with more than
+    * `threshold` members is split into ⌈n/subBlock⌉ salt groups
+    * ([[saltedRawPairs]]), so per-key join work is bounded by
+    * `subBlock`², not by the block size. */
+  final case class Salt(threshold: Int, subBlock: Int)
+
+  /** The layout of a pigeonhole-blocked Hamming pair query. The 64-bit
+    * signature splits into `nChunks` chunks, and each block key is one
+    * chunk or, when `wide`, a pair of chunks; `salt` optionally splits
+    * hot blocks. Every admissible layout emits the same verified pairs;
+    * the layout decides only the candidate volume and the per-task work.
+    *
+    * Admissible means exact by pigeonhole: `maxDist` differing bits
+    * dirty at most `maxDist` chunks, so maxDist ≤ nChunks−1 leaves a
+    * clean chunk (a single-chunk key agrees) and maxDist ≤ nChunks−2
+    * leaves a clean pair of chunks (a wide key agrees). */
+  final case class Blocking(maxDist: Int, nChunks: Int, wide: Boolean = false,
+                            salt: Option[Salt] = None) {
+    require(Blocking.admissible(maxDist, nChunks, wide),
+      s"${if (wide) "pair-of-chunks" else "single-chunk"} blocking is exact only for " +
+      s"maxDist <= nChunks-${Blocking.chunksPerKey(wide)} (got maxDist=$maxDist, nChunks=$nChunks)")
+  }
+
+  object Blocking {
+    private def chunksPerKey(wide: Boolean): Int = if (wide) 2 else 1
+    private[ops] def admissible(maxDist: Int, nChunks: Int, wide: Boolean): Boolean =
+      maxDist <= nChunks - chunksPerKey(wide)
+  }
+
+  /** The fixed layouts of the declared queries, all at radius 3.
+    *  - [[Plain]]: four 16-bit single-chunk keys — the memoized pairs,
+    *    the admission gate, pHash and the persisted chunk index.
+    *  - [[Wide]]: five chunks, C(5,2) = 10 pair keys of ~26 bits. Chance
+    *    key agreements scale ~n²/keyspace, so at 10⁹+ documents the
+    *    16-bit keys drown in birthday collisions and the 2²⁶-key layout
+    *    does not, for 10 key rows per document instead of 4.
+    *  - [[Salted]], [[WideSalted]]: the same keys behind a deliberately
+    *    low guard (16 members, groups of 8), so the salted path runs on
+    *    the test corpus and not only on constructed skew. */
+  val Plain: Blocking = Blocking(maxDist = 3, nChunks = 4)
+  val Wide: Blocking = Blocking(maxDist = 3, nChunks = 5, wide = true)
+  private val Guard = Salt(threshold = 16, subBlock = 8)
+  val Salted: Blocking = Plain.copy(salt = Some(Guard))
+  val WideSalted: Blocking = Wide.copy(salt = Some(Guard))
+
+  /** Chunk indices of each block key, in key order: (0), (1), … for
+    * single chunks; (0,1), (0,2), …, (n−2,n−1) for pairs. */
+  private def keyChunks(b: Blocking): Seq[Seq[Int]] =
+    if (b.wide) (0 until b.nChunks).combinations(2).toSeq
+    else (0 until b.nChunks).map(Seq(_))
+
+  /** (doc_id, simhash, j, ck): one row per block key `j` of each
+    * signature, with key value `ck` — the key relation every blocked
+    * query joins, and the schema of the persisted chunk index
+    * ([[IndexTables.ensureChunkIndex]]). A pair-of-chunks key packs as
+    * k1·2³² + k2: chunk masks are at most ⌈64/nChunks⌉ ≤ 22 bits for
+    * every admissible wide layout (nChunks ≥ 3), so the packing is a
+    * bijection and blocks are exactly the (k1, k2) blocks. A 16-bit
+    * shift would alias distinct keys at nChunks = 3: rows would stay
+    * correct, but merged blocks would weaken the salt guard's per-key
+    * bound. */
+  private[ops] def blockKeys(sig: DataFrame, b: Blocking): DataFrame = {
+    val bounds = chunkBounds(b.nChunks)
+    val keys = keyChunks(b).zipWithIndex.map { case (chunks, j) =>
+      val ck = chunks.map { i => val (lo, mask) = bounds(i); s"(simhash >> $lo) & $mask" }
+        .reduce((k1, k2) => s"shiftleft($k1, 32) + ($k2)")
+      struct(lit(j).as("j"), expr(s"CAST($ck AS BIGINT)").as("ck"))
     }
-    sh.select(col("doc_id"), col("simhash"), explode(array(chunkExprs: _*)).as("c"))
+    sig.select(col("doc_id"), col("simhash"), explode(array(keys: _*)).as("c"))
       .select(col("doc_id"), col("simhash"), col("c.j").as("j"), col("c.ck").as("ck"))
   }
 
-  /** `j = <index of the first chunk on which ha and hb agree>` — the
-    * STATELESS pair dedup for chunk-blocked joins. A pair colliding on
-    * k chunks comes out of the block join k times; keeping only the
-    * row joined via the first agreeing chunk keeps exactly one copy
-    * using nothing but the two signatures already on the row. The
-    * round-≤4 design paid a `distinct()` here — a full extra shuffle
-    * of the candidate set, and the one thing that kept this pipeline
-    * out of Structured Streaming (stateful dedup on an unbounded pair
-    * stream); a pure filter costs neither. */
-  private def firstAgreeingChunk(nChunks: Int) =
-    chunkBounds(nChunks).zipWithIndex.foldRight(lit(nChunks)) {
-      case (((lo, mask), j), els) =>
-        when(expr(s"((ha ^ hb) >> $lo) & $mask") === 0, lit(j)).otherwise(els)
+  /** Keeps each joined pair once: the row whose key `j` is the FIRST key
+    * on which ha and hb agree. A pair sharing k keys comes out of the
+    * block join k times; this filter needs nothing but the two
+    * signatures on the row, so it costs no distinct() shuffle and keeps
+    * the pipeline stateless (Structured Streaming append mode). */
+  private def firstAgreeingKey(pairs: DataFrame, b: Blocking): DataFrame = {
+    val bounds = chunkBounds(b.nChunks)
+    val groups = keyChunks(b)
+    val first = groups.zipWithIndex.foldRight(lit(groups.size)) { case ((chunks, j), els) =>
+      val agree = chunks.map { i =>
+        val (lo, mask) = bounds(i)
+        expr(s"((ha ^ hb) >> $lo) & $mask") === 0
+      }.reduce(_ && _)
+      when(agree, lit(j)).otherwise(els)
     }
-
-  /** Candidate pairs under pigeonhole blocking with `nChunks` chunks:
-    * any pair within Hamming distance nChunks−1 must agree exactly on
-    * at least one chunk, so candidates come from ONE exploded
-    * composite-key self-join (same single-shuffle trick as MinHash
-    * banding) — never all-pairs. At 64 bits each chunk key ranges over
-    * 2¹⁶ values (vs 2⁴ in the retired 16-bit design), so block sizes
-    * track true near-dup density instead of the birthday bound.
-    * Multi-chunk collisions dedup via [[firstAgreeingChunk]], not a
-    * shuffle. */
-  private[ops] def blockedCandidates(sh: DataFrame, nChunks: Int): DataFrame =
-    pairsFromChunks(chunkRelation(sh, nChunks), nChunks)
-
-  /** The candidate pair join over an ALREADY-CHUNKED relation — shared
-    * by the in-plan path ([[blockedCandidates]]) and the persisted
-    * chunk-index path ([[hammingNearDupIndexed]]), where `chunks` is a
-    * bucketed table scan and this self-join plans with no Exchange. */
-  private[ops] def pairsFromChunks(chunks: DataFrame, nChunks: Int): DataFrame =
-    rawBlockPairs(chunks)
-      .filter(col("j") === firstAgreeingChunk(nChunks))
-      .drop("j")
+    pairs.filter(col("j") === first).drop("j")
+  }
 
   /** The block self-join itself: every within-block candidate pair,
-    * still carrying the chunk index `j` for [[firstAgreeingChunk]]
-    * dedup (applied by the caller so [[saltedPairsFromChunks]] can
-    * union this with its salted hot-block pairs first). */
-  private def rawBlockPairs(chunks: DataFrame): DataFrame =
-    chunks.as("a").join(chunks.as("b"),
+    * still carrying the key index `j` for [[firstAgreeingKey]]. */
+  private def rawBlockPairs(keys: DataFrame): DataFrame =
+    keys.as("a").join(keys.as("b"),
         col("a.j") === col("b.j") && col("a.ck") === col("b.ck") &&
         col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
               col("a.simhash").as("ha"), col("b.simhash").as("hb"),
               col("a.j").as("j"))
 
-  /** [[pairsFromChunks]] with a SKEW GUARD — the consumer of the
-    * [[blockStats]] forecast: blocks whose membership exceeds
-    * `saltThreshold` (template boilerplate collapsing a signature
-    * chunk — the one input shape that makes blocked candidate
-    * generation quadratic in a single task) are SPLIT into
+  /** [[rawBlockPairs]] with the SKEW GUARD the [[blockStats]] forecast
+    * prices: blocks with more than `salt.threshold` members (template
+    * boilerplate collapsing a key — the one input that makes blocked
+    * candidate generation quadratic in a single task) are SPLIT into
     * G = ⌈n/subBlock⌉ salt groups by a hash of doc_id, and their pairs
     * come from per-GROUP-PAIR join keys instead of one per-block key:
     *
@@ -595,42 +633,26 @@ object Dedup {
     *
     * so an unordered pair with groups gx < gy matches on exactly the
     * one key (gx, gy), and same-group pairs match on (g, g) with the
-    * usual doc_id order predicate. The hot block's n²/2 candidate
-    * comparisons spread over G(G+1)/2 independent keys of ≤ subBlock²
-    * work each — per-task work is bounded by the LAYOUT parameter, not
-    * the skew — at the price of ~G× row replication of the hot rows
-    * only (n·G = n²/subBlock rows, always ≤ the pair count the block
-    * was already due to emit). Cold blocks take the plain join
-    * untouched; a block is hot or cold as a whole, so the union is
-    * complete, and [[firstAgreeingChunk]] dedup runs across BOTH paths
-    * (it is a pure function of the two signatures). Output is
-    * row-identical to [[pairsFromChunks]] — property-proven in
+    * usual doc_id order predicate. The hot block's n²/2 comparisons
+    * spread over G(G+1)/2 independent keys of ≤ subBlock² work each, at
+    * the price of ~G× replication of the hot rows only (n·G = n²/subBlock
+    * rows, never more than the pairs the block emits anyway). Cold
+    * blocks take the plain join; a block is hot or cold as a whole, so
+    * the union is complete, and [[firstAgreeingKey]] dedups across both
+    * paths (it is a pure function of the two signatures). The output is
+    * the pair set of [[rawBlockPairs]] — property-proven in
     * DedupSaltingSpec, which also pins the per-key work bound.
     *
-    * The hot-block relation is tiny by construction (blocks above the
-    * threshold are the forecast's long tail) → broadcast; at 100 TB the
-    * same one-aggregate pre-pass is metadata-priced, exactly like the
-    * [[blockStats]] report it operationalizes. */
-  private[ops] def saltedPairsFromChunks(chunks: DataFrame, nChunks: Int,
-      saltThreshold: Int = 64, subBlock: Int = 32): DataFrame =
-    saltedRawPairs(chunks, saltThreshold, subBlock)
-      .filter(col("j") === firstAgreeingChunk(nChunks))
-      .drop("j")
-
-  /** The salting core of [[saltedPairsFromChunks]], WITHOUT the
-    * chunk-scheme-specific dedup filter — so any blocking whose key
-    * fits the (j, ck) shape can reuse it: single chunks use j = chunk
-    * index, and the wide pair-of-chunks scheme packs (c, k1, k2) into
-    * (j = c, ck = k1·2³² + k2) ([[hammingNearDupWideSalted]]).
-    * Output: (doc_a, doc_b, ha, hb, j) candidate pairs, doc-ordered. */
-  private[ops] def saltedRawPairs(chunks: DataFrame,
-      saltThreshold: Int, subBlock: Int): DataFrame = {
-    val hot = chunks.groupBy(col("j"), col("ck"))
+    * The hot-block relation is tiny by construction (the forecast's
+    * long tail) → broadcast. Output: (doc_a, doc_b, ha, hb, j),
+    * doc-ordered. */
+  private def saltedRawPairs(keys: DataFrame, salt: Salt): DataFrame = {
+    val hot = keys.groupBy(col("j"), col("ck"))
       .agg(count(lit(1)).as("n"))
-      .filter(col("n") > saltThreshold)
+      .filter(col("n") > salt.threshold)
       .select(col("j"), col("ck"),
-        ceil(col("n").cast("double") / subBlock).cast("int").as("gn"))
-    val tagged = chunks.join(broadcast(hot), Seq("j", "ck"), "left")
+        ceil(col("n").cast("double") / salt.subBlock).cast("int").as("gn"))
+    val tagged = keys.join(broadcast(hot), Seq("j", "ck"), "left")
     val coldPairs = rawBlockPairs(tagged.filter(col("gn").isNull).drop("gn"))
     val hotRows = tagged.filter(col("gn").isNotNull)
       .withColumn("g", pmod(xxhash64(col("doc_id")), col("gn").cast("bigint")).cast("int"))
@@ -658,70 +680,84 @@ object Dedup {
     coldPairs.unionByName(hotPairs)
   }
 
-  /** Fuzzy near-dup via edit distance, pigeonhole-blocked on SimHash:
-    * candidate pairs come from [[blockedCandidates]] (share ≥1 of
-    * `blockDist`+1 signature chunks — i.e. every pair within Hamming
-    * distance `blockDist` plus whatever else collides), then the
-    * quadratic Levenshtein runs over the 40-char prefix of survivors
-    * only. The standard two-stage shape: cheap hash blocking, expensive
-    * edit distance on candidates. (The round-≤4 design blocked on the
-    * IDENTICAL signature — with a 64-bit signature that would verify
-    * almost nothing; chunk blocking keeps recall while candidates stay
-    * linear in real near-dup density.) */
-  def fuzzyEditDistance(s: SparkSession, dir: String, maxDist: Int = 10,
-                        blockDist: Int = 3): DataFrame =
-    (if (maxDist == 10 && blockDist == 3) fuzzyPairs10(s, dir)
-     else fuzzyPairsFrom(s, dir, simhashRaw(s, dir), maxDist, blockDist))
-      .orderBy(col("doc_a"), col("doc_b"))
+  /** Candidate pairs (doc_a, doc_b, ha, hb), one row per pair, of a key
+    * relation under layout `b`: the block self-join (salted when `b`
+    * is) deduped by [[firstAgreeingKey]]. The keys come from
+    * [[blockKeys]] in-plan or from a persisted chunk index; the index
+    * is bucketed and sorted by (j, ck), so over it this join plans with
+    * no Exchange and no per-query Sort. */
+  private[ops] def candidates(keys: DataFrame, b: Blocking): DataFrame =
+    firstAgreeingKey(b.salt.fold(rawBlockPairs(keys))(saltedRawPairs(keys, _)), b)
 
-  /** Memoized verified edit-distance pairs at the default radii — shared
-    * by the fuzzy report and [[methodAgreement]]. */
+  /** The verify tail of every Hamming pair query: the exact distance
+    * `bit_count(ha ^ hb)`, kept at ≤ maxDist. */
+  private def verified(pairs: DataFrame, maxDist: Int,
+                       a: String = "doc_a", b: String = "doc_b"): DataFrame =
+    pairs.withColumn("dist", expr("CAST(bit_count(ha ^ hb) AS BIGINT)"))
+      .filter(col("dist") <= maxDist)
+      .select(col(a), col(b), col("dist"))
+
+  /** Verified pairs (doc_a, doc_b, dist) of a key relation under `b`. */
+  private[ops] def keyPairs(keys: DataFrame, b: Blocking): DataFrame =
+    verified(candidates(keys, b), b.maxDist)
+
+  /** Verified pairs of a (doc_id, simhash) relation under `b`, with the
+    * keys derived in-plan. */
+  private[ops] def hammingPairsFrom(sig: DataFrame, b: Blocking): DataFrame =
+    keyPairs(blockKeys(sig, b), b)
+
+  /** Fuzzy near-dup via edit distance, pigeonhole-blocked on SimHash:
+    * candidate pairs share one of the [[Plain]] keys (every pair within
+    * Hamming distance 3 plus whatever else collides), then the
+    * Levenshtein distance (≤ 10) runs over the 40-char prefix of
+    * survivors only — cheap hash blocking first, expensive edit
+    * distance on candidates. Chunk keys keep recall while candidates
+    * stay linear in real near-dup density; blocking on the identical
+    * 64-bit signature would verify almost nothing. */
+  def fuzzyEditDistance(s: SparkSession, dir: String): DataFrame =
+    fuzzyPairs10(s, dir).orderBy(col("doc_a"), col("doc_b"))
+
+  /** Memoized verified edit-distance pairs — shared by the fuzzy report
+    * and [[methodAgreement]]. */
   private[ops] def fuzzyPairs10(s: SparkSession, dir: String): DataFrame =
     memoized("fuzzyPairs10", s, dir) {
-      fuzzyPairsFrom(s, dir, simhashRaw(s, dir), maxDist = 10)
+      val maxDist = 10
+      val docs = Tables.documents(s, dir)
+        .select(col("doc_id"), substring(col("text"), 1, 40).as("prefix"))
+      candidates(blockKeys(simhashRaw(s, dir), Plain), Plain)
+        .select(col("doc_a"), col("doc_b"))
+        .join(docs.as("x"), col("doc_a") === col("x.doc_id"))
+        .join(docs.as("y"), col("doc_b") === col("y.doc_id"))
+        // THRESHOLDED levenshtein: the banded DP early-exits once the
+        // distance provably exceeds maxDist — O(len·maxDist) per pair
+        // instead of O(len²), and almost every blocked candidate is a
+        // non-match that exits early. Values ≤ the threshold are exact
+        // (-1 marks "above"), so the kept rows are identical to the
+        // unthresholded form the oracle computes.
+        .withColumn("dist",
+          levenshtein(col("x.prefix"), col("y.prefix"), maxDist).cast("long"))
+        .filter(col("dist") >= 0)
+        .select(col("doc_a"), col("doc_b"), col("dist"))
     }
 
-  /** [[fuzzyEditDistance]] over a CALLER-SUPPLIED simhash relation, so
-    * composite reports ([[methodAgreement]]) derive the signature once. */
-  private def fuzzyPairsFrom(s: SparkSession, dir: String, sh: DataFrame,
-                             maxDist: Int, blockDist: Int = 3): DataFrame = {
-    val docs = Tables.documents(s, dir)
-      .select(col("doc_id"), substring(col("text"), 1, 40).as("prefix"))
-    blockedCandidates(sh, blockDist + 1)
-      .select(col("doc_a"), col("doc_b"))
-      .join(docs.as("x"), col("doc_a") === col("x.doc_id"))
-      .join(docs.as("y"), col("doc_b") === col("y.doc_id"))
-      // THRESHOLDED levenshtein: the banded DP early-exits once the
-      // distance provably exceeds maxDist — O(len·maxDist) per pair
-      // instead of O(len²), and almost every blocked candidate is a
-      // non-match that exits early. Values ≤ the threshold are exact
-      // (-1 marks "above"), so the kept rows are identical to the
-      // unthresholded form the oracle computes.
-      .withColumn("dist",
-        levenshtein(col("x.prefix"), col("y.prefix"), maxDist).cast("long"))
-      .filter(col("dist") >= 0)
-      .select(col("doc_a"), col("doc_b"), col("dist"))
-  }
-
   /** Hamming near-dup over the 64-bit SimHash with PIGEONHOLE blocking:
-    * maxDist+1 chunks of ⌈64/(maxDist+1)⌉ bits — maxDist differing bits
-    * can dirty at most maxDist chunks, so every true pair agrees on ≥1
-    * chunk and only [[blockedCandidates]] pay the exact
-    * `bit_count(xor)` verify. This finds near-dups whose signatures
-    * differ by a few flipped bits (small edits) while staying linear in
-    * real collisions — never all-pairs. */
-  def hammingNearDup(s: SparkSession, dir: String, maxDist: Int = 3): DataFrame =
-    (if (maxDist == 3) hammingPairs3(s, dir)
-     else hammingPairsFrom(simhashRaw(s, dir), maxDist))
+    * only pairs that share a block key pay the exact `bit_count(xor)`
+    * verify, so the cost tracks real collisions — never all-pairs.
+    * This finds near-dups whose signatures differ by a few flipped bits
+    * (small edits). Every admissible layout `b` emits the same rows;
+    * the declared queries fix it to [[Plain]], [[Salted]], [[Wide]] or
+    * [[WideSalted]], and share one oracle. */
+  def hammingNearDup(s: SparkSession, dir: String, b: Blocking = Plain): DataFrame =
+    (if (b == Plain) hammingPairs3(s, dir) else hammingPairsFrom(simhashRaw(s, dir), b))
       .orderBy(col("doc_a"), col("doc_b"))
 
-  /** Memoized verified Hamming pairs at the default radius — the
+  /** Memoized verified Hamming pairs under [[Plain]] — the
     * VERIFIED-PAIR relation keep-best clustering, method agreement and
     * the hamming report all consume (a production pipeline materializes
     * its verified near-dup pairs once, then derives every downstream
     * artifact from the table). */
   private[ops] def hammingPairs3(s: SparkSession, dir: String): DataFrame =
-    memoized("hammingPairs3", s, dir) { hammingPairsFrom(simhashRaw(s, dir), 3) }
+    memoized("hammingPairs3", s, dir) { hammingPairsFrom(simhashRaw(s, dir), Plain) }
 
   /** Memoized component assignment over [[hammingPairs3]] — the cluster
     * relation [[keepBest]] ranks within. */
@@ -730,162 +766,22 @@ object Dedup {
       connectedComponents(hammingPairs3(s, dir).select(col("doc_a"), col("doc_b")))
     }
 
-  /** [[hammingNearDup]] over a caller-supplied simhash relation (see
-    * [[fuzzyPairsFrom]]). */
-  private[ops] def hammingPairsFrom(sh: DataFrame, maxDist: Int): DataFrame =
-    blockedCandidates(sh, maxDist + 1)
-      .withColumn("dist", expr("CAST(bit_count(ha ^ hb) AS BIGINT)"))
-      .filter(col("dist") <= maxDist)
-      .select(col("doc_a"), col("doc_b"), col("dist"))
-
-  /** [[hammingNearDup]] reading the PERSISTED chunk-index table instead
-    * of deriving the blocking relation in-plan — the 100-TB consumer
-    * shape (SURVEY §11 made executable): the index is bucketed+sorted
-    * by (j, ck), exactly the candidate self-join's keys, so candidate
-    * generation is a sort-merge join with NO Exchange and no per-query
-    * Sort on either side (plan-proven in IndexTablesSpec; broadcast
-    * disabled there — at real scale neither side broadcasts). Rows are
-    * identical to [[hammingNearDup]]'s, and the driver oracle replays
-    * the same SQL for both. */
-  def hammingNearDupIndexed(s: SparkSession, dir: String, maxDist: Int = 3): DataFrame = {
-    val n = maxDist + 1
-    val idx = s.table(IndexTables.ensureChunkIndex(s, dir, n))
-    pairsFromChunks(idx, n)
-      .withColumn("dist", expr("CAST(bit_count(ha ^ hb) AS BIGINT)"))
-      .filter(col("dist") <= maxDist)
-      .select(col("doc_a"), col("doc_b"), col("dist"))
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
-
-  /** [[hammingNearDup]] through the SKEW-GUARDED candidate join
-    * ([[saltedPairsFromChunks]]): hot signature blocks — the thing the
-    * [[blockStats]] forecast prices — are hash-split so no single task
-    * ever owns a quadratic block. Identical rows to [[hammingNearDup]]
-    * (same driver oracle); the low threshold here is deliberate so the
-    * salted path is EXERCISED on the real test corpus, not just on
-    * constructed skew. */
-  def hammingNearDupSalted(s: SparkSession, dir: String, maxDist: Int = 3,
-                           saltThreshold: Int = 16, subBlock: Int = 8): DataFrame = {
-    val n = maxDist + 1
-    saltedPairsFromChunks(chunkRelation(simhashRaw(s, dir), n), n,
-                          saltThreshold, subBlock)
-      .withColumn("dist", expr("CAST(bit_count(ha ^ hb) AS BIGINT)"))
-      .filter(col("dist") <= maxDist)
-      .select(col("doc_a"), col("doc_b"), col("dist"))
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
-
-  /** PAIR-OF-CHUNKS ("wide") blocking relation: the signature split
-    * into `nChunks` chunks, exploded to one row per chunk PAIR (i<j) —
-    * (doc_id, simhash, c, k1, k2) with c the combo index. Blocking on
-    * two chunks at once squares the effective key space (two ~13-bit
-    * chunks → 2²⁶ keys vs 2¹⁶ for single chunks), which is the layout
-    * fix for the birthday-collision growth SCALECHECK measured: random
-    * key agreements scale ~n²/keyspace, so at 10⁹+ docs the single-
-    * chunk scheme drowns in chance collisions while this one doesn't.
-    * Pigeonhole still EXACT: maxDist ≤ nChunks−2 dirty bits touch at
-    * most nChunks−2 chunks, leaving ≥2 clean chunks — some pair of
-    * clean chunks agrees. Cost: C(nChunks,2) rows per doc (10 at
-    * nChunks=5, vs 4 single chunks at maxDist 3) — a constant-factor
-    * index-size trade for a quadratic collision reduction. */
-  private[ops] def comboRelation(sh: DataFrame, nChunks: Int): DataFrame = {
-    val bounds = chunkBounds(nChunks)
-    val combos = for (i <- 0 until nChunks; j <- (i + 1) until nChunks) yield (i, j)
-    val comboExprs = combos.zipWithIndex.map { case ((i, j), c) =>
-      val (loI, mI) = bounds(i); val (loJ, mJ) = bounds(j)
-      struct(lit(c).as("c"),
-        expr(s"CAST((simhash >> $loI) & $mI AS BIGINT)").as("k1"),
-        expr(s"CAST((simhash >> $loJ) & $mJ AS BIGINT)").as("k2"))
-    }
-    sh.select(col("doc_id"), col("simhash"), explode(array(comboExprs: _*)).as("p"))
-      .select(col("doc_id"), col("simhash"),
-              col("p.c").as("c"), col("p.k1").as("k1"), col("p.k2").as("k2"))
-  }
-
-  /** First combo on which both chunks agree — the stateless pair dedup
-    * for the wide blocking, same shape as [[firstAgreeingChunk]]. */
-  private def firstAgreeingCombo(nChunks: Int) = {
-    val bounds = chunkBounds(nChunks)
-    val combos = for (i <- 0 until nChunks; j <- (i + 1) until nChunks) yield (i, j)
-    combos.zipWithIndex.foldRight(lit(combos.size)) { case (((i, j), c), els) =>
-      val (loI, mI) = bounds(i); val (loJ, mJ) = bounds(j)
-      when(expr(s"((ha ^ hb) >> $loI) & $mI") === 0 &&
-           expr(s"((ha ^ hb) >> $loJ) & $mJ") === 0, lit(c)).otherwise(els)
-    }
-  }
-
-  /** [[hammingNearDup]] under pair-of-chunks blocking (see
-    * [[comboRelation]]) — identical rows (the pigeonhole guarantee
-    * holds for maxDist ≤ nChunks−2, exactness ScalaCheck-proven in
-    * DedupBlockingSpec), same driver oracle; the candidate volume is
-    * what changes, and only at corpus sizes where chance 16-bit
-    * agreements dominate. */
-  def hammingNearDupWide(s: SparkSession, dir: String, maxDist: Int = 3,
-                         nChunks: Int = 5): DataFrame =
-    widePairsFrom(simhashRaw(s, dir), maxDist, nChunks)
+  /** [[hammingNearDup]] with the [[Plain]] keys read from the PERSISTED
+    * chunk index instead of derived in-plan — the 100-TB consumer shape
+    * (SURVEY §11): candidate generation is a sort-merge join with no
+    * Exchange and no per-query Sort (plan-proven in IndexTablesSpec,
+    * with broadcast disabled — at real scale neither side broadcasts).
+    * Same rows and oracle as [[hammingNearDup]]. */
+  def hammingNearDupIndexed(s: SparkSession, dir: String): DataFrame =
+    keyPairs(s.table(IndexTables.ensureChunkIndex(s, dir, Plain.nChunks)), Plain)
       .orderBy(col("doc_a"), col("doc_b"))
 
-  /** [[hammingNearDupWide]] over a caller-supplied simhash relation. */
-  private[ops] def widePairsFrom(sh: DataFrame, maxDist: Int, nChunks: Int): DataFrame = {
-    require(maxDist <= nChunks - 2,
-      s"pair-of-chunks blocking is exact only for maxDist <= nChunks-2 " +
-      s"(got maxDist=$maxDist, nChunks=$nChunks)")
-    val rel = comboRelation(sh, nChunks)
-    rel.as("a").join(rel.as("b"),
-        col("a.c") === col("b.c") && col("a.k1") === col("b.k1") &&
-        col("a.k2") === col("b.k2") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-              col("a.simhash").as("ha"), col("b.simhash").as("hb"),
-              col("a.c").as("c"))
-      .filter(col("c") === firstAgreeingCombo(nChunks))
-      .withColumn("dist", expr("CAST(bit_count(ha ^ hb) AS BIGINT)"))
-      .filter(col("dist") <= maxDist)
-      .select(col("doc_a"), col("doc_b"), col("dist"))
-  }
-
-  /** [[hammingNearDupWide]] COMPOSED with the [[saltedRawPairs]] skew
-    * guard (round-8; SCALECHECK's "at 10⁹+ docs a deployment combines
-    * them" is now executable): wide blocking kills the birthday term
-    * (2²⁶ keys), and any combo key that is STILL hot — identical
-    * boilerplate collapsing two chunks at once — hash-splits into salt
-    * groups with per-task work bounded by `subBlock²`. The combo key
-    * (c, k1, k2) packs losslessly into the salting core's (j, ck)
-    * shape as (c, k1·2³² + k2): chunk masks are ≤ 22 bits for any
-    * admissible nChunks, so the
-    * packing is a bijection and block membership is unchanged.
-    * Row-identical to [[hammingNearDupWide]] and [[hammingNearDup]]
-    * (same pigeonhole exactness, same oracle); DedupSaltingSpec
-    * property-proves the identity over the combo keys.
-    *
-    * The pack shifts k1 by 32 bits: chunk masks are at most
-    * ⌈64/nChunks⌉ ≤ 22 bits for any nChunks ≥ 3, so the packing is a
-    * bijection for every shape the `require` admits (a 16-bit shift
-    * would alias distinct combos at nChunks = 3, merging unrelated
-    * blocks and defeating exactly the per-key bound salting provides —
-    * rows would stay correct, the GUARD would silently weaken). */
-  def hammingNearDupWideSalted(s: SparkSession, dir: String, maxDist: Int = 3,
-      nChunks: Int = 5, saltThreshold: Int = 16, subBlock: Int = 8): DataFrame =
-    hammingNearDupWideSaltedFrom(simhashRaw(s, dir), maxDist, nChunks,
-                                 saltThreshold, subBlock)
-      .orderBy(col("doc_a"), col("doc_b"))
-
-  /** [[hammingNearDupWideSalted]] over a caller-supplied simhash
-    * relation (unsorted — the property spec's seam). */
-  private[ops] def hammingNearDupWideSaltedFrom(sh: DataFrame, maxDist: Int,
-      nChunks: Int, saltThreshold: Int, subBlock: Int): DataFrame = {
-    require(maxDist <= nChunks - 2,
-      s"pair-of-chunks blocking is exact only for maxDist <= nChunks-2 " +
-      s"(got maxDist=$maxDist, nChunks=$nChunks)")
-    val packed = comboRelation(sh, nChunks)
-      .select(col("doc_id"), col("simhash"), col("c").as("j"),
-              expr("shiftleft(k1, 32) + k2").as("ck"))
-    saltedRawPairs(packed, saltThreshold, subBlock)
-      .withColumnRenamed("j", "c")
-      .filter(col("c") === firstAgreeingCombo(nChunks))
-      .withColumn("dist", expr("CAST(bit_count(ha ^ hb) AS BIGINT)"))
-      .filter(col("dist") <= maxDist)
-      .select(col("doc_a"), col("doc_b"), col("dist"))
-  }
+  /** [[hammingNearDup]] under the layout [[autoBlockingChoice]] picks
+    * for this corpus — same rows and oracle under every choice;
+    * the forecast decides only which candidate join the cluster pays
+    * for. */
+  def hammingNearDupAuto(s: SparkSession, dir: String): DataFrame =
+    hammingNearDup(s, dir, autoBlockingChoice(simhashRaw(s, dir)))
 
   /** [[ngramJaccard]] reading the PERSISTED DF-capped shingle index:
     * pair generation self-joins the bucketed table on its bucket key
@@ -941,71 +837,54 @@ object Dedup {
 
   /** Near-dup ADMISSION check of `incoming` docs against a reference
     * `corpus` — the ingest-time gate of a training pipeline ("is this
-    * new document within Hamming `maxDist` of anything we already
+    * new document within Hamming distance 3 of anything we already
     * hold?"). Both inputs are (doc_id, simhash) relations (project
     * [[simhashExpr]] to build one); output is one row per matching
     * (in_doc, corpus_doc) pair with the exact distance.
     *
     * Every piece is STATELESS — [[simhashExpr]] is a projection, the
-    * chunk explosion is a generator, the block join is stream-static,
-    * and pair dedup is the [[firstAgreeingChunk]] filter — so the same
+    * key explosion is a generator, the block join is stream-static,
+    * and pair dedup is the [[firstAgreeingKey]] filter — so the same
     * call works unchanged when `incoming` is a Structured Streaming
     * DataFrame: an append-mode stream-static equi-join, no watermark,
     * no state store (StreamingNearDupSpec drives exactly that). At
     * 100 TB the corpus side is parquet the join shuffles by (j, ck);
     * the stream side touches only each micro-batch. */
-  def nearDupAgainst(incoming: DataFrame, corpus: DataFrame,
-                     maxDist: Int = 3): DataFrame = {
-    val n = maxDist + 1
-    val a = chunkRelation(incoming, n)
-      .select(col("doc_id").as("in_doc"), col("simhash").as("ha"),
-              col("j"), col("ck"))
-    val b = chunkRelation(corpus, n)
-      .select(col("doc_id").as("corpus_doc"), col("simhash").as("hb"),
-              col("j"), col("ck"))
-    a.join(b, Seq("j", "ck"))
-      .filter(col("j") === firstAgreeingChunk(n))
-      .withColumn("dist", expr("CAST(bit_count(ha ^ hb) AS BIGINT)"))
-      .filter(col("dist") <= maxDist)
-      .select(col("in_doc"), col("corpus_doc"), col("dist"))
-  }
+  def nearDupAgainst(incoming: DataFrame, corpus: DataFrame): DataFrame =
+    probe(incoming, blockKeys(corpus, Plain))
 
-  /** [[nearDupAgainst]] with the CORPUS side read from the PERSISTED
-    * chunk-index table ([[IndexTables.ensureChunkIndex]]) — the
-    * deployed shape of the ingest gate: the standing corpus's
-    * signature chunks are maintained as a bucketed table by the batch
-    * pipeline (paid once, shared by every consumer), and each
-    * incoming micro-batch probes it with a stream-static equi-join on
-    * the index's own (j, ck) bucket keys. Works unchanged when
-    * `incoming` is a streaming DataFrame (StreamingNearDupSpec drives
-    * exactly that); `corpusFilter` restricts the standing side (e.g.
-    * to exclude the probe docs themselves in a batch replay). */
+  /** [[nearDupAgainst]] with the CORPUS keys read from the PERSISTED
+    * chunk index ([[IndexTables.ensureChunkIndex]]) — the deployed
+    * shape of the ingest gate: the standing corpus's keys are
+    * maintained as a bucketed table by the batch pipeline (paid once,
+    * shared by every consumer), and each incoming micro-batch probes
+    * it with a stream-static equi-join on the index's own (j, ck)
+    * bucket keys. Works unchanged when `incoming` is a streaming
+    * DataFrame; `corpusFilter` restricts the standing side (e.g. to
+    * exclude the probe docs themselves in a batch replay). */
   def nearDupAgainstIndex(incoming: DataFrame, s: SparkSession, dir: String,
-                          maxDist: Int = 3,
-                          corpusFilter: org.apache.spark.sql.Column = lit(true)): DataFrame = {
-    val n = maxDist + 1
-    val idx = s.table(IndexTables.ensureChunkIndex(s, dir, n)).filter(corpusFilter)
-    val a = chunkRelation(incoming, n)
-      .select(col("doc_id").as("in_doc"), col("simhash").as("ha"),
-              col("j"), col("ck"))
-    val b = idx
-      .select(col("doc_id").as("corpus_doc"), col("simhash").as("hb"),
-              col("j"), col("ck"))
-    a.join(b, Seq("j", "ck"))
-      .filter(col("j") === firstAgreeingChunk(n))
-      .withColumn("dist", expr("CAST(bit_count(ha ^ hb) AS BIGINT)"))
-      .filter(col("dist") <= maxDist)
-      .select(col("in_doc"), col("corpus_doc"), col("dist"))
+                          corpusFilter: org.apache.spark.sql.Column = lit(true)): DataFrame =
+    probe(incoming,
+      s.table(IndexTables.ensureChunkIndex(s, dir, Plain.nChunks)).filter(corpusFilter))
+
+  /** The probe both admission forms share: the [[Plain]] keys of the
+    * `incoming` signatures joined to a corpus key relation on (j, ck),
+    * then the same first-agreeing-key dedup and verify as every pair
+    * query. Output: (in_doc, corpus_doc, dist). */
+  private def probe(incoming: DataFrame, corpusKeys: DataFrame): DataFrame = {
+    def side(keys: DataFrame, doc: String, h: String) =
+      keys.select(col("doc_id").as(doc), col("simhash").as(h), col("j"), col("ck"))
+    val joined = side(blockKeys(incoming, Plain), "in_doc", "ha")
+      .join(side(corpusKeys, "corpus_doc", "hb"), Seq("j", "ck"))
+    verified(firstAgreeingKey(joined, Plain), Plain.maxDist, "in_doc", "corpus_doc")
   }
 
   /** [[admissionGate]] probing the persisted index instead of the
-    * in-plan corpus chunks — identical rows, same driver oracle. */
-  def admissionGateIndexed(s: SparkSession, dir: String, maxDist: Int = 3): DataFrame = {
-    val sh = simhashRaw(s, dir)
-    nearDupAgainstIndex(sh.filter(col("doc_id") % 5 === 0), s, dir, maxDist,
+    * in-plan corpus keys — identical rows, same oracle. */
+  def admissionGateIndexed(s: SparkSession, dir: String): DataFrame =
+    nearDupAgainstIndex(simhashRaw(s, dir).filter(col("doc_id") % 5 === 0), s, dir,
                         corpusFilter = col("doc_id") % 5 =!= 0)
       .orderBy(col("in_doc"), col("corpus_doc"))
-  }
 
   /** [[nearDupAgainst]] driven as a batch report over the documents
     * table: docs with `doc_id % 5 = 0` play the incoming batch, the
@@ -1013,119 +892,65 @@ object Dedup {
     * pipeline would make at ingest, replayed over test data so the
     * driver's oracle can check the whole stream-capable path (the
     * streaming twin of this exact plan runs in StreamingNearDupSpec). */
-  def admissionGate(s: SparkSession, dir: String, maxDist: Int = 3): DataFrame = {
+  def admissionGate(s: SparkSession, dir: String): DataFrame = {
     val sh = simhashRaw(s, dir)
-    nearDupAgainst(sh.filter(col("doc_id") % 5 === 0),
-                   sh.filter(col("doc_id") % 5 =!= 0), maxDist)
+    nearDupAgainst(sh.filter(col("doc_id") % 5 === 0), sh.filter(col("doc_id") % 5 =!= 0))
       .orderBy(col("in_doc"), col("corpus_doc"))
   }
 
   /** Pigeonhole-block HEALTH report — the pre-flight forecast a blocked
-    * dedup run needs before paying for the candidate join: per chunk
-    * index, how many blocks hold ≥2 documents, how many documents sit
-    * in them, the largest block, and the implied candidate-pair count
-    * Σ n·(n−1)/2. A hot block here (template boilerplate collapsing a
-    * chunk) is the skew that would make the candidate join quadratic —
-    * this report is how you catch it from metadata, at chunk-key
+    * dedup run needs before paying for the candidate join: per key
+    * index of the [[Plain]] layout, how many blocks hold ≥2 documents,
+    * how many documents sit in them, the largest block, and the implied
+    * candidate-pair count Σ n·(n−1)/2. A hot block here (template
+    * boilerplate collapsing a chunk) is the skew that would make the
+    * candidate join quadratic — this report catches it at key
     * aggregation cost, before running the join itself. */
-  def blockStats(s: SparkSession, dir: String, maxDist: Int = 3): DataFrame =
-    blockStatsFrom(simhashRaw(s, dir), maxDist)
+  def blockStats(s: SparkSession, dir: String): DataFrame =
+    blockStatsFrom(simhashRaw(s, dir), Plain)
 
-  /** [[blockStats]] over a caller-supplied (doc_id, simhash) relation —
-    * the seam [[autoBlockingChoice]] and the constructed-skew specs
-    * price layouts through. */
-  private[ops] def blockStatsFrom(sh: DataFrame, maxDist: Int): DataFrame =
-    chunkRelation(sh, maxDist + 1)
+  /** [[blockStats]] for the [[Wide]] layout, per combo index — the
+    * pre-flight that compares single-chunk and wide candidate volume
+    * before paying for either join. */
+  def wideBlockStats(s: SparkSession, dir: String): DataFrame =
+    blockStatsFrom(simhashRaw(s, dir), Wide)
+
+  /** The block-stats body over any (doc_id, simhash) relation and
+    * layout; the key-index column is `combo_idx` for wide keys and
+    * `chunk_idx` otherwise. */
+  private[ops] def blockStatsFrom(sig: DataFrame, b: Blocking): DataFrame = {
+    val idx = if (b.wide) "combo_idx" else "chunk_idx"
+    blockKeys(sig, b)
       .groupBy(col("j"), col("ck")).agg(count(lit(1)).as("n"))
       .filter(col("n") > 1)
-      .groupBy(col("j").cast("long").as("chunk_idx"))
+      .groupBy(col("j").cast("long").as(idx))
       .agg(count(lit(1)).as("n_blocks"),
            sum(col("n")).as("n_docs"),
            max(col("n")).as("max_block"),
            sum(expr("n * (n - 1) DIV 2")).as("n_cand_pairs"))
-      .orderBy(col("chunk_idx"))
-
-  /** [[blockStats]] for the pair-of-chunks blocking ([[comboRelation]]):
-    * per combo index, how many blocks hold ≥2 docs, the docs in them,
-    * the largest block, and the implied candidate-pair count — the
-    * metadata-priced pre-flight that lets a run compare single-chunk vs
-    * wide candidate volume BEFORE paying for either join (SCALECHECK
-    * records both across a 10× scale step). */
-  def wideBlockStats(s: SparkSession, dir: String, nChunks: Int = 5): DataFrame =
-    wideBlockStatsFrom(simhashRaw(s, dir), nChunks)
-
-  /** [[wideBlockStats]] over a caller-supplied simhash relation. */
-  private[ops] def wideBlockStatsFrom(sh: DataFrame, nChunks: Int): DataFrame =
-    comboRelation(sh, nChunks)
-      .groupBy(col("c"), col("k1"), col("k2")).agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1)
-      .groupBy(col("c").cast("long").as("combo_idx"))
-      .agg(count(lit(1)).as("n_blocks"),
-           sum(col("n")).as("n_docs"),
-           max(col("n")).as("max_block"),
-           sum(expr("n * (n - 1) DIV 2")).as("n_cand_pairs"))
-      .orderBy(col("combo_idx"))
-
-  /** FORECAST-DRIVEN blocking selection (round-9): the engine prices
-    * single-chunk vs pair-of-chunks blocking from metadata on every
-    * bench run, but the declared queries chose a layout statically —
-    * this makes the choice DATA-DRIVEN, the way a deployment would run
-    * it. Two metadata-priced aggregates (the [[blockStats]] /
-    * [[wideBlockStats]] forecasts themselves — chunk-key aggregation
-    * cost, never a pair join) pick:
-    *  - the LAYOUT minimizing forecast candidate pairs (wide's 2²⁶ key
-    *    space beats single's 2¹⁶ exactly when birthday collisions
-    *    dominate; ties break to single, whose index is C(n,2)/n×
-    *    smaller);
-    *  - the SKEW GUARD: salting composes whenever the chosen layout's
-    *    largest block exceeds the per-task bound `saltThreshold`.
-    * Returns the layout key: single / single_salted / wide /
-    * wide_salted. All four produce IDENTICAL rows (pigeonhole
-    * exactness + salting identity are property-proven), so the choice
-    * affects only the work shape — [[hammingNearDupAuto]] shares
-    * dedup_hamming's oracle. */
-  private[ops] def autoBlockingChoice(sh: DataFrame, maxDist: Int = 3,
-      nChunks: Int = 5, saltThreshold: Int = 16): String = {
-    def price(df: DataFrame): (Long, Long) = {
-      val rows = df.collect()
-      (rows.map(_.getLong(4)).sum,
-       if (rows.isEmpty) 0L else rows.map(_.getLong(3)).max)
-    }
-    val (singlePairs, singleMax) = price(blockStatsFrom(sh, maxDist))
-    val (widePairs, wideMax) = price(wideBlockStatsFrom(sh, nChunks))
-    val useWide = widePairs < singlePairs
-    val maxBlock = if (useWide) wideMax else singleMax
-    (if (useWide) "wide" else "single") +
-      (if (maxBlock > saltThreshold) "_salted" else "")
+      .orderBy(col(idx))
   }
 
-  /** [[hammingNearDup]] with the blocking layout chosen by
-    * [[autoBlockingChoice]] — identical rows under every choice (same
-    * driver oracle as dedup_hamming via the twin-alias map); what the
-    * forecast decides is which candidate join the cluster pays for. */
-  def hammingNearDupAuto(s: SparkSession, dir: String, maxDist: Int = 3,
-      nChunks: Int = 5, saltThreshold: Int = 16, subBlock: Int = 8): DataFrame = {
-    val sh = simhashRaw(s, dir)
-    hammingAutoFrom(sh, maxDist, nChunks, saltThreshold, subBlock)
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
-
-  /** [[hammingNearDupAuto]] over a caller-supplied simhash relation —
-    * the constructed-skew spec's seam. */
-  private[ops] def hammingAutoFrom(sh: DataFrame, maxDist: Int, nChunks: Int,
-      saltThreshold: Int, subBlock: Int): DataFrame =
-    autoBlockingChoice(sh, maxDist, nChunks, saltThreshold) match {
-      case "single" => hammingPairsFrom(sh, maxDist)
-      case "single_salted" =>
-        val n = maxDist + 1
-        saltedPairsFromChunks(chunkRelation(sh, n), n, saltThreshold, subBlock)
-          .withColumn("dist", expr("CAST(bit_count(ha ^ hb) AS BIGINT)"))
-          .filter(col("dist") <= maxDist)
-          .select(col("doc_a"), col("doc_b"), col("dist"))
-      case "wide" => widePairsFrom(sh, maxDist, nChunks)
-      case "wide_salted" =>
-        hammingNearDupWideSaltedFrom(sh, maxDist, nChunks, saltThreshold, subBlock)
+  /** FORECAST-DRIVEN layout choice at radius `maxDist`: the admissible
+    * layouts — single chunks (maxDist+1 of them) and, when exact at
+    * this radius, the [[Wide]] pair keys — are priced by their
+    * [[blockStatsFrom]] forecasts (key aggregation cost, never a pair
+    * join), and the one with the fewest forecast candidate pairs wins;
+    * ties break to single chunks, whose key relation is smaller. The
+    * [[Salt]] guard composes whenever the winner's largest block
+    * exceeds its threshold. Every choice emits the same rows, so the
+    * choice changes only the work shape. */
+  private[ops] def autoBlockingChoice(sig: DataFrame, maxDist: Int = Plain.maxDist): Blocking = {
+    val layouts = Blocking(maxDist, maxDist + 1) +:
+      (if (Blocking.admissible(maxDist, Wide.nChunks, wide = true)) Seq(Wide.copy(maxDist = maxDist))
+       else Nil)
+    val priced = layouts.map { b =>
+      val rows = blockStatsFrom(sig, b).collect()
+      (b, rows.map(_.getLong(4)).sum, if (rows.isEmpty) 0L else rows.map(_.getLong(3)).max)
     }
+    val (best, _, maxBlock) = priced.minBy(_._2)
+    if (maxBlock > Guard.threshold) best.copy(salt = Some(Guard)) else best
+  }
 
   /** Connected components over an undirected pair list via alternating
     * LARGE-STAR / SMALL-STAR rounds (the MapReduce-era algorithm from

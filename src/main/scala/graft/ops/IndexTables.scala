@@ -167,7 +167,7 @@ object IndexTables {
     * SURVEY §11. */
   def ensureChunkIndex(s: SparkSession, dir: String, nChunks: Int): String =
     ensure(s, s"idx_simhash_chunks_${nChunks}_${tag(dir)}", Seq("j", "ck")) {
-      Dedup.chunkRelation(Dedup.simhashRaw(s, dir), nChunks)
+      chunkKeys(Dedup.simhashRaw(s, dir), nChunks)
     }
 
   /** Persisted MEDIA pHash chunk index — the decode-once serving
@@ -180,8 +180,13 @@ object IndexTables {
     * chunk index — the blocking layout is signature-agnostic. */
   def ensurePhashIndex(s: SparkSession, dir: String, nChunks: Int): String =
     ensure(s, s"idx_phash_chunks_${nChunks}_${tag(dir)}", Seq("j", "ck")) {
-      Dedup.chunkRelation(Multimodal.phashRaw(s, dir), nChunks)
+      chunkKeys(Multimodal.phashRaw(s, dir), nChunks)
     }
+
+  /** The rows of a chunk index: single-chunk block keys over `nChunks`
+    * chunks, at the widest radius they serve exactly. */
+  private def chunkKeys(sig: DataFrame, nChunks: Int): DataFrame =
+    Dedup.blockKeys(sig, Dedup.Blocking(nChunks - 1, nChunks))
 
   /** INCREMENTAL index maintenance: append newly-ingested documents'
     * chunk rows to the persisted chunk index WITHOUT a rebuild — the
@@ -217,7 +222,7 @@ object IndexTables {
     // checkpoint: the chunk explosion feeds the returned count AND the
     // write — without it the plan (and its re-read of the micro-batch
     // source) executes twice per append
-    val rows = Dedup.chunkRelation(sigs, nChunks).localCheckpoint()
+    val rows = chunkKeys(sigs, nChunks).localCheckpoint()
     val n = rows.count()
     if (n > 0) withTableLock(name) {
       writeBucketed(rows, name, Seq("j", "ck"), "append")

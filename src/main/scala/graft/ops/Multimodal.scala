@@ -194,27 +194,24 @@ object Multimodal {
     * stride over the payload (the decode stub — sample = byte value; a
     * real decoder swaps a luma plane in without touching anything
     * downstream), bit j set iff sample j is above the document mean —
-    * then the SAME pigeonhole chunk blocking + exact `bit_count(xor)`
-    * verify the text SimHash family uses ([[graft.ops.Dedup]]), whose
+    * then the SAME pigeonhole blocking and exact Hamming verify the
+    * text SimHash family uses ([[graft.ops.Dedup.Plain]]), whose
     * exactness is already ScalaCheck-proven. Integer-exact throughout:
     * the threshold compares `px·64 > Σpx`, never a float mean, so the
     * oracle replays every bit; bit 63 rides the shared signed-64
     * convention (Spark `1L << 63` = DuckDB's HUGEINT-routed min-BIGINT).
     * At 100 TB this is one scan-rate projection per payload plus the
     * blocked join — candidates track true perceptual-dup density. */
-  def phashNearDup(s: SparkSession, dir: String, maxDist: Int = 3): DataFrame = {
+  def phashNearDup(s: SparkSession, dir: String): DataFrame =
     // The signature relation is MATERIALIZED (memoized localCheckpoint)
     // before the blocked self-join: the aHash is one decode pass per
-    // payload and ~12 B/doc of signature, and every consumer otherwise
-    // re-decodes the corpus. (Historical note kept on purpose: the
-    // earlier declarative HOF form REQUIRED this cut — the join's
-    // null-intolerance inference pushed isnotnull(<aHash tree>) into
-    // the scans and lambda inlining re-derived hex(blob) per element,
-    // measured 468 s vs ~1 s. The mapPartitions codec path is immune,
-    // but the materialize-your-index shape is right regardless.)
-    Dedup.hammingPairsFrom(phashRaw(s, dir), maxDist)
+    // payload and ~12 B/doc of signature, and every consumer would
+    // otherwise re-decode the corpus. A join over an unmaterialized
+    // lambda-built signature column is also a trap: null-intolerance
+    // inference pushes isnotnull(<whole tree>) into the scans and lambda
+    // inlining re-derives it per element (PlanAuditSpec guards this).
+    Dedup.hammingPairsFrom(phashRaw(s, dir), Dedup.Plain)
       .orderBy(col("doc_a"), col("doc_b"))
-  }
 
   /** The memoized (doc_id, simhash) media-signature relation — ONE
     * decode pass per payload, then ~12 B/doc forever ([[phashNearDup]]
@@ -232,15 +229,9 @@ object Multimodal {
     * the text chunk index: candidate generation is a bucket-local
     * sort-merge join, no Exchange, no per-query Sort. Identical rows
     * to [[phashNearDup]]; same driver oracle. */
-  def phashNearDupIndexed(s: SparkSession, dir: String, maxDist: Int = 3): DataFrame = {
-    val n = maxDist + 1
-    val idx = s.table(IndexTables.ensurePhashIndex(s, dir, n))
-    Dedup.pairsFromChunks(idx, n)
-      .withColumn("dist", expr("CAST(bit_count(ha ^ hb) AS BIGINT)"))
-      .filter(col("dist") <= maxDist)
-      .select(col("doc_a"), col("doc_b"), col("dist"))
+  def phashNearDupIndexed(s: SparkSession, dir: String): DataFrame =
+    Dedup.keyPairs(s.table(IndexTables.ensurePhashIndex(s, dir, Dedup.Plain.nChunks)), Dedup.Plain)
       .orderBy(col("doc_a"), col("doc_b"))
-  }
 
   /** The 64-bit average-hash projection (see [[phashNearDup]]), behind
     * the codec seam: real images hash 64 BLOCK-MEAN samples of their

@@ -26,9 +26,11 @@ class PlanAuditSpec extends SparkSuite {
     // writes + re-reads + verifies physical shard files during
     // construction — audited in ExportShardsSpec
     "pipe_export_verify",
-    // runs the two metadata-priced block-stats collects to CHOOSE its
-    // layout during construction; every layout it can choose is audited
-    // via the four standalone dedup_hamming* entries
+    // runs the metadata-priced block-stats collects to CHOOSE its
+    // layout during construction; every layout it can choose at radius
+    // 3 is a fixed layout of the same planner and is still audited
+    // through its standalone entry (dedup_hamming, _salted, _wide,
+    // _wide_salted)
     "dedup_hamming_auto",
     // runs the driver-side probe micro-job + PQ index build during
     // construction (the ivfTopKIndexed shape); its served plan's

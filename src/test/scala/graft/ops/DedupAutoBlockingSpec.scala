@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.SparkSuite
 
-/** Forecast-driven blocking selection ([[Dedup.autoBlockingChoice]],
-  * round-9): the metadata-priced block stats must steer each corpus
+/** Forecast-driven blocking selection ([[Dedup.autoBlockingChoice]]):
+  * the metadata-priced block stats must steer each corpus
   * shape to the layout a deployment would hand-pick for it —
   *
   *  - SIGNATURE-COLLAPSE skew (identical signatures: the boilerplate-
@@ -45,16 +45,18 @@ class DedupAutoBlockingSpec extends SparkSuite {
   private val uniform: Seq[Long] = Seq.fill(4000)(rnd.nextLong())
 
   test("signature-collapse corpus → salted layout; uniform corpus → wide layout") {
-    assert(Dedup.autoBlockingChoice(sigDf(collapsed)) == "single_salted")
-    assert(Dedup.autoBlockingChoice(sigDf(uniform)) == "wide")
+    assert(Dedup.autoBlockingChoice(sigDf(collapsed)) == Dedup.Salted)
+    assert(Dedup.autoBlockingChoice(sigDf(uniform)) == Dedup.Wide)
   }
 
   test("auto-selected layout emits exactly the plain dedup_hamming pair set on both shapes") {
-    for (sigs <- Seq(collapsed, uniform.take(600))) {
+    // maxDist 4: pair-of-chunks keys over 5 chunks are inexact there,
+    // so only single-chunk layouts may be chosen
+    for (sigs <- Seq(collapsed, uniform.take(600)); maxDist <- Seq(3, 4)) {
       val df = sigDf(sigs).cache()
-      val auto = Dedup.hammingAutoFrom(df, 3, 5, 16, 8)
+      val auto = Dedup.hammingPairsFrom(df, Dedup.autoBlockingChoice(df, maxDist))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val plain = Dedup.hammingPairsFrom(df, 3)
+      val plain = Dedup.hammingPairsFrom(df, Dedup.Blocking(maxDist, maxDist + 1))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(auto == plain,
         s"auto=${auto.size} plain=${plain.size} diff=${(auto diff plain) ++ (plain diff auto)}")

@@ -22,7 +22,7 @@ class DedupBlockingSpec extends SparkSuite {
   private def viaBlocking(sigs: Seq[Long], maxDist: Int): Set[(Long, Long, Long)] = {
     val df = spark.createDataFrame(
       sigs.zipWithIndex.map { case (h, i) => Row(i.toLong, h) }.asJava, schema)
-    Dedup.hammingPairsFrom(df, maxDist)
+    Dedup.hammingPairsFrom(df, Dedup.Blocking(maxDist, maxDist + 1))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
   }
 
@@ -62,7 +62,7 @@ class DedupBlockingSpec extends SparkSuite {
   private def viaWide(sigs: Seq[Long], maxDist: Int): Set[(Long, Long, Long)] = {
     val df = spark.createDataFrame(
       sigs.zipWithIndex.map { case (h, i) => Row(i.toLong, h) }.asJava, schema)
-    Dedup.widePairsFrom(df, maxDist, nChunks = 5)
+    Dedup.hammingPairsFrom(df, Dedup.Blocking(maxDist, nChunks = 5, wide = true))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
   }
 

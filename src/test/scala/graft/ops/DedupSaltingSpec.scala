@@ -7,8 +7,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.SparkSuite
 
-/** The skew guard under [[Dedup.hammingNearDupSalted]]
-  * ([[Dedup.saltedPairsFromChunks]]) does two things, both pinned here:
+/** The skew guard of a salted [[Dedup.Blocking]] (the
+  * `dedup_hamming_salted` layout) does two things, both pinned here:
   *
   *  1. IDENTITY — salted candidate generation emits exactly the pair
   *     set of the plain block join, on constructed hot-block skew and
@@ -33,12 +33,14 @@ class DedupSaltingSpec extends SparkSuite {
     df.select(col("doc_a"), col("doc_b"), expr("CAST(bit_count(ha ^ hb) AS BIGINT)"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
+  private def candidates(sigs: Seq[Long], b: Dedup.Blocking) =
+    pairSet(Dedup.candidates(Dedup.blockKeys(sigDf(sigs), b), b))
+
   private def salted(sigs: Seq[Long], n: Int, thr: Int, sub: Int) =
-    pairSet(Dedup.saltedPairsFromChunks(
-      Dedup.chunkRelation(sigDf(sigs), n), n, thr, sub))
+    candidates(sigs, Dedup.Blocking(n - 1, n, salt = Some(Dedup.Salt(thr, sub))))
 
   private def plain(sigs: Seq[Long], n: Int) =
-    pairSet(Dedup.pairsFromChunks(Dedup.chunkRelation(sigDf(sigs), n), n))
+    candidates(sigs, Dedup.Blocking(n - 1, n))
 
   // One massive hot block: 120 docs agreeing exactly on chunk 0 (low 16
   // bits) with random high bits, plus unrelated background docs — the
@@ -57,7 +59,7 @@ class DedupSaltingSpec extends SparkSuite {
 
   test("constructed hot block: per-key work bounded by salt group, not block size") {
     val nChunks = 4
-    val chunks = Dedup.chunkRelation(sigDf(hotCluster), nChunks)
+    val chunks = Dedup.blockKeys(sigDf(hotCluster), Dedup.Blocking(nChunks - 1, nChunks))
     val blockSizes = chunks.groupBy(col("j"), col("ck")).agg(count(lit(1)).as("n"))
     val maxBlock = blockSizes.agg(max(col("n"))).head().getLong(0)
     assert(maxBlock >= 120, s"hot block not constructed (max block $maxBlock)")
@@ -99,20 +101,21 @@ class DedupSaltingSpec extends SparkSuite {
   test("declared query: salted twin matches dedup_hamming row-for-row on test data") {
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$dir/documents.parquet").isFile)
-    val a = Dedup.hammingNearDup(spark, dir).collect().toSeq
-    val b = Dedup.hammingNearDupSalted(spark, dir).collect().toSeq
+    val a = graft.SparkEntry.queries("dedup_hamming")(spark, dir).collect().toSeq
+    val b = graft.SparkEntry.queries("dedup_hamming_salted")(spark, dir).collect().toSeq
     assert(a == b)
   }
 
   // ---- wide (pair-of-chunks) keys composed with the salt guard
-  // (round-8: the 10⁹+-doc deployment shape) ----
+  // (the 10⁹+-doc deployment shape) ----
 
   private def wideSalted(sigs: Seq[Long], maxDist: Int, n: Int, thr: Int, sub: Int) =
-    Dedup.hammingNearDupWideSaltedFrom(sigDf(sigs), maxDist, n, thr, sub)
+    Dedup.hammingPairsFrom(sigDf(sigs),
+      Dedup.Blocking(maxDist, n, wide = true, salt = Some(Dedup.Salt(thr, sub))))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
   private def wide(sigs: Seq[Long], maxDist: Int, n: Int) =
-    Dedup.widePairsFrom(sigDf(sigs), maxDist, n)
+    Dedup.hammingPairsFrom(sigDf(sigs), Dedup.Blocking(maxDist, n, wide = true))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
   test("wide+salted: identical to plain wide blocking on the constructed hot block") {
@@ -145,8 +148,8 @@ class DedupSaltingSpec extends SparkSuite {
   test("declared query: wide+salted twin matches dedup_hamming row-for-row on test data") {
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$dir/documents.parquet").isFile)
-    val a = Dedup.hammingNearDup(spark, dir).collect().toSeq
-    val b = Dedup.hammingNearDupWideSalted(spark, dir).collect().toSeq
+    val a = graft.SparkEntry.queries("dedup_hamming")(spark, dir).collect().toSeq
+    val b = graft.SparkEntry.queries("dedup_hamming_wide_salted")(spark, dir).collect().toSeq
     assert(a == b)
   }
 }

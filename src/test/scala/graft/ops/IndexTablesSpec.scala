@@ -80,8 +80,8 @@ class IndexTablesSpec extends SparkSuite {
 
   test("indexed hamming near-dup returns exactly the in-plan twin's rows") {
     assume(hasTestData)
-    val viaIndex = Dedup.hammingNearDupIndexed(spark, sf).collect().map(_.toSeq)
-    val inPlan = Dedup.hammingNearDup(spark, sf).collect().map(_.toSeq)
+    val viaIndex = graft.SparkEntry.queries("dedup_hamming_indexed")(spark, sf).collect().map(_.toSeq)
+    val inPlan = graft.SparkEntry.queries("dedup_hamming")(spark, sf).collect().map(_.toSeq)
     assert(viaIndex.nonEmpty, "vacuous: no hamming near-dups at test scale")
     assert(viaIndex.toSeq === inPlan.toSeq)
   }
@@ -192,7 +192,7 @@ class IndexTablesSpec extends SparkSuite {
         s"appended index lost bucket-join locality:\n$plan")
     }
     // and the appended doc is immediately findable as a near-dup
-    val hit = Dedup.pairsFromChunks(idx, 5)
+    val hit = Dedup.candidates(idx, Dedup.Blocking(4, 5))
       .filter(col("doc_b") === newId &&
               col("doc_a") === existing.getLong(0))
       .select(expr("CAST(bit_count(ha ^ hb) AS BIGINT)").as("dist"))
@@ -214,14 +214,14 @@ class IndexTablesSpec extends SparkSuite {
     assert(IndexTables.appendToChunkIndex(spark, sf, 6, batch) == 18L)
     assert(IndexTables.appendToChunkIndex(spark, sf, 6, batch) == 18L)
     assert(spark.table(name).count() == clean + 36)
-    val pairsBefore = Dedup.pairsFromChunks(spark.table(name), 6)
+    val pairsBefore = Dedup.candidates(spark.table(name), Dedup.Blocking(5, 6))
       .select(col("doc_a"), col("doc_b")).distinct().count()
     val (before, after) = IndexTables.compactChunkIndex(spark, sf, 6)
     assert(before == clean + 36 && after == clean + 18,
       s"compaction must keep exactly one copy of the replayed rows: $before -> $after")
     // same candidates served, and the re-clustered table still joins
     // with no Exchange (the rewrite restored the bucket layout)
-    val pairsAfter = Dedup.pairsFromChunks(spark.table(name), 6)
+    val pairsAfter = Dedup.candidates(spark.table(name), Dedup.Blocking(5, 6))
       .select(col("doc_a"), col("doc_b")).distinct().count()
     assert(pairsAfter == pairsBefore, "compaction changed the candidate pair set")
     withNoBroadcast {
@@ -441,8 +441,8 @@ class IndexTablesSpec extends SparkSuite {
 
   test("persisted media pHash index: identical pair set to the in-plan twin, Exchange-free self-join") {
     assume(hasTestData)
-    val viaIndex = Multimodal.phashNearDupIndexed(spark, sf).collect().map(_.toSeq)
-    val inPlan = Multimodal.phashNearDup(spark, sf).collect().map(_.toSeq)
+    val viaIndex = graft.SparkEntry.queries("mm_phash_indexed")(spark, sf).collect().map(_.toSeq)
+    val inPlan = graft.SparkEntry.queries("mm_phash_neardup")(spark, sf).collect().map(_.toSeq)
     assert(viaIndex.nonEmpty, "vacuous: no media near-dups at test scale")
     assert(viaIndex.toSeq === inPlan.toSeq)
     // the decode-once table joins bucket-locally like every chunk index

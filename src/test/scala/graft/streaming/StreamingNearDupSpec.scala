@@ -63,7 +63,7 @@ class StreamingNearDupSpec extends SparkSuite {
 
     val incoming = spark.readStream.schema(sigSchema).json(in)
     val got = mutable.Buffer.empty[(Long, Long, Long)]
-    runAvailableNow(Dedup.nearDupAgainst(incoming, corpus, maxDist = 3)) { b =>
+    runAvailableNow(Dedup.nearDupAgainst(incoming, corpus)) { b =>
       b.collect().foreach(r =>
         got.synchronized { got += ((r.getLong(0), r.getLong(1), r.getLong(2))) })
     }
@@ -88,7 +88,7 @@ class StreamingNearDupSpec extends SparkSuite {
 
     val incoming = spark.readStream.schema(sigSchema).json(in)
     val got = mutable.Buffer.empty[(Long, Long, Long)]
-    runAvailableNow(Dedup.nearDupAgainstIndex(incoming, spark, sf, maxDist = 3)) { b =>
+    runAvailableNow(Dedup.nearDupAgainstIndex(incoming, spark, sf)) { b =>
       b.collect().foreach(r =>
         got.synchronized { got += ((r.getLong(0), r.getLong(1), r.getLong(2))) })
     }
@@ -96,7 +96,7 @@ class StreamingNearDupSpec extends SparkSuite {
     val batchIncoming = spark.read.schema(sigSchema).json(in)
     val corpus = graft.ops.Tables.documents(spark, sf)
       .select(col("doc_id"), Dedup.simhashExpr("text").as("simhash"))
-    val expected = Dedup.nearDupAgainst(batchIncoming, corpus, maxDist = 3)
+    val expected = Dedup.nearDupAgainst(batchIncoming, corpus)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
     assert(expected.nonEmpty, "probe of a corpus signature must hit")
     assert(got.synchronized(got.sorted.toSeq) === expected)
@@ -116,7 +116,7 @@ class StreamingNearDupSpec extends SparkSuite {
     val novel = 0x0f0f5a5a3c3cc3c3L // far from any corpus signature
     val hits = mutable.Buffer.empty[(Long, Long, Long)]
     def gateBatch(batch: DataFrame): Unit = {
-      val found = Dedup.nearDupAgainstIndex(batch, spark, dir, maxDist = 3)
+      val found = Dedup.nearDupAgainstIndex(batch, spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       hits.synchronized { hits ++= found }
       val flagged = found.map(_._1).toSet
