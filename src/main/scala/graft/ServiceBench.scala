@@ -41,9 +41,9 @@ object ServiceBench {
   }
 
   /** Two LogServer instances over ONE ManifestLog root AND one shared
-    * CAS catalog (round-9: the control plane spans gateways — one
-    * login, one provisioning pass, every request's token verify
-    * resolves the shared catalog), writers split across them —
+    * CAS catalog (the control plane spans gateways — one login, one
+    * provisioning pass, every request's token verify resolves the
+    * shared catalog), writers split across them —
     * measures what adding a gateway buys when all commits contend on
     * the same per-session manifest CAS. Workload totals match
     * [[runTier]] (8 writers × 50 × 100), so the rows/s line is
@@ -56,7 +56,7 @@ object ServiceBench {
       servers = (1 to 2).map { i =>
         new api.LogServer(spark, s"$shared/gw$i", bufferSizeLimit = 64 * 1024,
           makeTier = (sp, _) => new storage.ManifestLog(sp, s"$shared/data"),
-          makeCatalog = api.LogServer.sharedCatalog(s"$shared/data")).start()
+          makeCatalog = api.LogServer.catalogOn(s"$shared/data")).start()
       }
       val client = HttpClient.newHttpClient()
       def send(srv: api.LogServer, method: String, path: String, body: Option[String],
@@ -69,7 +69,6 @@ object ServiceBench {
       }
       // ONE login + ONE provisioning pass through gateway 1 — the shared
       // catalog makes the token and the namespace visible on gateway 2
-      // (the round-8 per-gateway-provisioning workaround is gone)
       val body = send(servers.head, "POST", "/api/auth/login",
         Some("""{"username":"admin","password":"admin"}"""), None).body
       val token = body.split("\"token\"\\s*:\\s*\"")(1).takeWhile(_ != '"')
@@ -155,9 +154,8 @@ object ServiceBench {
       // 40k rows across 8 concurrent writers (the default shape) is ~2
       // orders of magnitude more posts than any fixed cost (JIT,
       // first-flush, first-GET plan), while still finishing in seconds.
-      // The round-5 shape (4x15x40 = 2.4k rows) was so small that one
-      // cold GET dominated the whole measured window once per-POST
-      // Spark jobs went away.
+      // A much smaller shape (4x15x40 = 2.4k rows) lets one cold GET
+      // dominate the whole measured window.
       val rowsPerBatch = 100
       (1 to nWriters).foreach { w =>
         send("POST", "/api/containers/bench/sessions",
@@ -221,11 +219,11 @@ object ServiceBench {
       // sessions — the stable read-throughput number (mid-write reads
       // above race the ingest window and vary with scheduling). This
       // measures the version-keyed plan cache: an unchanged session's
-      // GET skips file-index construction entirely (round-9).
+      // GET skips file-index construction entirely.
       // Every session is read at least twice (first GET fills the
       // plan-cache entry, the rest hit it) from 8 parallel clients —
       // the 10× scale-up (80 sessions) exercises 80 distinct cache
-      // keys against the bounded 256-entry LRU (round-10 verdict #6).
+      // keys against the bounded 256-entry LRU.
       val roReads = math.max(40, nWriters * 2)
       val roThreads = 8
       val roRowsA = new java.util.concurrent.atomic.AtomicLong(0)
@@ -254,8 +252,8 @@ object ServiceBench {
         }, s"svc-ro-reader-$t")
       }
       // per-stage attribution of the settled-read path (token / auth /
-      // flush / stats / query / render) — the seam the round-10 p99
-      // question is answered through
+      // flush / stats / query / render) — the seam that says where the
+      // read p99 is paid
       server.readTimings.clear()
       server.recordReadTimings = true
       roRunners.foreach(_.start()); roRunners.foreach(_.join(300000))

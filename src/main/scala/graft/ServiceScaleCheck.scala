@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Row, SparkSession}
 import graft.storage.ManifestLog
 
-/** SCALECHECK for the SERVICE tier (round-9): the query families have a
+/** SCALECHECK for the SERVICE tier: the query families have a
   * measured 10× growth story; this main gives the ingest/commit path
   * one too, answering the two open scale questions:
   *
@@ -119,8 +119,8 @@ object ServiceScaleCheck {
 
   /** Catalog-chain cost at 1 / 10² / 10⁴ mutations under the DELTA
     * store (checkpointEvery=16 — the production wiring in
-    * LogServer.sharedCatalog; round-10 verdict #1): per scale, the
-    * median COMMIT latency (serialize ONE delta record + O(1) ABA
+    * LogServer.catalogOn): per scale, the median COMMIT latency
+    * (serialize ONE delta record + O(1) ABA
     * probe + CAS claim; the prune listing amortizes at checkpoint
     * cadence), the median STEADY READ (warm instance: frontier-hint
     * probe, no state reload), a FRESH-GATEWAY first read (listing +
@@ -137,7 +137,7 @@ object ServiceScaleCheck {
     val hp = new org.apache.hadoop.fs.Path(dir.toString)
     val fs = hp.getFileSystem(new org.apache.hadoop.conf.Configuration())
     def store() = new graft.catalog.CasStateStore(fs, hp, checkpointEvery = 16)
-    val svc = new graft.catalog.CatalogService(shared = Some(store()))
+    val svc = new graft.catalog.CatalogService(store())
     def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
     var done = 0L
     Seq(1L, 100L, 10000L).map { target =>
@@ -156,8 +156,7 @@ object ServiceScaleCheck {
       })
       val freshMs = median((1 to 5).map { _ =>
         val t0 = System.nanoTime()
-        new graft.catalog.CatalogService(shared = Some(store()))
-          .verifyPassword("admin", "admin")
+        new graft.catalog.CatalogService(store()).verifyPassword("admin", "admin")
         (System.nanoTime() - t0) / 1e6
       }.toSeq)
       val byKind = fs.listStatus(hp).filter(st => st.isFile &&
@@ -173,8 +172,8 @@ object ServiceScaleCheck {
     }
   }
 
-  /** Row-level purge pricing (round-12 verdict #1): what a deletion
-    * request costs against the manifest store, at three predicate
+  /** Row-level purge pricing: what a deletion request costs against
+    * the manifest store, at three predicate
     * shapes over the same time-clustered corpus — a NO-MATCH sweep
     * (the pure detection pass: one scan, no rewrite), a NARROW purge
     * (rows confined to a few time-adjacent cold files — the
@@ -265,7 +264,7 @@ object ServiceScaleCheck {
     }
 
     val sb = new StringBuilder
-    sb ++= "## Service tier (ingest/commit path, round-9)\n\n"
+    sb ++= "## Service tier (ingest/commit path)\n\n"
     sb ++= s"Generated by `sbt \"runMain graft.ServiceScaleCheck\"` on ${java.time.LocalDate.now()}.\n\n"
     sb ++= "Manifest-chain resolve latency (every read and commit pays this once;\n"
     sb ++= "chain grows one version per flush until `expire` sweeps it). `listing`\n"
@@ -307,7 +306,7 @@ object ServiceScaleCheck {
         sb ++= f"| $name | ${r.rows} | ${r.rowsPerSec}%.0f | ${r.posts} | ${r.p50Ms}%.1f ms | ${r.p99Ms}%.1f ms | ${r.roReadsPerSec}%.1f | ${r.roRowsPerSec}%.0f | ${r.readP50Ms}%.1f ms | ${r.readP99Ms}%.1f ms | ${r.errors} |\n"
       case (name, None) => sb ++= s"| $name | FAILED | | | | | | | | | |\n"
     }
-    sb ++= "\nSettled-read STAGE attribution (p50 / p99 ms; round-10 verdict #2 —\n"
+    sb ++= "\nSettled-read STAGE attribution (p50 / p99 ms —\n"
     sb ++= "where a GET actually pays: token = bearer verify incl. catalog\n"
     sb ++= "resolve, auth = session ownership, flush = read-your-writes, stats =\n"
     sb ++= "manifest resolve + file stat, query = plan lookup + collect, render =\n"
@@ -346,8 +345,8 @@ object ServiceScaleCheck {
     sb ++= "| mode | gateway A sweeps | gateway B sweeps |\n|---|---|---|\n"
     sb ++= s"| no lease (both sweep) | $ua | $ub |\n"
     sb ++= s"| CAS lease (owner only) | $la | $lb |\n"
-    sb ++= "\nRow-level purge (`ManifestLog.rewriteExcluding`, round-12; 10×\n"
-    sb ++= "line round-13): the deletion-request price on a 200k-row (1×) and\n"
+    sb ++= "\nRow-level purge (`ManifestLog.rewriteExcluding`): the\n"
+    sb ++= "deletion-request price on a 200k-row (1×) and\n"
     sb ++= "2M-row (10×) session, each compacted into time-clustered cold\n"
     sb ++= "files. The detection pass is one scan (no rewrite); a NARROW purge\n"
     sb ++= "— the SAME 1,000 time-adjacent rows at both scales — rewrites only\n"

@@ -38,10 +38,9 @@ final class LogServer(spark: SparkSession, root: String, port: Int = 0,
                       bufferSizeLimit: Long = 10L * 1024 * 1024,
                       ingestFlushBytes: Long = 4L * 1024 * 1024,
                       ingestFlushMs: Long = 100,
-                      makeTier: (SparkSession, String) => LogTier =
-                        (sp, dir) => new ManifestLog(sp, dir),
+                      makeTier: (SparkSession, String) => LogTier = LogServer.defaultTier,
                       maxBodyBytes: Int = 32 * 1024 * 1024,
-                      makeCatalog: (SparkSession, String) => CatalogService = LogServer.localCatalog,
+                      makeCatalog: (SparkSession, String) => CatalogService = LogServer.defaultCatalog,
                       maxStreamMs: Long = 10 * 60 * 1000L,
                       // default caps the batch GET at 100k rows (413 +
                       // stream=true hint past it) — a DECLARED deviation
@@ -51,13 +50,11 @@ final class LogServer(spark: SparkSession, root: String, port: Int = 0,
                       maxNonStreamRows: Int = 100000)
     extends AutoCloseable {
 
-  /** Constructor-injected control plane (round-9): per-gateway local
-    * JSON catalog (default, the reference's single-process shape) or
-    * the CAS-committed shared catalog ([[LogServer.sharedCatalog]]) —
-    * with the shared one, login/ownership/revocation span every
-    * gateway on the root, matching the data plane's multi-instance
-    * story. `root` here is the SERVER root; the shared factory closes
-    * over the cluster root instead. */
+  /** Constructor-injected control plane: the CAS-committed catalog on a
+    * data root ([[LogServer.catalogOn]]), by default this server's own
+    * `<root>/data` — login, ownership and revocation span every gateway
+    * on that root, like the data plane's manifests. `root` here is the
+    * SERVER root; a factory for a shared data root closes over it. */
   val catalog: CatalogService = makeCatalog(spark, root)
   /** Constructor-injected store: a [[ManifestLog]] on `<root>/data` by
     * default, or any [[LogTier]] (a shared root, a traced decorator) —
@@ -103,7 +100,7 @@ final class LogServer(spark: SparkSession, root: String, port: Int = 0,
     // stop(1): give in-flight exchange handlers up to a second to
     // finish — stop(0) returns with handlers still running, and a
     // racing postLogs must hit the ingest buffer's closed-rejection,
-    // not a post-drain ack (round-7 review)
+    // not a post-drain ack
     http.stop(1)
     // Every cleanup step runs regardless of earlier failures (a
     // compactor drain error must not skip Tables.invalidate — that is
@@ -150,9 +147,9 @@ final class LogServer(spark: SparkSession, root: String, port: Int = 0,
   }
 
   /** Opt-in per-stage timing of the read path — ServiceScaleCheck's
-    * p99 attribution seam (round-10 verdict #2). Off by default; the
-    * disabled cost is the `System.nanoTime()` pairs plus one volatile
-    * read per stage — no allocation, nothing enqueued. Stages
+    * p99 attribution seam. Off by default; the disabled cost is the
+    * `System.nanoTime()` pairs plus one volatile read per stage — no
+    * allocation, nothing enqueued. Stages
     * ([[LogServer.ReadStages]]): `token` (bearer verify — catalog
     * resolve), `auth` (session ownership), `flush` (read-your-writes
     * buffer flush), `stats` (tier resolve + file stat), `query` (plan
@@ -180,9 +177,9 @@ final class LogServer(spark: SparkSession, root: String, port: Int = 0,
   private def publishStagedTimings(): Unit =
     if (recordReadTimings) {
       val staged = stagedTimings.get()
-      // Publish ONLY a complete stage set in canonical order
-      // (advice-caught): a request already past `authed` when the flag
-      // flipped on staged a suffix only, and a buffer left from a
+      // Publish ONLY a complete stage set in canonical order: a request
+      // already past `authed` when the flag flipped on staged a suffix
+      // only, and a buffer left from a
       // previous measurement window (the flag flipped off before this
       // thread's next `authed` cleared it) carries another tier's
       // samples — either would mix populations in the per-stage
@@ -339,8 +336,8 @@ final class LogServer(spark: SparkSession, root: String, port: Int = 0,
     // response SHAPE as the MATCHING scan path — batch shape with the
     // filter echo for batch requests, the leaner streamed shape for
     // stream=true — so a client never sees a schema that depends on
-    // whether files happen to exist (round-7 review; round-8 extended
-    // to the streaming branch, whose body carries no total_rows/filter).
+    // whether files happen to exist (the streamed shape carries no
+    // total_rows/filter).
     val tst = System.nanoTime()
     val (cf, _, hf, _) = store.tierStats(c, s)
     noteStage("stats", System.nanoTime() - tst)
@@ -364,9 +361,9 @@ final class LogServer(spark: SparkSession, root: String, port: Int = 0,
       // file listing resolves ONCE at plan time, so the listed files must
       // stay live until the last row is sent.
       //
-      // Error contract (round-7 review — a broad per-element swallow
-      // turned ANY first-fetch failure into a plausible empty 200,
-      // exactly the silent-empty failure walkFiles' own doc forbids):
+      // Error contract (a broad per-element swallow would turn ANY
+      // first-fetch failure into a plausible empty 200, exactly the
+      // silent-empty failure walkFiles' own doc forbids):
       //  - the FIRST fetch runs before the chunked 200 commits, so a
       //    query that cannot produce its first row surfaces as 500;
       //  - a MID-STREAM failure aborts the body without the closing
@@ -412,8 +409,8 @@ final class LogServer(spark: SparkSession, root: String, port: Int = 0,
       } finally guard.cancel(false)
     } else {
       val tq = System.nanoTime()
-      // Bounded batch response (round-15): the non-stream path
-      // materializes the whole filtered result on this gateway's heap
+      // Bounded batch response: the non-stream path materializes the
+      // whole filtered result on this gateway's heap
       // before rendering — the one remaining unbounded driver-side
       // collect. LIMIT cap+1 keeps the bound inside the Spark plan (the
       // scan stops early; nothing past the cap ever reaches the driver),
@@ -423,8 +420,8 @@ final class LogServer(spark: SparkSession, root: String, port: Int = 0,
       // reads stream (reader.py:148-179); the chunked path has no row
       // bound (its memory is one partition via toLocalIterator, and its
       // time bound is the deadline + watchdog pair above).
-      // CONTRACT NOTE (round-16 ADVICE): the default cap is a DECLARED
-      // BEHAVIOR CHANGE vs the reference, whose batch read returns all
+      // CONTRACT NOTE: the default cap is a DECLARED BEHAVIOR CHANGE
+      // vs the reference, whose batch read returns all
       // matching rows (reader.py read); deployments that need the
       // reference-compatible unbounded batch set maxNonStreamRows <= 0
       // (documented in README's API-deviations table alongside the
@@ -483,12 +480,12 @@ final class LogServer(spark: SparkSession, root: String, port: Int = 0,
   /** Per-request body cap: the ingest buffer's global byte bound only
     * counts rows AFTER they reach the buffer — without a cap here one
     * oversized POST (or a few concurrent ones) materializes unbounded
-    * byte[]/JSON trees on the gateway heap first (round-7 review). */
+    * byte[]/JSON trees on the gateway heap first. */
   private val MaxBodyBytes = maxBodyBytes
 
   /** Left(message) = body over [[MaxBodyBytes]] (a distinct 413, not a
-    * generic 400 — round-7 advice); Right(None) = missing/malformed/
-    * non-object JSON. On over-cap the remaining request body is drained
+    * generic 400); Right(None) = missing/malformed/non-object JSON. On
+    * over-cap the remaining request body is drained
     * (bounded) so a keep-alive connection is not left mid-body. */
   private def readBody(ex: HttpExchange): Either[String, Option[JsonNode]] =
     try {
@@ -553,7 +550,7 @@ final class LogServer(spark: SparkSession, root: String, port: Int = 0,
     * OWN emitted format ('...T00:00:05+00:00') pasted into a query
     * param would otherwise 400 — any space PAST the date/time separator
     * position (index 10) can only have been a '+' offset sign, restore
-    * it (round-8 review: the API must round-trip its own output). */
+    * it: the API must round-trip its own output. */
   private def parseParamTs(s: String): Instant =
     JsonIngest.parseIsoFlexible(
       if (s.length > 11) s.substring(0, 11) + s.substring(11).replace(' ', '+')
@@ -588,32 +585,38 @@ object LogServer {
   val ReadStages: Seq[String] =
     Seq("token", "auth", "flush", "stats", "query", "render")
 
-  /** Default control plane: per-gateway local JSON catalog under the
-    * server's own root (the reference's single-process availability
-    * model, auth.py:17-19). */
-  val localCatalog: (SparkSession, String) => CatalogService =
-    (_, serverRoot) => new CatalogService(Some(Paths.get(serverRoot, "catalog")))
+  /** The default store: a [[ManifestLog]] on the server's `<root>/data`. */
+  val defaultTier: (SparkSession, String) => LogTier = (sp, dir) => new ManifestLog(sp, dir)
 
-  /** Shared control plane: one CAS-committed catalog at
-    * `<sharedRoot>/catalog-cas`, spanning every gateway that mounts the
+  /** The control plane on `dataRoot`: one CAS-committed catalog at
+    * `<dataRoot>/catalog-cas`, spanning every gateway that mounts the
     * same root — tokens, ownership, conflicts and revocation are
-    * cluster-wide, like the data plane's shared manifests. Delta-chain
-    * mode (checkpoint every 16th version): a mutation commits O(its own
+    * cluster-wide, like the data plane's manifests. Delta-chain mode
+    * (checkpoint every 16th version): a mutation commits O(its own
     * size), not the full catalog snapshot — the SQLite control plane's
-    * O(1)-per-mutation economics at any live-state size. */
-  def sharedCatalog(sharedRoot: String): (SparkSession, String) => CatalogService =
-    (sp, _) => {
-      val dir = new org.apache.hadoop.fs.Path(s"$sharedRoot/catalog-cas")
+    * O(1)-per-mutation economics at any live-state size. A
+    * `<serverRoot>/catalog/catalog.json` left by the retired per-gateway
+    * JSON catalog is imported into an empty chain first
+    * ([[CatalogService.importLegacy]]). */
+  def catalogOn(dataRoot: String): (SparkSession, String) => CatalogService =
+    (sp, serverRoot) => {
+      val dir = new org.apache.hadoop.fs.Path(s"$dataRoot/catalog-cas")
       val fs = dir.getFileSystem(sp.sparkContext.hadoopConfiguration)
-      new CatalogService(shared = Some(
-        new graft.catalog.CasStateStore(fs, dir,
-          checkpointEvery = deltaFormatCadence(fs, dir))))
+      val store = new graft.catalog.CasStateStore(fs, dir,
+        checkpointEvery = deltaFormatCadence(fs, dir))
+      CatalogService.importLegacy(store, Paths.get(serverRoot, "catalog", "catalog.json"))
+      new CatalogService(store)
     }
 
-  /** Delta-format compatibility gate for a SHARED catalog root
-    * (review-caught): a gateway still running a pre-delta binary
-    * parses only `#graft-state` records, so the first `#graft-delta`
-    * landing in a mixed-version fleet would read there as a torn
+  /** The default control plane: the catalog on the server's own data
+    * root, `<serverRoot>/data/catalog-cas`. */
+  val defaultCatalog: (SparkSession, String) => CatalogService =
+    (sp, serverRoot) => catalogOn(s"$serverRoot/data")(sp, serverRoot)
+
+  /** Delta-format compatibility gate for a catalog root: a gateway
+    * still running a pre-delta binary parses only `#graft-state`
+    * records, so the first `#graft-delta` landing in a
+    * mixed-version fleet would read there as a torn
     * frontier — auth up to a checkpoint interval stale, mutations
     * stalling on the unreadable-frontier path. Delta commits are
     * therefore gated on a marker file: claimed atomically when THIS
@@ -629,8 +632,8 @@ object LogServer {
     else if (!fs.exists(dir) || fs.listStatus(dir).isEmpty) {
       fs.mkdirs(dir)
       graft.storage.Cas.tryClaim(fs, marker, "delta-chain v1\n".getBytes("UTF-8"))
-      // TOCTOU re-check (advice-caught): between the emptiness listing
-      // and the claim, a PRE-DELTA gateway can mount the same fresh
+      // TOCTOU re-check: between the emptiness listing and the
+      // claim, a PRE-DELTA gateway can mount the same fresh
       // root and commit a full-snapshot v1 — it never looks for the
       // marker, so claiming it does not exclude that writer. If the
       // re-list shows any version file already present, this process
@@ -659,22 +662,31 @@ object LogServer {
 }
 
 /** Standalone entry point: `runMain graft.api.ServerMain [root] [port]`.
-  * Data lives in a [[ManifestLog]] under `<root>/data`; the catalog is
-  * per gateway unless GRAFT_CATALOG=shared. */
+  * Data lives in a [[ManifestLog]] under `<root>/data` and the catalog
+  * in the CAS chain at `<root>/data/catalog-cas`, so every gateway
+  * started on one root shares logins and ownership. */
 object ServerMain {
   def main(args: Array[String]): Unit = {
-    // The storage-tier selector (a third argument or this variable) is
-    // gone. Refuse it rather than ignore it: `manifest` used to imply the
-    // shared catalog, so a gateway started with it would silently get a
-    // per-gateway catalog and split auth across gateways.
-    val removedTierVar = "GRAFT_TIER"
-    if (args.length > 2 || sys.env.contains(removedTierVar)) {
-      System.err.println(s"ServerMain takes [root] [port] only: the storage tier " +
-        s"selector (third argument / $removedTierVar) was removed and every server " +
-        "runs on ManifestLog. For several gateways on one root set GRAFT_CATALOG=shared.")
-      sys.exit(2)
-    }
     val root = args.headOption.getOrElse("/tmp/graft-server")
+    val catalogDir = s"$root/data/catalog-cas"
+    // Removed selectors are refused rather than ignored. The storage tier
+    // (a third argument or GRAFT_TIER) is gone: every server runs on
+    // ManifestLog. GRAFT_CATALOG is gone too: `shared`, what every server
+    // now does, is accepted; any other value asked for a catalog this
+    // binary no longer keeps, and ignoring it would move logins and
+    // ownership without a word.
+    val removedTierVar = "GRAFT_TIER"
+    val removedCatalogVar = "GRAFT_CATALOG"
+    val refused =
+      if (args.length > 2 || sys.env.contains(removedTierVar))
+        Some(s"ServerMain takes [root] [port] only: the storage tier selector " +
+          s"(third argument / $removedTierVar) was removed and every server runs on ManifestLog.")
+      else sys.env.get(removedCatalogVar).filter(_ != "shared").map(v =>
+        s"$removedCatalogVar=$v is no longer supported: every server keeps its catalog in " +
+          s"the CAS chain at $catalogDir (what $removedCatalogVar=shared selected); a " +
+          s"catalog.json under $root/catalog is imported into an empty chain once. " +
+          s"Unset $removedCatalogVar.")
+    refused.foreach { msg => System.err.println(msg); sys.exit(2) }
     val port = args.lift(1).map(_.toInt).getOrElse(5123)
     // Validate BEFORE anything starts: a malformed value crashing main
     // after http.start() would leave a degraded server running (the
@@ -699,15 +711,6 @@ object ServerMain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Per-gateway catalog by default; GRAFT_CATALOG=shared puts it on
-    // the data root so several gateways share logins and ownership.
-    val catalogMode = sys.env.getOrElse("GRAFT_CATALOG", "local")
-    val makeCatalog = catalogMode match {
-      case "local" => LogServer.localCatalog
-      case "shared" => LogServer.sharedCatalog(s"$root/data")
-      case other => throw new IllegalArgumentException(
-        s"unknown catalog mode '$other' (expected local|shared)")
-    }
     // GC-sweep lease BEFORE the server starts, like the gcGrace
     // validation above: InetAddress/getFileSystem can throw, and a
     // throw after http.start() would leave a degraded server running
@@ -727,13 +730,13 @@ object ServerMain {
       // lease lapse between renewals and thrash ownership
       new graft.storage.MaintenanceLease(fs, leaseDir, holder, ttlMs = 3 * 3600 * 1000L)
     }
-    val server = new LogServer(spark, root, port, makeCatalog = makeCatalog).start()
+    val server = new LogServer(spark, root, port).start()
     // periodic rotation check; GRAFT_GC_GRACE_HOURS opts into snapshot
     // GC (the horizon must exceed the longest reader scan / publish
     // stall).
     server.compactor.startMaintenance(java.time.Duration.ofSeconds(60),
       manifestGcGrace = gcGrace, gcLease = gcLease)
-    println(s"graft log server listening on port ${server.boundPort}, root=$root, catalog=$catalogMode")
+    println(s"graft log server listening on port ${server.boundPort}, root=$root, catalog=$catalogDir")
     // close() THROWS on a lossy ingest drain (by contract) — Spark must
     // still stop deterministically after the server's cleanup, not race
     // it from Spark's own internal shutdown hook

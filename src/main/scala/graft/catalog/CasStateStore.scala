@@ -5,15 +5,15 @@ import graft.storage.Cas
 
 /** Versioned state store committed through the engine's CAS primitive
   * ([[graft.storage.Cas]]) — the control-plane twin of
-  * [[graft.storage.ManifestLog]]'s version chain, built for the shared
-  * multi-gateway catalog: every version is claimed with an atomic
+  * [[graft.storage.ManifestLog]]'s version chain, built for the
+  * catalog: every version is claimed with an atomic
   * create-if-absent at `<dir>/v<%020d>.json`, so any number of gateway
   * processes on one shared root serialize their catalog mutations
   * without a lock and read each other's commits immediately.
   *
-  * TWO record kinds (the manifest tier's delta+checkpoint recipe,
-  * round-10 verdict #1 — the reference's SQLite control plane pays
-  * O(1) per mutation, auth.py:25-84, and so must this):
+  * TWO record kinds (the manifest tier's delta+checkpoint recipe — the
+  * reference's SQLite control plane pays O(1) per mutation,
+  * auth.py:25-84, and so must this):
   *
   *  - `#graft-delta` — a mutation record. Payload size is the
   *    MUTATION, not the live state, so commit cost stays flat no
@@ -165,10 +165,9 @@ final class CasStateStore(fs: FileSystem, dir: Path,
     // advanced the frontier AND its checkpoint — re-listing always sees
     // a strictly newer chain, so each retry makes progress. Under
     // sustained checkpoint-cadence churn across many gateways a small
-    // fixed cap could be exhausted on the auth path (advice-caught:
-    // the pre-chain resolve degraded gracefully per-record); retry on a
-    // time budget with a short backoff instead, and only then propagate
-    // (at that point the FNF is indistinguishable from external damage).
+    // fixed cap could be exhausted on the auth path; retry on a time
+    // budget with a short backoff instead, and only then propagate (at
+    // that point the FNF is indistinguishable from external damage).
     val deadline = System.nanoTime() + 2_000_000_000L
     while (true) {
       try return resolveByListing(frontierHint)

@@ -1,7 +1,7 @@
 package graft.catalog
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path}
 import java.security.{MessageDigest, SecureRandom}
 import java.time.{Clock, Instant}
 import java.util.Base64
@@ -27,45 +27,51 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
   * at 100 TB of *log data* the catalog is still tiny (thousands of rows)
   * and lives in memory.
   *
-  * TWO persistence modes, selected at construction:
-  *  - LOCAL (`root`): write-through JSON file with atomic tmp+move — the
-  *    reference's availability model (single-process WAL SQLite file).
-  *  - SHARED (`shared`): every mutation is a compare-and-swap transaction
-  *    against a [[CasStateStore]] on the cluster's shared root — the SAME
-  *    commit discipline the data plane's [[graft.storage.ManifestLog]]
-  *    uses, lifted to the control plane (round-8 verdict #1): a token
-  *    minted on gateway A authorizes on gateway B, duplicate container
-  *    creation across gateways conflicts exactly once, revocation is
-  *    visible cluster-wide. Mutations commit DELTA records (a full
-  *    snapshot only every checkpointEvery-th version — round-10
-  *    verdict #1), so a commit pays O(the mutation), not O(live
-  *    state), matching the reference's SQLite O(1)-per-mutation
-  *    economics. Reads resolve the latest committed chain (a probe
-  *    pair on a clean frontier) and re-apply only the deltas they are
-  *    behind — never a snapshot re-parse in steady state; mutations
-  *    re-apply against the current state on every CAS
-  *    retry, exactly like a manifest commit. The reference never needed
-  *    this only because it is single-process — its SQLite catalog IS the
-  *    shared state for every request.
+  * The committed state is a [[CasStateStore]] version chain, and every
+  * mutation is a compare-and-swap transaction against it — the SAME
+  * commit discipline the data plane's [[graft.storage.ManifestLog]]
+  * uses. Every instance on one store directory therefore sees one
+  * catalog: a token minted on gateway A authorizes on gateway B,
+  * duplicate container creation across gateways conflicts exactly once,
+  * revocation is visible everywhere. Mutations commit DELTA records (a
+  * full snapshot only at the store's checkpoint versions), so a commit
+  * pays O(the mutation), not O(live state) — the reference's SQLite
+  * O(1)-per-mutation economics. Reads resolve the latest committed chain
+  * (a probe pair on a clean frontier) and re-apply only the deltas they
+  * are behind, never a snapshot re-parse in steady state; a mutation
+  * re-applies against the current state on every CAS retry, exactly like
+  * a manifest commit.
   */
 object CatalogService {
   final case class User(userId: String, passwordHash: String, createdAt: Instant)
   /** `tokenHash` is the SHA-256 of the bearer token — the raw token is
     * returned to the caller once at creation and never persisted, so
-    * reading catalog state does not yield usable credentials (round-2
-    * advice; state files are also written owner-only). */
+    * reading catalog state does not yield usable credentials (state
+    * records are also written owner-only). */
   final case class Token(tokenHash: String, userId: String, createdAt: Instant, expiresAt: Instant)
   final case class Container(containerId: String, userId: String, createdAt: Instant)
   final case class Session(sessionId: String, containerId: String, userId: String, createdAt: Instant)
+
+  /** One-time import of a `catalog.json` written by the retired
+    * per-gateway JSON catalog. Without it, a root written in that mode
+    * restarts with only `admin`, and any user could re-create an existing
+    * container id and read that container's logs. Runs only on an empty
+    * chain: the file's bytes become v1 verbatim — its row format is the
+    * snapshot format, which a delta record shares, so v1 reads back
+    * whichever kind the store's cadence makes it. A caller that loses v1
+    * to a concurrent committer warns and does not retry: the chain it
+    * lost to is the catalog now. */
+  private[graft] def importLegacy(store: CasStateStore, legacyFile: Path): Unit =
+    if (Files.exists(legacyFile) && store.resolveChain().valid == 0) {
+      val payload = Files.readString(legacyFile)
+      if (!store.tryCommit(1L, payload, isDelta = !store.isCheckpoint(1L)))
+        System.err.println(s"[catalog] $legacyFile not imported: another gateway " +
+          "committed the catalog's first version first; that chain is the catalog")
+    }
 }
 
-final class CatalogService(root: Option[Path] = None,
-                           clock: Clock = Clock.systemUTC(),
-                           shared: Option[CasStateStore] = None) {
+final class CatalogService(store: CasStateStore, clock: Clock = Clock.systemUTC()) {
   import CatalogService._
-
-  require(root.isEmpty || shared.isEmpty,
-    "choose ONE persistence mode: local root or shared CAS store")
 
   private val users = mutable.LinkedHashMap[String, User]()
   private val tokens = mutable.LinkedHashMap[String, Token]()
@@ -77,10 +83,9 @@ final class CatalogService(root: Option[Path] = None,
   // two rows share a wall-clock microsecond (SQLite got this from rowid).
   private var seq = 0L
   private val seqOf = mutable.HashMap[(String, String), Long]()
-  /** Shared mode: the committed version the in-memory maps reflect. */
+  /** The committed version the in-memory maps reflect. */
   private var loadedVersion = -1L
 
-  loadLocal()
   transact {
     if (users.contains("admin")) ((), None)
     else {
@@ -117,20 +122,17 @@ final class CatalogService(root: Option[Path] = None,
   }
 
   /** Run a state mutation `f` (returning (result, Some(delta) iff the
-    * maps changed)) with the mode's commit discipline. LOCAL: apply +
-    * write-through of the full file (the reference's availability
-    * model — the delta is ignored). SHARED:
-    * CAS loop — sync to the latest committed state, apply `f`, claim
-    * version+1 with the DELTA record (or the full snapshot at every
-    * checkpointEvery-th version — the store decides which version is a
-    * checkpoint, [[CasStateStore.isCheckpoint]]), so the commit
-    * payload is O(mutation), not O(live state); a lost claim discards
-    * the local application (the next
-    * iteration force-reloads committed state) and RE-APPLIES `f` against
-    * the winner's state, so concurrent gateways serialize without a lock
-    * and no mutation is ever silently dropped. A frontier blocked by an
-    * in-flight/incomplete record (O_EXCL-fallback mounts, external
-    * damage) is retried within a grace window, then surfaced loudly.
+    * maps changed)) as a CAS transaction: sync to the latest committed
+    * state, apply `f`, claim version+1 with the DELTA record (or the full
+    * snapshot at a checkpoint version — the store decides which version
+    * is a checkpoint, [[CasStateStore.isCheckpoint]]), so the commit
+    * payload is O(mutation), not O(live state). A lost claim discards the
+    * local application (the next iteration force-reloads committed
+    * state) and RE-APPLIES `f` against the winner's state, so concurrent
+    * gateways serialize without a lock and no mutation is ever silently
+    * dropped. A frontier blocked by an in-flight/incomplete record
+    * (O_EXCL-fallback mounts, external damage) is retried within a grace
+    * window, then surfaced loudly.
     *
     * LOCKING: the instance monitor is held per CAS ITERATION (one
     * resolve + apply + `f` + tryCommit — bounded IO: a listing and a
@@ -138,90 +140,81 @@ final class CatalogService(root: Option[Path] = None,
     * a torn frontier record from a crashed remote writer, or sustained
     * cross-gateway contention — would otherwise stall every read-only
     * call on this gateway for up to 65 s, and verifyToken /
-    * verifyContainerAccess sit on the auth path of every request
-    * (round-9 advice). Before the monitor is released for a backoff,
-    * `loadedVersion` is poisoned so reads in the unlocked window
-    * force-reload committed state instead of serving this iteration's
-    * uncommitted application of `f`. */
-  private def transact[A](f: => (A, Option[Delta])): A = shared match {
-    case None => synchronized {
-      val (a, changed) = f
-      if (changed.isDefined) persistLocal()
-      a
-    }
-    case Some(st) =>
-      val deadline = System.currentTimeMillis() + 65000L
-      var dirty = false
-      while (true) {
-        val result: Option[A] = synchronized {
-          val resolvedAt = System.currentTimeMillis()
-          val r = st.resolveChain()
-          applyShared(r, force = dirty)
-          dirty = false
-          val (a, deltaOpt) = f
-          // a call that changed nothing needs no commit — it must NOT
-          // block on an in-flight/unreadable frontier record (e.g. a
-          // valid-token verify while another gateway is mid-commit)
-          if (deltaOpt.isEmpty) Some(a)
+    * verifyContainerAccess sit on the auth path of every request.
+    * Before the monitor is released for a backoff, `loadedVersion` is
+    * poisoned so reads in the unlocked window force-reload committed
+    * state instead of serving this iteration's uncommitted application
+    * of `f`. */
+  private def transact[A](f: => (A, Option[Delta])): A = {
+    val deadline = System.currentTimeMillis() + 65000L
+    var dirty = false
+    while (true) {
+      val result: Option[A] = synchronized {
+        val resolvedAt = System.currentTimeMillis()
+        val r = store.resolveChain()
+        syncTo(r, force = dirty)
+        dirty = false
+        val (a, deltaOpt) = f
+        // a call that changed nothing needs no commit — it must NOT
+        // block on an in-flight/unreadable frontier record (e.g. a
+        // valid-token verify while another gateway is mid-commit)
+        if (deltaOpt.isEmpty) Some(a)
+        else {
+          // never claim past an unreadable frontier with state from
+          // below it — that would supersede the concurrent commit we
+          // could not read (the lost-update hazard)
+          val committed = r.slot == r.valid && {
+            // a tryCommit that THROWS (IO fault, not a CAS loss) must
+            // not leave the applied-but-uncommitted mutation in the
+            // maps with loadedVersion still at the frontier — this
+            // gateway would serve phantom state until some later
+            // commit moved the version. Poison the loaded version so
+            // the next access force-reloads committed state, then
+            // propagate.
+            // resolvedAt selects the O(1) ABA guard: the resolve ran
+            // microseconds ago on this code path, far inside the
+            // quarter-grace freshness window CasStateStore.tryCommit
+            // implements (a GC pause between the two falls back to
+            // the listing guard by itself)
+            val next = r.valid + 1
+            val ckpt = store.isCheckpoint(next)
+            val payload = if (ckpt) stateJson else deltaOpt.get.json
+            try store.tryCommit(next, payload, resolvedAt, isDelta = !ckpt)
+            catch { case t: Throwable => loadedVersion = -1L; throw t }
+          }
+          if (committed) { loadedVersion = r.valid + 1; Some(a) }
           else {
-            // never claim past an unreadable frontier with state from
-            // below it — that would supersede the concurrent commit we
-            // could not read (the lost-update hazard)
-            val committed = r.slot == r.valid && {
-              // a tryCommit that THROWS (IO fault, not a CAS loss) must
-              // not leave the applied-but-uncommitted mutation in the
-              // maps with loadedVersion still at the frontier — this
-              // gateway would serve phantom state until some later
-              // commit moved the version. Poison the loaded version so
-              // the next access force-reloads committed state, then
-              // propagate.
-              // resolvedAt selects the O(1) ABA guard: the resolve ran
-              // microseconds ago on this code path, far inside the
-              // quarter-grace freshness window CasStateStore.tryCommit
-              // implements (a GC pause between the two falls back to
-              // the listing guard by itself)
-              val next = r.valid + 1
-              val ckpt = st.isCheckpoint(next)
-              val payload = if (ckpt) stateJson else deltaOpt.get.json
-              try st.tryCommit(next, payload, resolvedAt, isDelta = !ckpt)
-              catch { case t: Throwable => loadedVersion = -1L; throw t }
-            }
-            if (committed) { loadedVersion = r.valid + 1; Some(a) }
-            else {
-              // lost/deferred the claim: roll back by force-reloading
-              // next iteration, and poison loadedVersion NOW — the
-              // monitor is about to be released for the backoff, and a
-              // read landing in that window must not see the maps'
-              // uncommitted application of `f`
-              dirty = true
-              loadedVersion = -1L
-              if (System.currentTimeMillis() > deadline)
-                throw new java.io.IOException(
-                  s"shared-catalog commit blocked past 65s at version slot ${r.slot} " +
-                  (if (r.slot == r.valid) "(sustained CAS contention)"
-                   else s"(unreadable record holds the frontier above committed v${r.valid} " +
-                        "— in-flight writer crashed mid-record, or external damage; " +
-                        "inspect and remove the file to restore catalog writes)"))
-              None
-            }
+            // lost/deferred the claim: roll back by force-reloading
+            // next iteration, and poison loadedVersion NOW — the
+            // monitor is about to be released for the backoff, and a
+            // read landing in that window must not see the maps'
+            // uncommitted application of `f`
+            dirty = true
+            loadedVersion = -1L
+            if (System.currentTimeMillis() > deadline)
+              throw new java.io.IOException(
+                s"catalog commit blocked past 65s at version slot ${r.slot} " +
+                (if (r.slot == r.valid) "(sustained CAS contention)"
+                 else s"(unreadable record holds the frontier above committed v${r.valid} " +
+                      "— in-flight writer crashed mid-record, or external damage; " +
+                      "inspect and remove the file to restore catalog writes)"))
+            None
           }
         }
-        result match {
-          case Some(a) => return a
-          case None =>
-            Thread.sleep(java.util.concurrent.ThreadLocalRandom.current().nextLong(1L, 8L))
-        }
       }
-      throw new IllegalStateException("unreachable")
+      result match {
+        case Some(a) => return a
+        case None =>
+          Thread.sleep(java.util.concurrent.ThreadLocalRandom.current().nextLong(1L, 8L))
+      }
+    }
+    throw new IllegalStateException("unreachable")
   }
 
-  /** Shared-mode read barrier: reflect the latest committed state. One
-    * dir listing per call (a probe pair when the frontier hint holds);
-    * records are re-parsed only on a version change (or a forced
-    * rollback). Local mode: no-op. */
-  private def syncRead(): Unit = shared.foreach { st =>
-    applyShared(st.resolveChain(), force = false)
-  }
+  /** Read barrier: reflect the latest committed state. One dir listing
+    * per call (a probe pair when the frontier hint holds); records are
+    * re-parsed only on a version change (or a forced rollback). */
+  private def syncRead(): Unit = syncTo(store.resolveChain(), force = false)
 
   /** Bring the maps to `r.valid`. Three cost tiers, cheapest first:
     * unchanged version → no-op; the maps hold a version INSIDE `r`'s
@@ -230,7 +223,7 @@ final class CatalogService(root: Option[Path] = None,
     * gateways are committing); else → full rebuild from checkpoint +
     * tail (a fresh gateway, a rollback, or a chain that moved past a
     * checkpoint). */
-  private def applyShared(r: CasStateStore.Resolved, force: Boolean): Unit = {
+  private def syncTo(r: CasStateStore.Resolved, force: Boolean): Unit = {
     val baseVersion = r.valid - r.deltas.size
     if (!force && r.valid == loadedVersion) ()
     else if (!force && loadedVersion >= baseVersion && loadedVersion < r.valid) {
@@ -358,7 +351,7 @@ final class CatalogService(root: Option[Path] = None,
       .map(s => (s.sessionId, s.createdAt))
   }
 
-  // ---- state (de)serialization — ONE format for both modes ----
+  // ---- state (de)serialization ----
 
   // row-node builders shared by the full snapshot and the delta records
   // — ONE wire format for a row, wherever it appears
@@ -436,26 +429,5 @@ final class CatalogService(root: Option[Path] = None,
       val sq = n.path("seq").asLong(0L)
       seqOf(("s", n.get("session_id").asText)) = sq; seq = math.max(seq, sq)
     }
-  }
-
-  // ---- local persistence (write-through JSON file) ----
-
-  private def catalogFile: Option[Path] = root.map(_.resolve("catalog.json"))
-
-  private def persistLocal(): Unit = catalogFile.foreach { f =>
-    Files.createDirectories(f.getParent)
-    val tmp = f.resolveSibling(f.getFileName.toString + ".tmp")
-    Files.writeString(tmp, stateJson)
-    // Owner-only before the file becomes visible under its real name:
-    // catalog.json carries password hashes and token digests.
-    try Files.setPosixFilePermissions(tmp, java.util.EnumSet.of(
-      java.nio.file.attribute.PosixFilePermission.OWNER_READ,
-      java.nio.file.attribute.PosixFilePermission.OWNER_WRITE))
-    catch { case _: UnsupportedOperationException => () } // non-POSIX FS
-    Files.move(tmp, f, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  private def loadLocal(): Unit = catalogFile.filter(Files.exists(_)).foreach { f =>
-    loadFrom(mapper.readTree(Files.readString(f)))
   }
 }

@@ -5,6 +5,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.net.http.HttpRequest.BodyPublishers
 import java.net.http.HttpResponse.BodyHandlers
 import com.fasterxml.jackson.databind.ObjectMapper
+import scala.jdk.CollectionConverters._
 import org.scalatest.BeforeAndAfterAll
 import graft.SparkSuite
 import graft.storage.ManifestLog
@@ -13,7 +14,7 @@ import graft.storage.ManifestLog
   * ONE CAS-committed catalog — the full multi-gateway deployment:
   * every manifest commit from either server races through the version
   * CAS, a read through one gateway sees every batch either gateway
-  * has flushed, and (round-9) the CONTROL plane spans gateways too — a
+  * has flushed, and the CONTROL plane spans gateways too — a
   * token minted on gateway A authorizes on gateway B, duplicate
   * creation across gateways conflicts exactly once, revocation is
   * cluster-wide.
@@ -38,7 +39,7 @@ class LogServerMultiInstanceSpec extends SparkSuite with BeforeAndAfterAll {
     def make(root: String): LogServer =
       new LogServer(spark, root,
         makeTier = (sp, _) => new ManifestLog(sp, sharedData),
-        makeCatalog = LogServer.sharedCatalog(sharedData)).start()
+        makeCatalog = LogServer.catalogOn(sharedData)).start()
     a = make(tempDir("multi-a"))
     b = make(tempDir("multi-b"))
   }
@@ -83,8 +84,7 @@ class LogServerMultiInstanceSpec extends SparkSuite with BeforeAndAfterAll {
 
   test("control plane spans gateways: A's token works on B, duplicates 409 once, revocation propagates") {
     val ta = login(a)
-    // a token minted on gateway A authorizes gateway B's endpoints —
-    // the round-8 gap (per-gateway catalogs 401'd each other's tokens)
+    // a token minted on gateway A authorizes gateway B's endpoints
     assert(req(b, "GET", "/api/containers", token = Some(ta)).statusCode == 200)
     // one container namespace: create via A, duplicate via B conflicts
     assert(req(a, "POST", "/api/containers",
@@ -146,5 +146,71 @@ class LogServerMultiInstanceSpec extends SparkSuite with BeforeAndAfterAll {
     assert(post(b, tb, "shared", "cmp", Seq("post-1")) == 201)
     totalRows(b, tb, "shared", "cmp")
     assert(totalRows(a, ta, "shared", "cmp") == 4)
+  }
+
+  private def loginAs(server: LogServer, user: String, password: String): HttpResponse[String] =
+    req(server, "POST", "/api/auth/login",
+      Some(s"""{"username":"$user","password":"$password"}"""))
+
+  private def containersOf(server: LogServer, token: String): Set[String] = {
+    val cs = mapper.readTree(req(server, "GET", "/api/containers", token = Some(token)).body)
+      .get("containers")
+    (0 until cs.size).map(cs.get(_).get("container_id").asText).toSet
+  }
+
+  test("two gateways on one server root share the default catalog; concurrent creates survive a restart") {
+    // the default layout: no makeTier/makeCatalog, so both gateways keep
+    // manifests and catalog under the one root's data/
+    val root = tempDir("one-root")
+    val (x, y) = (new LogServer(spark, root).start(), new LogServer(spark, root).start())
+    val ids = (for (side <- Seq("x", "y"); i <- 1 to 6) yield s"c-$side-$i").toSet
+    try {
+      val t = login(x)
+      assert(req(y, "GET", "/api/containers", token = Some(t)).statusCode == 200)
+      assert(req(x, "POST", "/api/containers",
+        Some("""{"container_id":"onebox"}"""), Some(t)).statusCode == 201)
+      assert(req(y, "POST", "/api/containers",
+        Some("""{"container_id":"onebox"}"""), Some(t)).statusCode == 409)
+      // distinct creates racing through both gateways: every one is acked
+      val codes = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+      val threads = Seq(("x", x), ("y", y)).flatMap { case (side, srv) =>
+        Seq(1 to 3, 4 to 6).map(range => new Thread(() => range.foreach { i =>
+          val id = s"c-$side-$i"
+          codes.add(id -> req(srv, "POST", "/api/containers",
+            Some(s"""{"container_id":"$id"}"""), Some(t)).statusCode)
+        }))
+      }
+      threads.foreach(_.start()); threads.foreach(_.join(60000))
+      assert(codes.size == ids.size && codes.asScala.forall(_._2 == 201), s"racing creates: $codes")
+    } finally { x.close(); y.close() }
+    // restart: a fresh gateway on the same root sees every create
+    val z = new LogServer(spark, root).start()
+    try assert(containersOf(z, login(z)) == ids + "onebox")
+    finally z.close()
+  }
+
+  test("gateways on a server root with a legacy catalog.json serve its logins and ownership") {
+    def sha(x: String) = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val root = tempDir("legacy-root")
+    val legacy = java.nio.file.Paths.get(root, "catalog", "catalog.json")
+    java.nio.file.Files.createDirectories(legacy.getParent)
+    java.nio.file.Files.writeString(legacy,
+      s"""{"users":[
+         |  {"user_id":"admin","password_hash":"${sha("admin")}","created_at":"2026-01-01T00:00:00Z"},
+         |  {"user_id":"bob","password_hash":"${sha("secret")}","created_at":"2026-01-01T00:00:01Z"}],
+         |"tokens":[],
+         |"containers":[{"container_id":"bobbox","user_id":"bob","created_at":"2026-01-01T00:00:02Z","seq":1}],
+         |"sessions":[]}""".stripMargin)
+    val (x, y) = (new LogServer(spark, root).start(), new LogServer(spark, root).start())
+    try {
+      val bob = loginAs(y, "bob", "secret")
+      assert(bob.statusCode == 200, bob.body)
+      val tb = mapper.readTree(bob.body).get("token").asText
+      assert(containersOf(x, tb) == Set("bobbox"))
+      // the imported ownership holds: admin cannot take bob's container id
+      assert(req(x, "POST", "/api/containers",
+        Some("""{"container_id":"bobbox"}"""), Some(login(x))).statusCode == 409)
+    } finally { x.close(); y.close() }
   }
 }

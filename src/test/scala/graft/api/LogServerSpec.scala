@@ -9,6 +9,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import graft.SparkSuite
 import graft.catalog.CatalogService
+import graft.storage.{LogTier, ManifestLog}
 
 /** Golden end-to-end API tests: the README "Complete Workflow Example"
   * (README.md:248-299) and "Testing Access Control" recipes
@@ -16,13 +17,15 @@ import graft.catalog.CatalogService
   * the 400/401/403/409/413 contract and the streaming read path, all
   * on the server's default [[graft.storage.ManifestLog]] store.
   *
-  * The whole contract runs once per control plane a gateway can start
-  * with: the per-gateway JSON catalog ([[LogServerSpec]]) and the
-  * CAS-committed shared catalog ([[LogServerManifestSpec]]). A client
-  * must not see which one it is talking to. */
+  * The whole contract runs once per root layout a gateway can start
+  * with: manifests and catalog under the server's own root
+  * ([[LogServerSpec]]) and on a data root shared with other gateways
+  * ([[LogServerManifestSpec]]). A client must not see which one it is
+  * talking to. */
 abstract class LogServerContractSpec extends SparkSuite with BeforeAndAfterAll {
 
-  /** The control plane of every server this suite starts. */
+  /** The store and the control plane of every server this suite starts. */
+  protected def makeTier: (SparkSession, String) => LogTier
   protected def makeCatalog: (SparkSession, String) => CatalogService
 
   private var server: LogServer = _
@@ -31,7 +34,7 @@ abstract class LogServerContractSpec extends SparkSuite with BeforeAndAfterAll {
   private val mapper = new ObjectMapper()
 
   override def beforeAll(): Unit = {
-    server = new LogServer(spark, tempDir("server"), makeCatalog = makeCatalog).start()
+    server = new LogServer(spark, tempDir("server"), makeTier = makeTier, makeCatalog = makeCatalog).start()
   }
   override def afterAll(): Unit = server.close()
 
@@ -216,7 +219,7 @@ abstract class LogServerContractSpec extends SparkSuite with BeforeAndAfterAll {
   test("413 contract: oversized body gets a distinct status and the connection stays usable") {
     // dedicated server with a tiny cap so the test body stays small
     val small = new LogServer(spark, tempDir("server-413"), maxBodyBytes = 4096,
-      makeCatalog = makeCatalog).start()
+      makeTier = makeTier, makeCatalog = makeCatalog).start()
     try {
       val smallBase = s"http://localhost:${small.boundPort}"
       def sreq(method: String, path: String, body: Option[String],
@@ -253,7 +256,7 @@ abstract class LogServerContractSpec extends SparkSuite with BeforeAndAfterAll {
     // batch path but stream completely — the bound protects the
     // gateway heap, not the data
     val capped = new LogServer(spark, tempDir("server-rowcap"), maxNonStreamRows = 2,
-      makeCatalog = makeCatalog).start()
+      makeTier = makeTier, makeCatalog = makeCatalog).start()
     try {
       val cbase = s"http://localhost:${capped.boundPort}"
       def creq(method: String, path: String, body: Option[String],
@@ -298,7 +301,7 @@ abstract class LogServerContractSpec extends SparkSuite with BeforeAndAfterAll {
 
   test("maxNonStreamRows <= 0 restores the reference-compatible UNCAPPED batch read (declared deviation opt-out)") {
     val uncapped = new LogServer(spark, tempDir("server-nocap"), maxNonStreamRows = 0,
-      makeCatalog = makeCatalog).start()
+      makeTier = makeTier, makeCatalog = makeCatalog).start()
     try {
       val cbase = s"http://localhost:${uncapped.boundPort}"
       def creq(method: String, path: String, body: Option[String],
@@ -328,7 +331,7 @@ abstract class LogServerContractSpec extends SparkSuite with BeforeAndAfterAll {
     // the head row trips the deadline — the body must be cut off before
     // the closing "]}…" so the client can never mistake it for complete
     val capped = new LogServer(spark, tempDir("server-cap"), maxStreamMs = 0L,
-      makeCatalog = makeCatalog).start()
+      makeTier = makeTier, makeCatalog = makeCatalog).start()
     try {
       val cbase = s"http://localhost:${capped.boundPort}"
       def creq(method: String, path: String, body: Option[String],
@@ -365,16 +368,19 @@ abstract class LogServerContractSpec extends SparkSuite with BeforeAndAfterAll {
   }
 }
 
-/** The contract on the default per-gateway JSON catalog. */
+/** The contract on the default layout, as `ServerMain` starts a server:
+  * manifests and catalog under the server root's own `data/`. */
 class LogServerSpec extends LogServerContractSpec {
-  protected def makeCatalog = LogServer.localCatalog
+  protected def makeTier = LogServer.defaultTier
+  protected def makeCatalog = LogServer.defaultCatalog
 }
 
-/** The SAME contract on the shared catalog, laid out as
-  * `ServerMain` does with GRAFT_CATALOG=shared: catalog and manifests
-  * both under `<root>/data`, as every gateway of a multi-gateway
-  * deployment runs. */
+/** The SAME contract laid out as a multi-gateway deployment runs: every
+  * server this suite starts keeps its manifests and its catalog on ONE
+  * data root apart from its server root. */
 class LogServerManifestSpec extends LogServerContractSpec {
-  protected def makeCatalog: (SparkSession, String) => CatalogService =
-    (sp, serverRoot) => LogServer.sharedCatalog(s"$serverRoot/data")(sp, serverRoot)
+  private lazy val sharedData = tempDir("shared-data")
+  protected def makeTier: (SparkSession, String) => LogTier =
+    (sp, _) => new ManifestLog(sp, sharedData)
+  protected def makeCatalog = LogServer.catalogOn(sharedData)
 }

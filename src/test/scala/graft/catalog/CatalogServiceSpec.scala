@@ -16,15 +16,23 @@ class CatalogServiceSpec extends AnyFunSuite {
     def instant() = now
   }
 
+  private def sharedStore(dir: java.nio.file.Path,
+                          keep: Int = 32, graceMs: Long = 60000,
+                          ckptEvery: Int = 1): CasStateStore = {
+    val p = new org.apache.hadoop.fs.Path(dir.toString)
+    new CasStateStore(p.getFileSystem(new org.apache.hadoop.conf.Configuration()), p,
+      keepVersions = keep, pruneGraceMs = graceMs, checkpointEvery = ckptEvery)
+  }
+
   test("default admin/admin exists; wrong password and unknown user fail") {
-    val c = new CatalogService()
+    val c = new CatalogService(sharedStore(Files.createTempDirectory("cat-cas")))
     assert(c.verifyPassword("admin", "admin"))
     assert(!c.verifyPassword("admin", "wrong"))
     assert(!c.verifyPassword("ghost", "admin"))
   }
 
   test("token round-trip: create, verify, revoke") {
-    val c = new CatalogService()
+    val c = new CatalogService(sharedStore(Files.createTempDirectory("cat-cas")))
     val t = c.createToken("admin")
     assert(c.verifyToken(t) === Some("admin"))
     c.revokeToken(t)
@@ -33,7 +41,7 @@ class CatalogServiceSpec extends AnyFunSuite {
 
   test("tokens expire after 24h and are deleted lazily on verify") {
     val clock = new FakeClock(Instant.parse("2026-01-01T00:00:00Z"))
-    val c = new CatalogService(clock = clock)
+    val c = new CatalogService(sharedStore(Files.createTempDirectory("cat-cas")), clock)
     val t = c.createToken("admin", expiresInHours = 24)
     clock.now = clock.now.plus(Duration.ofHours(23))
     assert(c.verifyToken(t) === Some("admin"))
@@ -44,7 +52,7 @@ class CatalogServiceSpec extends AnyFunSuite {
   }
 
   test("container create: duplicate rejected even across users") {
-    val c = new CatalogService()
+    val c = new CatalogService(sharedStore(Files.createTempDirectory("cat-cas")))
     c.createUser("alice", "pw")
     assert(c.createContainer("admin", "app"))
     assert(!c.createContainer("admin", "app"))
@@ -52,7 +60,7 @@ class CatalogServiceSpec extends AnyFunSuite {
   }
 
   test("session create requires container ownership; duplicate rejected") {
-    val c = new CatalogService()
+    val c = new CatalogService(sharedStore(Files.createTempDirectory("cat-cas")))
     c.createUser("alice", "pw")
     assert(c.createContainer("admin", "app"))
     assert(!c.createSession("alice", "app", "app_run")) // not the owner
@@ -62,7 +70,7 @@ class CatalogServiceSpec extends AnyFunSuite {
   }
 
   test("access checks compare owners (auth.py:205-223)") {
-    val c = new CatalogService()
+    val c = new CatalogService(sharedStore(Files.createTempDirectory("cat-cas")))
     c.createUser("alice", "pw")
     c.createContainer("admin", "app")
     c.createSession("admin", "app", "app_run")
@@ -75,7 +83,7 @@ class CatalogServiceSpec extends AnyFunSuite {
 
   test("listings are owner-scoped and newest-first") {
     val clock = new FakeClock(Instant.parse("2026-01-01T00:00:00Z"))
-    val c = new CatalogService(clock = clock)
+    val c = new CatalogService(sharedStore(Files.createTempDirectory("cat-cas")), clock)
     c.createContainer("admin", "app1")
     clock.now = clock.now.plusSeconds(60)
     c.createContainer("admin", "app2")
@@ -91,7 +99,7 @@ class CatalogServiceSpec extends AnyFunSuite {
 
   test("cleanupExpiredTokens removes only the expired ones") {
     val clock = new FakeClock(Instant.parse("2026-01-01T00:00:00Z"))
-    val c = new CatalogService(clock = clock)
+    val c = new CatalogService(sharedStore(Files.createTempDirectory("cat-cas")), clock)
     val shortLived = c.createToken("admin", expiresInHours = 1)
     val longLived = c.createToken("admin", expiresInHours = 48)
     clock.now = clock.now.plus(Duration.ofHours(2))
@@ -101,7 +109,7 @@ class CatalogServiceSpec extends AnyFunSuite {
   }
 
   test("createUser rejects duplicates; tokens are url-safe and unique") {
-    val c = new CatalogService()
+    val c = new CatalogService(sharedStore(Files.createTempDirectory("cat-cas")))
     assert(c.createUser("dana", "pw"))
     assert(!c.createUser("dana", "other"))
     val tokens = (1 to 20).map(_ => c.createToken("dana"))
@@ -109,22 +117,13 @@ class CatalogServiceSpec extends AnyFunSuite {
     assert(tokens.forall(_.matches("^[A-Za-z0-9_-]+$"))) // url-safe base64, no padding
   }
 
-  // ---- shared (CAS-committed) mode: the multi-gateway control plane ----
-
-  private def sharedStore(dir: java.nio.file.Path,
-                          keep: Int = 32, graceMs: Long = 60000,
-                          ckptEvery: Int = 1): CasStateStore = {
-    val p = new org.apache.hadoop.fs.Path(dir.toString)
-    new CasStateStore(p.getFileSystem(new org.apache.hadoop.conf.Configuration()), p,
-      keepVersions = keep, pruneGraceMs = graceMs, checkpointEvery = ckptEvery)
-  }
+  // ---- several instances on one store: the multi-gateway control plane ----
 
   test("shared catalog spans instances: tokens, ownership, conflicts and revocation are cluster-wide") {
     val dir = Files.createTempDirectory("cat-cas")
-    val a = new CatalogService(shared = Some(sharedStore(dir)))
-    val b = new CatalogService(shared = Some(sharedStore(dir)))
-    // a token minted on A authorizes on B — the round-8 gap (per-gateway
-    // catalogs 401'd each other's tokens)
+    val a = new CatalogService(sharedStore(dir))
+    val b = new CatalogService(sharedStore(dir))
+    // a token minted on A authorizes on B
     val t = a.createToken("admin")
     assert(b.verifyToken(t) === Some("admin"))
     // duplicate container creation across instances conflicts exactly once
@@ -144,8 +143,8 @@ class CatalogServiceSpec extends AnyFunSuite {
 
   test("shared catalog: concurrent same-id creation from two instances — exactly one winner") {
     val dir = Files.createTempDirectory("cat-cas")
-    val a = new CatalogService(shared = Some(sharedStore(dir)))
-    val b = new CatalogService(shared = Some(sharedStore(dir)))
+    val a = new CatalogService(sharedStore(dir))
+    val b = new CatalogService(sharedStore(dir))
     (1 to 10).foreach { i =>
       val wins = new java.util.concurrent.atomic.AtomicInteger(0)
       val threads = Seq(a, b).map(c => new Thread(() => {
@@ -165,8 +164,8 @@ class CatalogServiceSpec extends AnyFunSuite {
     // a commit that loses the version CAS re-applies its mutation at
     // the new frontier and NO accepted mutation is silently dropped
     val dir = Files.createTempDirectory("cat-cas")
-    val a = new CatalogService(shared = Some(sharedStore(dir)))
-    val b = new CatalogService(shared = Some(sharedStore(dir)))
+    val a = new CatalogService(sharedStore(dir))
+    val b = new CatalogService(sharedStore(dir))
     val perSide = 8
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = for ((c, side) <- Seq((a, "a"), (b, "b")); i <- 1 to perSide) yield
@@ -190,8 +189,8 @@ class CatalogServiceSpec extends AnyFunSuite {
   test("shared catalog: lazy token expiry propagates across instances") {
     val dir = Files.createTempDirectory("cat-cas")
     val clock = new FakeClock(Instant.parse("2026-01-01T00:00:00Z"))
-    val a = new CatalogService(clock = clock, shared = Some(sharedStore(dir)))
-    val b = new CatalogService(clock = clock, shared = Some(sharedStore(dir)))
+    val a = new CatalogService(sharedStore(dir), clock)
+    val b = new CatalogService(sharedStore(dir), clock)
     val t = a.createToken("admin", expiresInHours = 1)
     assert(b.verifyToken(t) === Some("admin"))
     clock.now = clock.now.plus(Duration.ofHours(2))
@@ -201,7 +200,7 @@ class CatalogServiceSpec extends AnyFunSuite {
 
   test("shared catalog: an incomplete frontier record degrades reads to the last committed state") {
     val dir = Files.createTempDirectory("cat-cas")
-    val a = new CatalogService(shared = Some(sharedStore(dir)))
+    val a = new CatalogService(sharedStore(dir))
     val t = a.createToken("admin")
     // plant a frame-mismatched record ABOVE the committed frontier — a
     // committer crashed mid-record on an O_EXCL-fallback mount, or
@@ -210,7 +209,7 @@ class CatalogServiceSpec extends AnyFunSuite {
       .map(_.getName.stripPrefix("v").stripSuffix(".json").toLong).max
     Files.write(dir.resolve(f"v${slot + 1}%020d.json"),
       "#graft-state 9999\n{\"trunca".getBytes("UTF-8"))
-    val b = new CatalogService(shared = Some(sharedStore(dir)))
+    val b = new CatalogService(sharedStore(dir))
     assert(b.verifyToken(t) === Some("admin"))
     assert(b.verifyPassword("admin", "admin"))
   }
@@ -254,20 +253,20 @@ class CatalogServiceSpec extends AnyFunSuite {
 
   test("shared catalog: version chain stays bounded under sustained mutation (prune)") {
     val dir = Files.createTempDirectory("cat-cas")
-    val c = new CatalogService(shared = Some(sharedStore(dir, keep = 8, graceMs = 0)))
+    val c = new CatalogService(sharedStore(dir, keep = 8, graceMs = 0))
     (1 to 40).foreach(i => c.createContainer("admin", s"box$i"))
     val files = dir.toFile.listFiles((_, n) => n.startsWith("v")).length
     assert(files <= 9, s"$files version files retained (keep=8)")
     // the surviving newest state is complete
-    val fresh = new CatalogService(shared = Some(sharedStore(dir)))
+    val fresh = new CatalogService(sharedStore(dir))
     assert(fresh.userContainers("admin").size == 40)
   }
 
-  // ---- delta-chain mode (round-10 verdict #1: O(mutation) commits) ----
+  // ---- delta chain: O(mutation) commits ----
 
   test("delta chain: commit payload is O(mutation) at any live-state size; fresh gateway reconstructs checkpoint+tail") {
     val dir = Files.createTempDirectory("cat-delta")
-    val a = new CatalogService(shared = Some(sharedStore(dir, ckptEvery = 8)))
+    val a = new CatalogService(sharedStore(dir, ckptEvery = 8))
     (1 to 60).foreach(i => assert(a.createUser(f"user$i%03d", "pw")))
     val t = a.createToken("user001")
     assert(a.createContainer("user001", "cbox"))
@@ -285,7 +284,7 @@ class CatalogServiceSpec extends AnyFunSuite {
     assert(maxDelta < 512, s"a delta record weighs $maxDelta B — O(state) leak?")
     assert(maxCkpt > maxDelta * 4, s"checkpoint $maxCkpt B vs delta $maxDelta B")
     // a FRESH gateway reconstructs the full state from checkpoint + tail
-    val b = new CatalogService(shared = Some(sharedStore(dir, ckptEvery = 8)))
+    val b = new CatalogService(sharedStore(dir, ckptEvery = 8))
     assert(b.verifyToken(t) === Some("user001"))
     assert(b.verifyPassword("user042", "pw"))
     assert(!b.createContainer("user002", "cbox")) // global id namespace survives
@@ -294,8 +293,8 @@ class CatalogServiceSpec extends AnyFunSuite {
 
   test("delta chain: cross-gateway mutations stay idempotent and ordered; deletes travel as deltas") {
     val dir = Files.createTempDirectory("cat-delta")
-    val a = new CatalogService(shared = Some(sharedStore(dir, ckptEvery = 8)))
-    val b = new CatalogService(shared = Some(sharedStore(dir, ckptEvery = 8)))
+    val a = new CatalogService(sharedStore(dir, ckptEvery = 8))
+    val b = new CatalogService(sharedStore(dir, ckptEvery = 8))
     val t = a.createToken("admin")
     assert(b.verifyToken(t) === Some("admin")) // B applied A's delta
     a.revokeToken(t)
@@ -312,25 +311,25 @@ class CatalogServiceSpec extends AnyFunSuite {
 
   test("delta chain: prune keeps the reconstruction window; sustained churn stays bounded") {
     val dir = Files.createTempDirectory("cat-delta")
-    val c = new CatalogService(shared = Some(sharedStore(dir, keep = 8, graceMs = 0, ckptEvery = 8)))
+    val c = new CatalogService(sharedStore(dir, keep = 8, graceMs = 0, ckptEvery = 8))
     (1 to 40).foreach(i => c.createContainer("admin", s"box$i"))
     val files = dir.toFile.listFiles((_, n) => n.matches("v\\d{20}\\.json"))
     assert(files.length <= 9, s"${files.length} version files retained (keep=8)")
     // a fresh gateway still reconstructs the complete state
-    val fresh = new CatalogService(shared = Some(sharedStore(dir, ckptEvery = 8)))
+    val fresh = new CatalogService(sharedStore(dir, ckptEvery = 8))
     assert(fresh.userContainers("admin").size == 40)
   }
 
   test("delta chain: a torn frontier record degrades reads to the last committed chain") {
     val dir = Files.createTempDirectory("cat-delta")
-    val a = new CatalogService(shared = Some(sharedStore(dir, ckptEvery = 8)))
+    val a = new CatalogService(sharedStore(dir, ckptEvery = 8))
     (1 to 10).foreach(i => a.createUser(s"u$i", "pw"))
     val t = a.createToken("u3")
     val slot = dir.toFile.listFiles((_, n) => n.matches("v\\d{20}\\.json"))
       .map(_.getName.stripPrefix("v").stripSuffix(".json").toLong).max
     Files.write(dir.resolve(f"v${slot + 1}%020d.json"),
       "#graft-delta 9999\n{\"trunca".getBytes("UTF-8"))
-    val b = new CatalogService(shared = Some(sharedStore(dir, ckptEvery = 8)))
+    val b = new CatalogService(sharedStore(dir, ckptEvery = 8))
     assert(b.verifyToken(t) === Some("u3"))
     assert(b.verifyPassword("u7", "pw"))
   }
@@ -347,13 +346,26 @@ class CatalogServiceSpec extends AnyFunSuite {
   }
 
   test("state survives restart via catalog.json (tokens included)") {
-    val dir = Files.createTempDirectory("catalog")
-    val c1 = new CatalogService(Some(dir))
-    c1.createUser("bob", "secret")
-    c1.createContainer("bob", "box")
-    c1.createSession("bob", "box", "box_run")
-    val t = c1.createToken("bob")
-    val c2 = new CatalogService(Some(dir)) // fresh instance, same dir
+    // a catalog.json as the retired per-gateway JSON catalog wrote it:
+    // bob/secret, one token (stored as its SHA-256), container and session
+    val t = "legacy-bearer-token-for-bob"
+    def sha(x: String) = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val root = Files.createTempDirectory("catalog")
+    val legacy = root.resolve("catalog.json")
+    Files.writeString(legacy,
+      s"""{"users":[
+         |  {"user_id":"admin","password_hash":"${sha("admin")}","created_at":"2026-01-01T00:00:00Z"},
+         |  {"user_id":"bob","password_hash":"${sha("secret")}","created_at":"2026-01-01T00:00:01Z"}],
+         |"tokens":[{"token_hash":"${sha(t)}","user_id":"bob",
+         |  "created_at":"2026-01-01T00:00:02Z","expires_at":"2999-01-01T00:00:00Z"}],
+         |"containers":[{"container_id":"box","user_id":"bob","created_at":"2026-01-01T00:00:03Z","seq":1}],
+         |"sessions":[{"session_id":"box_run","container_id":"box","user_id":"bob",
+         |  "created_at":"2026-01-01T00:00:04Z","seq":2}]}""".stripMargin)
+    val dir = Files.createTempDirectory("cat-cas")
+    // v1 of a fresh delta-cadence store is a delta record
+    CatalogService.importLegacy(sharedStore(dir, ckptEvery = 16), legacy)
+    val c2 = new CatalogService(sharedStore(dir, ckptEvery = 16)) // fresh instance, same dir
     assert(c2.verifyPassword("bob", "secret"))
     assert(c2.verifyToken(t) === Some("bob"))
     assert(c2.verifyContainerAccess("bob", "box"))
