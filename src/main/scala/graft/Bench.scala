@@ -26,9 +26,9 @@ object Bench {
       catch { case _: Throwable => () }
     }
     // (name, seconds, succeeded) — a crashing query must NOT hide inside a
-    // plausible-looking timing (round-1 verdict: failures were masked).
-    // Sorted by name so per-query timings are comparable across rounds
-    // (Map iteration order is an implementation detail).
+    // plausible-looking timing. Sorted by name so per-query timings are
+    // comparable across runs (Map iteration order is an implementation
+    // detail).
     def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true }
@@ -50,21 +50,18 @@ object Bench {
     // with random multi-second stalls — dead shuffle state piling up
     // between the sparse GCs costs more than the extra pauses).
     def clean(): Unit = { spark.catalog.clearCache(); System.gc() }
-    // BUILD PASS (round-13 verdict #4): force every shared memoized
-    // relation / persisted index / lifecycle fixture FIRST, each as its
-    // own timed `build:<name>` row — queries then price their marginal
-    // plan, so per-query deltas across rounds reflect plan changes, not
-    // which consumer happened to pay an index build. Build rows are
-    // REPORTED (stderr detail + builds_sec in the JSON) but sit outside
-    // the headline total: the total is the marginal serving cost,
-    // comparable round-over-round — and the old totals never reliably
-    // contained builds anyway (a first-consumer query pushed past the
-    // 2 s threshold re-ran warm and min-of-2 DROPPED the build cost;
-    // WHICH query paid varied by round — r13's dedup_ngram_seg swing).
-    // A failed build still fails the bench run.
-    // Build pass stays SERIAL (round-17 negative result, measured): a
-    // guide-§2.6 3-thread overlap of the independent Prebuild stages
-    // was tried and made the pass WORSE on this single-node harness —
+    // BUILD PASS: force every shared memoized relation / persisted index
+    // / lifecycle fixture FIRST, each as its own timed `build:<name>`
+    // row — queries then price their marginal plan, so per-query deltas
+    // across runs reflect plan changes, not which consumer happened to
+    // pay an index build (under min-of-N a first consumer's build cost
+    // is dropped by its warm re-run, and which query paid it varies).
+    // Build rows are REPORTED (stderr detail + builds_sec in the JSON)
+    // but sit outside the headline total: the total is the marginal
+    // serving cost. A failed build still fails the bench run.
+    // Build pass stays SERIAL (a measured negative result): a 3-thread
+    // overlap of the independent Prebuild stages was tried and made the
+    // pass WORSE on a single-node harness —
     // builds wall-clock 60.2 s vs ~48 s serial, per-row times inflated
     // 2-4× by contention — because at sf0.1 each build already
     // saturates local[32] or is latency-bound; there is no idle
@@ -84,15 +81,12 @@ object Bench {
       (name, dt, ok)
     }
     val buildsWallSec = (System.nanoTime() - buildWallT0) / 1e9
-    // Per-query min-of-N (round-15 verdict #3 — the old "re-measure only
-    // past 2 s" policy left every sub-2 s query exposed to CPU-steal
-    // noise, and round-over-round comparisons chased phantom 10-20%
-    // swings; identical code measured 139-210 s totals). This host shows
-    // real steal bursts (multi-10s stalls hitting one random query per
-    // run — /proc/stat steal ≫ 0); standard practice is min-of-N, and
-    // the min is the right estimator for additive noise. Policy (named
-    // `timing` in the JSON so cross-round tooling sees which definition
-    // it's comparing): EVERY query is measured twice — re-measures are
+    // Per-query min-of-N: re-measuring only past 2 s leaves every sub-2 s
+    // query exposed to CPU-steal noise (identical code measured 139-210 s
+    // totals; steal bursts stall one random query per run), and the min
+    // is the right estimator for additive noise. Policy (named `timing`
+    // in the JSON so cross-run tooling sees which definition it's
+    // comparing): EVERY query is measured twice — re-measures are
     // cheap since the memoized relations survive clean(), so a second
     // run pays the marginal plan, not an index build — and only when
     // the two disagree by >10% is a third run paid; the reported number
@@ -118,25 +112,21 @@ object Bench {
       (name, samples.min, ok)
     }
     val results = queryResults
-    // Full per-query detail goes to STDERR — the driver's harness keeps
-    // only the LAST 2000 CHARACTERS of output, and a 100+-query dict at
-    // full double precision is ~4.6 kB: rounds 2 and 3 both recorded
-    // `parsed: null` because the head of the one JSON line fell outside
-    // the tail window. Round 5 recorded `parsed: null` AGAIN because the
-    // tail window is shared across streams: ServiceBench's ~210-char
-    // stderr detail plus the build tool's own `[success]` trailer printed
-    // AFTER the JSON and ate its budget. Hence the two rules below:
-    // (1) every detail line — including the service bench — runs BEFORE
-    // the JSON; (2) the JSON is the final line this process emits and is
-    // budgeted to 1,600 chars, leaving ~400 chars of headroom for any
-    // trailer the harness itself appends after we exit.
+    // Full per-query detail goes to STDERR — a harness that keeps only
+    // the LAST 2000 CHARACTERS of output (shared across stdout, stderr
+    // and the build tool's own `[success]` trailer) cannot parse a
+    // 100+-query dict at full double precision (~4.6 kB). Hence two
+    // rules: (1) every detail line runs BEFORE the JSON; (2) the JSON is
+    // the final line this process emits and is budgeted to 1,600 chars,
+    // leaving ~400 chars of headroom for any trailer the harness itself
+    // appends after we exit.
     (buildResults ++ results).foreach { case (k, v, ok) =>
       System.err.println(f"[bench] $k%-28s $v%8.3f s${if (ok) "" else "  FAILED"}")
     }
     // Blocking-skew forecasts: the candidate-pair totals the two
     // metadata-priced blocking reports predict. Emitted every run so a
     // skew regression (a hot SimHash chunk, an overloaded IVF list)
-    // shows up as a NUMBER drifting across rounds instead of a mystery
+    // shows up as a NUMBER drifting across runs instead of a mystery
     // slowdown in whichever query pays for it first.
     try {
       val bs = graft.ops.Dedup.blockStats(spark, sfDir).collect()
@@ -158,9 +148,6 @@ object Bench {
       System.err.println(s"[bench] forecasts FAILED: ${e.getMessage}")
     }
     clean()
-    // Service-path throughput (ingest-while-query over the HTTP surface):
-    // stderr detail, deliberately before the budgeted stdout line.
-    if (sys.env.getOrElse("SPARK_GRAFT_SERVICE_BENCH", "1") != "0") ServiceBench.run(spark)
     def sec(v: Double): String = f"$v%.3f"
     val failed = (buildResults ++ results).collect { case (k, _, false) => s"\"$k\"" }
       .mkString("[", ",", "]")
@@ -171,15 +158,13 @@ object Bench {
     // `queries` lists the slowest first, greedily added while the whole
     // line stays under the tail window (sub-second entries that fall
     // off contribute only to the total).
-    // metric_version 2 (round-14 advice): `value` is the marginal
-    // serving total under the min-of-N policy; `total_with_builds`
-    // restores a combined number comparable to the pre-r14 definition
-    // so cross-round tooling can't silently compare two different
-    // metrics; `timing` names the sampling policy.
-    // builds_wall_sec (additive key): wall-clock of the serial build
-    // pass; builds_sec remains the per-row SUM so the
-    // cross-round definition is unchanged. total_with_builds keeps
-    // charging the SUM (the conservative, history-comparable number).
+    // metric_version 2: `value` is the marginal serving total under the
+    // min-of-N policy; `total_with_builds` adds the builds back, so
+    // tooling comparing against a builds-included total compares like
+    // with like; `timing` names the sampling policy.
+    // builds_wall_sec: wall-clock of the serial build pass; builds_sec
+    // is the per-row SUM, and total_with_builds charges the SUM (the
+    // conservative number).
     val counts = s""""metric_version":2,"timing":"min2+3@10pct",""" +
       s""""total_with_builds":${sec(total + buildsSec)},""" +
       s""""n_queries":${queryResults.size},"n_builds":${buildResults.size},"builds_sec":${sec(buildsSec)},""" +

@@ -579,8 +579,8 @@ final class LogServer(spark: SparkSession, root: String, port: Int = 0,
 
 object LogServer {
   /** Canonical read-path stage order for the attribution seam
-    * (`recordReadTimings`) — the ONE list ServiceBench and
-    * ServiceScaleCheck render from, so adding a stage is a one-line
+    * (`recordReadTimings`) — the ONE list ServiceScaleCheck renders
+    * from, so adding a stage is a one-line
     * change here plus its `noteStage` call. */
   val ReadStages: Seq[String] =
     Seq("token", "auth", "flush", "stats", "query", "render")
@@ -594,7 +594,10 @@ object LogServer {
     * cluster-wide, like the data plane's manifests. Delta-chain mode
     * (checkpoint every 16th version): a mutation commits O(its own
     * size), not the full catalog snapshot — the SQLite control plane's
-    * O(1)-per-mutation economics at any live-state size. A
+    * O(1)-per-mutation economics at any live-state size. Every record
+    * names its own kind, so a root holding full snapshots at every
+    * version reads unchanged; a gateway that parses only snapshots must
+    * not share a root with this one. A
     * `<serverRoot>/catalog/catalog.json` left by the retired per-gateway
     * JSON catalog is imported into an empty chain first
     * ([[CatalogService.importLegacy]]). */
@@ -602,8 +605,7 @@ object LogServer {
     (sp, serverRoot) => {
       val dir = new org.apache.hadoop.fs.Path(s"$dataRoot/catalog-cas")
       val fs = dir.getFileSystem(sp.sparkContext.hadoopConfiguration)
-      val store = new graft.catalog.CasStateStore(fs, dir,
-        checkpointEvery = deltaFormatCadence(fs, dir))
+      val store = new graft.catalog.CasStateStore(fs, dir, checkpointEvery = 16)
       CatalogService.importLegacy(store, Paths.get(serverRoot, "catalog", "catalog.json"))
       new CatalogService(store)
     }
@@ -612,53 +614,6 @@ object LogServer {
     * root, `<serverRoot>/data/catalog-cas`. */
   val defaultCatalog: (SparkSession, String) => CatalogService =
     (sp, serverRoot) => catalogOn(s"$serverRoot/data")(sp, serverRoot)
-
-  /** Delta-format compatibility gate for a catalog root: a gateway
-    * still running a pre-delta binary parses only `#graft-state`
-    * records, so the first `#graft-delta` landing in a
-    * mixed-version fleet would read there as a torn
-    * frontier — auth up to a checkpoint interval stale, mutations
-    * stalling on the unreadable-frontier path. Delta commits are
-    * therefore gated on a marker file: claimed atomically when THIS
-    * binary initializes a FRESH root (no catalog state exists yet, so
-    * no older gateway can have mounted it), honored ever after. A
-    * root initialized by an older binary keeps full-snapshot commits
-    * — cadence 1, readable by every version — until an operator
-    * creates the marker after upgrading the whole fleet. */
-  private[graft] def deltaFormatCadence(fs: org.apache.hadoop.fs.FileSystem,
-                                        dir: org.apache.hadoop.fs.Path): Int = {
-    val marker = new org.apache.hadoop.fs.Path(dir, "format-delta-v1")
-    if (fs.exists(marker)) 16
-    else if (!fs.exists(dir) || fs.listStatus(dir).isEmpty) {
-      fs.mkdirs(dir)
-      graft.storage.Cas.tryClaim(fs, marker, "delta-chain v1\n".getBytes("UTF-8"))
-      // TOCTOU re-check: between the emptiness listing and the
-      // claim, a PRE-DELTA gateway can mount the same fresh
-      // root and commit a full-snapshot v1 — it never looks for the
-      // marker, so claiming it does not exclude that writer. If the
-      // re-list shows any version file already present, this process
-      // cannot prove it was the root's first mount: fall back to
-      // cadence 1 (full snapshots, readable by every binary) for this
-      // process; the claimed marker is honored from the next restart,
-      // by which time the mixed-fleet window has passed.
-      val versionsPresent = fs.listStatus(dir).exists { st =>
-        val n = st.getPath.getName
-        n != marker.getName && n.startsWith("v")
-      }
-      if (versionsPresent) {
-        System.err.println(s"[catalog] root $dir gained version files between " +
-          "the emptiness check and the marker claim - a pre-delta gateway may " +
-          "share it; committing full snapshots this process (the marker takes " +
-          "effect on restart)")
-        1
-      } else 16
-    } else {
-      System.err.println(s"[catalog] pre-delta root $dir has no format-delta-v1 " +
-        "marker - committing full snapshots; create the marker to enable delta " +
-        "commits once every gateway is upgraded")
-      1
-    }
-  }
 }
 
 /** Standalone entry point: `runMain graft.api.ServerMain [root] [port]`.

@@ -408,11 +408,10 @@ final class CatalogService(store: CasStateStore, clock: Clock = Clock.systemUTC(
       users(n.get("user_id").asText) = User(n.get("user_id").asText,
         n.get("password_hash").asText, Instant.parse(n.get("created_at").asText))
     }
-    arr("tokens").foreach { n =>
-      // Legacy catalogs (pre-digest) persisted the raw token; hash it on
-      // load so those sessions stay valid across the upgrade.
-      val h = if (n.has("token_hash")) n.get("token_hash").asText
-              else sha256Hex(n.get("token").asText)
+    // A token row is its SHA-256 digest; a row without one (a raw
+    // `token`) is skipped, so its holder logs in again.
+    arr("tokens").filter(_.has("token_hash")).foreach { n =>
+      val h = n.get("token_hash").asText
       tokens(h) = Token(h, n.get("user_id").asText,
         Instant.parse(n.get("created_at").asText), Instant.parse(n.get("expires_at").asText))
     }

@@ -538,12 +538,12 @@ object IndexTables {
     import org.apache.spark.sql.functions._
     val capped = mergedShingleCappedEnsured(s, key)
     val sizes = capped.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    // NOT checkpointed further (round-17 negative result, measured):
+    // NOT checkpointed further (a measured negative result):
     // materializing the sized join as well — so the segmented Jaccard
     // self-join reads one relation instead of re-running the size
     // aggregate per side — costs MORE at sf0.1 than the duplicate
-    // derivation it removes (Prof min-of-3: 1.14 s → 2.00 s), the same
-    // trade text_phrase_topk hit in r16. The capped checkpoint already
+    // derivation it removes (min-of-3: 1.14 s → 2.00 s), the same
+    // trade text_phrase_topk hit. The capped checkpoint already
     // bounds the expensive leg (seg scan + anti-join) to one pass.
     capped.join(sizes, Seq("doc_id"))
   }
@@ -582,39 +582,30 @@ object IndexTables {
       .select(col("s"))
   }
 
-  /** FROZEN keeper-digest index (round-13, the admission gate's
-    * exact-dup probe): the distinct md5 text digests of the base slice
+  /** FROZEN keeper-digest index (the admission gate's exact-dup
+    * probe): the distinct md5 text digests of the base slice
     * (`doc_id <= thr`), bucketed by digest so a batch's admission
     * probe is an Exchange-free equi-join on the digest key. In a
     * deployment this table is maintained by the curation run that
     * committed the slice (append a batch's digests when the batch is
     * admitted); here it builds once per (catalog, dir, thr) and every
     * subsequent admission probes it. ~32 B/doc — the smallest index in
-    * the engine. */
-  /** Base-slice keeper digests, bucketed by digest. Rows carry an
-    * `origin` column ('base' here, 'batch' on every
+    * the engine.
+    *
+    * Rows carry an `origin` column ('base' here, 'batch' on every
     * [[appendToAdmissionDigests]] row): the DECLARED
     * `pipe_curation_admit*` twins probe `origin = 'base'` ONLY, so
     * gate evolution on the same (dir, thr) can never drift the twin
     * off its oracle text — the pure-base contract is structural, not
-    * a test-fixture convention (round-13 advice). v2 in the name: the
-    * v1 layout had no origin column, and a stale v1 table must not be
-    * read as if it had one. */
-  def ensureAdmissionDigests(s: SparkSession, dir: String, thr: Long): String = {
-    // v1 hygiene (round-14 advice): the v1→v2 layout rename orphans any
-    // v1 table already committed in a persistent warehouse — never read
-    // again, never dropped, a slow leak. Collect it here, the one place
-    // that knows both names (mirrors dropAnnFixtureTables).
-    val v1 = s"idx_admit_digest_${tag(dir)}_$thr"
-    if (s.catalog.tableExists(v1)) s.sql(s"DROP TABLE $v1")
-    deleteWarehouseDir(s, v1)
+    * a test-fixture convention. The `v2` in the name is part of the
+    * one layout (with `origin`); no other layout is read or dropped. */
+  def ensureAdmissionDigests(s: SparkSession, dir: String, thr: Long): String =
     ensure(s, s"idx_admit_digest_v2_${tag(dir)}_$thr", Seq("digest")) {
       import org.apache.spark.sql.functions._
       Tables.documents(s, dir).filter(col("doc_id") <= thr)
         .select(md5(col("text")).as("digest")).distinct()
         .withColumn("origin", lit("base"))
     }
-  }
 
   /** UNIGRAM POSTINGS (inverted index) table — (term, doc_id, tf)
     * bucketed by term (round 15): the lexical retrieval family's

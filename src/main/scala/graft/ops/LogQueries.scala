@@ -254,7 +254,7 @@ object LogQueries {
     // Materialize before cleanup: the result set is three sessions' worth
     // of rows (control-plane-sized), and collecting lets us delete the
     // temp store and release the cache instead of leaking one tmp dir +
-    // one pinned cache entry per invocation (Verify + Bench + Prof runs).
+    // one pinned cache entry per invocation (Verify + Bench runs).
     val rows = reads.reduce(_ unionAll _)
       .orderBy(col("timestamp"), col("session"), col("message"))
       .collect().toSeq

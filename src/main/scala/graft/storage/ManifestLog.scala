@@ -48,8 +48,8 @@ import graft.model.LogSchema
   * a committer claims the `v<N+1>` slot with an atomic,
   * fully-formed create-if-absent — POSIX `link(2)` of a
   * fully-written temp file on local filesystems (plain `rename`
-  * silently REPLACES an existing destination, the round-7 advice
-  * hole), temp-file + rename elsewhere (HDFS rename REFUSES an
+  * silently REPLACES an existing destination), temp-file + rename
+  * elsewhere (HDFS rename REFUSES an
   * existing destination atomically at the namenode; object stores
   * without atomic rename need a real commit coordinator, the same
   * operational contract the public table formats state). Both paths
@@ -60,19 +60,13 @@ import graft.model.LogSchema
   * and none is ever silently overwritten or deleted (a reclaim-by-
   * delete path would race a competing committer's just-completed
   * claim and destroy a real commit — this design never deletes at
-  * the commit frontier). Every new manifest carries a
-  * `#graft-manifest <n>` HEADER (first line) plus a `#commit <n>`
-  * footer, purely as CORRUPTION detection: the header marks the file
-  * as new-format, so TAIL TRUNCATION — the primary at-rest failure
-  * mode, which destroys the footer first — is always detected (a
-  * round-8 footer-only file whose tail was cut off was
-  * indistinguishable from a complete legacy manifest, the round-8
-  * advice hole); a count mismatch on either line is a loud,
-  * operator-actionable error, never silently skipped. Files with a
-  * footer but no header (round-8 format) and files with neither
-  * (pre-footer format) are accepted as complete — both only ever
-  * published fully-formed files atomically, so upgrade needs no
-  * migration. The in-process lock remains only to keep
+  * the commit frontier). A manifest has ONE on-disk format: a
+  * `#graft-manifest <n>` HEADER (first line), the `n` entries, and a
+  * `#commit <n>` footer, purely as CORRUPTION detection: the header
+  * says a matching footer must follow, so TAIL TRUNCATION — the
+  * primary at-rest failure mode, which destroys the footer first — is
+  * always detected; any other shape is a loud, operator-actionable
+  * error, never silently skipped. The in-process lock remains only to keep
   * same-instance committers from burning CAS retries against each
   * other. Appends that land mid-compaction are preserved: the swap's
   * update function subtracts only the snapshot it compacted from
@@ -104,9 +98,9 @@ final class ManifestLog(spark: SparkSession, root: String,
   // root assumption (the whole point is multi-node operation), so a
   // second instance constructed mid-append must NOT
   // clobber a live writer's staging dir. Sweep only dirs old enough
-  // that no in-flight write can still own them (round-7 review: the
-  // unguarded sweep deleted a concurrent instance's staging between
-  // its parquet write and rename).
+  // that no in-flight write can still own them (an unguarded sweep
+  // deletes a concurrent instance's staging between its parquet write
+  // and rename).
   // A staging dir's mtime can sit at job-start for the length of the
   // parquet write (the _temporary subtree churns without touching the
   // top dir), so the age guard must exceed the LONGEST write this
@@ -162,7 +156,7 @@ final class ManifestLog(spark: SparkSession, root: String,
     * are skipped so reads degrade to the newest intact state while
     * [[commit]] surfaces the corruption loudly.
     *
-    * COST (round-9, measured): the listing path is O(chain length) —
+    * COST (measured): the listing path is O(chain length) —
     * 1.7 ms at 1 version, 178 ms at 10⁴ on tmpfs, and on an object
     * store every 10³ versions is another paged LIST round-trip. Under
     * sustained commit load (a commit per flush) the chain grows until
@@ -268,6 +262,21 @@ final class ManifestLog(spark: SparkSession, root: String,
     try fs.delete(hintFilePath(manifestDir(container, session)), false)
     catch { case _: java.io.IOException => () }
 
+  /** Bench/test seam: plant versions `from..to` of a session, each
+    * holding `entries`, through the commit path's own encoding and
+    * claim primitive — a long chain without paying a commit per
+    * version, in the one format the store reads. Fails if a slot is
+    * already taken. */
+  private[graft] def plantVersions(container: String, session: String,
+                                   from: Long, to: Long, entries: Seq[String]): Unit = {
+    val dir = manifestDir(container, session)
+    fs.mkdirs(dir)
+    val payload = ManifestLog.encode(entries)
+    (from to to).foreach { v =>
+      require(tryClaim(vPath(dir, v), payload), s"plantVersions: slot v$v is taken")
+    }
+  }
+
   private[storage] def readHintFile(dir: Path): Long =
     try {
       val in = fs.open(hintFilePath(dir))
@@ -294,7 +303,7 @@ final class ManifestLog(spark: SparkSession, root: String,
     }
   }
 
-  // Read-side degradation must be OBSERVABLE (round-8 advice): resolve
+  // Read-side degradation must be OBSERVABLE: resolve
   // skipping a corrupt frontier silently serves an older snapshot —
   // acked data disappears from reads with no signal until a writer
   // happens to commit and trips the loud error. Count every skip and
@@ -341,7 +350,7 @@ final class ManifestLog(spark: SparkSession, root: String,
         val (v, cur) = resolve(container, session)
         val next = update(cur)
         if (next eq cur) return cur // update declined — no new version
-        val dst = new Path(dir, f"v${v + 1}%020d")
+        val dst = vPath(dir, v + 1)
         // ABA guard: a committer that stalls (GC/VM pause, partition)
         // past the expire horizon between resolve and claim can find
         // its target slot EMPTY because expire vacated it below the
@@ -399,7 +408,7 @@ final class ManifestLog(spark: SparkSession, root: String,
             })
           throw new java.io.IOException(
             if (frontierCorrupt)
-              s"manifest $dst is corrupt (commit footer mismatch); commits for " +
+              s"manifest $dst is corrupt (not a header, entries, footer manifest); commits for " +
               "this session are blocked — inspect and remove the file to restore " +
               "service (this store never writes partial manifests)"
             else
@@ -410,14 +419,6 @@ final class ManifestLog(spark: SparkSession, root: String,
       throw new IllegalStateException("unreachable")
     }
 
-  /** Atomically claim + write `dst`. False = slot taken (a committed
-    * manifest — new-format, legacy, or a competing claim that just
-    * landed). A CORRUPT file at the slot (footer/count mismatch —
-    * external damage; this code cannot produce one) is retried while
-    * fresh (visibility lag) and then surfaced as a loud error: it is
-    * NEVER deleted here, because a delete-and-reclaim races a
-    * competing committer completing the very same slot and would
-    * destroy a real commit. */
   /** The commit loop's ABA-guard predicate: true iff claiming slot
     * `resolvedV + 1` cannot be a claim of an expire-vacated slot.
     * Sound because expire's deletions are a prefix of the valid chain:
@@ -428,9 +429,16 @@ final class ManifestLog(spark: SparkSession, root: String,
   private[storage] def predecessorSurvives(dir: Path, resolvedV: Long): Boolean =
     resolvedV == 0 || fs.exists(vPath(dir, resolvedV))
 
+  /** Atomically claim + write `dst`. False = slot taken (a committed
+    * manifest or a competing claim that just landed). A file at the
+    * slot that does not parse (any shape but header, entries, footer —
+    * external damage, or an O_EXCL claim still being written) is
+    * retried while fresh and then surfaced as a loud error: it is
+    * NEVER deleted here, because a delete-and-reclaim races a
+    * competing committer completing the very same slot and would
+    * destroy a real commit. */
   private def tryPublish(dst: Path, entries: Seq[String]): Boolean = {
-    val payload = (ManifestLog.header(entries) +: entries :+ ManifestLog.footer(entries))
-      .mkString("", "\n", "\n").getBytes("UTF-8")
+    val payload = ManifestLog.encode(entries)
     if (fs.exists(dst)) {
       val corrupt =
         try { readEntries(dst); false } catch {
@@ -443,7 +451,7 @@ final class ManifestLog(spark: SparkSession, root: String,
         catch { case _: java.io.FileNotFoundException => return tryClaim(dst, payload) }
       if (!stale) return false // fresh: possibly a visibility lag — caller retries
       throw new java.io.IOException(
-        s"manifest $dst is corrupt (commit footer mismatch) and older than " +
+        s"manifest $dst is corrupt (not a header, entries, footer manifest) and older than " +
         s"${StaleClaimMs / 1000}s — commits for this session are blocked; " +
         "inspect and remove the file to restore service (this store never " +
         "writes partial manifests, so this indicates external damage or a " +
@@ -638,9 +646,9 @@ final class ManifestLog(spark: SparkSession, root: String,
         .withColumn("session", lit(session))
         .select(LogSchema.schema.fieldNames.map(col): _*)
 
-  // Version-keyed read cache (round-8 verdict #5): a gateway GET
-  // re-resolved AND re-planned (spark.read → InMemoryFileIndex build +
-  // footer reads) on every request. A manifest version pins an
+  // Version-keyed read cache: without it a gateway GET re-resolves AND
+  // re-plans (spark.read → InMemoryFileIndex build + footer reads) on
+  // every request. A manifest version pins an
   // immutable file set, so the VERSION is the cache key by
   // construction: a hit reuses the plan, a version bump misses and
   // rebuilds — staleness is impossible, no invalidation hooks needed.
@@ -692,7 +700,7 @@ final class ManifestLog(spark: SparkSession, root: String,
     * corrupt fails loudly — a silent fallback to "nearest version"
     * would defeat the reproducibility contract. */
   def readAt(container: String, session: String, version: Long): DataFrame = {
-    val p = new Path(manifestDir(container, session), f"v$version%020d")
+    val p = vPath(manifestDir(container, session), version)
     // Plan cache keyed by the typed (container, session, version)
     // triple: a pinned version is an immutable file set, so the PLAN is
     // reusable by construction; the lifecycle runs re-plan the same
@@ -973,8 +981,8 @@ final class ManifestLog(spark: SparkSession, root: String,
       // the purge is the engine's only in-store MUTATOR: memoized
       // derived relations over this root (any session) now hold rows
       // the store no longer does — drop them so the next read
-      // re-derives (round-12 verdict: the right-to-be-forgotten story
-      // had a hole at the cache layer)
+      // re-derives (otherwise the right-to-be-forgotten story has a hole
+      // at the cache layer)
       graft.ops.Tables.invalidateDir(root)
       purged
     }
@@ -986,8 +994,8 @@ final class ManifestLog(spark: SparkSession, root: String,
     * manifest that superseded its newest referencing manifest — NOT on
     * the file's own mtime: a hot file written long ago but retired a
     * second ago must survive the full grace window for readers pinned
-    * to the pre-swap manifest (the round-7 review caught the
-    * creation-time version of this rule deleting exactly those files).
+    * to the pre-swap manifest (a creation-time rule deletes exactly
+    * those files).
     *
     *  - a data file referenced by some RETAINED manifest M (< latest):
     *    deletable iff the next retained version after M committed
@@ -1063,7 +1071,7 @@ final class ManifestLog(spark: SparkSession, root: String,
       val deletedValid = scala.collection.mutable.Set[Long]()
       manifests.sliding(2).foreach {
         case Seq((v, _, _), (_, succMtime, _)) if succMtime < cutoff =>
-          if (fs.delete(new Path(dir, f"v$v%020d"), false)) { deletedValid += v; n += 1 }
+          if (fs.delete(vPath(dir, v), false)) { deletedValid += v; n += 1 }
         case _ => ()
       }
       // temp files of claims that crashed between write and rename are
@@ -1080,7 +1088,7 @@ final class ManifestLog(spark: SparkSession, root: String,
       // survives would open a gap a stale version hint could stop in —
       // a probe would read v-1, conclude it is the frontier, and a
       // commit from that state would claim the freed slot and be
-      // silently superseded (the round-9 review's lost-update hazard).
+      // silently superseded (a lost update).
       // Gaps next to surviving CORRUPT files are harmless — a probe can
       // never conclude at an unreadable version.
       if (corrupt.nonEmpty) {
@@ -1088,7 +1096,7 @@ final class ManifestLog(spark: SparkSession, root: String,
           .find(v => !deletedValid.contains(v)).getOrElse(Long.MaxValue)
         corrupt.foreach { case (v, mtime) =>
           if (v < minSurvivingValid && mtime < cutoff &&
-              fs.delete(new Path(dir, f"v$v%020d"), false)) n += 1
+              fs.delete(vPath(dir, v), false)) n += 1
         }
       }
       // crashed appends' root-level staging dirs: a long-lived instance
@@ -1107,28 +1115,20 @@ final class ManifestLog(spark: SparkSession, root: String,
       n
     }
 
-  /** Parse a manifest, newest format first:
-    *  - `#graft-manifest <n>` HEADER (first line): the file must also
-    *    end with a matching `#commit <n>` footer and carry exactly `n`
-    *    entries between them — tail truncation destroys the footer and
-    *    is ALWAYS detected, because the surviving header says one must
-    *    exist (the round-8 footer-only format could not tell a
-    *    truncated new file from a complete legacy one: truncation at
-    *    rest, the stated threat, eats the LAST line first);
-    *  - footer but no header: a round-8 file — footer/count check;
-    *  - neither: a LEGACY (pre-footer) file, accepted as complete.
-    * Every format only ever published fully-formed files atomically
-    * EXCEPT on link-less mounts, where [[Cas.tryClaim]]'s O_EXCL
-    * fallback creates the final name EMPTY and then writes content —
-    * so a racing reader can observe zero bytes or a torn header
-    * prefix. Both are therefore classified IN-FLIGHT (throw), never
-    * legacy-complete: a legitimate empty new-format manifest is
-    * `#graft-manifest 0` + `#commit 0`, two lines, and legacy entry
-    * lines are storage paths that never start with `#`. Beyond those
-    * two shapes, marker absence encodes format age, not partial
-    * state — an existing root upgrades with no migration — and any
-    * header/footer mismatch is CORRUPTION (external damage). All
-    * three throw [[ManifestLog.IncompleteManifestException]]. */
+  /** Parse a manifest. The one accepted shape is a
+    * `#graft-manifest <n>` header line, exactly `n` entry lines and a
+    * `#commit <n>` footer line. Everything else throws
+    * [[ManifestLog.IncompleteManifestException]]:
+    *  - zero bytes or a torn header: the O_EXCL fallback of
+    *    [[Cas.tryClaim]] on link-less mounts creates the final name
+    *    EMPTY and then writes content, so a racing reader can see
+    *    either. Serving such a file as (v, Nil) would let a concurrent
+    *    committer CAS v+1 with only its own entry, dropping the chain;
+    *  - a missing or mismatched footer: tail truncation (the at-rest
+    *    threat eats the LAST line first) or other external damage;
+    *  - no header: not a file this store writes.
+    * Callers skip-and-count such a file on read and retry-then-fail on
+    * commit; nothing deletes it. */
   private def readEntries(p: Path): Seq[String] = {
     val in = fs.open(p)
     val txt = try {
@@ -1139,33 +1139,12 @@ final class ManifestLog(spark: SparkSession, root: String,
       new String(out.toByteArray, "UTF-8")
     } finally in.close()
     val lines = txt.split("\n").iterator.filter(_.nonEmpty).toSeq
-    if (lines.isEmpty)
-      // zero bytes = the O_EXCL claim-then-write window (or a crash
-      // inside it). Parsing it as a complete legacy file would serve
-      // (v, Nil) — and a concurrent committer would then CAS v+1 with
-      // only its own entry, permanently dropping the chain.
-      throw new ManifestLog.IncompleteManifestException(p.toString)
-    lines.headOption match {
-      case Some(h) if h.startsWith(ManifestLog.HeaderMarker) =>
-        val body = lines.drop(1)
-        body.lastOption match {
-          case Some(f) if f.startsWith("#commit ") &&
-              f == ManifestLog.footer(body.init) &&
-              h == ManifestLog.header(body.init) => body.init
-          case _ => throw new ManifestLog.IncompleteManifestException(p.toString)
-        }
-      case Some(h) if ManifestLog.HeaderMarker.startsWith(h) =>
-        // a strict prefix of the header marker (sub-16-byte partial
-        // write on the O_EXCL arm): a torn NEW-format header, not a
-        // legacy entry — legacy entries are paths, never `#`-prefixed
-        throw new ManifestLog.IncompleteManifestException(p.toString)
-      case _ => lines.lastOption match {
-        case Some(f) if f.startsWith("#commit ") =>
-          if (f == ManifestLog.footer(lines.init)) lines.init
-          else throw new ManifestLog.IncompleteManifestException(p.toString)
-        case _ => lines // legacy pre-footer manifest: complete by construction
-      }
+    if (lines.size >= 2) {
+      val entries = lines.slice(1, lines.size - 1)
+      if (lines.head == ManifestLog.header(entries) && lines.last == ManifestLog.footer(entries))
+        return entries
     }
+    throw new ManifestLog.IncompleteManifestException(p.toString)
   }
 
   /** Recursive parquet listing ([[StoreFiles.walkParquet]]). */
@@ -1183,16 +1162,19 @@ object ManifestLog {
   /** Format header (FIRST line): its presence declares "a matching
     * footer must follow", which is what makes tail truncation — the
     * failure mode that destroys the footer first — detectable. */
-  private[storage] val HeaderMarker = "#graft-manifest "
   private[storage] def header(entries: Seq[String]): String =
-    s"$HeaderMarker${entries.size}"
+    s"#graft-manifest ${entries.size}"
   /** Commit footer (last line) — survives only when the tail is
     * intact, so header+footer together bracket the entry list. */
   private[storage] def footer(entries: Seq[String]): String = s"#commit ${entries.size}"
+  /** A manifest's bytes: header, entries, footer, one per line. */
+  private[storage] def encode(entries: Seq[String]): Array[Byte] =
+    (header(entries) +: entries :+ footer(entries)).mkString("", "\n", "\n").getBytes("UTF-8")
 
-  /** A version file without a valid `#commit` footer. */
+  /** A version file that is not a complete header, entries, footer
+    * manifest. */
   final class IncompleteManifestException(path: String)
-    extends java.io.IOException(s"manifest $path has no valid commit footer")
+    extends java.io.IOException(s"manifest $path is not a complete header, entries, footer manifest")
 
   /** The local filesystem for driver-side staging writes. Without
     * Hadoop's native library, the stock local filesystem forks a `chmod`

@@ -347,8 +347,10 @@ class CatalogServiceSpec extends AnyFunSuite {
 
   test("state survives restart via catalog.json (tokens included)") {
     // a catalog.json as the retired per-gateway JSON catalog wrote it:
-    // bob/secret, one token (stored as its SHA-256), container and session
+    // bob/secret, one token (stored as its SHA-256), container and
+    // session — plus one row holding a raw `token` instead of its digest
     val t = "legacy-bearer-token-for-bob"
+    val raw = "raw-bearer-token-for-bob"
     def sha(x: String) = java.security.MessageDigest.getInstance("SHA-256")
       .digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString
     val root = Files.createTempDirectory("catalog")
@@ -358,6 +360,8 @@ class CatalogServiceSpec extends AnyFunSuite {
          |  {"user_id":"admin","password_hash":"${sha("admin")}","created_at":"2026-01-01T00:00:00Z"},
          |  {"user_id":"bob","password_hash":"${sha("secret")}","created_at":"2026-01-01T00:00:01Z"}],
          |"tokens":[{"token_hash":"${sha(t)}","user_id":"bob",
+         |  "created_at":"2026-01-01T00:00:02Z","expires_at":"2999-01-01T00:00:00Z"},
+         |  {"token":"$raw","user_id":"bob",
          |  "created_at":"2026-01-01T00:00:02Z","expires_at":"2999-01-01T00:00:00Z"}],
          |"containers":[{"container_id":"box","user_id":"bob","created_at":"2026-01-01T00:00:03Z","seq":1}],
          |"sessions":[{"session_id":"box_run","container_id":"box","user_id":"bob",
@@ -368,6 +372,7 @@ class CatalogServiceSpec extends AnyFunSuite {
     val c2 = new CatalogService(sharedStore(dir, ckptEvery = 16)) // fresh instance, same dir
     assert(c2.verifyPassword("bob", "secret"))
     assert(c2.verifyToken(t) === Some("bob"))
+    assert(c2.verifyToken(raw) === None, "a raw-token row must not authenticate")
     assert(c2.verifyContainerAccess("bob", "box"))
     assert(c2.verifySessionAccess("bob", "box_run"))
     assert(!c2.createContainer("bob", "box")) // still a duplicate after reload

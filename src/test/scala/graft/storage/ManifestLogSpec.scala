@@ -458,49 +458,36 @@ class ManifestLogSpec extends SparkSuite {
     assert(msgs(a.read("c", "s")) == ("seed" +: (1 to 8).map(i => s"app-$i")).sorted)
   }
 
-  test("legacy (pre-footer) manifests read as complete and supersede cleanly — no migration") {
-    val root = tempDir("mlog")
-    val log = new ManifestLog(spark, root)
-    log.append(batch(("2024-01-01T10:00:00Z", "INFO", "old-data")), "c", "s")
-    // rewrite v1 in the PRE-FOOTER format (entries only) — what a root
-    // written by the previous release contains
-    val v1 = new java.io.File(f"$root/manifest/container=c/session=s/v${1L}%020d")
-    val entries = new String(java.nio.file.Files.readAllBytes(v1.toPath), "UTF-8")
-      .split("\n").filter(l => l.nonEmpty && !l.startsWith("#commit") &&
-                               !l.startsWith("#graft-manifest"))
-    java.nio.file.Files.write(v1.toPath, (entries.mkString("\n") + "\n").getBytes("UTF-8"))
-    // legacy manifest is the committed state, not a crashed claim
-    assert(msgs(log.read("c", "s")) == Seq("old-data"))
-    assert(log.resolve("c", "s")._1 == 1L)
-    // and the next commit builds on it instead of deleting it
-    log.append(batch(("2024-01-01T10:01:00Z", "INFO", "new-data")), "c", "s")
-    assert(msgs(log.read("c", "s")) == Seq("new-data", "old-data"))
-    assert(log.resolve("c", "s")._1 == 2L)
-  }
-
   test("a CORRUPT manifest degrades reads to the last intact state and fails commits loudly — never deleted") {
     val root = tempDir("mlog")
     val log = new ManifestLog(spark, root)
     log.append(batch(("2024-01-01T10:00:00Z", "INFO", "intact")), "c", "s")
     log.append(batch(("2024-01-01T10:01:00Z", "INFO", "damaged")), "c", "s")
     val v2 = new java.io.File(f"$root/manifest/container=c/session=s/v${2L}%020d")
-    // footer/count mismatch = external damage (this store only ever
-    // publishes fully-formed manifests atomically)
     val lines = new String(java.nio.file.Files.readAllBytes(v2.toPath), "UTF-8")
       .split("\n").filter(_.nonEmpty)
-    java.nio.file.Files.write(v2.toPath,
-      (lines.init.mkString("\n") + "\n#commit 99\n").getBytes("UTF-8"))
-    // readers skip the damaged version — last intact state serves
-    assert(msgs(log.read("c", "s")) == Seq("intact"))
-    // a commit against the blocked frontier surfaces the corruption as
-    // an operator-actionable error once the file is old enough to rule
-    // out visibility lag — and must NOT delete the file
-    assert(v2.setLastModified(System.currentTimeMillis() - 10 * 60 * 1000))
-    val e = intercept[java.io.IOException] {
-      log.append(batch(("2024-01-01T10:02:00Z", "INFO", "blocked")), "c", "s")
+    val entries = lines.filterNot(_.startsWith("#"))
+    // this store only ever publishes header + entries + footer
+    // atomically, so every other shape is external damage: a
+    // footer/count mismatch, and files missing the header
+    Seq(
+      "count mismatch" -> (lines.init.mkString("\n") + "\n#commit 99\n"),
+      "no header, no footer" -> (entries.mkString("\n") + "\n"),
+      "footer without header" -> (entries.mkString("\n") + s"\n#commit ${entries.length}\n")
+    ).foreach { case (shape, text) =>
+      java.nio.file.Files.write(v2.toPath, text.getBytes("UTF-8"))
+      // readers skip the damaged version — last intact state serves
+      assert(msgs(log.read("c", "s")) == Seq("intact"), s"$shape: read")
+      // a commit against the blocked frontier surfaces the corruption as
+      // an operator-actionable error once the file is old enough to rule
+      // out visibility lag — and must NOT delete the file
+      assert(v2.setLastModified(System.currentTimeMillis() - 10 * 60 * 1000))
+      val e = intercept[java.io.IOException] {
+        log.append(batch(("2024-01-01T10:02:00Z", "INFO", "blocked")), "c", "s")
+      }
+      assert(e.getMessage.contains("corrupt"), s"$shape: unexpected error: ${e.getMessage}")
+      assert(v2.isFile, s"$shape: commit path must never delete a manifest file")
     }
-    assert(e.getMessage.contains("corrupt"), s"unexpected error: ${e.getMessage}")
-    assert(v2.isFile, "commit path must never delete a manifest file")
   }
 
   test("expire sweeps corrupt manifests BELOW the frontier and aged staging dirs; frontier corruption is kept for diagnosis") {
@@ -535,8 +522,7 @@ class ManifestLogSpec extends SparkSuite {
     log.append(batch(("2024-01-01T10:01:00Z", "INFO", "cut")), "c", "s")
     val v2 = new java.io.File(f"$root/manifest/container=c/session=s/v${2L}%020d")
     // truncate the TAIL — the stated at-rest threat: the footer is the
-    // first casualty. Under the footer-only format this file would have
-    // parsed as a complete LEGACY manifest with entries silently missing.
+    // first casualty.
     val lines = new String(java.nio.file.Files.readAllBytes(v2.toPath), "UTF-8")
       .split("\n").filter(_.nonEmpty)
     assert(lines.head.startsWith("#graft-manifest "), "new files must carry the header")
@@ -545,8 +531,8 @@ class ManifestLogSpec extends SparkSuite {
       (lines.init.mkString("\n") + "\n").getBytes("UTF-8")) // footer cut off
     val skipsBefore = log.corruptManifestSkips
     // reads degrade to the last intact state — and the degradation is
-    // OBSERVABLE via the health counter (round-8 advice: a read-mostly
-    // session must not serve stale data with no signal)
+    // OBSERVABLE via the health counter (a read-mostly session must not
+    // serve stale data with no signal)
     assert(msgs(log.read("c", "s")) == Seq("keep"))
     assert(log.corruptManifestSkips > skipsBefore,
       "resolve skipped a corrupt manifest without counting it")
@@ -558,11 +544,11 @@ class ManifestLogSpec extends SparkSuite {
 
   test("a ZERO-BYTE or torn-header manifest is IN-FLIGHT, never legacy-complete (O_EXCL claim window)") {
     // On link-less mounts Cas.tryClaim's O_EXCL fallback creates the
-    // FINAL name empty before writing content. Parsing that as a
-    // complete legacy file would resolve the frontier as (v, Nil):
+    // FINAL name empty before writing content. Serving that as a
+    // committed empty manifest would resolve the frontier as (v, Nil):
     // reads silently serve zero rows, and a concurrent commit applies
     // update(Nil) and claims v+1 with only its own entry — permanently
-    // dropping every prior entry (round-9 advice, high).
+    // dropping every prior entry.
     val root = tempDir("mlog")
     val log = new ManifestLog(spark, root)
     log.append(batch(("2024-01-01T10:00:00Z", "INFO", "keep")), "c", "s")
@@ -573,8 +559,7 @@ class ManifestLogSpec extends SparkSuite {
       "empty frontier file must not be served as a committed empty manifest")
     assert(log.resolve("c", "s")._2.nonEmpty, "resolve returned (v, Nil) for an in-flight claim")
     assert(log.corruptManifestSkips > skipsBefore, "in-flight skip must be observable")
-    // a torn FIRST line (sub-16-byte partial write) is a header prefix,
-    // not a legacy entry — legacy entries are paths, never #-prefixed
+    // a torn FIRST line (sub-16-byte partial write of the header)
     java.nio.file.Files.write(v2.toPath, "#graft-man".getBytes("UTF-8"))
     assert(msgs(log.read("c", "s")) == Seq("keep"))
     // a committer facing an AGED empty frontier surfaces loudly instead
@@ -586,22 +571,6 @@ class ManifestLogSpec extends SparkSuite {
     }
     assert(e.getMessage.contains("corrupt"), s"unexpected error: ${e.getMessage}")
     assert(msgs(log.read("c", "s")) == Seq("keep"), "prior entries must survive")
-  }
-
-  test("round-8 (footer-only) manifests still read as complete — no migration") {
-    val root = tempDir("mlog")
-    val log = new ManifestLog(spark, root)
-    log.append(batch(("2024-01-01T10:00:00Z", "INFO", "r8-data")), "c", "s")
-    val v1 = new java.io.File(f"$root/manifest/container=c/session=s/v${1L}%020d")
-    val entries = new String(java.nio.file.Files.readAllBytes(v1.toPath), "UTF-8")
-      .split("\n").filter(l => l.nonEmpty && !l.startsWith("#commit") &&
-                               !l.startsWith("#graft-manifest"))
-    // rewrite v1 in the round-8 format: entries + footer, no header
-    java.nio.file.Files.write(v1.toPath,
-      (entries.mkString("\n") + s"\n#commit ${entries.length}\n").getBytes("UTF-8"))
-    assert(msgs(log.read("c", "s")) == Seq("r8-data"))
-    log.append(batch(("2024-01-01T10:01:00Z", "INFO", "next")), "c", "s")
-    assert(msgs(log.read("c", "s")) == Seq("next", "r8-data"))
   }
 
   test("snapshot reads (time travel): a pinned version replays its exact row set across appends and compaction") {
@@ -722,16 +691,13 @@ class ManifestLogSpec extends SparkSuite {
     // a's resolve probes v2 off its stale hint — no listing needed
     assert(msgs(a.read("c", "s")) == Seq("mine", "theirs"))
     assert(a.resolve("c", "s")._1 == 2L)
-    // push the frontier far past the probe cap (64) with legacy-format
+    // push the frontier far past the probe cap (64) with planted
     // versions, all referencing v1's hot file
     val mdir = new java.io.File(s"$root/manifest/container=c/session=s")
     val hotEntry = new String(java.nio.file.Files.readAllBytes(
       new java.io.File(mdir, f"v${1L}%020d").toPath), "UTF-8")
       .split("\n").find(_.startsWith("hot/")).get
-    (3L to 90L).foreach { v =>
-      java.nio.file.Files.write(new java.io.File(mdir, f"v$v%020d").toPath,
-        s"$hotEntry\n".getBytes("UTF-8"))
-    }
+    b.plantVersions("c", "s", 3L, 90L, Seq(hotEntry))
     assert(a.resolve("c", "s")._1 == 90L, "cap-exceeded probe must fall back to listing")
     assert(msgs(a.read("c", "s")) == Seq("mine"))
     // and commits build on the listed frontier
