@@ -117,9 +117,9 @@ object ServiceScaleCheck {
   /** Catalog-chain cost at 1 / 10² / 10⁴ mutations under the DELTA
     * store (checkpointEvery=16 — the production wiring in
     * LogServer.catalogOn): per scale, the median COMMIT latency
-    * (serialize ONE delta record + O(1) ABA
-    * probe + CAS claim; the prune listing amortizes at checkpoint
-    * cadence), the median STEADY READ (warm instance: frontier-hint
+    * (serialize ONE delta record + the chain's claim, whose predecessor
+    * guard is two existence checks; the prune listing amortizes at
+    * checkpoint cadence), the median STEADY READ (warm instance: frontier-hint
     * probe, no state reload), a FRESH-GATEWAY first read (listing +
     * one checkpoint parse + ≤15 delta applies — what a new process
     * pays once), the newest DELTA record size and the newest
@@ -133,8 +133,9 @@ object ServiceScaleCheck {
     val dir = java.nio.file.Paths.get(Scratch.localDir, s"catbench-${System.nanoTime()}")
     val hp = new org.apache.hadoop.fs.Path(dir.toString)
     val fs = hp.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    def store() = new graft.catalog.CasStateStore(fs, hp, checkpointEvery = 16)
-    val svc = new graft.catalog.CatalogService(store())
+    def catalog() = new graft.catalog.CatalogService(
+      graft.storage.StateRecord.chain(fs, hp), checkpointEvery = 16)
+    val svc = catalog()
     def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
     var done = 0L
     Seq(1L, 100L, 10000L).map { target =>
@@ -153,18 +154,13 @@ object ServiceScaleCheck {
       })
       val freshMs = median((1 to 5).map { _ =>
         val t0 = System.nanoTime()
-        new graft.catalog.CatalogService(store()).verifyPassword("admin", "admin")
+        catalog().verifyPassword("admin", "admin")
         (System.nanoTime() - t0) / 1e6
       }.toSeq)
-      val byKind = fs.listStatus(hp).filter(st => st.isFile &&
-          st.getPath.getName.matches("v\\d{20}\\.json"))
-        .groupBy { st =>
-          val v = st.getPath.getName.stripPrefix("v").stripSuffix(".json").toLong
-          v % 16 == 0
-        }
-      def newest(ckpt: Boolean): Long = byKind.getOrElse(ckpt, Array.empty)
-        .sortBy(-_.getPath.getName.stripPrefix("v").stripSuffix(".json").toLong)
-        .headOption.map(_.getLen).getOrElse(0L)
+      val chain = graft.storage.StateRecord.chain(fs, hp)
+      val byKind = chain.files().groupBy(st => chain.versionOf(st) % 16 == 0)
+      def newest(ckpt: Boolean): Long =
+        byKind.getOrElse(ckpt, Seq.empty).lastOption.map(_.getLen).getOrElse(0L)
       (target, commitMs, readMs, freshMs, newest(false), newest(true))
     }
   }
@@ -467,10 +463,10 @@ object ServiceScaleCheck {
     sb ++= "| chain length | resolve (listing) | resolve (cold start) | resolve (steady) |\n|---|---|---|---|\n"
     chain.foreach { case (n, l, c, w) =>
       sb ++= f"| $n | $l%.3f ms | $c%.3f ms | $w%.3f ms |\n" }
-    sb ++= "\nCatalog (shared CAS state store, DELTA chain with checkpoint every\n"
+    sb ++= "\nCatalog (shared version chain, DELTA records with checkpoint every\n"
     sb ++= "16th version — the production wiring) at growing mutation counts.\n"
-    sb ++= "commit = one mutation (serialize ONE delta record + O(1) ABA probe +\n"
-    sb ++= "CAS claim; prune's directory listing amortizes at checkpoint\n"
+    sb ++= "commit = one mutation (serialize ONE delta record + CAS claim with\n"
+    sb ++= "its two-check predecessor guard; prune's listing amortizes at checkpoint\n"
     sb ++= "cadence). Live state grows with the mutation count here, so a flat\n"
     sb ++= "commit column and a flat delta column ARE the O(1)-per-mutation\n"
     sb ++= "claim (the reference's SQLite economics); the checkpoint column is\n"

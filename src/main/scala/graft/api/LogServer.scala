@@ -605,9 +605,9 @@ object LogServer {
     (sp, serverRoot) => {
       val dir = new org.apache.hadoop.fs.Path(s"$dataRoot/catalog-cas")
       val fs = dir.getFileSystem(sp.sparkContext.hadoopConfiguration)
-      val store = new graft.catalog.CasStateStore(fs, dir, checkpointEvery = 16)
-      CatalogService.importLegacy(store, Paths.get(serverRoot, "catalog", "catalog.json"))
-      new CatalogService(store)
+      val chain = graft.storage.StateRecord.chain(fs, dir)
+      CatalogService.importLegacy(chain, Paths.get(serverRoot, "catalog", "catalog.json"))
+      new CatalogService(chain, checkpointEvery = 16)
     }
 
   /** The default control plane: the catalog on the server's own data

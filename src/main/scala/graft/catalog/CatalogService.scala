@@ -8,6 +8,7 @@ import java.util.Base64
 import scala.collection.mutable
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import graft.storage.{StateRecord, VersionChain}
 
 /** Control-plane catalog: users, tokens, containers, sessions — the Spark
   * engine's counterpart of the reference's SQLite auth DB (auth.py:25-84).
@@ -27,20 +28,30 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
   * at 100 TB of *log data* the catalog is still tiny (thousands of rows)
   * and lives in memory.
   *
-  * The committed state is a [[CasStateStore]] version chain, and every
-  * mutation is a compare-and-swap transaction against it — the SAME
-  * commit discipline the data plane's [[graft.storage.ManifestLog]]
-  * uses. Every instance on one store directory therefore sees one
-  * catalog: a token minted on gateway A authorizes on gateway B,
+  * The committed state is a [[graft.storage.VersionChain]] of
+  * [[graft.storage.StateRecord]]s, and every mutation is a
+  * compare-and-swap transaction against it — the SAME chain the data
+  * plane's [[graft.storage.ManifestLog]] commits through. Every instance
+  * on one store directory therefore sees one catalog: a token minted on
+  * gateway A authorizes on gateway B,
   * duplicate container creation across gateways conflicts exactly once,
-  * revocation is visible everywhere. Mutations commit DELTA records (a
-  * full snapshot only at the store's checkpoint versions), so a commit
-  * pays O(the mutation), not O(live state) — the reference's SQLite
-  * O(1)-per-mutation economics. Reads resolve the latest committed chain
+  * revocation is visible everywhere. Mutations commit DELTA records
+  * (`#graft-delta`; a full `#graft-state` snapshot only at every
+  * `checkpointEvery`-th version), so a commit pays O(the mutation), not
+  * O(live state) — the reference's SQLite O(1)-per-mutation economics —
+  * and a fresh gateway rebuilds from one checkpoint plus at most
+  * `checkpointEvery − 1` deltas. Reads resolve the latest committed chain
   * (a probe pair on a clean frontier) and re-apply only the deltas they
   * are behind, never a snapshot re-parse in steady state; a mutation
   * re-applies against the current state on every CAS retry, exactly like
   * a manifest commit.
+  *
+  * Each checkpoint commit prunes versions at least `keepVersions` below
+  * it whose mtime is older than `pruneGraceMs`: the chain walk of any
+  * frontier starts at or above that checkpoint, and the grace lets a
+  * reader that resolved an older version still read it (one that loses
+  * the race re-resolves). The catalog is current-state-only, like the
+  * reference's SQLite tables: nothing here time-travels.
   */
 object CatalogService {
   final case class User(userId: String, passwordHash: String, createdAt: Instant)
@@ -56,22 +67,28 @@ object CatalogService {
     * per-gateway JSON catalog. Without it, a root written in that mode
     * restarts with only `admin`, and any user could re-create an existing
     * container id and read that container's logs. Runs only on an empty
-    * chain: the file's bytes become v1 verbatim — its row format is the
-    * snapshot format, which a delta record shares, so v1 reads back
-    * whichever kind the store's cadence makes it. A caller that loses v1
-    * to a concurrent committer warns and does not retry: the chain it
-    * lost to is the catalog now. */
-  private[graft] def importLegacy(store: CasStateStore, legacyFile: Path): Unit =
-    if (Files.exists(legacyFile) && store.resolveChain().valid == 0) {
-      val payload = Files.readString(legacyFile)
-      if (!store.tryCommit(1L, payload, isDelta = !store.isCheckpoint(1L)))
+    * chain: the file's bytes become a v1 delta verbatim — its row format
+    * is the snapshot format, which a delta record shares, and a delta at
+    * the bottom of the chain applies to the empty state under any
+    * cadence. A caller that loses v1 to a concurrent committer warns and
+    * does not retry: the chain it lost to is the catalog now. */
+  private[graft] def importLegacy(chain: VersionChain[StateRecord], legacyFile: Path): Unit =
+    if (Files.exists(legacyFile) && chain.resolve().valid == 0) {
+      val record = StateRecord(isDelta = true, Files.readString(legacyFile))
+      if (!chain.claim(0L, record.bytes, ownerOnly = true))
         System.err.println(s"[catalog] $legacyFile not imported: another gateway " +
           "committed the catalog's first version first; that chain is the catalog")
     }
 }
 
-final class CatalogService(store: CasStateStore, clock: Clock = Clock.systemUTC()) {
+final class CatalogService(chain: VersionChain[StateRecord], clock: Clock = Clock.systemUTC(),
+                           keepVersions: Int = 32, pruneGraceMs: Long = 60000L,
+                           checkpointEvery: Int = 1) {
   import CatalogService._
+
+  require(keepVersions >= 1, "keepVersions must retain at least the frontier")
+  require(checkpointEvery >= 1 && checkpointEvery <= keepVersions,
+    "checkpointEvery must be in [1, keepVersions]")
 
   private val users = mutable.LinkedHashMap[String, User]()
   private val tokens = mutable.LinkedHashMap[String, Token]()
@@ -124,35 +141,31 @@ final class CatalogService(store: CasStateStore, clock: Clock = Clock.systemUTC(
   /** Run a state mutation `f` (returning (result, Some(delta) iff the
     * maps changed)) as a CAS transaction: sync to the latest committed
     * state, apply `f`, claim version+1 with the DELTA record (or the full
-    * snapshot at a checkpoint version — the store decides which version
-    * is a checkpoint, [[CasStateStore.isCheckpoint]]), so the commit
-    * payload is O(mutation), not O(live state). A lost claim discards the
-    * local application (the next iteration force-reloads committed
-    * state) and RE-APPLIES `f` against the winner's state, so concurrent
-    * gateways serialize without a lock and no mutation is ever silently
-    * dropped. A frontier blocked by an in-flight/incomplete record
-    * (O_EXCL-fallback mounts, external damage) is retried within a grace
-    * window, then surfaced loudly.
+    * snapshot at a checkpoint version), so the commit payload is
+    * O(mutation), not O(live state). A lost claim discards the local
+    * application (the next iteration force-reloads committed state) and
+    * RE-APPLIES `f` against the winner's state, so concurrent gateways
+    * serialize without a lock and no mutation is ever silently dropped.
+    * A frontier blocked by an in-flight/incomplete record (O_EXCL-fallback
+    * mounts, external damage) is retried within a grace window, then
+    * surfaced loudly.
     *
     * LOCKING: the instance monitor is held per CAS ITERATION (one
-    * resolve + apply + `f` + tryCommit — bounded IO: a listing and a
-    * file write), never across the backoff sleeps. A blocked commit —
-    * a torn frontier record from a crashed remote writer, or sustained
-    * cross-gateway contention — would otherwise stall every read-only
-    * call on this gateway for up to 65 s, and verifyToken /
-    * verifyContainerAccess sit on the auth path of every request.
-    * Before the monitor is released for a backoff, `loadedVersion` is
-    * poisoned so reads in the unlocked window force-reload committed
-    * state instead of serving this iteration's uncommitted application
-    * of `f`. */
+    * resolve + apply + `f` + claim — bounded IO), never across the
+    * backoff sleeps. A blocked commit — a torn frontier record from a
+    * crashed remote writer, or sustained cross-gateway contention —
+    * would otherwise stall every read-only call on this gateway for up
+    * to 65 s, and verifyToken / verifyContainerAccess sit on the auth
+    * path of every request. Before the monitor is released for a
+    * backoff, `loadedVersion` is poisoned so reads in the unlocked
+    * window force-reload committed state instead of serving this
+    * iteration's uncommitted application of `f`. */
   private def transact[A](f: => (A, Option[Delta])): A = {
     val deadline = System.currentTimeMillis() + 65000L
     var dirty = false
     while (true) {
       val result: Option[A] = synchronized {
-        val resolvedAt = System.currentTimeMillis()
-        val r = store.resolveChain()
-        syncTo(r, force = dirty)
+        val r = sync(force = dirty)
         dirty = false
         val (a, deltaOpt) = f
         // a call that changed nothing needs no commit — it must NOT
@@ -163,27 +176,31 @@ final class CatalogService(store: CasStateStore, clock: Clock = Clock.systemUTC(
           // never claim past an unreadable frontier with state from
           // below it — that would supersede the concurrent commit we
           // could not read (the lost-update hazard)
+          val next = r.valid + 1
+          val ckpt = checkpointEvery == 1 || next % checkpointEvery == 0
           val committed = r.slot == r.valid && {
-            // a tryCommit that THROWS (IO fault, not a CAS loss) must
-            // not leave the applied-but-uncommitted mutation in the
-            // maps with loadedVersion still at the frontier — this
-            // gateway would serve phantom state until some later
-            // commit moved the version. Poison the loaded version so
-            // the next access force-reloads committed state, then
-            // propagate.
-            // resolvedAt selects the O(1) ABA guard: the resolve ran
-            // microseconds ago on this code path, far inside the
-            // quarter-grace freshness window CasStateStore.tryCommit
-            // implements (a GC pause between the two falls back to
-            // the listing guard by itself)
-            val next = r.valid + 1
-            val ckpt = store.isCheckpoint(next)
-            val payload = if (ckpt) stateJson else deltaOpt.get.json
-            try store.tryCommit(next, payload, resolvedAt, isDelta = !ckpt)
+            // a claim that THROWS (IO fault, not a CAS loss) must not
+            // leave the applied-but-uncommitted mutation in the maps
+            // with loadedVersion still at the frontier — this gateway
+            // would serve phantom state until some later commit moved
+            // the version. Poison the loaded version so the next access
+            // force-reloads committed state, then propagate.
+            val record = if (ckpt) StateRecord(isDelta = false, stateJson)
+                         else StateRecord(isDelta = true, deltaOpt.get.json)
+            try chain.claim(r.valid, record.bytes, ownerOnly = true)
             catch { case t: Throwable => loadedVersion = -1L; throw t }
           }
-          if (committed) { loadedVersion = r.valid + 1; Some(a) }
-          else {
+          if (committed) {
+            loadedVersion = next
+            // prune amortizes at the checkpoint cadence: its listing is
+            // the one O(accumulated files) term on the commit path
+            if (ckpt) {
+              val horizon = System.currentTimeMillis() - pruneGraceMs
+              chain.prune((v, mtime) => v <= next - keepVersions && mtime < horizon)
+              chain.sweepTemps(horizon)
+            }
+            Some(a)
+          } else {
             // lost/deferred the claim: roll back by force-reloading
             // next iteration, and poison loadedVersion NOW — the
             // monitor is about to be released for the backoff, and a
@@ -211,34 +228,48 @@ final class CatalogService(store: CasStateStore, clock: Clock = Clock.systemUTC(
     throw new IllegalStateException("unreachable")
   }
 
-  /** Read barrier: reflect the latest committed state. One dir listing
-    * per call (a probe pair when the frontier hint holds); records are
-    * re-parsed only on a version change (or a forced rollback). */
-  private def syncRead(): Unit = syncTo(store.resolveChain(), force = false)
+  /** Read barrier: reflect the latest committed state. */
+  private def syncRead(): Unit = sync(force = false)
 
-  /** Bring the maps to `r.valid`. Three cost tiers, cheapest first:
-    * unchanged version → no-op; the maps hold a version INSIDE `r`'s
-    * chain → apply only the deltas above it (O(versions behind) JSON,
-    * never a snapshot re-parse — the steady-state read path when other
-    * gateways are committing); else → full rebuild from checkpoint +
-    * tail (a fresh gateway, a rollback, or a chain that moved past a
-    * checkpoint). */
-  private def syncTo(r: CasStateStore.Resolved, force: Boolean): Unit = {
-    val baseVersion = r.valid - r.deltas.size
-    if (!force && r.valid == loadedVersion) ()
-    else if (!force && loadedVersion >= baseVersion && loadedVersion < r.valid) {
-      r.deltas.foreach { case (v, p) =>
-        if (v > loadedVersion) loadFrom(mapper.readTree(p))
+  /** Bring the maps to the committed frontier and return it. Unchanged
+    * version → no-op (a probe pair). Otherwise walk down from the
+    * frontier: reaching the version the maps already hold applies only
+    * the deltas above it (the steady-state path when other gateways
+    * commit); reaching a checkpoint, or the bottom of a young chain,
+    * rebuilds from it plus the deltas above (a fresh gateway, a
+    * rollback, or a chain that moved past a checkpoint). A record pruned
+    * under the walk means a newer frontier exists: re-resolve. */
+  private def sync(force: Boolean): VersionChain.Frontier[StateRecord] =
+    VersionChain.retryPruned {
+      val r = chain.resolve()
+      if (force || r.valid != loadedVersion) {
+        var v = r.valid
+        var rec = r.record
+        var tail = List.empty[String]
+        var base: Option[String] = None
+        var incremental = false
+        while (v > 0 && base.isEmpty && !incremental) rec match {
+          case Some(StateRecord(false, p)) => base = Some(p)
+          case Some(StateRecord(true, p)) =>
+            tail = p :: tail
+            v -= 1
+            if (!force && v == loadedVersion) incremental = true
+            else if (v > 0) rec = chain.read(v)
+          case None => throw new java.io.IOException(
+            s"catalog state chain broken: record v$v below the committed " +
+              s"frontier v${r.valid} is incomplete — external damage; restore or " +
+              "remove the file and its dependents to recover")
+        }
+        if (!incremental) {
+          users.clear(); tokens.clear(); containers.clear(); sessions.clear()
+          seqOf.clear(); seq = 0L
+          base.foreach(p => loadFrom(mapper.readTree(p)))
+        }
+        tail.foreach(p => loadFrom(mapper.readTree(p)))
+        loadedVersion = r.valid
       }
-      loadedVersion = r.valid
-    } else {
-      users.clear(); tokens.clear(); containers.clear(); sessions.clear()
-      seqOf.clear(); seq = 0L
-      r.base.foreach(p => loadFrom(mapper.readTree(p)))
-      r.deltas.foreach { case (_, p) => loadFrom(mapper.readTree(p)) }
-      loadedVersion = r.valid
+      r
     }
-  }
 
   // ---- users / tokens (auth.py:103-167) ----
 

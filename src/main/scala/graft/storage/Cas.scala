@@ -4,11 +4,10 @@ import java.util.UUID
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** THE atomic create-if-absent primitive behind every cross-process
-  * commit in the engine: [[ManifestLog]]'s version CAS and the shared
-  * catalog's state records ([[graft.catalog.CasStateStore]]) both
-  * claim their slots through this one definition, so the data plane
-  * and the control plane can never diverge on what "atomically
-  * claimed" means.
+  * commit in the engine: every [[VersionChain]] (manifests, the shared
+  * catalog, maintenance leases) claims its slots through this one
+  * definition, so the data plane and the control plane can never
+  * diverge on what "atomically claimed" means.
   *
   * Both arms publish a FULLY-FORMED file or nothing:
   *  - Local filesystems: write a fully-written temp file, publish with

@@ -10,9 +10,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * table's compaction, a manifest root's GC sweep); everyone else
   * skips that work until the holder releases or its lease expires.
   *
-  * Built on the SAME versioned CAS record as the shared catalog
-  * ([[graft.catalog.CasStateStore]] over [[Cas]]'s create-if-absent
-  * claim): the lease state is a single JSON record
+  * Built on the SAME [[VersionChain]] of [[StateRecord]]s as the
+  * shared catalog: the lease state is a single JSON record
   * `{holder, expiresAtMs}` whose commit version is the FENCE — a
   * holder that loses the slot race reads the winner's record instead
   * of overwriting it, so two gateways on one shared root can never
@@ -41,7 +40,7 @@ final class MaintenanceLease(fs: FileSystem, dir: Path,
 
   require(ttlMs > 0, "lease TTL must be positive")
 
-  private val store = new graft.catalog.CasStateStore(fs, dir)
+  private val chain = StateRecord.chain(fs, dir)
   private val mapper = new ObjectMapper()
 
   /** Local belief: the expiry instant of the lease THIS instance
@@ -73,6 +72,19 @@ final class MaintenanceLease(fs: FileSystem, dir: Path,
       else None
     } catch { case _: Exception => None }
 
+  /** Claims `after + 1` with a snapshot record; on success, prunes
+    * versions 32 or more below it whose mtime is a minute old. */
+  private def commit(after: Long, expiresAtMs: Long): Boolean = {
+    val ok = chain.claim(after, StateRecord(isDelta = false, payload(expiresAtMs)).bytes,
+      ownerOnly = true)
+    if (ok) {
+      val horizon = now() - 60000L
+      chain.prune((v, mtime) => v <= after + 1 - 32 && mtime < horizon)
+      chain.sweepTemps(horizon)
+    }
+    ok
+  }
+
   /** First time this instance observed the current unreadable frontier
     * slot, for the torn-record unwedge path: (slot, firstSeenMs). */
   @volatile private var tornSince: (Long, Long) = null
@@ -99,8 +111,9 @@ final class MaintenanceLease(fs: FileSystem, dir: Path,
     var attempts = 0
     while (attempts < 8) {
       attempts += 1
-      val (slot, valid, body) = store.resolve()
-      if (valid < slot) {
+      val r = chain.resolve()
+      val slot = r.slot
+      if (r.valid < slot) {
         // Unreadable record at the frontier: normally a commit in
         // flight — skip this cycle. But a writer that crashed mid-write
         // on an O_EXCL-fallback mount leaves the slot torn FOREVER, and
@@ -120,7 +133,7 @@ final class MaintenanceLease(fs: FileSystem, dir: Path,
         System.err.println(s"[lease] $dir: unreadable record has held slot v$slot " +
           s"for > ${ttlMs}ms; superseding the torn frontier")
         val exp = t0 + ttlMs
-        if (store.tryCommit(slot + 1, payload(exp))) {
+        if (commit(slot, exp)) {
           tornSince = null; heldUntilMs = exp; return true
         }
         return false
@@ -130,12 +143,12 @@ final class MaintenanceLease(fs: FileSystem, dir: Path,
       // a live record is OURS only if this instance remembers holding
       // it (heldUntilMs > 0) — a record with our id but no local belief
       // is a crashed/duplicate-id predecessor and is waited out
-      val liveForeign = body.flatMap(parse).exists { case (h, exp) =>
+      val liveForeign = r.record.flatMap(rec => parse(rec.payload)).exists { case (h, exp) =>
         exp > t && (h != holderId || !held)
       }
       if (liveForeign) { heldUntilMs = 0L; return false }
       val exp = t + ttlMs
-      if (store.tryCommit(slot + 1, payload(exp))) {
+      if (commit(slot, exp)) {
         heldUntilMs = exp
         return true
       }
@@ -157,9 +170,9 @@ final class MaintenanceLease(fs: FileSystem, dir: Path,
   def release(): Unit = monitor.synchronized {
     if (heldUntilMs == 0L) return
     heldUntilMs = 0L
-    val (slot, valid, body) = store.resolve()
-    if (valid == slot && body.flatMap(parse).exists(_._1 == holderId))
-      store.tryCommit(slot + 1, payload(0L)) // best-effort; expiry is the backstop
+    val r = chain.resolve()
+    if (r.valid == r.slot && r.record.flatMap(rec => parse(rec.payload)).exists(_._1 == holderId))
+      commit(r.slot, 0L) // best-effort; expiry is the backstop
   }
 
   /** Run `body` inside the window: acquire → run → release. None when

@@ -22,7 +22,7 @@ import graft.model.LogSchema
   * {{{
   *   <root>/hot/container=<c>/session=<s>/append-<uuid>.parquet
   *   <root>/cold/container=<c>/session=<s>/compact-<uuid>.parquet
-  *   <root>/manifest/container=<c>/session=<s>/v<%020d>   // file list
+  *   <root>/manifest/container=<c>/session=<s>/v<20-digit version>  // file list
   * }}}
   *
   *  - READERS resolve the highest manifest version and scan exactly
@@ -45,16 +45,11 @@ import graft.model.LogSchema
   * Manifest commits are a REAL compare-and-swap on the version number
   * — safe for two ManifestLog instances (different JVMs, different
   * nodes) sharing one root, not just two threads of one process:
-  * a committer claims the `v<N+1>` slot with an atomic,
-  * fully-formed create-if-absent — POSIX `link(2)` of a
-  * fully-written temp file on local filesystems (plain `rename`
-  * silently REPLACES an existing destination), temp-file + rename
-  * elsewhere (HDFS rename REFUSES an
-  * existing destination atomically at the namenode; object stores
-  * without atomic rename need a real commit coordinator, the same
-  * operational contract the public table formats state). Both paths
-  * publish a COMPLETE manifest or nothing, so a claim is never
-  * observable half-written. A loser re-resolves the new current
+  * a committer claims the `v<N+1>` slot of the session's
+  * [[VersionChain]], an atomic create-if-absent that publishes a
+  * COMPLETE manifest or nothing (object stores without atomic rename
+  * need a real commit coordinator, the same operational contract the
+  * public table formats state). A loser re-resolves the new current
   * entry set, RE-APPLIES its update function against it, and retries
   * at the next version — concurrent commits serialize without a lock
   * and none is ever silently overwritten or deleted (a reclaim-by-
@@ -131,8 +126,6 @@ final class ManifestLog(spark: SparkSession, root: String,
   private def manifestDir(container: String, session: String): Path =
     new Path(s"$root/manifest/container=$container/session=$session")
 
-  private val versionRe = "v\\d{20}".r
-
   /** Root-relative entry for a data file path. */
   private def rel(p: Path): String = {
     val r = new Path(root).toUri.getPath
@@ -142,72 +135,29 @@ final class ManifestLog(spark: SparkSession, root: String,
   }
   private def abs(entry: String): String = s"$root/$entry"
 
-  /** Retained manifest files, ascending by version. */
-  private def listManifests(dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .filter(st => st.isFile && versionRe.matches(st.getPath.getName))
-      .sortBy(_.getPath.getName)
+  private val chains = new ConcurrentHashMap[(String, String), VersionChain[Seq[String]]]()
+
+  /** The session's manifest chain; it holds the session's frontier hint. */
+  private[storage] def chain(container: String, session: String): VersionChain[Seq[String]] =
+    chains.computeIfAbsent((container, session),
+      _ => new VersionChain(fs, manifestDir(container, session), "", ManifestLog.decode))
 
   /** Latest committed (version, entries); (0, empty) before the first
     * commit. A reader calls this once and scans exactly the result —
     * snapshot isolation by immutability. CORRUPT manifests (footer/
     * count mismatch — external damage, never this code's own output)
     * are skipped so reads degrade to the newest intact state while
-    * [[commit]] surfaces the corruption loudly.
-    *
-    * COST (measured): the listing path is O(chain length) —
-    * 1.7 ms at 1 version, 178 ms at 10⁴ on tmpfs, and on an object
-    * store every 10³ versions is another paged LIST round-trip. Under
-    * sustained commit load (a commit per flush) the chain grows until
-    * [[expire]] sweeps it, so every read and every commit would pay
-    * that. The fix is an in-process VERSION HINT: once a session's
-    * frontier is known, the next resolve probes `v(hint+1)` — absent
-    * means the frontier is unmoved (one existence check + one manifest
-    * read, chain-length-independent), present means walk forward the
-    * few versions a concurrent committer added. The probe is safe
-    * against concurrent [[expire]] sweeps: a sweep deletes ascending
-    * and a version is only deletable if its predecessor is, so "v
-    * readable and v+1 absent" can only mean v IS the frontier; any
-    * raced deletion surfaces as FileNotFound and falls back to the
-    * full listing (which re-seeds the hint). */
+    * [[commit]] surfaces the corruption loudly. */
   private[storage] def resolve(container: String, session: String): (Long, Seq[String]) = {
     val key = (container, session)
-    val dir = manifestDir(container, session)
-    val hint = versionHints.get(key)
-    if (hint != null && hint.longValue > 0) {
-      val probed = resolveByProbe(dir, hint.longValue)
-      if (probed != null) { versionHints.put(key, probed._1); return probed }
-    } else if (hintFileTried.add(key)) {
-      // cold start: no in-process hint yet — seed the probe from the
-      // persisted hint file before paying the full listing. AT MOST
-      // ONCE per (session, instance): empty/expired sessions resolve
-      // to (0, Nil) and clear their in-process hint, and without this
-      // guard every subsequent resolve would re-pay the fs.open (plus
-      // a doomed probe when a stale hint file outlives its chain) —
-      // a permanent per-read tax on sessions the file cannot help
-      val fh = readHintFile(dir)
-      if (fh > 0) {
-        val probed = resolveByProbe(dir, fh)
-        if (probed != null) { versionHints.put(key, probed._1); return probed }
-      }
-    }
-    val r = listManifests(dir).reverseIterator.flatMap { st =>
-      try Some((st.getPath.getName.stripPrefix("v").toLong, readEntries(st.getPath)))
-      catch {
-        case _: ManifestLog.IncompleteManifestException =>
-          noteCorruptSkip(st.getPath); None
-        case _: java.io.FileNotFoundException => None // expired under us
-      }
-    }.nextOption().getOrElse((0L, Nil))
-    if (r._1 > 0) versionHints.put(key, r._1)
-    else versionHints.remove(key) // fully expired session: drop the stale hint
-    r
+    val c = chain(container, session)
+    // cold start: seed the probe from the hint file at most once per
+    // session and instance, so a session the file cannot help (empty,
+    // expired, stale file) does not pay the read on every resolve
+    val f = c.resolve(if (hintFileTried.add(key)) readHintFile(manifestDir(container, session)) else 0L)
+    if (f.slot > f.valid) noteCorruptSkip(c.pathOf(f.slot))
+    (f.valid, f.record.getOrElse(Nil))
   }
-
-  /** Frontier hint per session: a version number that existed at some
-    * point (from a listing or this instance's own commit). */
-  private val versionHints = new ConcurrentHashMap[(String, String), java.lang.Long]()
 
   /** Sessions whose hint FILE this instance has already consulted —
     * the cold-start read happens once per session per process. */
@@ -216,14 +166,14 @@ final class ManifestLog(spark: SparkSession, root: String,
 
   // ---- persistent frontier hint (the `_last_checkpoint` recipe) ----
   //
-  // The in-process hint makes STEADY-STATE resolve O(1), but a fresh
-  // gateway's first resolve per session still lists the whole manifest
-  // dir — O(chain), a paged LIST on object stores. Every
+  // The chain's in-process hint makes STEADY-STATE resolve O(1), but a
+  // fresh gateway's first resolve per session still lists the whole
+  // manifest dir — O(chain), a paged LIST on object stores. Every
   // `hintFileEvery`-th commit writes the version number to a `hint`
   // file (best-effort, temp+rename, last-wins), so a cold instance
   // seeds the forward probe from it: a healthy chain's frontier is at
   // most `hintFileEvery - 1` ahead of the hint, which must stay
-  // STRICTLY under the probe budget (the probe returns null AT the
+  // STRICTLY under the probe budget (the probe gives up AT the
   // budget) — enforced below, since a larger cadence would silently
   // defeat the feature. Safety is the probe's own: a stale, torn,
   // regressed, or expired-past hint (including a crashed writer
@@ -233,8 +183,8 @@ final class ManifestLog(spark: SparkSession, root: String,
   // data layout, so listings, expire's sweeps and readers all ignore
   // it; its `.tmp-` staging orphans ride the existing aged-tmp
   // collection.
-  require(hintFileEvery >= 1 && hintFileEvery <= ManifestLog.ProbeBudget,
-    s"hintFileEvery must be in [1, ${ManifestLog.ProbeBudget}] (the resolve probe budget)")
+  require(hintFileEvery >= 1 && hintFileEvery <= VersionChain.ProbeBudget,
+    s"hintFileEvery must be in [1, ${VersionChain.ProbeBudget}] (the resolve probe budget)")
 
   private def hintFilePath(dir: Path): Path = new Path(dir, "hint")
 
@@ -264,16 +214,14 @@ final class ManifestLog(spark: SparkSession, root: String,
 
   /** Bench/test seam: plant versions `from..to` of a session, each
     * holding `entries`, through the commit path's own encoding and
-    * claim primitive — a long chain without paying a commit per
-    * version, in the one format the store reads. Fails if a slot is
-    * already taken. */
+    * claim — a long chain without paying a commit per version, in the
+    * one format the store reads. Fails if a slot is already taken. */
   private[graft] def plantVersions(container: String, session: String,
                                    from: Long, to: Long, entries: Seq[String]): Unit = {
-    val dir = manifestDir(container, session)
-    fs.mkdirs(dir)
+    val c = chain(container, session)
     val payload = ManifestLog.encode(entries)
     (from to to).foreach { v =>
-      require(tryClaim(vPath(dir, v), payload), s"plantVersions: slot v$v is taken")
+      require(c.claim(v - 1, payload), s"plantVersions: slot v$v is taken")
     }
   }
 
@@ -284,24 +232,6 @@ final class ManifestLog(spark: SparkSession, root: String,
       val v = s.toLong
       if (v > 0) v else 0L
     } catch { case _: Exception => 0L } // absent/torn/garbage: no hint
-
-  private def vPath(dir: Path, v: Long): Path = new Path(dir, f"v$v%020d")
-
-  /** O(delta) frontier walk from `hint`; null = fall back to the full
-    * listing (hint expired under us, frontier corrupt, or the chain
-    * moved further than probing is worth). */
-  private def resolveByProbe(dir: Path, hint: Long): (Long, Seq[String]) = {
-    var v = hint
-    var probes = 0
-    while (probes < ManifestLog.ProbeBudget && fs.exists(vPath(dir, v + 1))) { v += 1; probes += 1 }
-    if (probes >= ManifestLog.ProbeBudget) return null // far behind: one listing beats N probes
-    try (v, readEntries(vPath(dir, v)))
-    catch {
-      case _: java.io.FileNotFoundException => null // expired under us
-      // corrupt frontier: the listing path owns skip-and-count semantics
-      case _: ManifestLog.IncompleteManifestException => null
-    }
-  }
 
   // Read-side degradation must be OBSERVABLE: resolve
   // skipping a corrupt frontier silently serves an older snapshot —
@@ -335,140 +265,51 @@ final class ManifestLog(spark: SparkSession, root: String,
   private val MaxCommitRetries = 100
 
   /** Commit version N+1 = update(entries of N), as a compare-and-swap
-    * on the version number: claim `v<N+1>` with atomic
-    * create-if-absent; on collision re-resolve, RE-APPLY `update` to
-    * the new current entries, and retry at the next version. Correct
-    * across processes/nodes sharing one root — the in-process lock
-    * only stops same-instance committers from contending the CAS. */
+    * on the version number: claim `v<N+1>` through the chain; on a
+    * refused claim re-resolve, RE-APPLY `update` to the new current
+    * entries, and retry at the next version. Correct across
+    * processes/nodes sharing one root — the in-process lock only stops
+    * same-instance committers from contending the CAS. A file at the
+    * slot that does not parse (external damage, or an O_EXCL claim
+    * still being written) is retried while fresh and then surfaced as a
+    * loud error: it is NEVER deleted here, because a delete-and-reclaim
+    * races a competing committer completing the very same slot and
+    * would destroy a real commit. */
   private def commit(container: String, session: String)
                     (update: Seq[String] => Seq[String]): Seq[String] =
     manifestLocks.computeIfAbsent((container, session), _ => new Object).synchronized {
-      val dir = manifestDir(container, session)
-      fs.mkdirs(dir)
+      val c = chain(container, session)
       var attempt = 0
       while (true) {
         val (v, cur) = resolve(container, session)
         val next = update(cur)
         if (next eq cur) return cur // update declined — no new version
-        val dst = vPath(dir, v + 1)
-        // ABA guard: a committer that stalls (GC/VM pause, partition)
-        // past the expire horizon between resolve and claim can find
-        // its target slot EMPTY because expire vacated it below the
-        // live frontier — claiming it would "succeed" invisibly (every
-        // reader resolves the higher frontier) and silently drop acked
-        // rows. Expire's deletions are a PREFIX of the valid chain
-        // (mtime monotonicity, ascending sweep), so one O(1) probe
-        // NARROWS the hole to the probe→claim window: if the
-        // predecessor we resolved still exists, our slot was not
-        // vacated as of the probe; if it is gone, the resolve is
-        // stale — re-resolve instead of claiming. (v=0 has no
-        // predecessor and nothing below v1 to vacate.) The residual —
-        // a pause between probe and claim that outlasts the expire
-        // grace — is the same pause>>grace exposure the operational
-        // horizon contract covers; the post-publish re-probe below
-        // turns that silent drop into a loud error.
-        if (!predecessorSurvives(dir, v)) {
-          versionHints.remove((container, session)) // arbitrarily stale
-        } else if (tryPublish(dst, next)) {
-          // Re-probe AFTER the claim: the claim cannot be retracted,
-          // but within the expire contract a just-superseded
-          // predecessor is never deletable yet (its successor — our
-          // file — has a fresh mtime, and sweeps delete v only when
-          // v's successor predates the horizon), so absence here
-          // proves the resolve was stale and our file sits BELOW the
-          // live frontier, invisible to every reader. Fail the commit
-          // loudly instead of acking rows that were silently dropped.
-          if (!predecessorSurvives(dir, v)) {
-            versionHints.remove((container, session))
-            throw new java.io.IOException(
-              s"manifest commit for $container/$session claimed slot v${v + 1} " +
-              "whose predecessor was expire-vacated (a stall between resolve and " +
-              "claim outlasted the expire horizon): the published file is below " +
-              "the live frontier and invisible to readers — the commit is NOT " +
-              "acked; retry it, and widen the expire horizon past worst-case " +
-              "commit stalls")
-          }
-          versionHints.put((container, session), v + 1)
-          if ((v + 1) % hintFileEvery == 0) writeHintFile(dir, v + 1)
+        if (c.claim(v, ManifestLog.encode(next))) {
+          if ((v + 1) % hintFileEvery == 0) writeHintFile(manifestDir(container, session), v + 1)
           return next
         }
-        // lost the CAS to another instance (or a fresh in-flight claim
-        // holds the slot): back off briefly, then re-resolve + re-apply
+        // refused: another instance took the slot, the predecessor was
+        // swept, or an unreadable file holds the slot
         attempt += 1
-        if (attempt >= MaxCommitRetries) {
-          // Diagnose before blaming contention: a CORRUPT frontier file
-          // younger than the stale grace also makes tryPublish return
-          // false, and without this check it would surface as "lost the
-          // CAS 100 times" — pointing the operator at contention when
-          // the real problem is a damaged file blocking the slot.
-          val frontierCorrupt =
-            fs.exists(dst) && (try { readEntries(dst); false } catch {
-              case _: ManifestLog.IncompleteManifestException => true
-              case _: java.io.FileNotFoundException => false
-            })
+        val dst = c.pathOf(v + 1)
+        val corruptAgeMs =
+          try {
+            val age = System.currentTimeMillis() - fs.getFileStatus(dst).getModificationTime
+            if (c.read(v + 1).isEmpty) Some(age) else None
+          } catch { case _: java.io.FileNotFoundException => None }
+        if (corruptAgeMs.exists(age => age > StaleClaimMs || attempt >= MaxCommitRetries))
           throw new java.io.IOException(
-            if (frontierCorrupt)
-              s"manifest $dst is corrupt (not a header, entries, footer manifest); commits for " +
-              "this session are blocked — inspect and remove the file to restore " +
-              "service (this store never writes partial manifests)"
-            else
-              s"manifest commit for $container/$session lost the version CAS $attempt times")
-        }
+            s"manifest $dst is corrupt (not a header, entries, footer manifest); commits for " +
+            "this session are blocked — inspect and remove the file to restore service " +
+            "(this store never writes partial manifests, so this indicates external damage " +
+            "or a filesystem without atomic rename)")
+        if (attempt >= MaxCommitRetries)
+          throw new java.io.IOException(
+            s"manifest commit for $container/$session lost the version CAS $attempt times")
         Thread.sleep(java.util.concurrent.ThreadLocalRandom.current().nextLong(1L, 8L))
       }
       throw new IllegalStateException("unreachable")
     }
-
-  /** The commit loop's ABA-guard predicate: true iff claiming slot
-    * `resolvedV + 1` cannot be a claim of an expire-vacated slot.
-    * Sound because expire's deletions are a prefix of the valid chain:
-    * for `resolvedV + 1` to have existed and been vacated, `resolvedV`
-    * itself must have been deleted first — so the predecessor still
-    * existing proves the slot was never vacated. `resolvedV == 0` has
-    * no predecessor and nothing below v1 to vacate. */
-  private[storage] def predecessorSurvives(dir: Path, resolvedV: Long): Boolean =
-    resolvedV == 0 || fs.exists(vPath(dir, resolvedV))
-
-  /** Atomically claim + write `dst`. False = slot taken (a committed
-    * manifest or a competing claim that just landed). A file at the
-    * slot that does not parse (any shape but header, entries, footer —
-    * external damage, or an O_EXCL claim still being written) is
-    * retried while fresh and then surfaced as a loud error: it is
-    * NEVER deleted here, because a delete-and-reclaim races a
-    * competing committer completing the very same slot and would
-    * destroy a real commit. */
-  private def tryPublish(dst: Path, entries: Seq[String]): Boolean = {
-    val payload = ManifestLog.encode(entries)
-    if (fs.exists(dst)) {
-      val corrupt =
-        try { readEntries(dst); false } catch {
-          case _: ManifestLog.IncompleteManifestException => true
-          case _: java.io.FileNotFoundException => return tryClaim(dst, payload)
-        }
-      if (!corrupt) return false // lost the CAS to a real commit
-      val stale =
-        try System.currentTimeMillis() - fs.getFileStatus(dst).getModificationTime > StaleClaimMs
-        catch { case _: java.io.FileNotFoundException => return tryClaim(dst, payload) }
-      if (!stale) return false // fresh: possibly a visibility lag — caller retries
-      throw new java.io.IOException(
-        s"manifest $dst is corrupt (not a header, entries, footer manifest) and older than " +
-        s"${StaleClaimMs / 1000}s — commits for this session are blocked; " +
-        "inspect and remove the file to restore service (this store never " +
-        "writes partial manifests, so this indicates external damage or a " +
-        "filesystem without atomic rename)")
-    }
-    tryClaim(dst, payload)
-  }
-
-  /** The create-if-absent primitive — shared with the control plane
-    * ([[Cas.tryClaim]]): hard-link claims locally (with an O_EXCL
-    * fallback for link-less mounts, whose non-atomic content the
-    * header+footer format makes read as a FRESH corrupt file — skipped
-    * by readers, retried by committers inside the stale-claim grace),
-    * temp+rename elsewhere, with rename-on-a-free-slot raised as an IO
-    * fault instead of burning CAS retries as phantom contention. */
-  private def tryClaim(dst: Path, payload: Array[Byte]): Boolean =
-    Cas.tryClaim(fs, dst, payload)
 
   /** Append a batch: publish an immutable hot file, then commit it
     * into the manifest (the visibility point). Returns published
@@ -682,13 +523,7 @@ final class ManifestLog(spark: SparkSession, root: String,
     * time-travel listing ([[readAt]] pins one). Corrupt versions are
     * excluded (reads skip them too). */
   def versions(container: String, session: String): Seq[Long] =
-    listManifests(manifestDir(container, session)).flatMap { st =>
-      try { readEntries(st.getPath); Some(st.getPath.getName.stripPrefix("v").toLong) }
-      catch {
-        case _: ManifestLog.IncompleteManifestException => None
-        case _: java.io.FileNotFoundException => None
-      }
-    }
+    chain(container, session).scan().collect { case (v, _, Some(_)) => v }
 
   /** SNAPSHOT READ (time travel): the session's rows exactly as of
     * manifest `version` — the reproducibility hook a training-data
@@ -700,7 +535,7 @@ final class ManifestLog(spark: SparkSession, root: String,
     * corrupt fails loudly — a silent fallback to "nearest version"
     * would defeat the reproducibility contract. */
   def readAt(container: String, session: String, version: Long): DataFrame = {
-    val p = vPath(manifestDir(container, session), version)
+    val c = chain(container, session)
     // Plan cache keyed by the typed (container, session, version)
     // triple: a pinned version is an immutable file set, so the PLAN is
     // reusable by construction; the lifecycle runs re-plan the same
@@ -711,14 +546,15 @@ final class ManifestLog(spark: SparkSession, root: String,
     // The hit path checks only that the manifest file still exists: an
     // expired version fails as loudly as the uncached path, but a
     // manifest damaged after its first read keeps serving the cached
-    // plan instead of failing integrity checks in readEntries. A plan
-    // enters the cache only once readEntries has accepted the manifest.
+    // plan instead of failing its integrity check. A plan enters the
+    // cache only once the manifest has decoded.
     val key = (container, session, version)
     val hit = readAtCache.get(key)
-    if (hit != null && fs.exists(p)) hit
+    if (hit != null && fs.exists(c.pathOf(version))) hit
     else {
       val entries =
-        try readEntries(p)
+        try c.read(version).getOrElse(
+          throw new ManifestLog.IncompleteManifestException(c.pathOf(version).toString))
         catch {
           case _: java.io.FileNotFoundException =>
             throw new java.io.IOException(
@@ -989,29 +825,26 @@ final class ManifestLog(spark: SparkSession, root: String,
 
   /** Snapshot GC. `olderThan` is the reader grace window: any scan (or
     * in-flight append/compaction publish) started before that horizon
-    * has finished. The deletion rule keys on when a file became
-    * UNREFERENCED — its retirement time, the commit time of the first
-    * manifest that superseded its newest referencing manifest — NOT on
-    * the file's own mtime: a hot file written long ago but retired a
-    * second ago must survive the full grace window for readers pinned
-    * to the pre-swap manifest (a creation-time rule deletes exactly
-    * those files).
+    * has finished. A manifest is superseded when the NEXT valid version
+    * committed (its mtime); a data file becomes unreferenced when the
+    * last manifest naming it goes — NOT at the file's own mtime: a hot
+    * file written long ago but retired a second ago must survive the
+    * full grace window for readers pinned to the pre-swap manifest.
     *
-    *  - a data file referenced by some RETAINED manifest M (< latest):
-    *    deletable iff the next retained version after M committed
-    *    before the horizon (that commit is when the file left the
-    *    visible set);
-    *  - a data file referenced by NO manifest (crashed writer, or a
-    *    compaction stalled between cold-publish and swap): deletable
-    *    iff its own mtime is older than the horizon — creation time IS
-    *    the right clock for a file that was never visible. (A
-    *    compaction stalled longer than the grace window loses its
-    *    staged cold files to this rule; [[compact]] re-verifies them
-    *    before the swap and aborts with the hot snapshot intact.)
-    *  - a superseded manifest: deletable iff its NEXT retained version
-    *    committed before the horizon — no reader can still be pinned
-    *    to it, and every file whose retirement it recorded is
-    *    deletable in this same sweep.
+    *  - a superseded manifest goes once it was superseded before the
+    *    horizon; a CORRUPT one below the valid frontier (readers skip
+    *    it) once its own mtime is. The sweep is the chain's prefix
+    *    deletion ([[VersionChain.prune]]): it stops at the first
+    *    manifest it keeps, and the frontier is never deleted (a corrupt
+    *    file above it is kept so commit can surface it loudly);
+    *  - a data file goes once no retained manifest names it: at once if
+    *    a deleted manifest named it, else (a crashed writer, or a
+    *    compaction stalled between cold-publish and swap) once its own
+    *    mtime is older than the horizon — creation time IS the right
+    *    clock for a file that was never visible. (A compaction stalled
+    *    longer than the grace window loses its staged cold files to
+    *    this rule; [[compact]] re-verifies them before the swap and
+    *    aborts with the hot snapshot intact.)
     *
     * The sweep runs under the session's MANIFEST LOCK, so within this
     * process it can never interleave with a publish→commit window (an
@@ -1025,80 +858,23 @@ final class ManifestLog(spark: SparkSession, root: String,
   def expire(container: String, session: String, olderThan: java.time.Instant): Long =
     manifestLocks.computeIfAbsent((container, session), _ => new Object).synchronized {
       val cutoff = olderThan.toEpochMilli
-      val dir = manifestDir(container, session)
-      // all retained manifests, ascending by version, with entry sets;
-      // one vanished mid-read (a concurrent remote sweep) is skipped —
-      // its deletion means its successor already predated some horizon
-      // corrupt manifests are excluded from the retained chain (readers
-      // skip them too); those BELOW the latest valid version are dead
-      // weight and swept below once past the horizon — a corrupt file
-      // AT the frontier is kept so commit() can surface it loudly
-      var corrupt: List[(Long, Long)] = Nil // (version, mtime)
-      val manifests: Seq[(Long, Long, Set[String])] =
-        listManifests(dir).flatMap { st =>
-          try Some((st.getPath.getName.stripPrefix("v").toLong,
-                    st.getModificationTime, readEntries(st.getPath).toSet))
-          catch {
-            case _: java.io.FileNotFoundException => None
-            case _: ManifestLog.IncompleteManifestException =>
-              corrupt ::= (st.getPath.getName.stripPrefix("v").toLong,
-                           st.getModificationTime)
-              None
-          }
-        }
-      var n = 0L
-      // With no manifest at all, every data file is a never-visible
-      // orphan (a writer that crashed before its first commit) — the
-      // mtime clock applies to all of them.
-      val latestEntries = manifests.lastOption.map(_._3).getOrElse(Set.empty[String])
+      val c = chain(container, session)
+      val valid = c.scan().collect { case (v, mtime, Some(e)) => (v, mtime, e.toSet) }
+      val latest = valid.lastOption.map(_._1).getOrElse(0L)
+      val supersededAt = valid.zip(valid.drop(1)).map { case (m, next) => m._1 -> next._2 }.toMap
+      val pruned = c.prune((v, mtime) => v < latest && supersededAt.getOrElse(v, mtime) < cutoff).toSet
+      var n = pruned.size.toLong
+      val (gone, retained) = valid.partition(m => pruned(m._1))
       Seq(hotDir, coldDir).foreach { d =>
         walk(new Path(s"$d/container=$container/session=$session")).foreach { st =>
           val r = rel(st.getPath)
-          if (!latestEntries.contains(r)) {
-            val newestRef = manifests.lastIndexWhere(_._3.contains(r))
-            val deletable =
-              if (newestRef < 0) st.getModificationTime < cutoff // never visible
-              else manifests(newestRef + 1)._2 < cutoff          // retired before horizon
-            if (deletable) { fs.delete(st.getPath, false); n += 1 }
-          }
+          val deletable =
+            !retained.exists(_._3.contains(r)) &&
+              (gone.exists(_._3.contains(r)) || st.getModificationTime < cutoff)
+          if (deletable && fs.delete(st.getPath, false)) n += 1
         }
       }
-      // a superseded manifest goes when its successor predates the horizon.
-      // By mtime monotonicity these deletions are a PREFIX of the valid
-      // chain — no gap ever opens between two surviving VALID versions,
-      // which is what keeps resolveByProbe's "v readable and v+1 absent
-      // ⇒ v is the frontier" argument sound.
-      val deletedValid = scala.collection.mutable.Set[Long]()
-      manifests.sliding(2).foreach {
-        case Seq((v, _, _), (_, succMtime, _)) if succMtime < cutoff =>
-          if (fs.delete(vPath(dir, v), false)) { deletedValid += v; n += 1 }
-        case _ => ()
-      }
-      // temp files of claims that crashed between write and rename are
-      // never referenced by anything; collect them once past the horizon
-      if (fs.exists(dir)) fs.listStatus(dir).foreach { st =>
-        if (st.isFile && st.getPath.getName.startsWith(".tmp-") &&
-            st.getModificationTime < cutoff && fs.delete(st.getPath, false)) n += 1
-      }
-      // corrupt version files strictly below the latest retained valid
-      // version serve no one (readers skip them, commit never revisits
-      // old slots) — sweep them once past the horizon so external
-      // damage doesn't accumulate forever. BUT only below the LOWEST
-      // surviving valid version: deleting corrupt v while valid v-1
-      // survives would open a gap a stale version hint could stop in —
-      // a probe would read v-1, conclude it is the frontier, and a
-      // commit from that state would claim the freed slot and be
-      // silently superseded (a lost update).
-      // Gaps next to surviving CORRUPT files are harmless — a probe can
-      // never conclude at an unreadable version.
-      if (corrupt.nonEmpty) {
-        val minSurvivingValid = manifests.map(_._1)
-          .find(v => !deletedValid.contains(v)).getOrElse(Long.MaxValue)
-        corrupt.foreach { case (v, mtime) =>
-          if (v < minSurvivingValid && mtime < cutoff &&
-              fs.delete(vPath(dir, v), false)) n += 1
-        }
-      }
+      n += c.sweepTemps(cutoff)
       // crashed appends' root-level staging dirs: a long-lived instance
       // never re-runs the constructor sweep, so collect them here —
       // under BOTH the caller's grace AND the constructor's 24 h
@@ -1115,50 +891,12 @@ final class ManifestLog(spark: SparkSession, root: String,
       n
     }
 
-  /** Parse a manifest. The one accepted shape is a
-    * `#graft-manifest <n>` header line, exactly `n` entry lines and a
-    * `#commit <n>` footer line. Everything else throws
-    * [[ManifestLog.IncompleteManifestException]]:
-    *  - zero bytes or a torn header: the O_EXCL fallback of
-    *    [[Cas.tryClaim]] on link-less mounts creates the final name
-    *    EMPTY and then writes content, so a racing reader can see
-    *    either. Serving such a file as (v, Nil) would let a concurrent
-    *    committer CAS v+1 with only its own entry, dropping the chain;
-    *  - a missing or mismatched footer: tail truncation (the at-rest
-    *    threat eats the LAST line first) or other external damage;
-    *  - no header: not a file this store writes.
-    * Callers skip-and-count such a file on read and retry-then-fail on
-    * commit; nothing deletes it. */
-  private def readEntries(p: Path): Seq[String] = {
-    val in = fs.open(p)
-    val txt = try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var k = in.read(buf)
-      while (k >= 0) { out.write(buf, 0, k); k = in.read(buf) }
-      new String(out.toByteArray, "UTF-8")
-    } finally in.close()
-    val lines = txt.split("\n").iterator.filter(_.nonEmpty).toSeq
-    if (lines.size >= 2) {
-      val entries = lines.slice(1, lines.size - 1)
-      if (lines.head == ManifestLog.header(entries) && lines.last == ManifestLog.footer(entries))
-        return entries
-    }
-    throw new ManifestLog.IncompleteManifestException(p.toString)
-  }
-
   /** Recursive parquet listing ([[StoreFiles.walkParquet]]). */
   private def walk(dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
     StoreFiles.walkParquet(fs, dir)
 }
 
 object ManifestLog {
-  /** Forward-probe budget for hint-seeded resolves: past this many
-    * existence checks, one listing beats N probes. The hint-file
-    * cadence must stay ≤ this (class-level require) so a healthy
-    * chain's cold start always probes through. */
-  private[storage] val ProbeBudget = 64
-
   /** Format header (FIRST line): its presence declares "a matching
     * footer must follow", which is what makes tail truncation — the
     * failure mode that destroys the footer first — detectable. */
@@ -1170,6 +908,27 @@ object ManifestLog {
   /** A manifest's bytes: header, entries, footer, one per line. */
   private[storage] def encode(entries: Seq[String]): Array[Byte] =
     (header(entries) +: entries :+ footer(entries)).mkString("", "\n", "\n").getBytes("UTF-8")
+
+  /** Parse a manifest. The one accepted shape is a
+    * `#graft-manifest <n>` header line, exactly `n` entry lines and a
+    * `#commit <n>` footer line. Everything else is None:
+    *  - zero bytes or a torn header: the O_EXCL fallback of the chain's
+    *    claim on link-less mounts creates the final name EMPTY and then
+    *    writes content, so a racing reader can see either. Serving such
+    *    a file as (v, Nil) would let a concurrent committer CAS v+1 with
+    *    only its own entry, dropping the chain;
+    *  - a missing or mismatched footer: tail truncation (the at-rest
+    *    threat eats the LAST line first) or other external damage;
+    *  - no header: not a file this store writes.
+    * Callers skip-and-count such a file on read and retry-then-fail on
+    * commit; nothing deletes it. */
+  private[storage] def decode(bytes: Array[Byte]): Option[Seq[String]] = {
+    val lines = new String(bytes, "UTF-8").split("\n").iterator.filter(_.nonEmpty).toSeq
+    val entries = lines.slice(1, lines.size - 1)
+    if (lines.size >= 2 && lines.head == header(entries) && lines.last == footer(entries))
+      Some(entries)
+    else None
+  }
 
   /** A version file that is not a complete header, entries, footer
     * manifest. */

@@ -3,6 +3,7 @@ package graft.catalog
 import java.nio.file.Files
 import java.time.{Clock, Duration, Instant, ZoneOffset}
 import org.scalatest.funsuite.AnyFunSuite
+import graft.storage.{StateRecord, VersionChain}
 
 /** Auth/tenancy semantics from the reference (auth.py:25-249): SHA-256
   * passwords, default admin, 24 h lazy token expiry, ownership checks,
@@ -16,23 +17,29 @@ class CatalogServiceSpec extends AnyFunSuite {
     def instant() = now
   }
 
-  private def sharedStore(dir: java.nio.file.Path,
-                          keep: Int = 32, graceMs: Long = 60000,
-                          ckptEvery: Int = 1): CasStateStore = {
+  private def chainAt(dir: java.nio.file.Path): VersionChain[StateRecord] = {
     val p = new org.apache.hadoop.fs.Path(dir.toString)
-    new CasStateStore(p.getFileSystem(new org.apache.hadoop.conf.Configuration()), p,
-      keepVersions = keep, pruneGraceMs = graceMs, checkpointEvery = ckptEvery)
+    StateRecord.chain(p.getFileSystem(new org.apache.hadoop.conf.Configuration()), p)
   }
 
+  private def record(payload: String): Array[Byte] = StateRecord(isDelta = false, payload).bytes
+
+  /** Sets every version file's mtime to ten minutes ago, except `keep`. */
+  private def ageVersions(dir: java.nio.file.Path, keep: Set[Long] = Set.empty): Unit =
+    dir.toFile.listFiles((_, n) => n.matches("v\\d{20}\\.json")).foreach { f =>
+      if (!keep(f.getName.stripPrefix("v").stripSuffix(".json").toLong))
+        assert(f.setLastModified(System.currentTimeMillis() - 10 * 60 * 1000))
+    }
+
   test("default admin/admin exists; wrong password and unknown user fail") {
-    val c = new CatalogService(sharedStore(Files.createTempDirectory("cat-cas")))
+    val c = new CatalogService(chainAt(Files.createTempDirectory("cat-cas")))
     assert(c.verifyPassword("admin", "admin"))
     assert(!c.verifyPassword("admin", "wrong"))
     assert(!c.verifyPassword("ghost", "admin"))
   }
 
   test("token round-trip: create, verify, revoke") {
-    val c = new CatalogService(sharedStore(Files.createTempDirectory("cat-cas")))
+    val c = new CatalogService(chainAt(Files.createTempDirectory("cat-cas")))
     val t = c.createToken("admin")
     assert(c.verifyToken(t) === Some("admin"))
     c.revokeToken(t)
@@ -41,7 +48,7 @@ class CatalogServiceSpec extends AnyFunSuite {
 
   test("tokens expire after 24h and are deleted lazily on verify") {
     val clock = new FakeClock(Instant.parse("2026-01-01T00:00:00Z"))
-    val c = new CatalogService(sharedStore(Files.createTempDirectory("cat-cas")), clock)
+    val c = new CatalogService(chainAt(Files.createTempDirectory("cat-cas")), clock)
     val t = c.createToken("admin", expiresInHours = 24)
     clock.now = clock.now.plus(Duration.ofHours(23))
     assert(c.verifyToken(t) === Some("admin"))
@@ -52,7 +59,7 @@ class CatalogServiceSpec extends AnyFunSuite {
   }
 
   test("container create: duplicate rejected even across users") {
-    val c = new CatalogService(sharedStore(Files.createTempDirectory("cat-cas")))
+    val c = new CatalogService(chainAt(Files.createTempDirectory("cat-cas")))
     c.createUser("alice", "pw")
     assert(c.createContainer("admin", "app"))
     assert(!c.createContainer("admin", "app"))
@@ -60,7 +67,7 @@ class CatalogServiceSpec extends AnyFunSuite {
   }
 
   test("session create requires container ownership; duplicate rejected") {
-    val c = new CatalogService(sharedStore(Files.createTempDirectory("cat-cas")))
+    val c = new CatalogService(chainAt(Files.createTempDirectory("cat-cas")))
     c.createUser("alice", "pw")
     assert(c.createContainer("admin", "app"))
     assert(!c.createSession("alice", "app", "app_run")) // not the owner
@@ -70,7 +77,7 @@ class CatalogServiceSpec extends AnyFunSuite {
   }
 
   test("access checks compare owners (auth.py:205-223)") {
-    val c = new CatalogService(sharedStore(Files.createTempDirectory("cat-cas")))
+    val c = new CatalogService(chainAt(Files.createTempDirectory("cat-cas")))
     c.createUser("alice", "pw")
     c.createContainer("admin", "app")
     c.createSession("admin", "app", "app_run")
@@ -83,7 +90,7 @@ class CatalogServiceSpec extends AnyFunSuite {
 
   test("listings are owner-scoped and newest-first") {
     val clock = new FakeClock(Instant.parse("2026-01-01T00:00:00Z"))
-    val c = new CatalogService(sharedStore(Files.createTempDirectory("cat-cas")), clock)
+    val c = new CatalogService(chainAt(Files.createTempDirectory("cat-cas")), clock)
     c.createContainer("admin", "app1")
     clock.now = clock.now.plusSeconds(60)
     c.createContainer("admin", "app2")
@@ -99,7 +106,7 @@ class CatalogServiceSpec extends AnyFunSuite {
 
   test("cleanupExpiredTokens removes only the expired ones") {
     val clock = new FakeClock(Instant.parse("2026-01-01T00:00:00Z"))
-    val c = new CatalogService(sharedStore(Files.createTempDirectory("cat-cas")), clock)
+    val c = new CatalogService(chainAt(Files.createTempDirectory("cat-cas")), clock)
     val shortLived = c.createToken("admin", expiresInHours = 1)
     val longLived = c.createToken("admin", expiresInHours = 48)
     clock.now = clock.now.plus(Duration.ofHours(2))
@@ -109,7 +116,7 @@ class CatalogServiceSpec extends AnyFunSuite {
   }
 
   test("createUser rejects duplicates; tokens are url-safe and unique") {
-    val c = new CatalogService(sharedStore(Files.createTempDirectory("cat-cas")))
+    val c = new CatalogService(chainAt(Files.createTempDirectory("cat-cas")))
     assert(c.createUser("dana", "pw"))
     assert(!c.createUser("dana", "other"))
     val tokens = (1 to 20).map(_ => c.createToken("dana"))
@@ -121,8 +128,8 @@ class CatalogServiceSpec extends AnyFunSuite {
 
   test("shared catalog spans instances: tokens, ownership, conflicts and revocation are cluster-wide") {
     val dir = Files.createTempDirectory("cat-cas")
-    val a = new CatalogService(sharedStore(dir))
-    val b = new CatalogService(sharedStore(dir))
+    val a = new CatalogService(chainAt(dir))
+    val b = new CatalogService(chainAt(dir))
     // a token minted on A authorizes on B
     val t = a.createToken("admin")
     assert(b.verifyToken(t) === Some("admin"))
@@ -143,8 +150,8 @@ class CatalogServiceSpec extends AnyFunSuite {
 
   test("shared catalog: concurrent same-id creation from two instances — exactly one winner") {
     val dir = Files.createTempDirectory("cat-cas")
-    val a = new CatalogService(sharedStore(dir))
-    val b = new CatalogService(sharedStore(dir))
+    val a = new CatalogService(chainAt(dir))
+    val b = new CatalogService(chainAt(dir))
     (1 to 10).foreach { i =>
       val wins = new java.util.concurrent.atomic.AtomicInteger(0)
       val threads = Seq(a, b).map(c => new Thread(() => {
@@ -164,8 +171,8 @@ class CatalogServiceSpec extends AnyFunSuite {
     // a commit that loses the version CAS re-applies its mutation at
     // the new frontier and NO accepted mutation is silently dropped
     val dir = Files.createTempDirectory("cat-cas")
-    val a = new CatalogService(sharedStore(dir))
-    val b = new CatalogService(sharedStore(dir))
+    val a = new CatalogService(chainAt(dir))
+    val b = new CatalogService(chainAt(dir))
     val perSide = 8
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = for ((c, side) <- Seq((a, "a"), (b, "b")); i <- 1 to perSide) yield
@@ -189,8 +196,8 @@ class CatalogServiceSpec extends AnyFunSuite {
   test("shared catalog: lazy token expiry propagates across instances") {
     val dir = Files.createTempDirectory("cat-cas")
     val clock = new FakeClock(Instant.parse("2026-01-01T00:00:00Z"))
-    val a = new CatalogService(sharedStore(dir), clock)
-    val b = new CatalogService(sharedStore(dir), clock)
+    val a = new CatalogService(chainAt(dir), clock)
+    val b = new CatalogService(chainAt(dir), clock)
     val t = a.createToken("admin", expiresInHours = 1)
     assert(b.verifyToken(t) === Some("admin"))
     clock.now = clock.now.plus(Duration.ofHours(2))
@@ -200,7 +207,7 @@ class CatalogServiceSpec extends AnyFunSuite {
 
   test("shared catalog: an incomplete frontier record degrades reads to the last committed state") {
     val dir = Files.createTempDirectory("cat-cas")
-    val a = new CatalogService(sharedStore(dir))
+    val a = new CatalogService(chainAt(dir))
     val t = a.createToken("admin")
     // plant a frame-mismatched record ABOVE the committed frontier — a
     // committer crashed mid-record on an O_EXCL-fallback mount, or
@@ -209,7 +216,7 @@ class CatalogServiceSpec extends AnyFunSuite {
       .map(_.getName.stripPrefix("v").stripSuffix(".json").toLong).max
     Files.write(dir.resolve(f"v${slot + 1}%020d.json"),
       "#graft-state 9999\n{\"trunca".getBytes("UTF-8"))
-    val b = new CatalogService(sharedStore(dir))
+    val b = new CatalogService(chainAt(dir))
     assert(b.verifyToken(t) === Some("admin"))
     assert(b.verifyPassword("admin", "admin"))
   }
@@ -217,48 +224,68 @@ class CatalogServiceSpec extends AnyFunSuite {
   test("shared catalog: a pruned version slot cannot be re-claimed below the live frontier (ABA guard)") {
     // a committer stalled past the prune grace between resolve and
     // claim finds its target slot EMPTY (prune vacated it); claiming it
-    // would succeed invisibly below the frontier — the commit must be
-    // reported LOST instead
+    // would succeed invisibly below the frontier — the claim must be
+    // refused instead
     val dir = Files.createTempDirectory("cat-cas")
-    val st = sharedStore(dir, keep = 4, graceMs = 0)
-    (1L to 12L).foreach(v => assert(st.tryCommit(v, s"""{"v":$v}""")))
-    // versions ≤ 8 are pruned; slot 2 is empty but far below frontier 12
-    assert(!st.tryCommit(2L, """{"stale":true}"""),
+    val c = new CatalogService(chainAt(dir), keepVersions = 4, pruneGraceMs = 60000)
+    (2 to 11).foreach(i => assert(c.createUser(s"u$i", "pw"))) // v2..v11
+    ageVersions(dir)
+    assert(c.createUser("u12", "pw")) // v12 prunes every version <= 8
+    assert(!dir.resolve(f"v${2L}%020d.json").toFile.exists)
+    val stale = chainAt(dir)
+    assert(!stale.claim(1L, record("""{"stale":true}""")),
       "claimed a pruned slot below the live frontier — this commit is invisible to every reader")
-    val (_, valid, payload) = st.resolve()
-    assert(valid == 12L && payload.contains("""{"v":12}"""),
-      "the stale claim must not disturb the live frontier")
+    assert(stale.resolve().valid == 12L, "the stale claim must not disturb the live frontier")
+    assert(new CatalogService(chainAt(dir)).verifyPassword("u12", "pw"))
   }
 
-  test("shared catalog: fresh-resolve O(1) ABA guard commits and refuses correctly; stale resolves take the listing guard") {
+  test("shared catalog: the predecessor guard commits at the frontier and refuses a taken or prune-vacated slot") {
     val dir = Files.createTempDirectory("cat-cas")
-    val st = sharedStore(dir, keep = 4, graceMs = 60000)
-    (1L to 5L).foreach(v =>
-      assert(st.tryCommit(v, s"""{"v":$v}""", System.currentTimeMillis())))
-    // fast path: an occupied slot is refused by the single existence probe
-    assert(!st.tryCommit(5L, """{"dup":true}""", System.currentTimeMillis()))
-    // fast path: the real frontier slot commits
-    assert(st.tryCommit(6L, """{"v":6}""", System.currentTimeMillis()))
-    // a resolve older than half the grace must fall back to the listing
-    // guard and still detect a prune-vacated slot (graceMs=0 makes every
-    // resolvedAt stale AND lets prune vacate immediately)
+    val st = chainAt(dir)
+    (1L to 5L).foreach(v => assert(st.claim(v - 1, record(s"""{"v":$v}"""))))
+    // an occupied slot is refused
+    assert(!st.claim(4L, record("""{"dup":true}""")))
+    // the real frontier slot commits
+    assert(st.claim(5L, record("""{"v":6}""")))
+    // a resolve from before a prune refuses its vacated successor slot
     val dir2 = Files.createTempDirectory("cat-cas")
-    val st2 = sharedStore(dir2, keep = 4, graceMs = 0)
-    (1L to 12L).foreach(v => assert(st2.tryCommit(v, s"""{"v":$v}""")))
-    assert(!st2.tryCommit(2L, """{"stale":true}""", System.currentTimeMillis()),
-      "a stale-resolve claim of a vacated slot slipped past the listing guard")
-    val (_, valid, _) = st2.resolve()
-    assert(valid == 12L)
+    val st2 = chainAt(dir2)
+    (1L to 12L).foreach(v => assert(st2.claim(v - 1, record(s"""{"v":$v}"""))))
+    ageVersions(dir2)
+    assert(st2.prune((v, _) => v <= 8).size == 8)
+    assert(!st2.claim(1L, record("""{"stale":true}""")),
+      "a stale-resolve claim of a vacated slot slipped past the predecessor guard")
+    assert(st2.resolve().valid == 12L)
+  }
+
+  test("shared catalog: prune with out-of-order mtimes never opens a gap below a surviving version") {
+    // gateway a commits v1..v5; gateway b (keep = 4, 60 s grace) commits
+    // v6..v12. Every version but v5 looks old, as after a clock step or
+    // on skewed gateways. Pruning v6..v9 around the surviving v5 would
+    // leave a at v5 believing it is the frontier ("v5 there, v6 absent")
+    // and let it commit into the v6 hole, invisible to every reader.
+    val dir = Files.createTempDirectory("cat-cas")
+    val chainA = chainAt(dir)
+    val a = new CatalogService(chainA)
+    (2 to 5).foreach(i => assert(a.createUser(s"a$i", "pw"))) // v1 (admin)..v5
+    val b = new CatalogService(chainAt(dir), keepVersions = 4, pruneGraceMs = 60000)
+    (6 to 12).foreach(i => assert(b.createUser(s"b$i", "pw"))) // v6..v12
+    ageVersions(dir, keep = Set(5L))
+    assert(b.createUser("b13", "pw")) // v13 prunes
+    assert(chainA.resolve().valid == 13L, "gateway a stopped at a surviving version below a gap")
+    assert(a.verifyPassword("b13", "pw"))
+    assert(!chainA.claim(5L, record("""{"stale":true}""")),
+      "a commit at v6 must be refused: v6 is taken")
   }
 
   test("shared catalog: version chain stays bounded under sustained mutation (prune)") {
     val dir = Files.createTempDirectory("cat-cas")
-    val c = new CatalogService(sharedStore(dir, keep = 8, graceMs = 0))
+    val c = new CatalogService(chainAt(dir), keepVersions = 8, pruneGraceMs = 0)
     (1 to 40).foreach(i => c.createContainer("admin", s"box$i"))
     val files = dir.toFile.listFiles((_, n) => n.startsWith("v")).length
     assert(files <= 9, s"$files version files retained (keep=8)")
     // the surviving newest state is complete
-    val fresh = new CatalogService(sharedStore(dir))
+    val fresh = new CatalogService(chainAt(dir))
     assert(fresh.userContainers("admin").size == 40)
   }
 
@@ -266,7 +293,7 @@ class CatalogServiceSpec extends AnyFunSuite {
 
   test("delta chain: commit payload is O(mutation) at any live-state size; fresh gateway reconstructs checkpoint+tail") {
     val dir = Files.createTempDirectory("cat-delta")
-    val a = new CatalogService(sharedStore(dir, ckptEvery = 8))
+    val a = new CatalogService(chainAt(dir), checkpointEvery = 8)
     (1 to 60).foreach(i => assert(a.createUser(f"user$i%03d", "pw")))
     val t = a.createToken("user001")
     assert(a.createContainer("user001", "cbox"))
@@ -284,7 +311,7 @@ class CatalogServiceSpec extends AnyFunSuite {
     assert(maxDelta < 512, s"a delta record weighs $maxDelta B — O(state) leak?")
     assert(maxCkpt > maxDelta * 4, s"checkpoint $maxCkpt B vs delta $maxDelta B")
     // a FRESH gateway reconstructs the full state from checkpoint + tail
-    val b = new CatalogService(sharedStore(dir, ckptEvery = 8))
+    val b = new CatalogService(chainAt(dir), checkpointEvery = 8)
     assert(b.verifyToken(t) === Some("user001"))
     assert(b.verifyPassword("user042", "pw"))
     assert(!b.createContainer("user002", "cbox")) // global id namespace survives
@@ -293,8 +320,8 @@ class CatalogServiceSpec extends AnyFunSuite {
 
   test("delta chain: cross-gateway mutations stay idempotent and ordered; deletes travel as deltas") {
     val dir = Files.createTempDirectory("cat-delta")
-    val a = new CatalogService(sharedStore(dir, ckptEvery = 8))
-    val b = new CatalogService(sharedStore(dir, ckptEvery = 8))
+    val a = new CatalogService(chainAt(dir), checkpointEvery = 8)
+    val b = new CatalogService(chainAt(dir), checkpointEvery = 8)
     val t = a.createToken("admin")
     assert(b.verifyToken(t) === Some("admin")) // B applied A's delta
     a.revokeToken(t)
@@ -311,37 +338,36 @@ class CatalogServiceSpec extends AnyFunSuite {
 
   test("delta chain: prune keeps the reconstruction window; sustained churn stays bounded") {
     val dir = Files.createTempDirectory("cat-delta")
-    val c = new CatalogService(sharedStore(dir, keep = 8, graceMs = 0, ckptEvery = 8))
+    val c = new CatalogService(chainAt(dir), keepVersions = 8, pruneGraceMs = 0, checkpointEvery = 8)
     (1 to 40).foreach(i => c.createContainer("admin", s"box$i"))
     val files = dir.toFile.listFiles((_, n) => n.matches("v\\d{20}\\.json"))
     assert(files.length <= 9, s"${files.length} version files retained (keep=8)")
     // a fresh gateway still reconstructs the complete state
-    val fresh = new CatalogService(sharedStore(dir, ckptEvery = 8))
+    val fresh = new CatalogService(chainAt(dir), checkpointEvery = 8)
     assert(fresh.userContainers("admin").size == 40)
   }
 
   test("delta chain: a torn frontier record degrades reads to the last committed chain") {
     val dir = Files.createTempDirectory("cat-delta")
-    val a = new CatalogService(sharedStore(dir, ckptEvery = 8))
+    val a = new CatalogService(chainAt(dir), checkpointEvery = 8)
     (1 to 10).foreach(i => a.createUser(s"u$i", "pw"))
     val t = a.createToken("u3")
     val slot = dir.toFile.listFiles((_, n) => n.matches("v\\d{20}\\.json"))
       .map(_.getName.stripPrefix("v").stripSuffix(".json").toLong).max
     Files.write(dir.resolve(f"v${slot + 1}%020d.json"),
       "#graft-delta 9999\n{\"trunca".getBytes("UTF-8"))
-    val b = new CatalogService(sharedStore(dir, ckptEvery = 8))
+    val b = new CatalogService(chainAt(dir), checkpointEvery = 8)
     assert(b.verifyToken(t) === Some("u3"))
     assert(b.verifyPassword("u7", "pw"))
   }
 
-  test("delta chain: the record kind at each version is structural — a mismatched commit is refused") {
+  test("delta chain: the record kind at each version is structural") {
     val dir = Files.createTempDirectory("cat-delta")
-    val st = sharedStore(dir, ckptEvery = 4)
-    intercept[IllegalArgumentException] {
-      st.tryCommit(4L, "{}", isDelta = true) // v4 must be a checkpoint
-    }
-    intercept[IllegalArgumentException] {
-      st.tryCommit(3L, "{}", isDelta = false) // v3 must be a delta
+    val c = new CatalogService(chainAt(dir), checkpointEvery = 4)
+    (2 to 9).foreach(i => assert(c.createUser(s"k$i", "pw"))) // v2..v9
+    val chain = chainAt(dir)
+    (1L to 9L).foreach { v =>
+      assert(chain.read(v).get.isDelta == (v % 4 != 0), s"v$v has the wrong record kind")
     }
   }
 
@@ -368,8 +394,8 @@ class CatalogServiceSpec extends AnyFunSuite {
          |  "created_at":"2026-01-01T00:00:04Z","seq":2}]}""".stripMargin)
     val dir = Files.createTempDirectory("cat-cas")
     // v1 of a fresh delta-cadence store is a delta record
-    CatalogService.importLegacy(sharedStore(dir, ckptEvery = 16), legacy)
-    val c2 = new CatalogService(sharedStore(dir, ckptEvery = 16)) // fresh instance, same dir
+    CatalogService.importLegacy(chainAt(dir), legacy)
+    val c2 = new CatalogService(chainAt(dir), checkpointEvery = 16) // fresh instance, same dir
     assert(c2.verifyPassword("bob", "secret"))
     assert(c2.verifyToken(t) === Some("bob"))
     assert(c2.verifyToken(raw) === None, "a raw-token row must not authenticate")

@@ -631,6 +631,27 @@ class ManifestLogSpec extends SparkSuite {
     assert(msgs(log.read("c", "s")) == Seq("a", "b", "c"))
   }
 
+  test("expire with out-of-order mtimes never opens a gap below a surviving manifest") {
+    // instance a commits v1 and holds its hint there; instance b commits
+    // v2..v4. v3's mtime is ten minutes old (a clock step, or a skewed
+    // gateway) while v2 and v4 are fresh. Deleting v2 because v3 looks
+    // old would leave a at v1 believing it is the frontier ("v1 there,
+    // v2 absent"): it would read one row and commit into the v2 hole,
+    // invisible to everyone else.
+    val root = tempDir("mlog")
+    val a = new ManifestLog(spark, root)
+    val b = new ManifestLog(spark, root)
+    a.append(batch(("2024-01-01T10:00:00Z", "INFO", "m1")), "c", "s")
+    (2 to 4).foreach(i => b.append(batch((s"2024-01-01T10:0$i:00Z", "INFO", s"m$i")), "c", "s"))
+    val mdir = s"$root/manifest/container=c/session=s"
+    assert(new java.io.File(f"$mdir/v${2L}%020d").setLastModified(System.currentTimeMillis()))
+    assert(new java.io.File(f"$mdir/v${3L}%020d").setLastModified(System.currentTimeMillis() - 10 * 60 * 1000))
+    b.expire("c", "s", Instant.now().minusSeconds(60))
+    assert(msgs(a.read("c", "s")) == Seq("m1", "m2", "m3", "m4"))
+    a.append(batch(("2024-01-01T10:05:00Z", "INFO", "m5")), "c", "s")
+    assert(msgs(b.read("c", "s")) == Seq("m1", "m2", "m3", "m4", "m5"))
+  }
+
   test("persistent hint file: a fresh instance probes from it; garbage or expired-past hints fall back") {
     val root = tempDir("mlog")
     // cadence 2 so a 4-append test exercises two hint writes (last wins)
@@ -670,13 +691,13 @@ class ManifestLogSpec extends SparkSuite {
     val vs = fs.listStatus(dir).map(_.getPath.getName)
       .filter(_.matches("v\\d{20}")).sorted.map(_.stripPrefix("v").toLong)
     assert(vs.length >= 3)
-    assert(log.predecessorSurvives(dir, vs.init.last), "live chain must pass the guard")
+    assert(log.chain("c", "s").predecessorSurvives(vs.init.last), "live chain must pass the guard")
     // simulate a remote expire: prefix sweep leaves only the frontier
     vs.init.foreach(v => assert(fs.delete(new Path(dir, f"v$v%020d"), false)))
-    assert(!log.predecessorSurvives(dir, vs.init.last),
+    assert(!log.chain("c", "s").predecessorSurvives(vs.init.last),
       "a resolve from before the sweep must refuse its (possibly vacated) successor slot")
-    assert(log.predecessorSurvives(dir, vs.last), "the frontier committer still passes")
-    assert(log.predecessorSurvives(dir, 0L), "a fresh session has nothing below v1 to vacate")
+    assert(log.chain("c", "s").predecessorSurvives(vs.last), "the frontier committer still passes")
+    assert(log.chain("c", "s").predecessorSurvives(0L), "a fresh session has nothing below v1 to vacate")
     // the live path re-resolves and continues past the sweep
     log.append(batch(("2024-01-01T10:09:00Z", "INFO", "post")), "c", "s")
     assert(msgs(log.read("c", "s")).contains("post"))
