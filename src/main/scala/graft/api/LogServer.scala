@@ -66,8 +66,8 @@ final class LogServer(spark: SparkSession, root: String, port: Int = 0,
     * 201 = buffered; size/time-bounded flush; read paths flush first). */
   val ingestBuffer = new graft.ingest.IngestBuffer(ingestFlushBytes, ingestFlushMs)({
     (c, s, rows) =>
-      val bytes = store.append(JsonIngest.toDataFrame(spark, rows), c, s)
-      compactor.noteAppend(c, s, bytes)
+      store.append(JsonIngest.toDataFrame(spark, rows), c, s)
+      compactor.maybeCompact(c, s)
   })
 
   private val mapper = new ObjectMapper()
@@ -92,23 +92,20 @@ final class LogServer(spark: SparkSession, root: String, port: Int = 0,
 
   /** Graceful shutdown: stop accepting, flush buffered ingest (after
     * which every acked row is durable), then drain compactions + final
-    * rotation flush (reference cleanup_handler, main.py:350-365).
-    * Finally release the session's memoized derived relations — a
-    * long-lived process that cycles servers must not accumulate pinned
-    * checkpoint blocks (`Tables.invalidate`). */
+    * rotation flush (reference cleanup_handler, main.py:350-365). The
+    * gateway memoizes no derived relation, so it leaves the session's
+    * `Tables` memo to the code that built it. */
   override def close(): Unit = {
     // stop(1): give in-flight exchange handlers up to a second to
     // finish — stop(0) returns with handlers still running, and a
     // racing postLogs must hit the ingest buffer's closed-rejection,
     // not a post-drain ack
     http.stop(1)
-    // Every cleanup step runs regardless of earlier failures (a
-    // compactor drain error must not skip Tables.invalidate — that is
-    // the pinned-checkpoint leak this method exists to prevent), and
-    // the FIRST failure is the one thrown: an ingest-drain error
-    // (acked rows stranded — the error the caller must see) is never
-    // masked by a later cleanup exception, which rides along as
-    // suppressed instead.
+    // Every cleanup step runs regardless of earlier failures, and the
+    // FIRST failure is the one thrown: an ingest-drain error (acked
+    // rows stranded — the error the caller must see) is never masked
+    // by a later cleanup exception, which rides along as suppressed
+    // instead.
     var primary: Throwable = null
     def step(f: => Unit): Unit =
       try f catch {
@@ -118,7 +115,6 @@ final class LogServer(spark: SparkSession, root: String, port: Int = 0,
     step(ingestBuffer.close()) // throws if acked rows could not be drained
     step(compactor.close())
     step(streamWatchdog.shutdownNow())
-    step { graft.ops.Tables.invalidate(spark); () }
     if (primary != null) throw primary
   }
 

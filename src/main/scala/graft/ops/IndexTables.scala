@@ -1576,11 +1576,11 @@ object IndexTables {
       } }
     }
 
-  /** DRIFT-TRIGGERED rebuild gate (round-10 verdict #3: nothing decided
-    * WHEN to rebuild a generation). The drift signal is SAMPLED RECALL:
+  /** DRIFT-TRIGGERED rebuild gate: decides WHEN to rebuild a
+    * generation. The drift signal is SAMPLED RECALL:
     * the served IVF-PQ index's top-k on `nQueries` sample queries,
     * scored against the exact brute-force truth — one corpus pass per
-    * check, priced in SCALECHECK and run at the maintenance loop's GC
+    * check, priced in SCALECHECK and meant for a coarse operator
     * cadence (hours/days in production), never per query. Recall below
     * `recallFloor` triggers [[rebuildAnnIndexes]] (staged generation
     * swap under the maintenance lease; a contended lease skips this

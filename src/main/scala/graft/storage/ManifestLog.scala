@@ -602,11 +602,19 @@ final class ManifestLog(spark: SparkSession, root: String,
   def tierStats(container: String, session: String): (Long, Long, Long, Long) =
     statsOf(dataEntries(container, session))
 
+  /** Hot-tier bytes of the CURRENT manifest — the rotation trigger's
+    * input: one file status per hot entry, no cold stat, no data scan. */
+  override def hotBytes(container: String, session: String): Long =
+    sizeOf(dataEntries(container, session).filter(_.startsWith("hot/")))
+
+  /** Summed on-disk size of data entries (one file status each). */
+  private def sizeOf(entries: Seq[String]): Long =
+    entries.iterator.map(e => fs.getFileStatus(new Path(abs(e))).getLen).sum
+
   private def statsOf(entries: Seq[String]): (Long, Long, Long, Long) = {
     def stats(prefix: String): (Long, Long) = {
       val sel = entries.filter(_.startsWith(prefix))
-      (sel.size.toLong,
-       sel.map(e => fs.getFileStatus(new Path(abs(e))).getLen).sum)
+      (sel.size.toLong, sizeOf(sel))
     }
     val (cf, cb) = stats("cold/")
     val (hf, hb) = stats("hot/")
@@ -624,93 +632,22 @@ final class ManifestLog(spark: SparkSession, root: String,
   }
 
   /** Compact the manifest's current hot subset into sized, range-
-    * clustered cold files; the manifest swap is the LAST step and the
-    * only moment visibility changes. Retired hot files stay on disk
-    * for in-flight readers until [[expire]]. Returns retired bytes. */
+    * clustered cold files through the staged [[rewrite]]; the manifest
+    * swap is the LAST step and the only moment visibility changes.
+    * Retired hot files stay on disk for in-flight readers until
+    * [[expire]]. Returns retired bytes (0 when the swap declined). */
   def compact(container: String, session: String): Long =
     compactLocks.computeIfAbsent((container, session), _ => new Object).synchronized {
-      val (_, entries) = resolve(container, session)
-      val snapshot = entries.filter(_.startsWith("hot/"))
+      val snapshot = resolve(container, session)._2.filter(_.startsWith("hot/"))
       if (snapshot.isEmpty) return 0L
-      val bytes = snapshot.map(e => fs.getFileStatus(new Path(abs(e))).getLen).sum
-      val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-      val df = spark.read.schema(LogSchema.fileSchema).parquet(snapshot.map(abs): _*)
-      val staging = new Path(s"$root/.staging-${UUID.randomUUID()}")
-      // Range-cluster by timestamp (not hash-repartition): each cold file
-      // covers a tight, mostly non-overlapping time slice, so its parquet
-      // footer min/max actually prunes and time-range reads skip whole
-      // files. Same row multiset either way; this is purely a layout
-      // choice, and at 100 TB layout IS the read path (the reference gets
-      // it for free only because each buffer flush is one contiguous
-      // ingest slice, writer.py:300-335). Message is the range tiebreak:
-      // a snapshot whose rows share one timestamp must still split into
-      // nOut sized files.
-      df.repartitionByRange(nOut, col("timestamp"), col("message"))
-        .sortWithinPartitions(col("timestamp"))
-        .write.mode(SaveMode.Overwrite).parquet(staging.toString)
-      val staged = walk(staging)
-      if (staged.isEmpty)
-        throw new java.io.IOException(
-          s"compact: staging $staging lists no files for a non-empty snapshot")
-      val target = new Path(s"$coldDir/container=$container/session=$session")
-      fs.mkdirs(target)
-      val coldRel = staged.map { st =>
-        val dst = new Path(target, s"compact-${UUID.randomUUID()}.parquet")
-        if (!publishExclusive(st.getPath, dst))
-          throw new java.io.IOException(s"compact: publish ${st.getPath} -> $dst failed")
-        rel(dst)
-      }
-      fs.delete(staging, true)
-      beforeSwap()
-      // THE swap: subtract exactly the compacted snapshot from whatever
-      // is current (mid-compaction appends survive), add the cold files
-      // — and keep every retired tag committed via a tombstone entry,
-      // so a batch replay after its file was rewritten still no-ops.
-      // The cold files were unreferenced until this very commit, so a
-      // compaction paused past the GC grace window can have lost them:
-      // verify INSIDE the manifest lock (atomic against this process's
-      // [[expire]], which sweeps under the same lock; a remote node's
-      // sweep is excluded by the horizon contract) and abort with the
-      // hot snapshot fully intact — re-compaction re-reads it, no loss.
-      val retired = snapshot.toSet
-      val tombstones = snapshot.flatMap(fileTag).map(tagEntry)
-      // Cross-instance guard: compactLocks is in-process only, so a
-      // compaction on ANOTHER instance can race this one through the
-      // commit CAS. If any file of our snapshot is no longer in the
-      // current entry set, a competing swap already retired it — its
-      // cold files carry those rows. Applying our swap anyway would
-      // re-add the same rows via OUR cold files: permanent row
-      // duplication. Decline the commit (the update returns `cur`
-      // unchanged) and discard our never-referenced cold output; any
-      // hot files the competitor did NOT cover remain hot and a later
-      // compaction handles them.
-      var applied = false
-      commit(container, session) { cur =>
-        if (!snapshot.forall(cur.toSet)) { applied = false; cur }
-        else {
-          coldRel.foreach { e =>
-            if (!fs.exists(new Path(abs(e))))
-              throw new java.io.IOException(
-                s"compact: staged cold file $e vanished before the swap " +
-                "(publish stalled past the GC grace window); hot snapshot retained")
-          }
-          applied = true
-          cur.filterNot(retired) ++ coldRel ++ tombstones
-        }
-      }
-      if (!applied) {
-        coldRel.foreach(e => fs.delete(new Path(abs(e)), false))
-        return 0L
-      }
-      bytes
+      val rows = spark.read.schema(LogSchema.fileSchema).parquet(snapshot.map(abs): _*)
+      rewrite(container, session, "compact", snapshot, Some(rows))
     }
 
   /** PHYSICAL ROW-LEVEL PURGE (right-to-be-forgotten for the data
     * plane): rewrite every live file that holds rows matching `pred`
-    * with those rows dropped, through the same staged
-    * rewrite-then-swap as [[compact]] — publish replacement files
-    * nobody references, then commit a manifest that swaps them in as
-    * the LAST step. Tombstone masks and curation corrections fix the
+    * with those rows dropped, through the same staged [[rewrite]] as
+    * [[compact]]. Tombstone masks and curation corrections fix the
     * derived artifacts; THIS is what makes a deletion request against
     * the stored rows themselves honorable end-to-end.
     *
@@ -732,20 +669,14 @@ final class ManifestLog(spark: SparkSession, root: String,
     * public docs). A deletion request is therefore FULFILLED when
     * purge + expire-past-grace have both run; RewriteExcludingSpec
     * proves no version readable after that pair resurrects a purged
-    * row. Crash anywhere before the commit leaves every row visible
-    * and the staged files as expire-collectable orphans (no partial
-    * purge is ever observable); a competing compaction retiring part
-    * of the affected snapshot makes the commit DECLINE (return 0) —
-    * the caller re-runs against the new file set, rows never
-    * duplicate or vanish.
+    * row.
     *
     * Returns rows purged (0 = nothing matched, or the commit declined
     * to a concurrent rewrite — re-run to distinguish). */
   def rewriteExcluding(container: String, session: String,
                        pred: org.apache.spark.sql.Column): Long =
     compactLocks.computeIfAbsent((container, session), _ => new Object).synchronized {
-      val (_, entries) = resolve(container, session)
-      val live = entries.filterNot(_.startsWith("#"))
+      val live = dataEntries(container, session)
       if (live.isEmpty) return 0L
       val hit = pred <=> lit(true) // null-safe: NULL keeps the row
       val affectedPaths = spark.read.schema(LogSchema.fileSchema)
@@ -755,65 +686,11 @@ final class ManifestLog(spark: SparkSession, root: String,
       val snapshot = live.filter(e =>
         affectedPaths.contains(new Path(abs(e)).toUri.getPath))
       if (snapshot.isEmpty) return 0L
-      val bytes = snapshot.map(e => fs.getFileStatus(new Path(abs(e))).getLen).sum
       val aff = spark.read.schema(LogSchema.fileSchema).parquet(snapshot.map(abs): _*)
       val purged = aff.filter(hit).count()
       val survivors = aff.filter(!hit)
-      val nSurv = survivors.count()
-      // replacement files: cold-tier, range-clustered like compact's
-      // output (a purge rewrite IS a compaction of the affected files)
-      val coldRel: Seq[String] =
-        if (nSurv == 0) Seq.empty
-        else {
-          val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-          val staging = new Path(s"$root/.staging-${UUID.randomUUID()}")
-          survivors.repartitionByRange(nOut, col("timestamp"), col("message"))
-            .sortWithinPartitions(col("timestamp"))
-            .write.mode(SaveMode.Overwrite).parquet(staging.toString)
-          val staged = walk(staging)
-          if (staged.isEmpty)
-            throw new java.io.IOException(
-              s"purge: staging $staging lists no files for $nSurv surviving rows")
-          val target = new Path(s"$coldDir/container=$container/session=$session")
-          fs.mkdirs(target)
-          val rels = staged.map { st =>
-            val dst = new Path(target, s"purge-${UUID.randomUUID()}.parquet")
-            if (!publishExclusive(st.getPath, dst))
-              throw new java.io.IOException(s"purge: publish ${st.getPath} -> $dst failed")
-            rel(dst)
-          }
-          fs.delete(staging, true)
-          rels
-        }
-      beforeSwap()
-      // retired tag files keep their tags committed via tombstones, so
-      // a batch replay after its file was purged still no-ops — the
-      // same replay contract as compaction (a purged row must not come
-      // back through a redelivered ingest batch)
-      val retired = snapshot.toSet
-      val tombstones = snapshot.flatMap(fileTag).map(tagEntry)
-      var applied = false
-      commit(container, session) { cur =>
-        // a competing instance's compaction/purge already retired part
-        // of our snapshot: its rewrite carries those rows (or their
-        // absence) — applying ours anyway would re-add survivor rows
-        // its output also carries. Decline; the caller re-runs.
-        if (!snapshot.forall(cur.toSet)) { applied = false; cur }
-        else {
-          coldRel.foreach { e =>
-            if (!fs.exists(new Path(abs(e))))
-              throw new java.io.IOException(
-                s"purge: staged file $e vanished before the swap " +
-                "(publish stalled past the GC grace window); snapshot retained")
-          }
-          applied = true
-          cur.filterNot(retired) ++ coldRel ++ tombstones
-        }
-      }
-      if (!applied) {
-        coldRel.foreach(e => fs.delete(new Path(abs(e)), false))
-        return 0L
-      }
+      if (rewrite(container, session, "purge", snapshot,
+                  Some(survivors).filter(!_.isEmpty)) == 0L) return 0L
       // the purge is the engine's only in-store MUTATOR: memoized
       // derived relations over this root (any session) now hold rows
       // the store no longer does — drop them so the next read
@@ -822,6 +699,87 @@ final class ManifestLog(spark: SparkSession, root: String,
       graft.ops.Tables.invalidateDir(root)
       purged
     }
+
+  /** The staged rewrite-then-swap [[compact]] and [[rewriteExcluding]]
+    * share: write `rows` (None: no row survives) as range-clustered cold
+    * files, publish them under names no manifest references, then
+    * commit a manifest that swaps them in for `snapshot` as the LAST
+    * step. A crash anywhere before that commit leaves `snapshot` fully
+    * referenced (no loss, no duplicate) and the staged files as
+    * [[expire]]-collectable orphans. Returns the bytes `snapshot`
+    * retired, or 0 when a competing rewrite already retired part of it
+    * (the staged files are deleted; the caller re-runs against the new
+    * file set). */
+  private def rewrite(container: String, session: String, what: String,
+                      snapshot: Seq[String], rows: Option[DataFrame]): Long = {
+    val bytes = sizeOf(snapshot)
+    val staged = rows.toSeq.flatMap { df =>
+      val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
+      val staging = new Path(s"$root/.staging-${UUID.randomUUID()}")
+      // Range-cluster by timestamp (not hash-repartition): each cold file
+      // covers a tight, mostly non-overlapping time slice, so its parquet
+      // footer min/max actually prunes and time-range reads skip whole
+      // files. Same row multiset either way; this is purely a layout
+      // choice, and at 100 TB layout IS the read path (the reference gets
+      // it for free only because each buffer flush is one contiguous
+      // ingest slice, writer.py:300-335). Message is the range tiebreak:
+      // a snapshot whose rows share one timestamp must still split into
+      // nOut sized files.
+      df.repartitionByRange(nOut, col("timestamp"), col("message"))
+        .sortWithinPartitions(col("timestamp"))
+        .write.mode(SaveMode.Overwrite).parquet(staging.toString)
+      val files = walk(staging)
+      if (files.isEmpty)
+        throw new java.io.IOException(
+          s"$what: staging $staging lists no files for a non-empty rewrite")
+      val target = new Path(s"$coldDir/container=$container/session=$session")
+      fs.mkdirs(target)
+      val published = files.map { st =>
+        val dst = new Path(target, s"$what-${UUID.randomUUID()}.parquet")
+        if (!publishExclusive(st.getPath, dst))
+          throw new java.io.IOException(s"$what: publish ${st.getPath} -> $dst failed")
+        rel(dst)
+      }
+      fs.delete(staging, true)
+      published
+    }
+    beforeSwap()
+    // THE swap: subtract exactly the rewritten snapshot from whatever is
+    // current (appends that landed meanwhile survive), add the staged
+    // files — and keep every retired tag committed via a tombstone
+    // entry, so a batch replay after its file was rewritten still no-ops
+    // (a purged row must not come back through a redelivered batch).
+    val retired = snapshot.toSet
+    val tombstones = snapshot.flatMap(fileTag).map(tagEntry)
+    var applied = false
+    commit(container, session) { cur =>
+      // Cross-instance guard: compactLocks is in-process only, so a
+      // rewrite on ANOTHER instance can race this one through the
+      // commit CAS. If any file of the snapshot is gone from the
+      // current entry set, a competing swap already retired it and its
+      // output carries those rows (or their absence): swapping ours in
+      // too would duplicate them. Decline (return `cur` unchanged).
+      if (!snapshot.forall(cur.toSet)) { applied = false; cur }
+      else {
+        // The staged files were unreferenced until this very commit, so
+        // a rewrite paused past the GC grace window can have lost them:
+        // verify INSIDE the manifest lock (atomic against this process's
+        // [[expire]], which sweeps under the same lock; a remote node's
+        // sweep is excluded by the horizon contract) and abort with the
+        // snapshot fully intact — a re-run re-reads it, no loss.
+        staged.foreach { e =>
+          if (!fs.exists(new Path(abs(e))))
+            throw new java.io.IOException(
+              s"$what: staged file $e vanished before the swap " +
+              "(publish stalled past the GC grace window); snapshot retained")
+        }
+        applied = true
+        cur.filterNot(retired) ++ staged ++ tombstones
+      }
+    }
+    if (applied) bytes
+    else { staged.foreach(e => fs.delete(new Path(abs(e)), false)); 0L }
+  }
 
   /** Snapshot GC. `olderThan` is the reader grace window: any scan (or
     * in-flight append/compaction publish) started before that horizon

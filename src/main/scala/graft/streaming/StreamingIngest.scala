@@ -101,8 +101,9 @@ final class StreamingIngest(spark: SparkSession, store: ManifestLog,
       val keys = good.select(col("container"), col("session")).distinct()
         .collect().map(r => (r.getString(0), r.getString(1)))
       // Per-key appends are independent (each commits its own session's
-      // manifest, Compactor counters are atomic), so a batch touching many
-      // tenants drains on a bounded pool instead of serializing —
+      // manifest, and the Compactor's rotation check reads only that
+      // manifest), so a batch touching many tenants drains on a bounded
+      // pool instead of serializing —
       // Spark job submission is thread-safe, and a failed append still
       // fails the whole batch (get() below rethrows) so the replayed
       // batch re-runs every key under the same idempotence tag.
@@ -113,11 +114,11 @@ final class StreamingIngest(spark: SparkSession, store: ManifestLog,
           pool.submit(new java.util.concurrent.Callable[Unit] {
             def call(): Unit = {
               drainHook(c, s)
-              val bytes = store.appendIdempotent(
+              store.appendIdempotent(
                 good.filter(col("container") === c && col("session") === s)
                   .select(col("timestamp"), col("level"), col("message")),
                 c, s, s"stream-$batchId")
-              compactor.noteAppend(c, s, bytes)
+              compactor.maybeCompact(c, s)
             }
           })
         }

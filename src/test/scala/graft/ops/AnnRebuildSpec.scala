@@ -252,70 +252,28 @@ class AnnRebuildSpec extends SparkSuite {
     assert(r3.isDefined && r3.get._1 == 2L, s"append did not re-arm the gate: $r3")
   }
 
-  test("maintenance loop runs the drift gate on the GC cadence: a drifted corpus rebuilds exactly once") {
-    assume(hasTestData)
-    val fix = mkDriftFixture(blobSize = 15)
-    val floor = gateRecall(fix) + 0.01
-    val store = new graft.storage.ManifestLog(spark, tempDir("drift-maint"))
-    val compactor = new graft.engine.Compactor(store)
-    try {
-      compactor.startMaintenance(java.time.Duration.ofMillis(100),
-        annDrift = Some(() =>
-          IndexTables.maybeRebuildAnnIndexes(spark, fix, "drift-loop",
-            recallFloor = floor, shortlist = 20)),
-        // opt into a fast check cadence: the production default floors
-        // the gate at ~10 min between corpus passes
-        annDriftEvery = Some(java.time.Duration.ofMillis(100)))
-      val deadline = System.currentTimeMillis() + 120000L
-      // wait until the gate has run at least twice AFTER the rebuild —
-      // the exactly-once claim needs a post-recovery check to have
-      // declined
-      while (System.currentTimeMillis() < deadline &&
-             (compactor.annDriftRebuilds.get < 1L || compactor.annDriftChecks.get < 3L))
-        Thread.sleep(200)
-      assert(compactor.annDriftChecks.get >= 3L, "drift gate never reached a post-rebuild check")
-      assert(compactor.annDriftRebuilds.get == 1L,
-        s"expected exactly one drift rebuild, got ${compactor.annDriftRebuilds.get}")
-      assert(IndexTables.annGeneration(spark, fix) == 1L)
-    } finally compactor.close()
-  }
-
-  test("maintenance loop sweeps superseded ANN generations (round-15); a non-owner instance sweeps 0") {
+  test("gcAnnGenerations under a foreign maintenance lease drops nothing; after release it sweeps the superseded generation") {
     assume(hasTestData)
     val fix = mkDriftFixture(blobSize = 4)
-    assert(IndexTables.rebuildAnnIndexes(spark, fix, "spec-gc-loop").isDefined)
+    assert(IndexTables.rebuildAnnIndexes(spark, fix, "spec-gc-direct").isDefined)
     val gen0Ivf = IndexTables.annIvfName(fix, 0L)
     assert(spark.catalog.tableExists(gen0Ivf), "gen 0 must survive the swap for in-flight readers")
     // phase 1 — a foreign holder owns this data dir's index lease (the
-    // SAME lease rebuilds run under): the loop's sweep attempts must
-    // decline with None, count NOTHING, and drop nothing. This is the
-    // verdict's "non-owner instance sweeps 0".
+    // SAME lease rebuilds run under): the sweep declines with None and
+    // drops nothing
     val foreign = IndexTables.compactionLease(spark, fix, "foreign-gc-holder")
     assert(foreign.tryAcquire(), "foreign holder could not take the lease")
-    val store = new graft.storage.ManifestLog(spark, tempDir("anngc-maint"))
-    val compactor = new graft.engine.Compactor(store)
-    try {
-      compactor.startMaintenance(java.time.Duration.ofMillis(100),
-        annGc = Some(() => IndexTables.gcAnnGenerations(spark, fix, "gc-loop")))
-      // several GC ticks under the foreign lease (no-grace cadence =
-      // every tick)
-      Thread.sleep(1000)
-      assert(compactor.annGcSweeps.get == 0L,
-        s"a non-owner instance ran ${compactor.annGcSweeps.get} sweeps")
-      assert(spark.catalog.tableExists(gen0Ivf), "a contended sweep dropped tables")
-      // phase 2 — hand the lease back: the loop's next tick owns the
-      // window and collects the superseded generation
-      foreign.release()
-      val deadline = System.currentTimeMillis() + 60000L
-      while (System.currentTimeMillis() < deadline && compactor.annGcSweeps.get < 1L)
-        Thread.sleep(100)
-      assert(compactor.annGcSweeps.get >= 1L, "maintenance loop never swept after release")
-      assert(compactor.annGcDropped.get == 2L,
-        s"expected the 2 gen-0 tables dropped, got ${compactor.annGcDropped.get}")
-      assert(!spark.catalog.tableExists(gen0Ivf))
-      assert(spark.catalog.tableExists(IndexTables.annIvfName(fix, 1L)))
-      assert(Similarity.ivfPqTopK(spark, fix, nQueries = 4, k = 3).count() > 0)
-    } finally compactor.close()
+    assert(IndexTables.gcAnnGenerations(spark, fix, "gc-direct").isEmpty,
+      "a non-owner ran the sweep")
+    assert(spark.catalog.tableExists(gen0Ivf), "a contended sweep dropped tables")
+    // phase 2 — hand the lease back: the next sweep owns the window and
+    // collects the superseded generation
+    foreign.release()
+    assert(IndexTables.gcAnnGenerations(spark, fix, "gc-direct") == Some(2),
+      "expected the 2 gen-0 tables dropped after release")
+    assert(!spark.catalog.tableExists(gen0Ivf))
+    assert(spark.catalog.tableExists(IndexTables.annIvfName(fix, 1L)))
+    assert(Similarity.ivfPqTopK(spark, fix, nQueries = 4, k = 3).count() > 0)
   }
 
   test("GC in a fresh JVM never destroys the durable current generation (catalog registration lost, dirs intact)") {

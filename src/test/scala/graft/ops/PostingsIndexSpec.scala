@@ -227,7 +227,7 @@ class PostingsIndexSpec extends SparkSuite {
       s"purged docs served positionally: ${(served & victimSet).take(5)}")
   }
 
-  test("maintenance loop runs postings compaction on the scheduled cadence; a non-owner instance compacts 0") {
+  test("compactPostingsIndex under a foreign maintenance lease changes nothing; after release it collapses the replayed rows") {
     assume(hasTestData)
     val (dir, _) = mkFixture()
     val t = IndexTables.postingsIndexTables(spark, dir)
@@ -240,40 +240,28 @@ class PostingsIndexSpec extends SparkSuite {
     spark.catalog.refreshTable(t.postings)
 
     // phase 1 — a foreign holder owns the dir's maintenance lease (the
-    // SAME lease ANN rebuilds and purges run under): the scheduled
-    // compaction must decline, count nothing, and change nothing
+    // SAME lease ANN rebuilds and purges run under): the compaction
+    // declines with None and changes nothing
     val foreign = IndexTables.compactionLease(spark, dir, "foreign-postings-holder")
     assert(foreign.tryAcquire(), "foreign holder could not take the lease")
-    val store = new graft.storage.ManifestLog(spark, tempDir("postings-maint"))
-    val compactor = new graft.engine.Compactor(store)
-    try {
-      compactor.startMaintenance(java.time.Duration.ofMillis(100),
-        postingsCompact =
-          Some(() => IndexTables.compactPostingsIndex(spark, dir, "postings-loop")))
-      Thread.sleep(1000)
-      assert(compactor.postingsCompactions.get == 0L,
-        s"a non-owner instance ran ${compactor.postingsCompactions.get} compactions")
-      assert(spark.table(t.postings).count() > clean,
-        "a contended compaction attempt rewrote the table")
-      // phase 2 — hand the lease back: the loop's next tick owns the
-      // window, collapses the replayed rows, and heals the stats
-      foreign.release()
-      val deadline = System.currentTimeMillis() + 60000L
-      while (System.currentTimeMillis() < deadline &&
-             compactor.postingsCompactions.get < 1L)
-        Thread.sleep(100)
-      assert(compactor.postingsCompactions.get >= 1L,
-        "maintenance loop never compacted after release")
-      assert(spark.table(t.postings).count() == clean,
-        "scheduled compaction did not collapse the replayed rows")
-      assert(compactor.postingsRowsCollapsed.get == dup.count(),
-        s"collapsed-row accounting drifted: ${compactor.postingsRowsCollapsed.get} vs ${dup.count()}")
-      val corp = spark.table(t.corp).agg(sum("n"), sum("tl")).head()
-      val pAgg = spark.table(t.postings)
-        .groupBy(col("doc_id")).agg(sum("tf").as("dl"))
-        .agg(count(lit(1)), sum("dl")).head()
-      assert(corp.getLong(0) == pAgg.getLong(0) && corp.getLong(1) == pAgg.getLong(1),
-        "scheduled compaction left stats diverged from the ledger")
-    } finally compactor.close()
+    assert(IndexTables.compactPostingsIndex(spark, dir, "postings-direct").isEmpty,
+      "a non-owner ran the compaction")
+    assert(spark.table(t.postings).count() > clean,
+      "a contended compaction attempt rewrote the table")
+    // phase 2 — hand the lease back: the next compaction owns the
+    // window, collapses the replayed rows, and heals the stats
+    foreign.release()
+    val ran = IndexTables.compactPostingsIndex(spark, dir, "postings-direct")
+    assert(ran.isDefined, "compaction declined after release")
+    assert(spark.table(t.postings).count() == clean,
+      "compaction did not collapse the replayed rows")
+    assert(ran.get._1 - ran.get._2 == dup.count(),
+      s"collapsed-row accounting drifted: ${ran.get} vs ${dup.count()} replayed")
+    val corp = spark.table(t.corp).agg(sum("n"), sum("tl")).head()
+    val pAgg = spark.table(t.postings)
+      .groupBy(col("doc_id")).agg(sum("tf").as("dl"))
+      .agg(count(lit(1)), sum("dl")).head()
+    assert(corp.getLong(0) == pAgg.getLong(0) && corp.getLong(1) == pAgg.getLong(1),
+      "compaction left stats diverged from the ledger")
   }
 }
