@@ -23,6 +23,9 @@ import graft.storage.ManifestLog
   *     the same per-session batch count — 10× rows, 10× manifest dirs,
   *     10× compactor work — with post-latency percentiles at both
   *     scales.
+  *  3. **Where a session stops being read on the driver.**
+  *     [[driverReadBench]] times a GET and a compaction on both sides
+  *     of `ManifestLog.DriverReadBytes`.
   *
   * Writes/replaces the `## Service tier` section of SCALECHECK.md.
   * Run on a QUIET box (`sbt "runMain graft.ServiceScaleCheck"`):
@@ -196,8 +199,8 @@ object ServiceScaleCheck {
       concat(lit("row-"), col("id").cast("string")).as("message"))
     log.append(df, "c", "s")
     log.compact("c", "s") // range-clustered: ids cluster into time slices
-    def files(): Set[String] = log.read("c", "s").inputFiles.toSet
-    val totalFiles = files().count(_.contains("/cold/"))
+    def files(): Set[String] = log.dataEntries("c", "s").toSet
+    val totalFiles = files().count(_.startsWith("cold/"))
     def run(label: String, pred: org.apache.spark.sql.Column): (String, Double, Long, Long) = {
       val before = files()
       val t0 = System.nanoTime()
@@ -219,6 +222,68 @@ object ServiceScaleCheck {
     val expireMs = (System.nanoTime() - t0) / 1e6
     Seq(noMatch, narrow, scattered,
       ("expire sweep (closes the grace window)", expireMs, 0L, 0L))
+  }
+
+  /** The two read paths of a session on both sides of
+    * [[ManifestLog.DriverReadBytes]]: median ms of a capped time-range
+    * GET (a tenth of the session's time span, `limit(10001)`, after a
+    * one-row append so no plan is reused — the read-your-writes shape)
+    * with the session decoded on the driver and with the file scan, and
+    * of one compaction of the same hot files each way. Sessions are
+    * `files` hot files of 2,000 log rows, compacted, plus four small hot
+    * files. Returns (rows, on-disk bytes, decoded bytes, driver GET ms,
+    * scan GET ms, driver compaction ms, scan compaction ms). */
+  def driverReadBench(spark: SparkSession): Seq[(Long, Long, Long, Double, Double, Double, Double)] = {
+    import scala.jdk.CollectionConverters._
+    val words = ("request served cache miss hit retry timeout user order payment db query " +
+      "shard node disk read write flush commit compaction error started stopped ok").split(" ")
+    val r = new java.util.Random(7)
+    var ts = 1735689600000L
+    def batch(n: Int) = spark.createDataFrame((0 until n).map { _ =>
+      ts += 1 + r.nextInt(50)
+      val len = math.max(4, (60 * math.exp(r.nextGaussian() * 0.6)).toInt)
+      val msg = new StringBuilder
+      while (msg.length < len) { if (msg.nonEmpty) msg += ' '; msg ++= words(r.nextInt(words.length)) }
+      Row(new java.sql.Timestamp(ts), Seq("DEBUG", "INFO", "WARN", "ERROR")(r.nextInt(4)), msg.toString)
+    }.asJava, graft.model.LogSchema.fileSchema)
+    def ms(body: => Unit): Double = { val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e6 }
+    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
+    // the first size runs twice: its first pass warms the JIT and is dropped
+    Seq(4, 4, 8, 12, 16, 20, 24, 32).zipWithIndex.flatMap { case (files, i) =>
+      val roots = Seq("driver", "scan").map(p => Scratch.localDir + s"/driverread-$p-${System.nanoTime()}")
+      try {
+        val t0 = ts
+        val writers = roots.map(new ManifestLog(spark, _))
+        (1 to files).foreach { _ => val b = batch(2000); writers.foreach(_.append(b, "c", "s")) }
+        val span = ts - t0
+        val compactMs = roots.zip(Seq(Long.MaxValue, 0L)).map { case (root, budget) =>
+          val log = new ManifestLog(spark, root)
+          log.driverReadBytes = budget
+          ms(log.compact("c", "s"))
+        }
+        val writer = new ManifestLog(spark, roots.head)
+        (1 to 4).foreach(_ => writer.append(batch(500), "c", "s"))
+        val driver = new ManifestLog(spark, roots.head); driver.driverReadBytes = Long.MaxValue
+        val scan = new ManifestLog(spark, roots.head); scan.driverReadBytes = 0L
+        val local = org.apache.spark.sql.graftshim.GraftShim.analyzed(driver.read("c", "s"))
+          .asInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation].data
+        val decoded = local.iterator.map(_.asInstanceOf[org.apache.spark.sql.catalyst.expressions.UnsafeRow]
+          .getSizeInBytes + 64L).sum
+        val (_, coldBytes, _, hotBytes) = driver.tierStats("c", "s")
+        def get(log: ManifestLog): Double = {
+          val lo = t0 + (r.nextDouble() * span * 0.9).toLong
+          val engine = new graft.engine.QueryEngine(log)
+          ms(engine.readLogs("c", "s", Some(java.time.Instant.ofEpochMilli(lo)),
+            Some(java.time.Instant.ofEpochMilli(lo + span / 10))).limit(10001).collect())
+        }
+        val (d, sc) = (0 until 12).map { k =>
+          writer.append(batch(1), "c", "s")
+          if (k % 2 == 0) { val a = get(driver); (a, get(scan)) } else { val b = get(scan); (get(driver), b) }
+        }.drop(4).unzip
+        if (i == 0) None
+        else Some((local.size.toLong, coldBytes + hotBytes, decoded, median(d), median(sc), compactMs(0), compactMs(1)))
+      } finally roots.foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+    }
   }
 
   /** One service run's headline numbers — rows ingested over the write
@@ -450,6 +515,12 @@ object ServiceScaleCheck {
       System.err.println(
         f"[svc-scale] purge: $label%-42s $ms%9.1f ms, $purged%6d rows purged, $rewritten%3d files rewritten")
     }
+    val driverRead = driverReadBench(spark)
+    driverRead.foreach { case (rows, disk, decoded, dGet, sGet, dCompact, sCompact) =>
+      System.err.println(
+        f"[svc-scale] driver read: $rows%7d rows, ${disk / 1024}%6d KiB on disk, ${decoded / 1024}%6d KiB decoded: " +
+        f"GET $dGet%7.1f / $sGet%7.1f ms, compaction $dCompact%7.1f / $sCompact%7.1f ms (driver / scan)")
+    }
 
     val sb = new StringBuilder
     sb ++= "## Service tier (ingest/commit path)\n\n"
@@ -550,6 +621,15 @@ object ServiceScaleCheck {
     sb ++= "| operation | time | rows purged | files rewritten |\n|---|---|---|---|\n"
     purge.foreach { case (label, ms, purged, rewritten) =>
       sb ++= f"| $label | $ms%.1f ms | $purged | $rewritten |\n" }
+    sb ++= "\nDriver-side reads (`ManifestLog.DriverReadBytes`, "
+    sb ++= s"${ManifestLog.DriverReadBytes / 1024 / 1024} MiB decoded): a capped\n"
+    sb ++= "time-range GET and a compaction of the same session with its rows\n"
+    sb ++= "decoded on the driver and with a Spark file scan (medians of 8 GETs,\n"
+    sb ++= "each after a one-row append, as in read-your-writes traffic). The\n"
+    sb ++= "budget sits where the two GET columns cross:\n\n"
+    sb ++= "| rows | on disk | decoded | GET driver | GET scan | compaction driver | compaction scan |\n|---|---|---|---|---|---|---|\n"
+    driverRead.foreach { case (rows, disk, decoded, dGet, sGet, dCompact, sCompact) =>
+      sb ++= f"| $rows | ${disk / 1024} KiB | ${decoded / 1024} KiB | $dGet%.1f ms | $sGet%.1f ms | $dCompact%.1f ms | $sCompact%.1f ms |\n" }
     sb ++= "\nReading: resolve is one directory listing + one (newest) manifest\n"
     sb ++= "read — the chain-length term is the LISTING. The deployment bound is\n"
     sb ++= "`expire`'s sweep of superseded manifests (grace-windowed); the live\n"

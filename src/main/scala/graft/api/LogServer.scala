@@ -408,14 +408,19 @@ final class LogServer(spark: SparkSession, root: String, port: Int = 0,
       // Bounded batch response: the non-stream path materializes the
       // whole filtered result on this gateway's heap
       // before rendering — the one remaining unbounded driver-side
-      // collect. LIMIT cap+1 keeps the bound inside the Spark plan (the
-      // scan stops early; nothing past the cap ever reaches the driver),
-      // and cap+1 distinguishes "exactly at the bound" from "over it"
-      // without a separate count job. Over the bound → 413 with the
-      // stream=true hint, matching the reference's own stance that big
-      // reads stream (reader.py:148-179); the chunked path has no row
-      // bound (its memory is one partition via toLocalIterator, and its
-      // time bound is the deadline + watchdog pair above).
+      // collect. LIMIT cap+1 keeps the bound inside the plan, and cap+1
+      // distinguishes "exactly at the bound" from "over it" without a
+      // separate count job. A session within the store's driver-read
+      // budget is already decoded on this gateway (at most that budget
+      // of rows), and the optimizer folds filter and limit into its
+      // rows, so the collect starts no job; over the budget the limit
+      // stops the Spark scan early and nothing past the cap reaches the
+      // driver. Over the bound → 413 with the stream=true hint, matching
+      // the reference's own stance that big reads stream
+      // (reader.py:148-179); the chunked path has no row bound (its
+      // memory is one partition via toLocalIterator, or the driver-read
+      // budget for a small session, and its time bound is the deadline
+      // + watchdog pair above).
       // CONTRACT NOTE: the default cap is a DECLARED BEHAVIOR CHANGE
       // vs the reference, whose batch read returns all
       // matching rows (reader.py read); deployments that need the

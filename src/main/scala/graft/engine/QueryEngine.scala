@@ -10,10 +10,12 @@ import graft.storage.LogTier
   * Filters are conjunctive (col, op, value) triples — the reference's
   * entire predicate algebra (reader.py:30-59). Deviation (SURVEY §7.4.4):
   * unknown operators are REJECTED, not silently skipped. Time-range
-  * bounds are both inclusive (reader.py:457-473). Catalyst pushes the
-  * resulting predicates into the parquet scan (row-group stats) and
-  * prunes (container, session) directories — the SQLite catalog's job
-  * in the reference (metadata.py:44-53), free here.
+  * bounds are both inclusive (reader.py:457-473). A session within
+  * the store's driver-read budget comes back as driver-decoded rows (a
+  * `LocalRelation`): the optimizer applies the predicates, projection
+  * and any limit to them while planning, and `collect()` starts no
+  * Spark job. Only over that budget do the predicates reach a Parquet
+  * scan, where Catalyst pushes them into row-group stats.
   */
 final class QueryEngine(store: LogTier) {
 
@@ -48,7 +50,8 @@ final class QueryEngine(store: LogTier) {
   /** Filtered read over both tiers; AND-only conjunction. `columns`
     * projects the output (F5 — the reference always returns all five
     * columns, reader.py:134-142; projection is the strict superset, and
-    * Catalyst prunes the parquet scan down to exactly what's named). */
+    * over the driver-read budget Catalyst prunes the parquet scan down
+    * to exactly what's named). */
   def readLogs(container: String, session: String,
                start: Option[Instant] = None, end: Option[Instant] = None,
                filters: Seq[(String, String, Any)] = Seq.empty,

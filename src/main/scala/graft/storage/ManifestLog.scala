@@ -2,14 +2,25 @@ package graft.storage
 
 import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
+import scala.collection.immutable.ArraySeq
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 import graft.model.LogSchema
 
 /** MANIFEST-SWAP log store: graft's one storage tier, hot append files
@@ -31,6 +42,14 @@ import graft.model.LogSchema
   *    files are immutable and retired files are deleted only by
   *    [[expire]] after a grace window (the Iceberg/Delta snapshot-
   *    isolation recipe, from public designs).
+  *  - SMALL SESSIONS never start a Spark job. When the resolved files
+  *    decode to at most [[ManifestLog.DriverReadBytes]], reads and
+  *    compactions decode them on the calling thread with Spark's own
+  *    Parquet reader. A read returns a `LocalRelation`, whose filters,
+  *    projection and limit the optimizer folds, so its `collect()` runs
+  *    no job. Larger sessions keep the file-scan plan; a decode that
+  *    passes the budget stops there, so no read or compaction holds
+  *    more than the budget of decoded rows.
   *  - APPENDS publish an immutable file, then commit manifest N+1 =
   *    N ∪ {file}. The commit — not the file landing — is the
   *    visibility point.
@@ -387,7 +406,8 @@ final class ManifestLog(spark: SparkSession, root: String,
       // Rows already on the driver (every HTTP ingest flush): write them
       // here. A Spark write of a local batch costs two jobs, a shuffle
       // and task serialization — ~100 ms for a few KB of rows.
-      case local: LocalRelation => writeLocal(local, new Path(staging, "part-00000.parquet"))
+      case local: LocalRelation =>
+        writeLocal(local.schema, local.data, new Path(staging, "part-00000.parquet"))
       case _ =>
         batch
           // repartition(1), NOT coalesce(1): coalesce collapses the whole
@@ -458,7 +478,7 @@ final class ManifestLog(spark: SparkSession, root: String,
     * under the session's SQLConf applies the same codec, timestamp type,
     * time zone and rebase mode, so the file matches a Spark-written one
     * (LocalAppendSpec compares the footers). */
-  private def writeLocal(batch: LocalRelation, file: Path): Unit =
+  private def writeLocal(schema: StructType, rows: Iterable[InternalRow], file: Path): Unit =
     SQLConf.withExistingConf(spark.sessionState.conf) {
       val conf = spark.sessionState.newHadoopConf()
       if (fs.getScheme == "file") {
@@ -466,34 +486,118 @@ final class ManifestLog(spark: SparkSession, root: String,
         conf.setBoolean("fs.file.impl.disable.cache", true)
       }
       val job = Job.getInstance(conf)
-      val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, batch.schema)
+      val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
       val task = new TaskAttemptContextImpl(job.getConfiguration,
         new TaskAttemptID(new TaskID(new JobID("graft-append", 0), TaskType.MAP, 0), 0))
-      val writer = factory.newInstance(file.toString, batch.schema, task)
-      try batch.data.foreach(writer.write) finally writer.close()
+      val writer = factory.newInstance(file.toString, schema, task)
+      try rows.foreach(writer.write) finally writer.close()
     }
 
   /** Data entries (no `#tag` tombstones) of the latest manifest. */
-  private def dataEntries(container: String, session: String): Seq[String] =
+  private[graft] def dataEntries(container: String, session: String): Seq[String] =
     resolve(container, session)._2.filterNot(_.startsWith("#"))
 
-  private def toDf(entries: Seq[String], container: String, session: String): DataFrame =
-    if (entries.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], LogSchema.schema)
-    else
-      spark.read.schema(LogSchema.fileSchema).parquet(entries.map(abs): _*)
-        .withColumn("container", lit(container))
-        .withColumn("session", lit(session))
-        .select(LogSchema.schema.fieldNames.map(col): _*)
+  /** Budget of the driver path in decoded bytes ([[ManifestLog.DriverReadBytes]]).
+    * Test and bench seam: 0 keeps every non-empty session on the file scan. */
+  private[graft] var driverReadBytes: Long = ManifestLog.DriverReadBytes
 
-  // Version-keyed read cache: without it a gateway GET re-resolves AND
-  // re-plans (spark.read → InMemoryFileIndex build + footer reads) on
-  // every request. A manifest version pins an
-  // immutable file set, so the VERSION is the cache key by
-  // construction: a hit reuses the plan, a version bump misses and
-  // rebuilds — staleness is impossible, no invalidation hooks needed.
-  // Bounded LRU; entries hold only the unexecuted plan, not data.
+  /** The rows of `entries`, decoded on the calling thread with
+    * `partition` appended as the constant `values`; None when they would
+    * take more than [[driverReadBytes]]: their files already sum to more
+    * on disk, or the decoded rows pass it (decoding stops there). No
+    * entries is always an empty result: a file scan needs a path. */
+  private def decodeUnder(entries: Seq[String], partition: StructType,
+                          values: InternalRow): Option[Array[InternalRow]] = {
+    val budget = driverReadBytes
+    val files = entries.map(e => fs.getFileStatus(new Path(abs(e))))
+    if (files.iterator.map(_.getLen).sum > budget) None
+    else decode(files, partition, values, budget)
+  }
+
+  /** The read twin of [[writeLocal]]: the reader a Spark scan task would
+    * use, run under the session's SQLConf, so INT96 conversion and the
+    * rebase modes match a Spark read. Rows are copied, because the
+    * reader reuses its buffers, and each counts its bytes plus
+    * [[ManifestLog.RowOverheadBytes]] against `budget`. */
+  private def decode(files: Seq[org.apache.hadoop.fs.FileStatus], partition: StructType,
+                     values: InternalRow, budget: Long): Option[Array[InternalRow]] =
+    SQLConf.withExistingConf(spark.sessionState.conf) {
+      val rows = Array.newBuilder[InternalRow]
+      var bytes = 0L
+      if (files.nonEmpty) {
+        val readFile = readerFor(partition)
+        val toUnsafe = UnsafeProjection.create(ManifestLog.decodedSchema(partition))
+        val it = files.iterator
+        while (bytes <= budget && it.hasNext) {
+          val st = it.next()
+          val fileRows = readFile(PartitionedFile(values, SparkPath.fromPath(st.getPath), 0L, st.getLen,
+            fileSize = st.getLen))
+          try while (bytes <= budget && fileRows.hasNext) {
+            val row = toUnsafe(fileRows.next()).copy()
+            bytes += row.getSizeInBytes + ManifestLog.RowOverheadBytes
+            rows += row
+          } finally fileRows match { case c: java.io.Closeable => c.close(); case _ => () }
+        }
+      }
+      if (bytes > budget) None else Some(rows.result())
+    }
+
+  /** The Parquet reader [[decode]] runs, per partition schema, kept while
+    * the session's SQL confs (which it captures) stay the same: building
+    * one broadcasts the Hadoop conf, about 15 ms on a 4-core host. The
+    * conf is a JobConf, which the reader's per-file task context takes
+    * as is; it copies any other Configuration, about 0.7 ms a file. */
+  private val readers =
+    new ConcurrentHashMap[StructType, (Map[String, String], PartitionedFile => Iterator[InternalRow])]()
+
+  private def readerFor(partition: StructType): PartitionedFile => Iterator[InternalRow] = {
+    val confs = spark.sessionState.conf.getAllConfs
+    val hit = readers.get(partition)
+    if (hit != null && hit._1 == confs) hit._2
+    else {
+      val readFile = new ParquetFileFormat().buildReaderWithPartitionValues(
+        spark, LogSchema.fileSchema, partition, LogSchema.fileSchema, Nil,
+        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        new org.apache.hadoop.mapred.JobConf(spark.sessionState.newHadoopConf()))
+      readers.put(partition, (confs, readFile))
+      readFile
+    }
+  }
+
+  /** The session's rows over `entries`: decoded on the driver under the
+    * budget, else a file-scan plan, which is handed to `keep` (the plan
+    * caches hold scans only, never decoded rows). */
+  private def toDf(entries: Seq[String], container: String, session: String, mayDecode: Boolean = true)
+                  (keep: DataFrame => Unit): DataFrame = {
+    val partition = ManifestLog.partitionSchema
+    val decoded = if (!mayDecode && entries.nonEmpty) None else decodeUnder(entries, partition,
+      InternalRow(UTF8String.fromString(container), UTF8String.fromString(session)))
+    decoded match {
+      case Some(rows) =>
+        GraftShim.ofRows(spark, LocalRelation(
+          DataTypeUtils.toAttributes(ManifestLog.decodedSchema(partition)), ArraySeq.unsafeWrapArray(rows)))
+      case None =>
+        val df = spark.read.schema(LogSchema.fileSchema).parquet(entries.map(abs): _*)
+          .withColumn("container", lit(container))
+          .withColumn("session", lit(session))
+          .select(LogSchema.schema.fieldNames.map(col): _*)
+        keep(df)
+        df
+    }
+  }
+
+  // Version-keyed cache of file-scan plans: without it a gateway GET
+  // over the driver-read budget re-resolves AND re-plans (spark.read →
+  // InMemoryFileIndex build + footer reads) on every request. A
+  // manifest version pins an immutable file set, so the VERSION is the
+  // cache key by construction: a hit reuses the plan, a version bump
+  // misses and rebuilds — staleness is impossible, no invalidation
+  // hooks needed. Bounded LRU; entries hold only the unexecuted plan.
+  // A driver-decoded read is never kept, so decoded rows live only as
+  // long as the read that decoded them. An entry for an OLDER version
+  // says the session passed the budget then; sessions only grow (a
+  // purge drops the entry), so a read of a newer version goes straight
+  // to the scan instead of decoding up to the budget on every commit.
   private val ReadCacheMax = 256
   private val readCache =
     java.util.Collections.synchronizedMap(
@@ -505,18 +609,16 @@ final class ManifestLog(spark: SparkSession, root: String,
 
   /** The session's rows as of the latest manifest — lock-free; safe
     * to materialize at any time, including mid-compaction. Plan
-    * construction is cached per (session, version): repeated reads of
-    * an unchanged session skip the file-index build entirely. */
+    * construction is cached per (session, version) over the budget:
+    * repeated reads of an unchanged session skip the file-index build
+    * entirely. Under it every call decodes the files afresh. */
   def read(container: String, session: String): DataFrame = {
     val (v, entries) = resolve(container, session)
     val key = (container, session)
     val hit = readCache.get(key)
     if (hit != null && hit._1 == v) hit._2
-    else {
-      val df = toDf(entries.filterNot(_.startsWith("#")), container, session)
-      readCache.put(key, (v, df))
-      df
-    }
+    else toDf(entries.filterNot(_.startsWith("#")), container, session, mayDecode = hit == null)(
+      df => readCache.put(key, (v, df)))
   }
 
   /** Committed manifest versions of a session, ascending — the
@@ -541,8 +643,9 @@ final class ManifestLog(spark: SparkSession, root: String,
     // reusable by construction; the lifecycle runs re-plan the same
     // pinned prior-run snapshot on every invocation, and the seal's
     // replay citation plans the identical version twice per run. Only
-    // the unexecuted plan is cached — every execution still reads the
-    // files, so the seal's replay proof keeps reading disk.
+    // an unexecuted file-scan plan is cached — every execution still
+    // reads the files, and a driver-decoded read decodes them on every
+    // call — so the seal's replay proof keeps reading disk.
     // The hit path checks only that the manifest file still exists: an
     // expired version fails as loudly as the uncached path, but a
     // manifest damaged after its first read keeps serving the cached
@@ -561,10 +664,15 @@ final class ManifestLog(spark: SparkSession, root: String,
               s"snapshot v$version of $container/$session does not exist " +
               "(never committed, or expired past the GC grace window)")
         }
-      val df = toDf(entries.filterNot(_.startsWith("#")), container, session)
-      readAtCache.put(key, df)
-      df
+      toDf(entries.filterNot(_.startsWith("#")), container, session)(readAtCache.put(key, _))
     }
+  }
+
+  /** Test seam: every plan the two read caches hold. */
+  private[storage] def cachedPlans: Seq[DataFrame] = {
+    import scala.jdk.CollectionConverters._
+    readCache.synchronized(readCache.values.asScala.map(_._2).toList) ++
+      readAtCache.synchronized(readAtCache.values.asScala.toList)
   }
 
   /** Bounded LRU of [[readAt]] plans — see the cache note there. */
@@ -624,24 +732,35 @@ final class ManifestLog(spark: SparkSession, root: String,
   /** Stats AND row count off ONE manifest resolve — the summary
     * consistency contract ([[LogTier.statsAndRows]]): a concurrent
     * append or compaction between two independent resolves can no
-    * longer mix file counts and row totals from different snapshots. */
+    * longer mix file counts and row totals from different snapshots.
+    * Rows are summed from the Parquet footers: exact, and no Spark job. */
   override def statsAndRows(container: String, session: String)
       : ((Long, Long, Long, Long), Long) = {
     val entries = dataEntries(container, session)
-    (statsOf(entries), toDf(entries, container, session).count())
+    val conf = spark.sessionState.newHadoopConf()
+    val rows = entries.iterator.map { e =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(abs(e)), conf))
+      try r.getRecordCount finally r.close()
+    }.sum
+    (statsOf(entries), rows)
   }
 
   /** Compact the manifest's current hot subset into sized, range-
     * clustered cold files through the staged [[rewrite]]; the manifest
     * swap is the LAST step and the only moment visibility changes.
-    * Retired hot files stay on disk for in-flight readers until
-    * [[expire]]. Returns retired bytes (0 when the swap declined). */
+    * Under the driver-read budget the snapshot is decoded and rewritten
+    * on the calling thread, with no Spark job. Retired hot files stay on
+    * disk for in-flight readers until [[expire]]. Returns retired bytes
+    * (0 when the swap declined). */
   def compact(container: String, session: String): Long =
     compactLocks.computeIfAbsent((container, session), _ => new Object).synchronized {
       val snapshot = resolve(container, session)._2.filter(_.startsWith("hot/"))
       if (snapshot.isEmpty) return 0L
-      val rows = spark.read.schema(LogSchema.fileSchema).parquet(snapshot.map(abs): _*)
-      rewrite(container, session, "compact", snapshot, Some(rows))
+      val stage = decodeUnder(snapshot, new StructType(), InternalRow.empty) match {
+        case Some(rows) => stageSorted(rows) _
+        case None => stageScan(spark.read.schema(LogSchema.fileSchema).parquet(snapshot.map(abs): _*)) _
+      }
+      rewrite(container, session, "compact", snapshot, Some(stage))
     }
 
   /** PHYSICAL ROW-LEVEL PURGE (right-to-be-forgotten for the data
@@ -690,7 +809,8 @@ final class ManifestLog(spark: SparkSession, root: String,
       val purged = aff.filter(hit).count()
       val survivors = aff.filter(!hit)
       if (rewrite(container, session, "purge", snapshot,
-                  Some(survivors).filter(!_.isEmpty)) == 0L) return 0L
+                  Some(survivors).filter(!_.isEmpty).map(stageScan)) == 0L) return 0L
+      readCache.remove((container, session)) // it may fit the driver-read budget again
       // the purge is the engine's only in-store MUTATOR: memoized
       // derived relations over this root (any session) now hold rows
       // the store no longer does — drop them so the next read
@@ -700,34 +820,57 @@ final class ManifestLog(spark: SparkSession, root: String,
       purged
     }
 
+  /** Writes `df` into `staging` as `nOut` files range-clustered by
+    * timestamp (not hash-repartitioned): each cold file covers a tight,
+    * mostly non-overlapping time slice, so its parquet footer min/max
+    * actually prunes and time-range reads skip whole files. Same row
+    * multiset either way; this is purely a layout choice, and at 100 TB
+    * layout IS the read path (the reference gets it for free only
+    * because each buffer flush is one contiguous ingest slice,
+    * writer.py:300-335). Message is the range tiebreak: a snapshot whose
+    * rows share one timestamp must still split into nOut sized files. */
+  private def stageScan(df: DataFrame)(staging: Path, nOut: Int): Unit =
+    df.repartitionByRange(nOut, col("timestamp"), col("message"))
+      .sortWithinPartitions(col("timestamp"))
+      .write.mode(SaveMode.Overwrite).parquet(staging.toString)
+
+  /** [[stageScan]]'s layout for decoded file rows, on the calling thread:
+    * sort them in place by (timestamp, message), then write `nOut`
+    * contiguous runs of equal row count (fewer when there are fewer
+    * rows; an empty snapshot still writes one file). */
+  private def stageSorted(rows: Array[InternalRow])(staging: Path, nOut: Int): Unit = {
+    val schema = ManifestLog.decodedSchema(new StructType())
+    def key(name: String): SortOrder = {
+      val i = schema.fieldIndex(name)
+      SortOrder(BoundReference(i, schema(i).dataType, nullable = true), Ascending)
+    }
+    java.util.Arrays.sort(rows, new InterpretedOrdering(Seq(key("timestamp"), key("message"))))
+    val n = rows.length
+    val runs = math.max(1, math.min(nOut, n))
+    (0 until runs).foreach { i =>
+      writeLocal(schema, rows.view.slice((i.toLong * n / runs).toInt, ((i + 1L) * n / runs).toInt),
+        new Path(staging, f"part-$i%05d.parquet"))
+    }
+  }
+
   /** The staged rewrite-then-swap [[compact]] and [[rewriteExcluding]]
-    * share: write `rows` (None: no row survives) as range-clustered cold
-    * files, publish them under names no manifest references, then
-    * commit a manifest that swaps them in for `snapshot` as the LAST
-    * step. A crash anywhere before that commit leaves `snapshot` fully
+    * share: `stage` writes the surviving rows (None: no row survives)
+    * into a staging directory as the given number of range-clustered
+    * files; they are published under names no manifest references, then
+    * a manifest commit swaps them in for `snapshot` as the LAST step. A
+    * crash anywhere before that commit leaves `snapshot` fully
     * referenced (no loss, no duplicate) and the staged files as
     * [[expire]]-collectable orphans. Returns the bytes `snapshot`
     * retired, or 0 when a competing rewrite already retired part of it
     * (the staged files are deleted; the caller re-runs against the new
     * file set). */
   private def rewrite(container: String, session: String, what: String,
-                      snapshot: Seq[String], rows: Option[DataFrame]): Long = {
+                      snapshot: Seq[String], stage: Option[(Path, Int) => Unit]): Long = {
     val bytes = sizeOf(snapshot)
-    val staged = rows.toSeq.flatMap { df =>
+    val staged = stage.toSeq.flatMap { write =>
       val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
       val staging = new Path(s"$root/.staging-${UUID.randomUUID()}")
-      // Range-cluster by timestamp (not hash-repartition): each cold file
-      // covers a tight, mostly non-overlapping time slice, so its parquet
-      // footer min/max actually prunes and time-range reads skip whole
-      // files. Same row multiset either way; this is purely a layout
-      // choice, and at 100 TB layout IS the read path (the reference gets
-      // it for free only because each buffer flush is one contiguous
-      // ingest slice, writer.py:300-335). Message is the range tiebreak:
-      // a snapshot whose rows share one timestamp must still split into
-      // nOut sized files.
-      df.repartitionByRange(nOut, col("timestamp"), col("message"))
-        .sortWithinPartitions(col("timestamp"))
-        .write.mode(SaveMode.Overwrite).parquet(staging.toString)
+      write(staging, nOut)
       val files = walk(staging)
       if (files.isEmpty)
         throw new java.io.IOException(
@@ -855,6 +998,30 @@ final class ManifestLog(spark: SparkSession, root: String,
 }
 
 object ManifestLog {
+  /** The columns a read adds after the file columns: container, session. */
+  private val partitionSchema: StructType =
+    StructType(LogSchema.schema.fields.drop(LogSchema.fileSchema.size))
+
+  /** The rows the driver path decodes: the file columns, nullable as a
+    * Parquet read makes them, then `partition`. */
+  private def decodedSchema(partition: StructType): StructType =
+    StructType(LogSchema.fileSchema.fields.map(_.copy(nullable = true)) ++ partition.fields)
+
+  /** Decoded bytes up to which a session is read and compacted on the
+    * driver instead of by a Spark job, and so the most decoded rows one
+    * read or compaction holds. It is the measured crossover of a capped
+    * time-range GET: on a 4-core host the driver path costs about 5 ms
+    * per 1,000 log rows (about 210 bytes each decoded) over a base of
+    * about 60 ms, the Spark path 130–210 ms at 10k–66k rows, and they
+    * cross between 5.3 and 6.9 MiB (`ServiceScaleCheck.driverReadBench`).
+    * A compaction was 2–4× faster on the driver at every size measured;
+    * the budget holds it to the same heap. */
+  private[graft] val DriverReadBytes: Long = 6L * 1024 * 1024
+
+  /** Heap a decoded row takes beyond its bytes: the `UnsafeRow` object,
+    * its byte array's header and the reference to it. */
+  private val RowOverheadBytes = 64L
+
   /** Format header (FIRST line): its presence declares "a matching
     * footer must follow", which is what makes tail truncation — the
     * failure mode that destroys the footer first — detectable. */

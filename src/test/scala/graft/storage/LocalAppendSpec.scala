@@ -17,14 +17,7 @@ import graft.model.LogSchema
   * the same file: same rows, same Parquet schema, codec and Spark
   * footer metadata, under the session's confs. */
 class LocalAppendSpec extends SparkSuite {
-
-  private val rowsIn = Seq(
-    Row(Timestamp.from(Instant.parse("2024-01-01T10:00:00Z")), "INFO", "plain"),
-    Row(Timestamp.from(Instant.parse("2024-01-01T10:00:00.000001Z")), "WARN", "micros"),
-    Row(Timestamp.from(Instant.parse("1850-06-01T00:00:00.123456Z")), "ERROR", "pre-1900"),
-    Row(Timestamp.from(Instant.parse("2024-01-01T10:00:00Z")), "INFO", "plain"), // duplicate
-    Row(Timestamp.from(Instant.parse("2038-01-19T03:14:08Z")), "DEBUG", ""),
-    Row(Timestamp.from(Instant.parse("2024-02-29T23:59:59.999999Z")), "INFO", "ünïcødé ✓"))
+  import LocalAppendSpec._
 
   /** The rows as a driver-local batch (what an ingest flush appends). */
   private def local(s: SparkSession): DataFrame =
@@ -64,21 +57,9 @@ class LocalAppendSpec extends SparkSuite {
     assert(viaDriver === multiset(log.read("c", "spark")))
   }
 
-  // The second case sets confs the writer reads through SQLConf.get
-  // (the rebase modes), not only ones prepareWrite copies into the
-  // Hadoop conf: a driver write outside the session's SQLConf would
-  // miss them.
-  for ((label, tsType, codec, rebase) <- Seq(
-      ("the default INT96 timestamps", "INT96", "snappy", None),
-      ("TIMESTAMP_MICROS, gzip and LEGACY rebase", "TIMESTAMP_MICROS", "gzip", Some("LEGACY"))))
+  for ((label, tsType, codec, rebase) <- writeConfs)
     test(s"driver and Spark footers agree under $label") {
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.parquet.outputTimestampType", tsType)
-      s2.conf.set("spark.sql.parquet.compression.codec", codec)
-      rebase.foreach { mode =>
-        s2.conf.set("spark.sql.parquet.datetimeRebaseModeInWrite", mode)
-        s2.conf.set("spark.sql.parquet.int96RebaseModeInWrite", mode)
-      }
+      val s2 = writerSession(spark, tsType, codec, rebase)
       val root = tempDir("local_append")
       val log = new ManifestLog(s2, root)
       log.append(local(s2), "c", "driver")
@@ -123,5 +104,39 @@ class LocalAppendSpec extends SparkSuite {
     assert(log.appendIdempotent(local(spark), "c", "s", "batch-7") > 0L)
     assert(log.appendIdempotent(local(spark), "c", "s", "batch-7") === -1L)
     assert(multiset(log.read("c", "s")) === multiset(local(spark)))
+  }
+}
+
+object LocalAppendSpec {
+  /** Rows that exercise the timestamp encodings: micros, a pre-1900
+    * instant (rebased under LEGACY), a duplicate, unicode. */
+  private[storage] val rowsIn = Seq(
+    Row(Timestamp.from(Instant.parse("2024-01-01T10:00:00Z")), "INFO", "plain"),
+    Row(Timestamp.from(Instant.parse("2024-01-01T10:00:00.000001Z")), "WARN", "micros"),
+    Row(Timestamp.from(Instant.parse("1850-06-01T00:00:00.123456Z")), "ERROR", "pre-1900"),
+    Row(Timestamp.from(Instant.parse("2024-01-01T10:00:00Z")), "INFO", "plain"), // duplicate
+    Row(Timestamp.from(Instant.parse("2038-01-19T03:14:08Z")), "DEBUG", ""),
+    Row(Timestamp.from(Instant.parse("2024-02-29T23:59:59.999999Z")), "INFO", "ünïcødé ✓"))
+
+  /** (label, timestamp type, codec, rebase mode) of the Parquet files
+    * the specs write. The second case sets confs the writer reads
+    * through SQLConf.get (the rebase modes), not only ones prepareWrite
+    * copies into the Hadoop conf: a driver write outside the session's
+    * SQLConf would miss them. */
+  private[storage] val writeConfs = Seq(
+    ("the default INT96 timestamps", "INT96", "snappy", None),
+    ("TIMESTAMP_MICROS, gzip and LEGACY rebase", "TIMESTAMP_MICROS", "gzip", Some("LEGACY")))
+
+  /** A new session of `spark` that writes Parquet with these confs. */
+  private[storage] def writerSession(spark: SparkSession, tsType: String, codec: String,
+                                     rebase: Option[String]): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.parquet.outputTimestampType", tsType)
+    s.conf.set("spark.sql.parquet.compression.codec", codec)
+    rebase.foreach { mode =>
+      s.conf.set("spark.sql.parquet.datetimeRebaseModeInWrite", mode)
+      s.conf.set("spark.sql.parquet.int96RebaseModeInWrite", mode)
+    }
+    s
   }
 }

@@ -595,7 +595,9 @@ class ManifestLogSpec extends SparkSuite {
   }
 
   test("read cache: same version reuses the plan, a version bump rebuilds — staleness impossible") {
+    // the cache holds file-scan plans only: turn the driver path off
     val log = new ManifestLog(spark, tempDir("mlog"))
+    log.driverReadBytes = 0L
     log.append(batch(("2024-01-01T10:00:00Z", "INFO", "one")), "c", "s")
     val r1 = log.read("c", "s")
     val r2 = log.read("c", "s")
@@ -795,6 +797,23 @@ class ManifestLogSpec extends SparkSuite {
     assert(log.read("c", "s").count() == 2L)
     log.compact("c", "s")
     assert(log.read("c", "s").count() == 2L)
+  }
+
+  test("statsAndRows counts rows from the Parquet footers, with no Spark job") {
+    val log = new ManifestLog(spark, tempDir("mlog"))
+    def append(s: String, n: Int): Unit =
+      log.append(batch((1 to n).map(i => (f"2024-01-01T10:$i%02d:00Z", "INFO", s"m$i")): _*), "c", s)
+    append("hot", 3); append("hot", 4)
+    append("cold", 5); append("cold", 2); log.compact("c", "cold")
+    append("mixed", 6); log.compact("c", "mixed"); append("mixed", 1)
+    for ((s, rows) <- Seq("hot" -> 7L, "cold" -> 7L, "mixed" -> 7L, "empty" -> 0L)) {
+      val ((cf, _, hf, _), n) = jobsDuring(log.statsAndRows("c", s)) match {
+        case (result, jobs) => assert(jobs === 0, s"$s: statsAndRows started a Spark job"); result
+      }
+      assert(n === rows, s)
+      assert(n === log.read("c", s).count(), s)
+      assert((cf > 0, hf > 0) === (s == "cold" || s == "mixed", s == "hot" || s == "mixed"), s)
+    }
   }
 
   test("tierStats counts files and bytes per tier from the manifest") {
