@@ -40,11 +40,11 @@ object ScaleCheck {
     // linear brute-force ground truth
     "ann_brute_topk", "ann_ivf_topk", "ann_ivf_refined", "ann_pq_topk",
     "emb_knn_graph",
-    // round-11 retrieval additions: the selectivity-adaptive filtered
+    // retrieval: the selectivity-adaptive filtered
     // search (both strategy branches in one run) and the shortlist-
     // bounded late-interaction rerank
     "ann_filtered_topk", "ann_maxsim_topk",
-    // round-14 two-stage servers: narrow-prefix shortlist + rerank,
+    // two-stage servers: narrow-prefix shortlist + rerank,
     // and the int8 integer-dot shortlist + rerank — both read a
     // reduced-width stage-1 relation, so their growth should track
     // the brute scan's, not exceed it
@@ -147,10 +147,10 @@ object ScaleCheck {
         ops.IndexTables.ensurePqIndex(spark, fix)
         fix
       }
-      // fixture teardown MUST survive a failing timed entry (advice-
-      // caught): any throw below — a require on the drift gate or the
-      // delete count — would otherwise leak the corpus copy plus three
-      // tables into the shared persistent warehouse
+      // fixture teardown MUST survive a failing timed entry: any throw
+      // below — a require on the rebuild or the delete count — would
+      // otherwise leak the corpus copy plus three tables into the
+      // shared persistent warehouse
       val r = try { Seq(
         "build chunk index"   -> timed(ops.IndexTables.ensureChunkIndex(spark, dir, 4)),
         "build shingle index" -> timed(ops.IndexTables.ensureShingleIndex(spark, dir)),
@@ -161,14 +161,14 @@ object ScaleCheck {
           timed(SparkEntry.queries("dedup_ngram_indexed")(spark, dir).count()),
         "consume: ann_ivf_indexed" ->
           timed(SparkEntry.queries("ann_ivf_indexed")(spark, dir).count()),
-        // IVF-PQ (round-9): encode+assign paid at build; the consume is
+        // IVF-PQ: encode+assign paid at build; the consume is
         // the pruned ADC scan + shortlist + index-side rerank — its
         // driver is probed-list code volume, never the corpus
         "build PQ code index" ->
           timed(ops.IndexTables.ensurePqIndex(spark, dir)),
         "consume: ann_ivf_pq" ->
           timed(SparkEntry.queries("ann_ivf_pq")(spark, dir).count()),
-        // ANN lifecycle (round-10): the per-batch append an ingest pays
+        // ANN lifecycle: the per-batch append an ingest pays
         // under the frozen quantizer vs the full retrain+swap a
         // maintenance cadence pays when the corpus drifts — the rebuild
         // re-trains (farthest-point seeds + one quantized-Lloyd step)
@@ -187,18 +187,7 @@ object ScaleCheck {
             "scalecheck rebuild lease contended")),
         "consume after rebuild: ann_ivf_pq" ->
           timed(SparkEntry.queries("ann_ivf_pq")(spark, dir).count()),
-        // the drift TRIGGER check (round-11): sampled recall of the
-        // served index vs brute-force truth — what the maintenance
-        // loop pays per GC-cadence tick to decide WHETHER to rebuild
-        // (floor 0 here: the healthy-decline path, no rebuild runs).
-        // Its driver is one corpus pass for the truth sample — cheap
-        // against the rebuild it gates, and paid hours apart
-        "drift trigger check (sampled recall)" ->
-          timed(require(
-            ops.IndexTables.maybeRebuildAnnIndexes(spark, dir, "scalecheck-drift",
-              recallFloor = 0.0).isEmpty,
-            "drift gate rebuilt at floor 0")),
-        // tombstone DELETE (round-11): the delete's cost is the batch
+        // tombstone DELETE: the delete's cost is the batch
         // (one tombstone write), never a table rewrite, and the masked
         // consume adds one broadcast anti-join. Priced on the FIXTURE
         // copy of the embeddings: tombstoning the real dir would mask
@@ -216,29 +205,13 @@ object ScaleCheck {
         },
         "consume after delete: ann_ivf_pq (masked)" ->
           timed(SparkEntry.queries("ann_ivf_pq")(spark, tombFixture).count()),
-        // incremental vs rebuild for the one formerly rebuild-only index
-        // (round-9): segment build ≈ the v2 build minus denormalization;
-        // the APPEND is the per-batch cost a rebuild used to charge the
-        // whole corpus for (batch = 1% of docs, planted twin ids)
+        // segmented shingle index: build ≈ the v2 build minus
+        // denormalization; the consume pays the read-time cap
         "build shingle segments" ->
           timed(ops.IndexTables.ensureShingleSegments(spark, dir)),
-        "append shingle segment (1% batch)" ->
-          timed(ops.IndexTables.appendToShingleIndex(spark, dir,
-            ops.Tables.documents(spark, dir)
-              .filter(org.apache.spark.sql.functions.col("doc_id") % 100 === 0)
-              .select((org.apache.spark.sql.functions.col("doc_id") + 500000000L)
-                .as("doc_id"), org.apache.spark.sql.functions.col("text")))),
         "consume: dedup_ngram_seg" ->
           timed(SparkEntry.queries("dedup_ngram_seg")(spark, dir).count()),
-        // maintenance compaction (late round-9): fold the appended
-        // segment's DF/meta rows back to one segment and re-cluster —
-        // the cost is the INDEX's size, not the corpus's, and the
-        // consumer reads identical rows off the folded stats
-        "compact shingle segments" ->
-          timed(ops.IndexTables.compactShingleSegments(spark, dir)),
-        "consume after compaction: dedup_ngram_seg" ->
-          timed(SparkEntry.queries("dedup_ngram_seg")(spark, dir).count()),
-        // trained-tokenizer economics (round-13, verdict #5): the merge
+        // trained-tokenizer economics: the merge
         // LOOP is the train-time cost, paid once into the vocab table;
         // encode-from-table is a join + rollup — contrast with the
         // declared text_bpe_encode row above, which re-runs the loop
@@ -258,7 +231,7 @@ object ScaleCheck {
       clean()
       r
     }
-    // Curation lifecycle pricing (round-12 verdict #2): the declared
+    // Curation lifecycle pricing: the declared
     // lifecycle queries are SELF-CONTAINED oracle contracts — each pays
     // its PRIOR run per invocation, so their bench numbers fold two
     // runs into one line. This table splits the economics on the same
@@ -294,7 +267,7 @@ object ScaleCheck {
         "delta-only (1% batch vs prior)" ->
           t(ops.CurationRun.deltaRun(spark, dir, rootC, "prior99", "delta99",
             thr99, 8, Int.MaxValue).collect()),
-        // frozen-stat admission (round-13, verdict #1): the asset build
+        // frozen-stat admission: the asset build
         // is the one-time prior-run cost; the PROBE is what a
         // deployment pays per batch — and it tracks the BATCH size
         // (contrast the two admit rows) where delta-only tracks the
@@ -313,7 +286,7 @@ object ScaleCheck {
       finally Seq(rootA, rootB, rootC).foreach(r =>
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(r)))
     }
-    // Two-stage server quality (round-15 verdict #6): stage-1 shortlist
+    // Two-stage server quality: stage-1 shortlist
     // cost vs end-to-end cost, plus recall@k against the exact brute
     // truth, at PRODUCTION knobs (k=5, shortlist=64, prefixDims=32,
     // nprobe=4, nQueries=8). The stage-1 accessors are the servers' own
@@ -350,7 +323,7 @@ object ScaleCheck {
           ops.Similarity.prefixIvfShortlist(spark, dir),
           ops.Similarity.prefixIvfTopK(spark, dir)))
     }
-    // Lexical + hybrid serving (round-15 verdict #6): build vs probe
+    // Lexical + hybrid serving: build vs probe
     // split for the newest serving family. Build = the postings family
     // (postings + dl/df/corp stat tables) from a dropped state; probes
     // are the served bodies themselves (bm25TopKIndexed at the hybrid
@@ -384,7 +357,7 @@ object ScaleCheck {
     val base = run(src)
     val baseFc = forecast(spark, src)
     val baseWide = forecastWide(spark, src)
-    // AFTER indexBuilds/run (review-caught ordering): the delta run
+    // AFTER indexBuilds/run: the delta run
     // rides the persisted shingle segment index, so running this first
     // would (a) fold that one-time build into the "delta-only" number
     // this table exists to isolate, and (b) turn indexBuilds' "build
@@ -406,11 +379,11 @@ object ScaleCheck {
     val nDocsBase = ops.Tables.documents(spark, src).count()
     val nDocsScaled = ops.Tables.documents(spark, dst).count()
 
-    // CORE-SCALING TIER (round-17 verdict #5): the sf0.1 bench cannot
+    // CORE-SCALING TIER: the sf0.1 bench cannot
     // see parallel-efficiency regressions — every query is 0.5-3 s and
     // fixed-overhead-bound, so 8-vs-32-core ratios sit at ≈1 from job
     // dispatch alone. Here the measured family (plus the segmented
-    // ngram pair path, the one inverse-scaling row of r16) runs on the
+    // ngram pair path, suspected of scaling inversely) runs on the
     // 10× tier at BOTH core counts, each in a FRESH session. A fresh
     // session's catalog is empty, so its first ensure of a persisted
     // index drops and rebuilds the table; each sweep therefore forces
@@ -464,14 +437,14 @@ object ScaleCheck {
     }
     val (bt, st) = (base.map(_._2).sum, scaled.map(_._2).sum)
     sb ++= f"| **total** | $bt%.3f | $st%.3f | ${st / bt}%.1f× |\n\n"
-    sb ++= "## Core scaling at the 10× tier (round-17 verdict #5)\n\n"
+    sb ++= "## Core scaling at the 10× tier\n\n"
     sb ++= "The measured family re-run on the SCALED tier at 32 and 8 cores,\n"
     sb ++= "each sweep in a fresh session whose persisted `idx_*` tables (the\n"
     sb ++= "build pass's index rows) are rebuilt untimed before timing, so no row\n"
     sb ++= "pays an index build; memo relations those builds derive from are warm,\n"
     sb ++= "the rest cold, alike in both sweeps. ratio = t(8c)/t(32c): > 1 means\n"
     sb ++= "extra cores buy wall time, ≈ 1 fixed-overhead-bound at this size,\n"
-    sb ++= "< 1 over-partitioned (the r16 `dedup_ngram_seg` suspicion, measured\n"
+    sb ++= "< 1 over-partitioned (the `dedup_ngram_seg` suspicion, measured\n"
     sb ++= "here where partitions carry real data). The lifecycle runs\n"
     sb ++= "(`pipe_curation_*`, `pipe_takedown`, `log_store_roundtrip`) are NOT\n"
     sb ++= "in this table because they are serial BY CONTRACT — ordered manifest\n"
@@ -491,7 +464,7 @@ object ScaleCheck {
       sb ++= f"| $n | $b%.3f | $sc%.3f | ${sc / math.max(b, 0.001)}%.1f× |\n"
     }
     sb ++= "\n"
-    sb ++= "Curation lifecycle economics (base tier; round-12 verdict #2). The\n"
+    sb ++= "Curation lifecycle economics (base tier). The\n"
     sb ++= "declared `pipe_curation_delta` / `pipe_takedown` queries are\n"
     sb ++= "self-contained oracle contracts — each EXECUTES ITS PRIOR RUN per\n"
     sb ++= "invocation, so their bench lines fold prior + incremental into one\n"
@@ -501,8 +474,8 @@ object ScaleCheck {
     sb ++= "prior clusters; a removal re-elects keepers; the corpus-relative DF\n"
     sb ++= "cap shifts both ways), so decisions re-derive over the combined/\n"
     sb ++= "filtered corpus via the SERVED segment indexes. What IS O(batch) is\n"
-    sb ++= "the index maintenance an incremental run rides ('append shingle\n"
-    sb ++= "segment' vs 'build shingle segments' in the index table above) and\n"
+    sb ++= "the admission path below: its probe reads the committed digest and\n"
+    sb ++= "segment indexes, and an admitted batch appends only its digests;\n"
     sb ++= "what is AVOIDED is any from-scratch index derivation. Rows below are\n"
     sb ++= "single measurements in one process: the full-run row reads warmer\n"
     sb ++= "memoized corpus relations than the slice rows (documented\n"
@@ -513,7 +486,7 @@ object ScaleCheck {
     sb ++= "(at 60k docs the corpus pass dominates; the incremental design\n"
     sb ++= "pays off where the INDEX build does — at scale, where re-deriving\n"
     sb ++= "the shingle index per batch is the forbidden cost).\n"
-    sb ++= "Round-13 rows — the O(batch) admission path the exact delta\n"
+    sb ++= "Admission rows — the O(batch) path the exact delta\n"
     sb ++= "deliberately lacks: 'admit-only' probes the FROZEN committed\n"
     sb ++= "prior statistics (persisted digest index + base-slice shingle\n"
     sb ++= "segments; asset builds priced separately as the one-time prior\n"
@@ -530,7 +503,7 @@ object ScaleCheck {
     sb ++= "| stage | s |\n|---|---|\n"
     curation.foreach { case (n, t) => sb ++= f"| $n | $t%.3f |\n" }
     sb ++= "\n"
-    sb ++= "Two-stage server quality (round-15 verdict #6): stage-1 shortlist\n"
+    sb ++= "Two-stage server quality: stage-1 shortlist\n"
     sb ++= "cost vs end-to-end cost and recall@5 against the exact brute truth,\n"
     sb ++= "at production knobs (k=5, shortlist=64, prefixDims=32, nprobe=4,\n"
     sb ++= "nQueries=8). Stage-1 accessors are the servers' own shared bodies,\n"
@@ -545,7 +518,7 @@ object ScaleCheck {
         sb ++= f"| $n | $b1%.3f | $bt2%.3f | $br%.3f | $s1%.3f | $st2%.3f | $sr%.3f |\n"
     }
     sb ++= "\n"
-    sb ++= "Lexical + hybrid serving (round-16 verdict #6): the BM25/hybrid\n"
+    sb ++= "Lexical + hybrid serving: the BM25/hybrid\n"
     sb ++= "family priced like the other two-stage servers — build (postings\n"
     sb ++= "table + dl/df/corp stat side tables, from dropped state) vs probe\n"
     sb ++= "(the served bodies at the hybrid pool depth, 8 queries). Fusion\n"

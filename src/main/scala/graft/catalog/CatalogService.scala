@@ -18,6 +18,7 @@ import graft.storage.{StateRecord, VersionChain}
   *    user created on first start (auth.py:91-101)
   *  - tokens are 32 random url-safe bytes (auth.py:124), expire after 24 h,
   *    and expired tokens are deleted lazily on verification (auth.py:135-155)
+  *    and swept at each login
   *  - containers/sessions are owned; creation of a duplicate fails
   *    (conflict), session creation requires container ownership
   *    (auth.py:170-203); access checks compare owner ids (auth.py:205-223)
@@ -287,6 +288,9 @@ final class CatalogService(chain: VersionChain[StateRecord], clock: Clock = Cloc
     users.get(userId).exists(_.passwordHash == sha256Hex(password))
   }
 
+  /** Mints a token. The same delta drops every expired token:
+    * [[verifyToken]] expires a token only when it is presented, so an
+    * abandoned login would otherwise stay in every checkpoint. */
   def createToken(userId: String, expiresInHours: Int = 24): String = transact {
     val bytes = new Array[Byte](32)
     rng.nextBytes(bytes)
@@ -294,8 +298,12 @@ final class CatalogService(chain: VersionChain[StateRecord], clock: Clock = Cloc
     val now = clock.instant()
     val h = sha256Hex(tok)
     val t = Token(h, userId, now, now.plusSeconds(expiresInHours.toLong * 3600))
+    val d = new Delta()
+    tokens.filter(_._2.expiresAt.isBefore(now)).keys.toList.foreach { k =>
+      tokens.remove(k); d.delToken(k)
+    }
     tokens(h) = t
-    (tok, Some(new Delta().putToken(t)))
+    (tok, Some(d.putToken(t)))
   }
 
   /** Some(userId) if the token exists and is unexpired; expired tokens are
@@ -315,18 +323,6 @@ final class CatalogService(chain: VersionChain[StateRecord], clock: Clock = Cloc
     val h = sha256Hex(token)
     if (tokens.remove(h).isDefined) ((), Some(new Delta().delToken(h)))
     else ((), None)
-  }
-
-  def cleanupExpiredTokens(): Unit = transact {
-    val now = clock.instant()
-    val dead = tokens.collect { case (k, t) if t.expiresAt.isBefore(now) => k }
-    dead.foreach(tokens.remove)
-    if (dead.isEmpty) ((), None)
-    else {
-      val d = new Delta()
-      dead.foreach(d.delToken)
-      ((), Some(d))
-    }
   }
 
   // ---- containers / sessions (auth.py:170-249) ----

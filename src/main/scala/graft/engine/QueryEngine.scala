@@ -65,20 +65,6 @@ final class QueryEngine(store: LogTier) {
     if (columns.isEmpty) filtered else filtered.select(columns.map(col): _*)
   }
 
-  /** Typed view of [[readLogs]]: `Dataset[LogRecord]` with a case-class
-    * Encoder — the type-safe surface for JVM-side callers (compile-time
-    * field access, typed folds). `as[T]` binds by name and only swaps
-    * the edge deserializer: the plan underneath is IDENTICAL to the
-    * untyped read (same pushdown, same pruning), so type safety costs
-    * nothing until rows actually cross to the JVM. */
-  def readLogsTyped(container: String, session: String,
-                    start: Option[Instant] = None, end: Option[Instant] = None,
-                    filters: Seq[(String, String, Any)] = Seq.empty)
-      : org.apache.spark.sql.Dataset[graft.model.LogRecord] =
-    readLogs(container, session, start, end, filters)
-      .as[graft.model.LogRecord](
-        org.apache.spark.sql.Encoders.product[graft.model.LogRecord])
-
   /** Batched streaming read (S3/S5, §2.5 pagination): rows arrive
     * partition-at-a-time on the driver via `toLocalIterator` — the
     * Spark counterpart of the reference's `scanner.to_batches(

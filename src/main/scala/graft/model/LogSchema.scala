@@ -4,17 +4,6 @@ import java.time.Instant
 import java.time.format.DateTimeFormatter
 import org.apache.spark.sql.types._
 
-/** Typed row for the `Dataset[LogRecord]` facade — field names and order
-  * mirror [[LogSchema.schema]] exactly, so `df.as[LogRecord]` binds by
-  * name with no plan change (the Encoder only swaps the edge
-  * deserializer; pushdown/pruning are untouched). */
-final case class LogRecord(
-    timestamp: java.sql.Timestamp,
-    level: String,
-    message: String,
-    container: String,
-    session: String)
-
 /** The engine's one fixed data-plane schema — the Spark equivalent of the
   * reference's LOG_SCHEMA (reference schema.py:4-10): timestamp(µs, UTC),
   * level, message, plus the denormalized namespace columns container and
@@ -38,14 +27,9 @@ object LogSchema {
   val fileSchema: StructType = StructType(dataFields)
 
   /** container/session IDs: alphanumeric plus - and _
-    * (reference main.py:110,165). `\A`/`\z` anchors, NOT `^`/`$`: the
-    * ONE pattern is shared with regex-FIND consumers (Spark `rlike`),
-    * where `$` also matches before a trailing newline — under the old
-    * anchors "abc\n" validated via rlike but threw in the store's
-    * full-match require, crash-looping a streaming batch forever
-    * (round-7 review). */
-  private[graft] val IdPattern = "\\A[A-Za-z0-9_-]+\\z"
-  private val IdRe = IdPattern.r
+    * (reference main.py:110,165), matched against the WHOLE id, so a
+    * trailing newline is invalid too. */
+  private val IdRe = "[A-Za-z0-9_-]+".r
   def isValidId(id: String): Boolean = id != null && IdRe.matches(id)
 
   /** ISO-8601 parse accepting a Z suffix or an explicit offset (reference

@@ -116,12 +116,8 @@ object CurationRun {
   }
 
   /** Whether a run chain completed (its CITE pin is committed) — the
-    * resume short-circuit [[Takedown]] needs BEFORE re-invoking
-    * [[takedownRun]]: after the orchestration's store purge + expire,
-    * the chain's pinned version may be expired, and takedownRun's
-    * final readAt would throw on a re-run even though the chain's
-    * artifacts are all committed. */
-  private[graft] def chainComplete(s: SparkSession, root: String, runId: String): Boolean =
+    * fixtures' ensure test: a completed chain is reused, never re-run. */
+  private def chainComplete(s: SparkSession, root: String, runId: String): Boolean =
     committedPin(new graft.storage.ManifestLog(s, root), runId).isDefined
 
   /** The committed pin of a chain's CITE stage, if the chain completed
@@ -173,7 +169,7 @@ object CurationRun {
       v
     }
 
-  /** INCREMENTAL curation delta (round-10 verdict #4): admit the
+  /** INCREMENTAL curation delta: admit the
     * post-`thr` batch against a PRIOR run's committed chain and emit
     * only what changed, chained to the prior citation:
     *
@@ -205,7 +201,7 @@ object CurationRun {
     * the bridge/revocation path is spec-proven on a crafted corpus).
     * Resumable exactly like [[run]] — every stage a tagged idempotent
     * append, later stages derive from committed artifacts. */
-  /** Per-stage wall-clock attribution (round-16 verdict #2): one
+  /** Per-stage wall-clock attribution: one
     * stderr line per named stage of a lifecycle operator, so a bench
     * or SCALECHECK run can attribute `pipe_curation_delta`'s cost
     * (fixture ensure vs decision gates+admission vs receipt vs seal)
@@ -407,7 +403,7 @@ object CurationRun {
       .orderBy(col("shard_id"))
   }
 
-  /** ADMISSION run (round-13) — the O(batch) sibling of [[deltaRun]]:
+  /** ADMISSION run — the O(batch) sibling of [[deltaRun]]:
     * admit the post-`thr` batch against the prior chain's FROZEN
     * statistics ([[Pipeline.admissionFrozenIndexed]] — persisted
     * digest index + base-slice shingle segments) and commit the
@@ -458,7 +454,7 @@ object CurationRun {
     // (keeps only, per the stage doc — a rejected doc's digest must NOT
     // enter the accepted set, or a later copy of it would be classified
     // exact_dup instead of by its own gate, skewing the decision mix
-    // and n_divergent; round-13 advice). Replay-safe: A1 is committed
+    // and n_divergent). Replay-safe: A1 is committed
     // above, and the append's own idempotency makes a resumed-run
     // re-append a no-op.
     IndexTables.appendToAdmissionDigests(s, dir, thr,
@@ -506,11 +502,10 @@ object CurationRun {
 
   // ---- persistent PRIOR-RUN fixtures for the lifecycle queries ------
   //
-  // Round-13 verdict #5: `pipe_takedown`/`pipe_curation_delta` timed a
-  // temp store + a FULL prior curation run + the operator in one row —
-  // fixture churn conflated with operator cost, and the rows sat at
-  // ~8 s while the operator itself is ~half that. The prior-run store
-  // is now a DETERMINISTIC, REUSABLE fixture per (dir, flavor):
+  // Timing a temp store + a FULL prior curation run + the operator in
+  // one row would conflate fixture churn with operator cost (~8 s
+  // against an operator of ~half that). The prior-run store is a
+  // DETERMINISTIC, REUSABLE fixture per (dir, flavor):
   //  - ensure semantics — built once (resumably, via run()'s
   //    idempotency tags) under the scratch dir, reused by every later
   //    invocation in any process; Bench prices it as an explicit
@@ -526,15 +521,15 @@ object CurationRun {
   private def freshOperatorRunId(): String =
     s"run2_p${ProcessHandle.current().pid()}_${fixtureRunSeq.incrementAndGet()}"
 
-  /** Cheap corpus fingerprint folded into the fixture root (round-14
-    * advice): keyed on the dir tag ALONE, a corpus regenerated at the
+  /** Cheap corpus fingerprint folded into the fixture root: keyed on
+    * the dir tag ALONE, a corpus regenerated at the
     * same path within one boot would reuse a stale run1 chain and the
     * lifecycle receipts would silently diverge from the oracle (which
     * replays the CURRENT corpus). (row count, max doc_id) is read
     * FRESH on every ensure — never memoized, that would recreate the
     * staleness — and changes whenever the generator re-emits the
-    * table; a mismatch lands on a new root and rebuilds. Round-16
-    * ADVICE: (count, max id) alone missed the exact staleness class the
+    * table; a mismatch lands on a new root and rebuilds. (count, max
+    * id) alone would miss the exact staleness class the
     * fingerprint targets — a corpus regenerated at the same path with
     * identical shape but different TEXT — so a content-sensitive term
     * (total text bytes) is folded in; still one cheap aggregate per

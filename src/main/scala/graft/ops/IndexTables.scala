@@ -32,10 +32,10 @@ object IndexTables {
 
   /** Collision-resistant dir tag for table names: 12 hex chars of the
     * dir's md5 — shared by every per-dir table namer in the engine.
-    * (The round-7 review caught the `math.abs(hashCode)` version:
-    * 32-bit String.hashCode collisions are easy to construct and would
-    * silently serve one dir's index for another; and abs(Int.MinValue)
-    * is negative, an invalid identifier.) */
+    * (Not `math.abs(hashCode)`: 32-bit String.hashCode collisions are
+    * easy to construct and would silently serve one dir's index for
+    * another; and abs(Int.MinValue) is negative, an invalid
+    * identifier.) */
   private[ops] def dirTag(dir: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8"))
@@ -49,10 +49,9 @@ object IndexTables {
 
   private def ensureWith(s: SparkSession, name: String)
                         (persist: String => Unit): String = synchronized {
-    // a crashed staged-swap (see stagedOverwrite) may have dropped the
-    // final table with the complete staged replacement still present —
-    // completing the rename here recovers rows (appended segments) a
-    // from-dir rebuild could NOT recompute
+    // a table left only as its complete `_stage` twin holds rows
+    // (appended batches) a from-dir rebuild could NOT recompute —
+    // complete the rename instead of rebuilding
     repairStaged(s, name)
     if (!s.catalog.tableExists(name)) {
       deleteWarehouseDir(s, name)
@@ -77,54 +76,31 @@ object IndexTables {
     fs.exists(new org.apache.hadoop.fs.Path(warehouse, name))
   }
 
-  /** Complete a crashed staged-swap: final table missing but its
-    * `_stage` twin present and complete → rename it into place. */
+  /** Complete a crashed staged swap: final table missing but its
+    * `_stage` twin present and complete → rename it into place. No
+    * writer in this engine stages a table; the repair keeps a catalog
+    * that holds one servable. */
   private[ops] def repairStaged(s: SparkSession, name: String): Unit =
     if (!s.catalog.tableExists(name) && s.catalog.tableExists(s"${name}_stage"))
       s.sql(s"ALTER TABLE ${name}_stage RENAME TO $name")
 
-  /** Replace `name` through a staging table so a failure mid-rewrite
-    * never loses rows that only exist in the table (appended segments
-    * are not reconstructible from the source dir): the replacement is
-    * fully written under `<name>_stage` BEFORE the live table is
-    * dropped, and the remaining window is two metastore ops, repaired
-    * at the next ensure/compact by [[repairStaged]]. (A deployment
-    * whose warehouse is a transactional table format gets atomic
-    * overwrite from the format itself; this staging bounds the
-    * exposure on a plain session-catalog warehouse.) */
-  private def stagedOverwrite(s: SparkSession, name: String)
-                             (write: String => Unit): Unit = {
-    val staged = s"${name}_stage"
-    s.sql(s"DROP TABLE IF EXISTS $staged")
-    deleteWarehouseDir(s, staged) // stale dir from a previous JVM
-    write(staged)
-    s.sql(s"DROP TABLE IF EXISTS $name")
-    deleteWarehouseDir(s, name) // DROP misses a catalog-unknown stale dir
-    s.sql(s"ALTER TABLE $staged RENAME TO $name")
-  }
-
-  /** In-process serialization of index MUTATIONS (append vs compact)
-    * per table: compaction snapshots the table and rewrites it — an
-    * append landing between the two would be silently erased by the
-    * overwrite. Cross-process, the SAME exclusion is enforced by the
-    * CAS maintenance lease ([[compactionLease]]): a multi-gateway
-    * deployment wraps index compaction in `lease.withLease { ... }`
-    * so one rewriter at a time touches a table, with appends quiesced
-    * for the window (exactly like the rebuild path); the in-process
-    * lock makes the single-process deployment — streaming gate plus
-    * maintenance thread in one JVM — safe by construction. */
+  /** In-process serialization of index MUTATIONS per table: an
+    * append's replay anti-join and its write must not interleave with
+    * a concurrent append, and the ANN rebuild snapshots a generation's
+    * tables under the lock, so an append or delete landing between
+    * snapshot and flip would otherwise be lost to the swap.
+    * Cross-process, rebuilds exclude each other through the CAS
+    * maintenance lease ([[compactionLease]]). */
   private val tableLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private def withTableLock[A](name: String)(body: => A): A =
     tableLocks.computeIfAbsent(name, _ => new Object).synchronized(body)
 
-  /** Cross-process compaction lease for this data dir's index tables,
+  /** Cross-process maintenance lease for this data dir's index tables,
     * rooted in the shared warehouse (`_maintenance/` — the underscore
     * prefix keeps it invisible to table listings, like every metadata
-    * sidecar in this engine). All index tables of one data dir share
-    * one lease: their compactions run on the same maintenance cadence
-    * anyway, and a finer per-table lease would just multiply CAS
-    * traffic. TTL must exceed the longest single compaction rewrite
-    * (holders renew between tables for longer windows). */
+    * sidecar in this engine). One lease per data dir: a finer
+    * per-table lease would just multiply CAS traffic. TTL must exceed
+    * the longest single rewrite ([[rebuildAnnIndexes]]). */
   def compactionLease(s: SparkSession, dir: String, holderId: String,
                       ttlMs: Long = 10 * 60 * 1000L): graft.storage.MaintenanceLease = {
     val warehouse = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
@@ -188,79 +164,6 @@ object IndexTables {
   private def chunkKeys(sig: DataFrame, nChunks: Int): DataFrame =
     Dedup.blockKeys(sig, Dedup.Blocking(nChunks - 1, nChunks))
 
-  /** INCREMENTAL index maintenance: append newly-ingested documents'
-    * chunk rows to the persisted chunk index WITHOUT a rebuild — the
-    * operation an ingest pipeline runs per accepted batch so the
-    * admission gate and the dedup consumers see new documents
-    * immediately. The append writes with the SAME bucket spec, so
-    * bucket-local join locality is preserved (consumers still plan
-    * Exchange-free; IndexTablesSpec proves it over an appended table).
-    * What appends DO cost is one extra file per touched bucket: the
-    * write-time "one file per bucket" sort-elision degrades until the
-    * next rebuild re-clusters — the small-file/re-cluster trade every
-    * table format makes for incremental ingest (call
-    * [[ensureChunkIndex]] after dropping the table, or rebuild on a
-    * maintenance cadence, to restore the single-file layout).
-    * `newDocs` is a (doc_id, text) relation; returns rows appended. */
-  def appendToChunkIndex(s: SparkSession, dir: String, nChunks: Int,
-                         newDocs: DataFrame): Long =
-    appendChunkSignatures(s, dir, nChunks, Dedup.simhashOf(newDocs))
-
-  /** [[appendToChunkIndex]] over an already-signed (doc_id, simhash)
-    * relation — the streaming admission gate's shape: it computed the
-    * signatures to probe the index, and the ADMITTED ones go straight
-    * back in (re-hashing the text would double the work). The append
-    * is AT-LEAST-ONCE: a replayed batch adds duplicate rows, which the
-    * presence-based GATE tolerates (a duplicate candidate still flags
-    * the same pair), while the exactly-once dedup REPORT twins read a
-    * rebuilt index — exactly the replica-vs-ledger split every search
-    * deployment makes between its serving segments and its batch
-    * rebuilds. */
-  def appendChunkSignatures(s: SparkSession, dir: String, nChunks: Int,
-                            sigs: DataFrame): Long = {
-    val name = ensureChunkIndex(s, dir, nChunks)
-    // checkpoint: the chunk explosion feeds the returned count AND the
-    // write — without it the plan (and its re-read of the micro-batch
-    // source) executes twice per append
-    val rows = chunkKeys(sigs, nChunks).localCheckpoint()
-    val n = rows.count()
-    if (n > 0) withTableLock(name) {
-      writeBucketed(rows, name, Seq("j", "ck"), "append")
-      refreshBoth(s, sigs, name)
-    }
-    n
-  }
-
-  /** MAINTENANCE compaction for the chunk index — the batch-side half
-    * of the at-least-once bargain [[appendChunkSignatures]] strikes:
-    * replayed gate batches accumulate exact duplicate (doc_id, simhash,
-    * j, ck) rows (harmless to the presence-based gate, wasted bytes to
-    * everyone), and every append adds one file per touched bucket,
-    * degrading the write-time sort-elision. Compaction collapses the
-    * duplicates with `distinct()` — chunk rows are deterministic per
-    * (doc, j), so byte-identical rows can ONLY be replays — and
-    * rewrites the table through the shared bucket spec, restoring the
-    * one-file-per-bucket clustered layout. Runs on a maintenance
-    * cadence, exactly like a search deployment's segment merge; the
-    * rewrite cost is the table's size, not the corpus's (signatures,
-    * ~16 B/doc × nChunks). Returns (rows before, rows after). */
-  def compactChunkIndex(s: SparkSession, dir: String, nChunks: Int): (Long, Long) = {
-    val name = ensureChunkIndex(s, dir, nChunks)
-    withTableLock(name) { // appends landing mid-rewrite would be erased
-      val before = s.table(name).count()
-      // ONE checkpoint, of the result only: distinct() reads the table
-      // files directly, and the materialized rows are what lets the
-      // staged rewrite replace the files they came from
-      val deduped = s.table(name).distinct().localCheckpoint()
-      try {
-        val after = deduped.count()
-        stagedOverwrite(s, name)(writeBucketed(deduped, _, Seq("j", "ck"), "overwrite"))
-        s.catalog.refreshTable(name)
-        (before, after)
-      } finally Tables.unpersistCheckpoint(deduped) // maintenance must not pin table-sized blocks
-    }
-  }
-
   /** Invalidate the cached table relation in BOTH sessions that may
     * hold it: the caller's and the one the written rows derive from.
     * Inside a Structured Streaming `foreachBatch`, the batch DataFrame
@@ -288,30 +191,12 @@ object IndexTables {
       Dedup.minhashBands(Dedup.shingles(s, dir))
     }
 
-  /** INCREMENTAL minhash maintenance: band newly-ingested documents'
-    * signatures into the index — same at-least-once, bucket-preserving
-    * contract as [[appendChunkSignatures]] (minhash functions are
-    * deterministic per document, so replayed rows are byte-identical
-    * and a future compaction's `distinct()` collapses them). `newDocs`
-    * is (doc_id, text); returns band rows appended (3 per doc with
-    * shingles). */
-  def appendToMinhashIndex(s: SparkSession, dir: String, newDocs: DataFrame): Long = {
-    val name = ensureMinhashIndex(s, dir)
-    val rows = Dedup.minhashBands(Dedup.shinglesOf(newDocs)).localCheckpoint()
-    val n = rows.count()
-    if (n > 0) withTableLock(name) {
-      writeBucketed(rows, name, Seq("bi", "bk"), "append")
-      refreshBoth(s, rows, name)
-    }
-    n
-  }
-
   /** DF-capped shingle index: (doc_id, s, n) bucketed by the 60-bit
     * shingle key — the join key of n-gram pair generation and of every
     * decontamination probe. Hot (>20%-DF) shingles never enter the
     * table, so the cap is part of the LAYOUT, exactly as a production
     * build would ship it. `n` is the doc's capped-shingle count,
-    * denormalized onto every row at build time (round-8): consumers
+    * denormalized onto every row at build time: consumers
     * get the size-compatibility prefilter and the Jaccard denominator
     * straight off the scan — no per-query size aggregate, no post-
     * aggregation joins. */
@@ -333,26 +218,20 @@ object IndexTables {
       sh.join(sizes, Seq("doc_id"))
     }
 
-  // ---- incremental shingle index (segment merge, round-9) ----
+  // ---- segmented shingle index ----
   //
-  // The DF-capped table above is REBUILD-style: its cap is
-  // corpus-relative, so correct maintenance requires updating document
-  // frequencies. The segmented form fixes that the way a search
-  // engine's segment architecture does: appends land as segments of
-  // UNCAPPED per-doc shingles plus per-segment DF stats, and the
-  // corpus-relative cap is applied at read/merge time over the SUMMED
-  // stats — segments hold disjoint docs, so per-segment DFs sum to
-  // exactly the corpus DF the rebuild would compute. Three tables:
+  // The DF-capped table above bakes its corpus-relative cap into the
+  // layout. The segmented form stores UNCAPPED per-doc shingles plus
+  // DF stats and applies the cap at read time over the SUMMED stats,
+  // so a consumer can cap a batch by an index's committed hot set
+  // (the frozen-admission probe). Three tables:
   //   idx_shingle_seg_<tag>   (doc_id, s)   bucketed by s — the join key
-  //   idx_shingle_df_<tag>    (s, df)       bucketed by s — per-append DFs
+  //   idx_shingle_df_<tag>    (s, df)       bucketed by s — DF stats
   //   idx_shingle_meta_<tag>  (seg, n_docs) tiny — the cap denominator
-  // The read-time price vs the rebuilt table: one DF-stats aggregate
+  // The read-time price vs the capped table: one DF-stats aggregate
   // (shingle-vocabulary-sized, Exchange-free off the bucketed stats
-  // table) and one per-doc size aggregate (the rebuilt table
-  // denormalized `n` at build time). A maintenance rebuild
-  // (ensureShingleIndex after drop) restores the flattened layout —
-  // the serving-segments vs batch-rebuild split every search
-  // deployment makes.
+  // table) and one per-doc size aggregate (the capped table
+  // denormalized `n` at build time).
 
   private def segName(dir: String) = s"idx_shingle_seg_${tag(dir)}"
   private def segDfName(dir: String) = s"idx_shingle_df_${tag(dir)}"
@@ -379,10 +258,7 @@ object IndexTables {
       // whole build instead of serving a seg table without stats
       Seq(segDfName(dir), segMetaName(dir)).foreach { t =>
         s.sql(s"DROP TABLE IF EXISTS $t")
-        val warehouse = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
-        val fs = warehouse.getFileSystem(s.sparkContext.hadoopConfiguration)
-        val p = new org.apache.hadoop.fs.Path(warehouse, t)
-        if (fs.exists(p)) fs.delete(p, true)
+        deleteWarehouseDir(s, t)
       }
       // checkpoint: the shingle derivation feeds the segment rows AND
       // the DF stats — one execution
@@ -392,129 +268,12 @@ object IndexTables {
           .agg(org.apache.spark.sql.functions.count(
             org.apache.spark.sql.functions.lit(1)).as("df")),
         segDfName(dir), Seq("s"), "overwrite")
-      writeMeta(s, dir, "base", docs.count(), "overwrite")
+      import s.implicits._
+      Seq(("base", docs.count())).toDF("seg", "n_docs")
+        .write.mode("overwrite").saveAsTable(segMetaName(dir))
       writeBucketed(sh, n, Seq("s"), "overwrite")
     }
     segName(dir)
-  }
-
-  private def writeMeta(s: SparkSession, dir: String, seg: String, nDocs: Long,
-                        mode: String): Unit = {
-    import s.implicits._
-    Seq((seg, nDocs)).toDF("seg", "n_docs")
-      .write.mode(mode).saveAsTable(segMetaName(dir))
-  }
-
-  /** INCREMENTAL shingle-index maintenance: append `newDocs`' shingles
-    * as a new segment with its own DF stats — no rebuild, and the
-    * read-time cap immediately reflects the grown corpus (a shingle
-    * crossing the 20% threshold because of this batch is dropped from
-    * EVERY doc at read time, exactly as a rebuild would). `newDocs` is
-    * (doc_id, text) with ids disjoint from the indexed corpus; returns
-    * shingle rows appended (0 for a detected replay). Docs too short
-    * to shingle still count into the cap denominator, as in the full
-    * build.
-    *
-    * REPLAY-SAFE under at-least-once delivery, like its siblings
-    * ([[appendChunkSignatures]]/[[appendToMinhashIndex]]): the segment
-    * id is a DIGEST of the batch's sorted doc-id set, so a redelivered
-    * batch maps to the same id and the meta table — one row per landed
-    * segment — is the guard: a seg id already present means the whole
-    * batch landed before, and re-appending it would double-count
-    * per-shingle DFs and inflate the cap denominator, silently
-    * changing served rows. (The digest agg collects the batch's ids on
-    * the driver — append batches are bounded by contract; the initial
-    * corpus goes through [[ensureShingleSegments]], never here.) The
-    * residual — two PROCESSES landing the same batch concurrently
-    * (the table lock is in-JVM) — is healed by compaction, which
-    * recomputes DF/meta from distinct rows. */
-  def appendToShingleIndex(s: SparkSession, dir: String, newDocs: DataFrame): Long = {
-    import org.apache.spark.sql.functions._
-    val name = ensureShingleSegments(s, dir)
-    val idRow = newDocs.agg(
-      sha2(concat_ws(",",
-        sort_array(collect_list(col("doc_id").cast("string")))), 256).as("seg"),
-      count(lit(1)).as("n")).head()
-    val (segId, nDocs) = (idRow.getString(0), idRow.getLong(1))
-    if (nDocs == 0) return 0L
-    withTableLock(name) {
-      val replay =
-        s.table(segMetaName(dir)).filter(col("seg") === segId).limit(1).count() > 0
-      if (replay) 0L
-      else {
-        val sh = Dedup.shinglesOf(newDocs).localCheckpoint()
-        val n = sh.count()
-        if (n > 0) {
-          writeBucketed(sh, name, Seq("s"), "append")
-          writeBucketed(
-            sh.groupBy(col("s")).agg(count(lit(1)).as("df")),
-            segDfName(dir), Seq("s"), "append")
-          refreshBoth(s, sh, name)
-          refreshBoth(s, sh, segDfName(dir))
-        }
-        writeMeta(s, dir, segId, nDocs, "append")
-        refreshBoth(s, newDocs, segMetaName(dir))
-        n
-      }
-    }
-  }
-
-  /** MAINTENANCE compaction for the segmented shingle index: fold the
-    * accumulated segments back into one. Appends leave one DF row per
-    * (shingle, append-batch) and one meta row per segment — correct
-    * (the read-time cap SUMS them) but ever-growing, and each append
-    * adds a file per touched bucket. Compaction dedups the seg table
-    * to distinct (doc_id, s) rows re-clustered to the
-    * one-file-per-bucket layout, RECOMPUTES the DF table from those
-    * distinct rows (DF *is* the count of distinct docs containing a
-    * shingle, so this heals any duplicate rows a cross-process
-    * double-landed batch left behind — the one replay case the append
-    * guard's in-JVM lock cannot stop), and rewrites the meta table to
-    * its distinct (seg, n_docs) rows in one file. Meta rows are
-    * RETAINED per segment, not folded: each row is the append guard's
-    * replay memory, so folding them would re-open the double-count
-    * window for any batch redelivered after a compaction; the table
-    * stays one tiny row per landed batch. Served rows are unchanged
-    * by construction — segments hold disjoint docs, so the recomputed
-    * DFs equal the summed per-segment DFs — the spec pins consumer
-    * row-identity across the fold. Returns (DF-stats rows before,
-    * after). */
-  def compactShingleSegments(s: SparkSession, dir: String): (Long, Long) = {
-    import org.apache.spark.sql.functions._
-    ensureShingleSegments(s, dir)
-    withTableLock(segName(dir)) { // appends landing mid-rewrite would be erased
-      // crashed-swap repair for the two tables that ride seg's guard
-      Seq(segDfName(dir), segMetaName(dir)).foreach(repairStaged(s, _))
-      // ONE checkpoint each, of exactly what the rewrites serve: the
-      // dedup'd seg relation feeds both its own rewrite and the DF
-      // recompute; the before-count reads the live table directly
-      val seg = s.table(segName(dir)).distinct().localCheckpoint()
-      val before = s.table(segDfName(dir)).count()
-      val folded = seg
-        .groupBy(col("s")).agg(count(lit(1)).as("df")).localCheckpoint()
-      val meta = s.table(segMetaName(dir))
-        .select(col("seg"), col("n_docs")).distinct().localCheckpoint()
-      try {
-        val after = folded.count()
-        // each table's fold is independently semantics-preserving (the
-        // read-time cap SUMS DF/meta rows), so any interleaving of the
-        // three staged swaps serves correct rows; the staging bounds
-        // the only real hazard — losing seg's appended segments to a
-        // failed rewrite
-        stagedOverwrite(s, segName(dir))(writeBucketed(seg, _, Seq("s"), "overwrite"))
-        stagedOverwrite(s, segDfName(dir))(writeBucketed(folded, _, Seq("s"), "overwrite"))
-        stagedOverwrite(s, segMetaName(dir)) { staged =>
-          meta.coalesce(1).write.mode("overwrite").saveAsTable(staged)
-        }
-        Seq(segName(dir), segDfName(dir), segMetaName(dir))
-          .foreach(s.catalog.refreshTable)
-        (before, after)
-      } finally { // maintenance must not pin table-sized blocks
-        Tables.unpersistCheckpoint(seg)
-        Tables.unpersistCheckpoint(folded)
-        Tables.unpersistCheckpoint(meta)
-      }
-    }
   }
 
   /** The merged, CAPPED view over all segments — (doc_id, s, n), the
@@ -549,24 +308,18 @@ object IndexTables {
   }
 
   /** The capped (doc_id, s) segment relation WITHOUT the size join —
-    * split out (round-17, guide §2.4) for the frozen-admission probe,
-    * which consumed [[mergedShingleViewEnsured]] only to drop the `n`
-    * column and re-derive its own sizes: the inner size join (an N:1
-    * Catalyst cannot prune) ran twice per probe for nothing. One
+    * for the frozen-admission probe, which re-derives its own sizes:
+    * consuming [[mergedShingleViewEnsured]] there would run the inner
+    * size join (an N:1 Catalyst cannot prune) for nothing. One
     * checkpointed pass; the sized view above builds on it unchanged. */
-  private[ops] def mergedShingleCappedEnsured(s: SparkSession, key: String): DataFrame = {
-    // the df/meta tables ride seg's ensure guard; a crashed compaction
-    // swap may have left either one staged — repair before reading
-    Seq(segDfName(key), segMetaName(key)).foreach(repairStaged(s, _))
+  private[ops] def mergedShingleCappedEnsured(s: SparkSession, key: String): DataFrame =
     s.table(segName(key))
       .join(org.apache.spark.sql.functions.broadcast(segmentHotSet(s, key)),
         Seq("s"), "left_anti")
       .localCheckpoint()
-  }
 
-  /** The SERVED hot-shingle set of a segment key: per-segment DFs
-    * summed (segments hold disjoint docs, so the sum IS the corpus DF)
-    * against the summed meta denominator — the one definition of the
+  /** The SERVED hot-shingle set of a segment key: DF stats summed per
+    * shingle against the summed meta denominator — the one definition of the
     * segment-side 20% rule, shared by [[mergedShingleViewEnsured]] and
     * the frozen-admission probe (which must cap BATCH shingles by the
     * INDEX's committed hot set, not a re-derived one). */
@@ -608,7 +361,7 @@ object IndexTables {
     }
 
   /** UNIGRAM POSTINGS (inverted index) table — (term, doc_id, tf)
-    * bucketed by term (round 15): the lexical retrieval family's
+    * bucketed by term: the lexical retrieval family's
     * durable form. The corpus-sized tokenize + per-(term, doc) count
     * is paid once here; every BM25 probe equi-joins its (tiny,
     * broadcast) query-term set against the bucketed table. One row
@@ -620,11 +373,10 @@ object IndexTables {
     }
 
   /** The postings index's four-table family: the postings rows plus
-    * the three CORPUS-STAT side tables a BM25 probe needs (round-16
-    * verdict #1 — previously the probe re-aggregated the corpus-sized
-    * postings relation for dl/df/N per query). All four are built,
-    * appended, purged and compacted TOGETHER, so a probe reading them
-    * sees one corpus membership. */
+    * the three CORPUS-STAT side tables a BM25 probe needs, so the
+    * probe never re-aggregates the corpus-sized postings relation for
+    * dl/df/N per query. All four are built and appended TOGETHER, so a
+    * probe reading them sees one corpus membership. */
   final case class PostingsTables(postings: String, dl: String,
                                   df: String, corp: String)
 
@@ -647,10 +399,8 @@ object IndexTables {
     * member of the postings family, built on demand (phrase queries
     * need positions; BM25 deployments that never phrase-match skip its
     * tokens-not-docs row count). Once present it is maintained WITH
-    * the family: appends add the batch's positional rows, purge
-    * rewrites it (a takedown must leave no positional trace), and
-    * compaction collapses replayed rows — all under the same
-    * lease/lock discipline, keyed off `tableExists`. */
+    * the family: appends add the batch's positional rows under the
+    * same table lock, keyed off `tableExists`. */
   def ensurePositionalPostings(s: SparkSession, dir: String): String =
     ensure(s, positionalName(dir), Seq("term")) {
       TextAnalysis.positionalPostings(s, dir)
@@ -684,20 +434,17 @@ object IndexTables {
     t
   }
 
-  /** INCREMENTAL postings maintenance (round-16 verdict #4): tokenize a
-    * newly-ingested (doc_id, text) batch into its term buckets and the
-    * stat side tables WITHOUT a rebuild — the same bucket-preserving
-    * append contract as the minhash band and chunk indexes, completing
-    * the lexical index's membership story (previously build-once +
-    * purge: docs admitted after the build were visible to the hybrid
-    * vector leg but invisible to BM25 — the round-15 ADVICE staleness).
-    * Replay-safe: the batch anti-joins the dl table (the per-doc
-    * membership relation), so a redelivered batch appends nothing.
-    * WRITE ORDER is the crash contract: dl (the replay gate) commits
-    * FIRST — a crash mid-append leaves a doc counted in stats but
-    * absent from serving (bounded staleness, healed by
-    * [[compactPostingsIndex]]), never double-counted tf rows, which
-    * would mis-score live queries. Returns postings rows appended. */
+  /** INCREMENTAL postings maintenance: tokenize a newly-ingested
+    * (doc_id, text) batch into its term buckets and the stat side
+    * tables WITHOUT a rebuild, so docs appended to the vector index
+    * are visible to BM25 too (the hybrid's two legs share one
+    * membership). Replay-safe: the batch anti-joins the dl table (the
+    * per-doc membership relation), so a redelivered batch appends
+    * nothing. WRITE ORDER is the crash contract: dl (the replay gate)
+    * commits FIRST — a crash mid-append leaves a doc counted in stats
+    * but absent from serving until a rebuild, never double-counted tf
+    * rows, which would mis-score live queries. Returns postings rows
+    * appended. */
   def appendToPostingsIndex(s: SparkSession, dir: String,
                             newDocs: DataFrame): Long = {
     import org.apache.spark.sql.functions._
@@ -713,9 +460,9 @@ object IndexTables {
           if (n > 0) {
             // positional rows (when the optional table exists) commit
             // BEFORE the dl gate: a crash between them makes a replay
-            // re-append byte-identical (doc_id, pos, term) rows —
-            // collapsed by compaction's distinct() — whereas the
-            // reverse order would leave a doc phrase-invisible forever
+            // re-append byte-identical (doc_id, pos, term) rows until a
+            // rebuild — whereas the reverse order would leave a doc
+            // phrase-invisible forever
             // (positions are not derivable from the tf ledger; their
             // source of truth is the batch text, which the dl gate
             // blocks from redelivery)
@@ -741,166 +488,7 @@ object IndexTables {
     }
   }
 
-  /** MAINTENANCE compaction for the postings family — the batch-side
-    * half of the append contract: collapses replayed byte-identical
-    * postings rows (`distinct()` — (term, doc_id, tf) is deterministic
-    * per doc), RE-DERIVES all three stat tables from the compacted
-    * postings rows (healing any crash-window stats drift: the postings
-    * table is the family's ledger, stats are derived replicas), and
-    * restores the one-file-per-bucket clustered layout appends degrade.
-    * Cross-process exclusion via the dir's maintenance lease, like
-    * every index rewrite; None when the lease is contended. Returns
-    * (postings rows before, after). */
-  def compactPostingsIndex(s: SparkSession, dir: String,
-                           holderId: String): Option[(Long, Long)] =
-    compactionLease(s, dir, holderId).withLease {
-      val t = postingsIndexTables(s, dir)
-      withTableLock(t.postings) {
-        val before = s.table(t.postings).count()
-        val deduped = s.table(t.postings).distinct().localCheckpoint()
-        try {
-          val after = deduped.count()
-          stagedOverwrite(s, t.postings)(
-            writeBucketed(deduped, _, Seq("term"), "overwrite"))
-          rewritePostingsStats(s, t, deduped)
-          // the optional positional table took the append path's
-          // dup-on-replay crash window BY DESIGN (positions commit
-          // before the dl gate) — this distinct() is its heal
-          val posT = positionalName(dir)
-          if (s.catalog.tableExists(posT)) {
-            val posDedup = s.table(posT).distinct().localCheckpoint()
-            try stagedOverwrite(s, posT)(
-              writeBucketed(posDedup, _, Seq("term"), "overwrite"))
-            finally Tables.unpersistCheckpoint(posDedup)
-          }
-          (Seq(t.postings, t.dl, t.df, t.corp) ++
-            Seq(posT).filter(s.catalog.tableExists))
-            .foreach(s.catalog.refreshTable)
-          (before, after)
-        } finally Tables.unpersistCheckpoint(deduped)
-      }
-    }
-
-  /** HYBRID MEMBERSHIP DRIFT audit (round-16, closing the round-15
-    * ADVICE gap: docs appended to only ONE of the hybrid's two index
-    * families skew the fusion, and nothing detected the divergence).
-    * Returns (vectorOnly, lexicalOnly): ids the served ANN frontier
-    * carries that the lexical membership (the dl table) lacks, and
-    * vice versa. Tombstoned ids are excluded from the vector side —
-    * unserved BY INTENT is not drift (the lexical analog is the
-    * takedown's synchronous postings purge, so a correctly-operated
-    * deployment holds BOTH sides at zero). Two anti-join counts over
-    * the bounded membership relations (one id row per doc, never
-    * corpus text); runs on the maintenance cadence next to the ANN
-    * drift gate, alarm on nonzero. */
-  def hybridMembershipDrift(s: SparkSession, dir: String): (Long, Long) = {
-    import org.apache.spark.sql.functions.col
-    val t = postingsIndexTables(s, dir)
-    val g = annGeneration(s, dir)
-    val vec = maskTombstonesAt(s, dir, g,
-      s.table(currentIvfTable(s, dir)).select(col("n_id").as("doc_id")).distinct(),
-      "doc_id")
-    val lex = s.table(t.dl).select(col("doc_id"))
-    (vec.join(lex, Seq("doc_id"), "left_anti").count(),
-     lex.join(vec, Seq("doc_id"), "left_anti").count())
-  }
-
-  /** Staged-rewrite the three stat tables from a (checkpointed)
-    * postings relation — shared by purge and compaction so the two
-    * can never diverge on the stats derivation. */
-  private def rewritePostingsStats(s: SparkSession, t: PostingsTables,
-                                   posts: DataFrame): Unit = {
-    import org.apache.spark.sql.functions._
-    val dl = posts.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    stagedOverwrite(s, t.dl)(writeBucketed(dl, _, Seq("doc_id"), "overwrite"))
-    stagedOverwrite(s, t.df)(writeBucketed(
-      posts.groupBy(col("term")).agg(count(lit(1)).as("df")),
-      _, Seq("term"), "overwrite"))
-    // corp rolls up the dl derivation (not a second corpus-sized
-    // groupBy over posts) — posts is checkpointed at both call sites,
-    // so this is one in-memory aggregate
-    stagedOverwrite(s, t.corp)(writeBucketed(
-      dl.agg(count(lit(1)).as("n"), sum(col("dl")).as("tl")),
-      _, Seq("n"), "overwrite"))
-  }
-
-  /** PURGE doc rows from the postings index (round 15) — the lexical
-    * analog of the ANN rebuild's purge: BM25 off the postings table is
-    * a SERVING surface, and ANN tombstones cannot cover it (they are
-    * generation-scoped and cleared by rebuilds the lexical index never
-    * participates in), so a takedown REWRITES the bucketed table
-    * without the removed docs — one index-sized bucketed job through
-    * the crash-safe staged swap, then re-derives the three stat side
-    * tables from the kept rows (a purged doc must leave the corpus
-    * stats too, or surviving docs' idf would still count it). Ensure-
-    * first: if the index was never built (or this JVM lost its
-    * registration), it is built and then purged, so the post-takedown
-    * state is always "index exists and excludes the removed set" — the
-    * invariant the audit asserts. In-process mutation exclusion via
-    * the table lock; cross-process exclusion via the dir's maintenance
-    * lease, ACQUIRED HERE (round-16 ADVICE: the lease was previously a
-    * caller convention Takedown itself didn't follow — two concurrent
-    * rewriters could interleave the staged swap and silently resurrect
-    * purged docs on a right-to-be-forgotten surface). Contention
-    * retries briefly, then FAILS LOUDLY — a takedown must never
-    * silently skip the rewrite. WRITE ORDER: postings (the serving
-    * membership) first, stats after — a crash between them leaves
-    * ghost docs in the stats (mild idf skew, healed by
-    * [[compactPostingsIndex]]), never a purged doc served. Returns
-    * postings rows removed. */
-  def deleteFromPostingsIndex(s: SparkSession, dir: String, ids: DataFrame): Long = {
-    require(ids.columns.length == 1,
-      s"deleteFromPostingsIndex expects a single id column, got [${ids.columns.mkString(", ")}]")
-    val t = postingsIndexTables(s, dir)
-    val holder = s"postings-purge-${ProcessHandle.current().pid()}-${Thread.currentThread().getId}"
-    val lease = compactionLease(s, dir, holder)
-    var attempt = 0
-    var result = Option.empty[Long]
-    while (result.isEmpty) {
-      val done = lease.withLease {
-        withTableLock(t.postings) {
-          import org.apache.spark.sql.functions.col
-          val del = ids.select(col(ids.columns.head).cast("long").as("doc_id"))
-            .distinct().localCheckpoint()
-          try {
-            val before = s.table(t.postings).count()
-            val kept = s.table(t.postings).join(del, Seq("doc_id"), "left_anti")
-              .localCheckpoint()
-            try {
-              stagedOverwrite(s, t.postings)(
-                writeBucketed(kept, _, Seq("term"), "overwrite"))
-              rewritePostingsStats(s, t, kept)
-              // the optional positional table is a serving surface of
-              // the same family: a takedown must leave no positional
-              // trace either
-              val posT = positionalName(dir)
-              if (s.catalog.tableExists(posT)) {
-                val keptPos = s.table(posT).join(del, Seq("doc_id"), "left_anti")
-                stagedOverwrite(s, posT)(
-                  writeBucketed(keptPos, _, Seq("term"), "overwrite"))
-              }
-              (Seq(t.postings, t.dl, t.df, t.corp) ++
-                Seq(posT).filter(s.catalog.tableExists))
-                .foreach(s.catalog.refreshTable)
-              before - s.table(t.postings).count()
-            } finally Tables.unpersistCheckpoint(kept)
-          } finally Tables.unpersistCheckpoint(del)
-        }
-      }
-      done match {
-        case Some(n) => result = Some(n)
-        case None =>
-          attempt += 1
-          if (attempt >= 5) throw new IllegalStateException(
-            s"deleteFromPostingsIndex: maintenance lease for $dir contended after $attempt attempts — " +
-              "refusing to skip a takedown rewrite; retry when the concurrent index maintenance completes")
-          Thread.sleep(200L * attempt)
-      }
-    }
-    result.get
-  }
-
-  /** TRAINED BPE VOCABULARY table (round-12 verdict #5): the final
+  /** TRAINED BPE VOCABULARY table: the final
     * (tok, n_syms) type state under `nMerges` merges, bucketed by the
     * token key — the committed tokenizer artifact. The merge LOOP (the
     * trainer's O(rounds) driver coordination) runs ONCE at build;
@@ -914,7 +502,7 @@ object IndexTables {
       TextAnalysis.encodedVocab(s, dir, nMerges)
     }
 
-  /** Persisted SemDeDup COMPONENT table (round 14): the (doc_id,
+  /** Persisted SemDeDup COMPONENT table: the (doc_id,
     * comp_id) semantic-duplicate cluster assignment at threshold
     * `tau`, bucketed by doc_id — every keeper election, cluster
     * report, and curation join probes by doc_id, so consumers are
@@ -944,7 +532,7 @@ object IndexTables {
     * `origin = 'batch'`, so the declared twins' base-only probe is
     * unaffected no matter which dir the gate evolves on.
     *
-    * REPLAY CAVEAT (round-13 advice): the append itself is idempotent,
+    * REPLAY CAVEAT: the append itself is idempotent,
     * but a probe-then-append consumer under at-least-once redelivery
     * must commit its DECISIONS before this call — a crash between the
     * append and the consumer's own commit means the redelivered batch
@@ -970,7 +558,7 @@ object IndexTables {
     }
   }
 
-  /** NARROW prefix-vector table (round-13): (vec_id, pv, pnorm) with
+  /** NARROW prefix-vector table: (vec_id, pv, pnorm) with
     * pv = the first `m` dims re-normed, zero prefixes excluded — the
     * stage-1 scan relation of two-stage Matryoshka serving
     * ([[Similarity.prefixTopKIndexed]]). The point is the WIDTH: at
@@ -1009,12 +597,9 @@ object IndexTables {
     * existing/new `list_id=` partitions). `newVecs` is (vec_id,
     * embedding); returns vectors appended.
     *
-    * Which indexes maintain incrementally is a property of the index's
-    * STATISTICS, not of this code: signature chunks (stateless per-doc
-    * rows) and IVF lists (frozen quantizer) append cleanly; the
-    * DF-capped shingle index does NOT — its cap is corpus-relative, so
-    * correct maintenance requires updating document frequencies (a
-    * periodic rebuild, exactly like a search engine's segment merge). */
+    * Appends are clean because the quantizer is frozen; the DF-capped
+    * shingle index could not append this way — its cap is
+    * corpus-relative, so new documents move every doc's served set. */
   def appendToIvfIndex(s: SparkSession, dir: String, newVecs: DataFrame): Long =
     appendAnnBatch(s, dir, "n_id", rowsPerVec = 1L,
       (g: Long) => annIvfTableAt(s, dir, g),
@@ -1024,9 +609,9 @@ object IndexTables {
     * under ONE resolved generation, then commit under the table lock
     * ONLY IF that generation is still current — a rebuild flipping the
     * pointer between the (expensive, unlocked) encode and the write
-    * would otherwise strand the batch in a superseded table the next
-    * GC deletes, while the rebuild's own snapshot (taken under the
-    * same lock) never saw it. On a retry the batch is re-encoded under
+    * would otherwise strand the batch in a superseded table nobody
+    * serves, while the rebuild's own snapshot (taken under the same
+    * lock) never saw it. On a retry the batch is re-encoded under
     * the NEW generation's parameters (the old encoding is meaningless
     * there). Rows whose ids the target table already carries are
     * anti-joined away on EVERY attempt, not just retries: the sibling
@@ -1123,7 +708,7 @@ object IndexTables {
       (g: Long) => annPqTableAt(s, dir, g),
       (g: Long) => Similarity.pqCodesForNewAt(s, dir, newVecs, g))
 
-  // ---- ANN index GENERATIONS: rebuild-while-serving (round 10) ----
+  // ---- ANN index GENERATIONS: rebuild-while-serving ----
   //
   // Appends run under a FROZEN quantizer + codebook — correct, but a
   // drifting corpus eventually degrades recall with no migration story.
@@ -1145,9 +730,8 @@ object IndexTables {
   //   - serving resolves the pointer at plan time and reads THAT
   //     generation's tables; a rebuild never touches a live table, so
   //     an in-flight query keeps serving its pinned generation
-  //     through the swap — old generations are dropped only by
-  //     [[gcAnnGenerations]], the snapshot-expiry grace every table
-  //     format gives its readers.
+  //     through the swap; superseded generations stay on disk (no
+  //     entry point sweeps them).
 
   private def annGenDir(s: SparkSession, dir: String): org.apache.hadoop.fs.Path = {
     val warehouse = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"))
@@ -1191,8 +775,8 @@ object IndexTables {
 
   /** The DURABLE frontier generation — highest claimed slot whose IVF
     * dir is physically present, independent of any session catalog.
-    * This is the generation a tombstone DELETE must target (round-15
-    * chaos-spec-caught): [[annGeneration]]'s catalog walk lags a flip
+    * This is the generation a tombstone DELETE must target:
+    * [[annGeneration]]'s catalog walk lags a flip
     * in another process (the claim file is durable, the registration
     * is not), so a post-append re-check keyed on it read the OLD
     * generation as current and a raced delete was silently resurrected
@@ -1234,7 +818,7 @@ object IndexTables {
   def currentPqTable(s: SparkSession, dir: String): String =
     annPqTableAt(s, dir, annGeneration(s, dir))
 
-  // ---- ANN DELETES: per-generation tombstones (round 11) ----
+  // ---- ANN DELETES: per-generation tombstones ----
   //
   // The third index mutation, completing the lifecycle (append →
   // rebuild → delete): a delete cannot rewrite the bucketed index
@@ -1252,7 +836,7 @@ object IndexTables {
     s"idx_ann_tomb_g${g}_${tag(dir)}"
 
   /** Tombstones are PATH-BASED parquet under the warehouse, never a
-    * catalog table (round-12, advice-caught): a session catalog's
+    * catalog table: a session catalog's
     * registration dies with the JVM while the data does not, so a
     * registration-keyed mask would silently resurrect every deletion
     * on restart — and a create-path that clears an
@@ -1280,7 +864,7 @@ object IndexTables {
     // moment's truth (empty) and the mask stays the identity
     s.read.schema("n_id BIGINT").parquet(annTombPath(s, dir, g).toString)
 
-  /** CONCURRENT-SAFE parquet append into a tombstone dir (round 15):
+  /** CONCURRENT-SAFE parquet append into a tombstone dir:
     * `df.write.mode("append")` from two PROCESSES shares one
     * `_temporary` committer staging path — job A's commit deletes job
     * B's staged files mid-write (the clash the chaos deleter hit).
@@ -1290,8 +874,7 @@ object IndexTables {
     * names — renames are per-file atomic, so a reader sees each part
     * fully or not at all, and two concurrent appends can never touch
     * each other's files. A crashed append leaves only a hidden
-    * staging dir (ignored by readers; swept by the generation GC with
-    * its dir). */
+    * staging dir (ignored by readers). */
   private def appendTombstones(s: SparkSession, df: DataFrame,
                                target: org.apache.hadoop.fs.Path): Unit = {
     val fs = target.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -1326,7 +909,7 @@ object IndexTables {
     * tombstones) — harness fixtures only: the shared warehouse is
     * persistent across processes, so a pricing fixture must remove
     * what it created or every run leaks a corpus copy plus three
-    * orphan tables (review-caught in ScaleCheck's delete pricing). */
+    * orphan tables (ScaleCheck's delete pricing). */
   def dropAnnFixtureTables(s: SparkSession, dir: String): Unit =
     Seq(annIvfName(dir, 0L), annPqName(dir, 0L), annTombName(dir, 0L)).foreach { n =>
       s.sql(s"DROP TABLE IF EXISTS $n")
@@ -1341,8 +924,8 @@ object IndexTables {
     * for its whole snapshot→flip window, so a delete either lands
     * before the snapshot (the rebuild folds it out) or retries into
     * the new generation (it can never fall into the gap and be
-    * silently resurrected by the swap). Cross-process (round-15: no
-    * shared table lock), the window is closed from both sides without
+    * silently resurrected by the swap). Cross-process (no shared
+    * table lock), the window is closed from both sides without
     * quiescing: the rebuild re-reads the old generation's durable
     * tombstone dir after its flip and carries late deletes forward,
     * and this method re-checks the generation AFTER its append commits
@@ -1362,10 +945,10 @@ object IndexTables {
     else deleteFromAnnIndex(s, dir,
       s.createDataFrame(ids.distinct.map(Tuple1(_))).toDF("n_id"))
 
-  /** [[deleteFromAnnIndex]] over a DISTRIBUTED id relation (round-13
-    * verdict #6): same locked, idempotent, generation-safe append, but
-    * the id set never materializes on the driver — the shape for a
-    * takedown whose removal set is predicate-derived from the corpus
+  /** [[deleteFromAnnIndex]] over a DISTRIBUTED id relation: same
+    * locked, idempotent, generation-safe append, but the id set never
+    * materializes on the driver — the shape for a removal set that is
+    * predicate-derived from the corpus
     * (request-sized sets go through the Seq overload, which delegates
     * here). The one id column is cast to long and deduplicated; the
     * anti-join and the appended parquet are executor-side end to end.
@@ -1374,7 +957,7 @@ object IndexTables {
     * state. */
   def deleteFromAnnIndex(s: SparkSession, dir: String, ids: DataFrame): Long = {
     import org.apache.spark.sql.functions.col
-    // Exactly one column, by contract (round-14 advice): silently
+    // Exactly one column, by contract: silently
     // taking columns.head would let a caller who forgot `.select`
     // tombstone whatever column happens to be first — a wrong-column
     // delete is unrecoverable once appended, so it must fail loudly.
@@ -1386,8 +969,8 @@ object IndexTables {
     // re-delivered batch may anti-join to 0 when the rebuild's
     // carry-forward already landed it in the new generation.
     var firstAck: Option[Long] = None
-    // Target resolution is DURABLE-frontier-first (round-15,
-    // chaos-spec-caught): the generation a delete must tombstone is the
+    // Target resolution is DURABLE-frontier-first: the generation a
+    // delete must tombstone is the
     // durable frontier — claim files make a concurrent rebuild's flip
     // visible across processes immediately, where the catalog-walked
     // serving generation lags and mis-aimed the re-check below. When a
@@ -1407,7 +990,7 @@ object IndexTables {
           // existence and the idempotency anti-join read the DURABLE
           // dir, never the session catalog: a dir surviving a JVM
           // restart holds real deletions that must be honored, not
-          // cleared (advice-caught — see annTombPath). parquet append
+          // cleared (see annTombPath). parquet append
           // creates the dir when absent, so there is no create branch
           // to get wrong.
           // checkpoint BEFORE count: the count and the parquet append
@@ -1440,7 +1023,7 @@ object IndexTables {
       }
       committed match {
         case Some(n) =>
-          // POST-APPEND flip re-check (round-15 verdict #7): in-JVM the
+          // POST-APPEND flip re-check: in-JVM the
           // table lock serializes against a rebuild, but a rebuild in
           // ANOTHER process holds no such lock — its snapshot→flip
           // window can straddle this append, resurrecting the deletion
@@ -1464,11 +1047,10 @@ object IndexTables {
     * generation's four tables at names nobody references yet, and
     * atomically flip the generation pointer. Runs under the
     * cross-process [[compactionLease]] (one rebuilder at a time;
-    * cross-process appends must quiesce for the window, the same
-    * operational contract as index compaction) and under the
+    * cross-process appends must quiesce for the window) and under the
     * in-process table locks (in-JVM appends serialize against the
     * snapshot instead of vanishing). Old-generation tables stay on
-    * disk for in-flight readers until [[gcAnnGenerations]].
+    * disk, so in-flight readers keep their pinned generation.
     *
     * Returns Some((newGeneration, vectorsReindexed)) on a completed
     * swap, None when the lease is contended. A crash anywhere before
@@ -1537,7 +1119,7 @@ object IndexTables {
             throw new IllegalStateException(
               s"ANN generation $next already claimed for $dir — a rebuild ran " +
                 "outside the maintenance lease; staged tables may be torn")
-          // TOMBSTONE CARRY-FORWARD (round-15 verdict #7): the in-JVM
+          // TOMBSTONE CARRY-FORWARD: the in-JVM
           // table locks don't exist across processes, so a remote
           // deleter can commit a tombstone append into a DURABLE
           // tombstone dir in the window between the masked snapshot
@@ -1574,140 +1156,5 @@ object IndexTables {
           if (newCw != null) Tables.unpersistCheckpoint(newCw)
         }
       } }
-    }
-
-  /** DRIFT-TRIGGERED rebuild gate: decides WHEN to rebuild a
-    * generation. The drift signal is SAMPLED RECALL:
-    * the served IVF-PQ index's top-k on `nQueries` sample queries,
-    * scored against the exact brute-force truth — one corpus pass per
-    * check, priced in SCALECHECK and meant for a coarse operator
-    * cadence (hours/days in production), never per query. Recall below
-    * `recallFloor` triggers [[rebuildAnnIndexes]] (staged generation
-    * swap under the maintenance lease; a contended lease skips this
-    * cadence and retries at the next).
-    *
-    * THRASH GUARD: if the rebuild lands and the floor is STILL
-    * unreachable (the corpus itself doesn't separate at k — retraining
-    * the same vectors again cannot do better), a marker records the
-    * produced generation and its vector count; while the served
-    * generation and count are unchanged the gate skips, so an
-    * unreachable floor costs ONE rebuild, not one per cadence. New
-    * appends (count change) or an external rebuild (generation change)
-    * re-arm the gate.
-    *
-    * Returns Some(rebuild result) when a rebuild ran and completed this
-    * call, None otherwise (healthy recall, contended lease, or guard). */
-  def maybeRebuildAnnIndexes(s: SparkSession, dir: String, holderId: String,
-                             recallFloor: Double = 0.7,
-                             nQueries: Int = 8, k: Int = 5,
-                             nprobe: Int = 2, shortlist: Int = 100): Option[(Long, Long)] = {
-    def pairs(df: DataFrame): Set[(Long, Long)] =
-      df.select("query_id", "neighbor_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    // nprobe/shortlist mirror the SERVING configuration: drift is "the
-    // index the queries actually hit got worse", so the probe must use
-    // the production knobs, not a friendlier shape. The ground truth
-    // ranks only the SERVABLE corpus — tombstoned vectors are masked
-    // out of the brute pass exactly as serving masks them, otherwise
-    // every legitimate delete reads as recall loss and triggers a
-    // rebuild that cannot restore it (review-caught). A deleted QUERY
-    // vector drops out of the truth sample the same way; the served
-    // side's hits for it then count toward no denominator.
-    def recallNow(): Double = {
-      val gNow = annGeneration(s, dir)
-      val servable = maskTombstonesAt(s, dir, gNow,
-        Similarity.vectors(s, dir), "vec_id")
-      val truth = pairs(Similarity.bruteForceTopKOver(servable, nQueries, k))
-      if (truth.isEmpty) 1.0
-      else (pairs(Similarity.ivfPqTopK(s, dir, nQueries, k, nprobe, shortlist)) & truth)
-        .size.toDouble / truth.size
-    }
-    val g = annGeneration(s, dir)
-    if (recallNow() >= recallFloor) return None
-    val count = s.table(annIvfTableAt(s, dir, g)).count()
-    val markerP = new org.apache.hadoop.fs.Path(annGenDir(s, dir), s"drift_g$g")
-    val fs = markerP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val guarded = fs.exists(markerP) && {
-      val in = fs.open(markerP)
-      val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      body.linesIterator.exists(_.trim == s"n=$count")
-    }
-    if (guarded) return None
-    rebuildAnnIndexes(s, dir, holderId) match {
-      case None => None // lease contended — the next cadence retries
-      case some @ Some((newGen, nVecs)) =>
-        if (recallNow() < recallFloor) {
-          val p = new org.apache.hadoop.fs.Path(annGenDir(s, dir), s"drift_g$newGen")
-          val out = fs.create(p, true)
-          try out.write(s"holder=$holderId\nn=$nVecs\n".getBytes("UTF-8")) finally out.close()
-        }
-        some
-    }
-  }
-
-  /** Drop every ANN generation's tables STRICTLY below the current
-    * pointer — the snapshot-expiry sweep. In-flight queries pinned to
-    * a dropped generation fail at scan time, so a deployment runs this
-    * on the same grace cadence as ManifestLog.expire (after the
-    * longest query deadline). Runs under the SAME maintenance lease as
-    * [[rebuildAnnIndexes]]: an unguarded sweep racing a rebuild could
-    * observe the pre-flip pointer, then classify the freshly-claimed
-    * live generation as a dead epoch and drop it (review-caught). The
-    * one claim listing is taken FIRST and the servable generation
-    * derived from it, so the two can never straddle a flip. Returns
-    * Some(tables dropped), None when the lease is contended. */
-  def gcAnnGenerations(s: SparkSession, dir: String,
-                       holderId: String = "ann-gc"): Option[Int] =
-    compactionLease(s, dir, holderId).withLease {
-      val claimed = maxClaimedGen(s, dir)
-      // Servability is derived from DURABLE table-directory presence,
-      // NOT session-catalog registration (same truth source as the
-      // claim files themselves): in a fresh JVM the newest generation's
-      // tables are never registered, and a catalog-derived `cur` would
-      // walk to 0 and classify the durable current generation as a dead
-      // epoch — the sweep below would then permanently destroy all
-      // post-rebuild data (advice-caught). Write-then-flip ordering
-      // guarantees every claimed generation's dirs were complete on
-      // disk at claim time, so a claimed slot with no dir is one a
-      // PREVIOUS sweep already removed — re-sweeping it is a no-op.
-      var cur = claimed
-      while (cur > 0L && !warehouseDirExists(s, annIvfName(dir, cur))) cur -= 1
-      // The sweep floor is the MINIMUM of the durable current
-      // generation and the generation THIS SESSION actually serves
-      // (review-caught): in a fresh JVM the session catalog has no
-      // gen ≥ 1 registrations, so annGeneration falls back to gen 0 —
-      // serving AND appending there — while `cur` is disk-derived. A
-      // disk-only floor would sweep gen 0 out from under this very
-      // process, permanently destroying vectors whose only home is
-      // the re-ensured gen-0 table. Sweeping below min(cur, served)
-      // is safe in both worlds: on a shared-metastore deployment
-      // served == cur and behavior is unchanged; on a session catalog
-      // a fresh process sweeps nothing until it can itself serve the
-      // durable frontier. Dead generations below a durable frontier a
-      // fresh process cannot read are collected by any process that
-      // CAN (the one that rebuilt, or any metastore-backed one).
-      val served = annGeneration(s, dir)
-      val sweepBelow = math.min(cur, served)
-      var dropped = 0
-      def sweep(g: Long): Unit = {
-        // tombstones die with their generation: a dropped generation's
-        // mask has no readers left, and the current generation was
-        // built from the masked snapshot
-        val names = Seq(annIvfName(dir, g), annPqName(dir, g), annTombName(dir, g)) ++
-          (if (g > 0L) Seq(annCentsName(dir, g), annCwName(dir, g)) else Seq.empty)
-        names.foreach { n =>
-          if (s.catalog.tableExists(n)) { s.sql(s"DROP TABLE $n"); dropped += 1 }
-          else if (warehouseDirExists(s, n)) dropped += 1
-          deleteWarehouseDir(s, n)
-        }
-      }
-      (0L until sweepBelow).foreach(sweep)
-      // Slots ABOVE the durable current generation are claimed-but-
-      // swept leftovers (no dirs → no-op deletes). Slots above the max
-      // claim would be a concurrent rebuild's in-progress staging, but
-      // under the lease there is no concurrent rebuild — still never
-      // touched, by construction of the range.
-      ((cur + 1L) to claimed).foreach(sweep)
-      dropped
     }
 }

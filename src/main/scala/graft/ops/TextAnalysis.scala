@@ -135,7 +135,7 @@ object TextAnalysis {
       .filter(col("term") =!= "")
       .groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("tf"))
 
-  /** BM25 LEXICAL RETRIEVAL (round 15) — the keyword-side twin of the
+  /** BM25 LEXICAL RETRIEVAL — the keyword-side twin of the
     * ANN family, completing hybrid search: per query document (vec-
     * family convention: doc_id < nQueries), the top-k OTHER documents
     * by Okapi BM25 over the query's terms (more-like-this — the shape
@@ -172,13 +172,13 @@ object TextAnalysis {
 
   /** [[bm25TopK]] served from the PERSISTED postings table
     * ([[IndexTables.ensurePostingsIndex]], bucketed by term) AND its
-    * corpus-stat SIDE TABLES (round-16 verdict #1): dl (per-doc
+    * corpus-stat SIDE TABLES: dl (per-doc
     * length, bucketed by doc_id), df (per-term document frequency,
     * bucketed by term) and the (n, tl) corpus totals are READ, never
     * re-derived — the probe pays no corpus-sized aggregate. The stat
-    * tables are delta relations maintained by the same append/purge
-    * paths as the postings rows ([[IndexTables.appendToPostingsIndex]]
-    * / [[IndexTables.deleteFromPostingsIndex]]); [[bm25Over]] sums df
+    * tables are delta relations maintained by the same append path as
+    * the postings rows ([[IndexTables.appendToPostingsIndex]]);
+    * [[bm25Over]] sums df
     * AFTER the query-term join (query-sized) and the corpus totals
     * over the handful of delta rows, so incremental segments never
     * cost a table-wide pass at probe time. Identical rows BY the
@@ -259,7 +259,7 @@ object TextAnalysis {
       .filter(col("term") =!= "")
       .select(col("doc_id"), (col("pos0") + lit(1)).cast("long").as("pos"), col("term"))
 
-  /** PHRASE top-k (round-16): each query doc's FIRST bigram (its first
+  /** PHRASE top-k: each query doc's FIRST bigram (its first
     * two whitespace tokens) is its phrase; for each query, the top-k
     * OTHER docs by exact-adjacency occurrence count (ties on doc_id).
     * The retrieval shape a dedup/contamination pipeline uses to chase
@@ -635,8 +635,7 @@ object TextAnalysis {
       .orderBy(col("rk"))
   }
 
-  /** SAMPLED-corpus BPE training + FULL-corpus encode (round-15 verdict
-    * #5) — the shape a production vocabulary needs: the trainer's merge
+  /** SAMPLED-corpus BPE training + FULL-corpus encode — the shape a production vocabulary needs: the trainer's merge
     * loop is driver-paced (one argmax collect per merge round), fine
     * for the declared 10 merges but not for a 32k-merge tokenizer over
     * 100 TB. The standard escape is to PRICE training on a bounded
@@ -721,7 +720,7 @@ object TextAnalysis {
           "transform(sequence(0, size(syms) - 2), i -> struct(syms[i] AS l, syms[i+1] AS r))")).as("p"))
         .groupBy(col("p.l").as("l"), col("p.r").as("r"))
         .agg(sum(col("tf")).as("n"))
-      // BATCHED merge selection (round-16 verdict #7): accept up to
+      // BATCHED merge selection: accept up to
       // `want` SYMBOL-DISJOINT pairs from one count pass — the standard
       // batched-BPE trick. Disjointness is what makes the batch exact
       // per pair: merging (a,b) only perturbs counts of pairs touching
@@ -787,8 +786,8 @@ object TextAnalysis {
     encodeOver(s, dir, encodedVocab(s, dir, nMerges))
 
   /** [[bpeEncode]] served from the PERSISTED vocabulary table
-    * ([[IndexTables.ensureBpeVocab]]) — the deployed tokenizer shape
-    * (round-12 verdict #5): a real tokenizer is 30k+ merges, and the
+    * ([[IndexTables.ensureBpeVocab]]) — the deployed tokenizer shape:
+    * a real tokenizer is 30k+ merges, and the
     * merge LOOP is a train-time cost paid once; encoding any corpus
     * after that is one equi-join of the (doc, token) stream against
     * the committed (tok, n_syms) table plus the per-doc rollup. The
@@ -800,7 +799,7 @@ object TextAnalysis {
   def bpeEncodeTable(s: SparkSession, dir: String, nMerges: Int = 10): DataFrame =
     encodeOver(s, dir, s.table(IndexTables.ensureBpeVocab(s, dir, nMerges)))
 
-  /** TOKENIZER FERTILITY by source (round 14) — the standard
+  /** TOKENIZER FERTILITY by source — the standard
     * tokenizer-health read before a training run: per source,
     * whitespace words vs trained-tokenizer tokens (fertility =
     * tokens/word — the metric multilingual tokenizer evaluations

@@ -105,12 +105,20 @@ class CatalogServiceSpec extends AnyFunSuite {
   }
 
   test("cleanupExpiredTokens removes only the expired ones") {
-    val clock = new FakeClock(Instant.parse("2026-01-01T00:00:00Z"))
-    val c = new CatalogService(chainAt(Files.createTempDirectory("cat-cas")), clock)
+    val start = Instant.parse("2026-01-01T00:00:00Z")
+    val clock = new FakeClock(start)
+    val dir = Files.createTempDirectory("cat-cas")
+    val c = new CatalogService(chainAt(dir), clock)
     val shortLived = c.createToken("admin", expiresInHours = 1)
     val longLived = c.createToken("admin", expiresInHours = 48)
     clock.now = clock.now.plus(Duration.ofHours(2))
-    c.cleanupExpiredTokens()
+    // the next login sweeps the expired token, never presented again
+    c.createToken("admin")
+    // a reopened instance replays checkpoint plus deltas; its clock is
+    // back before any expiry, so a token it still held would verify
+    val reopened = new CatalogService(chainAt(dir), new FakeClock(start))
+    assert(reopened.verifyToken(shortLived) === None)
+    assert(reopened.verifyToken(longLived) === Some("admin"))
     assert(c.verifyToken(shortLived) === None)
     assert(c.verifyToken(longLived) === Some("admin"))
   }

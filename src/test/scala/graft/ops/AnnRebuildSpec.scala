@@ -205,129 +205,4 @@ class AnnRebuildSpec extends SparkSuite {
     assert(res.get.isEmpty, "a rebuild under a foreign live lease must decline")
     assert(IndexTables.annGeneration(spark, fix) == 0L)
   }
-
-  /** Recall exactly as the gate measures it, under a serving shape the
-    * tiny fixture can discriminate (shortlist 20; the default 100 is
-    * exhaustive at ~130 vectors and masks the drift). */
-  private def gateRecall(dir: String): Double = {
-    val truth = pairs(Similarity.bruteForceTopK(spark, dir, nQueries = 8, k = 5))
-    (pairs(Similarity.ivfPqTopK(spark, dir, nQueries = 8, k = 5, nprobe = 2, shortlist = 20)) &
-      truth).size.toDouble / truth.size
-  }
-
-  test("drift gate: low sampled recall triggers ONE rebuild; healthy recall never triggers") {
-    assume(hasTestData)
-    val fix = mkDriftFixture(blobSize = 15)
-    val before = gateRecall(fix)
-    // floor one recall-quantum above the drifted level: the retrain's
-    // strict improvement (proven on this fixture above) clears it
-    val floor = before + 0.01
-    val r1 = IndexTables.maybeRebuildAnnIndexes(spark, fix, "drift-direct",
-      recallFloor = floor, shortlist = 20)
-    assert(r1.isDefined && r1.get._1 == 1L)
-    val after = gateRecall(fix)
-    assert(after > before, s"retrain did not improve gate recall: $before -> $after")
-    // ...and the recovered index never re-triggers
-    assert(IndexTables.maybeRebuildAnnIndexes(spark, fix, "drift-direct",
-      recallFloor = floor, shortlist = 20).isEmpty)
-    assert(IndexTables.annGeneration(spark, fix) == 1L)
-  }
-
-  test("drift gate thrash guard: an unreachable floor costs one rebuild, not one per cadence; appends re-arm it") {
-    assume(hasTestData)
-    val fix = mkDriftFixture(blobSize = 4)
-    // floor no index can reach: first call rebuilds, records the marker
-    val r1 = IndexTables.maybeRebuildAnnIndexes(spark, fix, "drift-thrash", recallFloor = 1.01)
-    assert(r1.isDefined && r1.get._1 == 1L)
-    // same generation, same vectors: retraining again cannot help — skip
-    assert(IndexTables.maybeRebuildAnnIndexes(spark, fix, "drift-thrash", recallFloor = 1.01).isEmpty)
-    assert(IndexTables.annGeneration(spark, fix) == 1L)
-    // new data re-arms the gate (the count in the marker no longer matches)
-    val twin = Tables.embeddings(spark, fix)
-      .filter(col("vec_id") === 2L).select(col("embedding")).head().getSeq[Float](0)
-    val newDf = spark.createDataFrame(Seq((920000001L, twin))).toDF("vec_id", "embedding")
-    assert(IndexTables.appendToIvfIndex(spark, fix, newDf) == 1L)
-    assert(IndexTables.appendToPqIndex(spark, fix, newDf) == 1L)
-    val r3 = IndexTables.maybeRebuildAnnIndexes(spark, fix, "drift-thrash", recallFloor = 1.01)
-    assert(r3.isDefined && r3.get._1 == 2L, s"append did not re-arm the gate: $r3")
-  }
-
-  test("gcAnnGenerations under a foreign maintenance lease drops nothing; after release it sweeps the superseded generation") {
-    assume(hasTestData)
-    val fix = mkDriftFixture(blobSize = 4)
-    assert(IndexTables.rebuildAnnIndexes(spark, fix, "spec-gc-direct").isDefined)
-    val gen0Ivf = IndexTables.annIvfName(fix, 0L)
-    assert(spark.catalog.tableExists(gen0Ivf), "gen 0 must survive the swap for in-flight readers")
-    // phase 1 — a foreign holder owns this data dir's index lease (the
-    // SAME lease rebuilds run under): the sweep declines with None and
-    // drops nothing
-    val foreign = IndexTables.compactionLease(spark, fix, "foreign-gc-holder")
-    assert(foreign.tryAcquire(), "foreign holder could not take the lease")
-    assert(IndexTables.gcAnnGenerations(spark, fix, "gc-direct").isEmpty,
-      "a non-owner ran the sweep")
-    assert(spark.catalog.tableExists(gen0Ivf), "a contended sweep dropped tables")
-    // phase 2 — hand the lease back: the next sweep owns the window and
-    // collects the superseded generation
-    foreign.release()
-    assert(IndexTables.gcAnnGenerations(spark, fix, "gc-direct") == Some(2),
-      "expected the 2 gen-0 tables dropped after release")
-    assert(!spark.catalog.tableExists(gen0Ivf))
-    assert(spark.catalog.tableExists(IndexTables.annIvfName(fix, 1L)))
-    assert(Similarity.ivfPqTopK(spark, fix, nQueries = 4, k = 3).count() > 0)
-  }
-
-  test("GC in a fresh JVM never destroys the durable current generation (catalog registration lost, dirs intact)") {
-    assume(hasTestData)
-    val fix = mkDriftFixture(blobSize = 4)
-    assert(IndexTables.rebuildAnnIndexes(spark, fix, "spec-fresh-gc").isDefined)
-    val warehouse = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
-    val fs = warehouse.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dirOf(n: String) = new org.apache.hadoop.fs.Path(warehouse, n)
-    // simulate a fresh JVM: the generation-1 claims and warehouse dirs
-    // outlive the session catalog, its table registrations do not.
-    // (DROP TABLE on a managed table deletes data, so park each dir
-    // aside across the drop.)
-    val gen1 = Seq(IndexTables.annIvfName(fix, 1L), IndexTables.annPqName(fix, 1L),
-      IndexTables.annCentsName(fix, 1L), IndexTables.annCwName(fix, 1L))
-    gen1.foreach { n =>
-      val p = dirOf(n); val park = dirOf(n + "__park")
-      assert(fs.rename(p, park), s"park failed for $n")
-      spark.sql(s"DROP TABLE IF EXISTS $n")
-      assert(fs.rename(park, p), s"unpark failed for $n")
-    }
-    gen1.foreach(n => assert(!spark.catalog.tableExists(n)))
-    val gen1IvfRows = spark.read.parquet(dirOf(gen1.head).toString).count()
-    assert(gen1IvfRows > 0L)
-    // the sweep must classify gen 1 as the durable current generation
-    // (disk-derived) and leave every gen-1 dir byte-identical — AND it
-    // must not touch gen 0 either: with the registrations gone this
-    // session SERVES (and would append into) gen 0, so sweeping it
-    // would destroy data out from under the very process running the
-    // GC (review-caught — the sweep floor is min(durable, served)).
-    // A fresh session-catalog process therefore sweeps nothing; the
-    // process that performed the rebuild (or any metastore-backed
-    // one) collects gen 0, as the non-fresh GC test proves.
-    val dropped = IndexTables.gcAnnGenerations(spark, fix, "spec-fresh-gc-sweep")
-    assert(dropped.contains(0), s"a fresh JVM's sweep must drop nothing, got $dropped")
-    gen1.foreach { n =>
-      assert(fs.exists(dirOf(n)), s"GC destroyed the durable current generation's $n")
-    }
-    assert(spark.read.parquet(dirOf(gen1.head).toString).count() == gen1IvfRows,
-      "gen-1 IVF data changed under GC")
-    assert(fs.exists(dirOf(IndexTables.annIvfName(fix, 0L))),
-      "GC swept the generation this session serves out from under itself")
-  }
-
-  test("generation GC drops only superseded tables; current serving is intact") {
-    assume(hasTestData)
-    val fix = mkDriftFixture(blobSize = 4)
-    assert(IndexTables.rebuildAnnIndexes(spark, fix, "spec-gc").isDefined)
-    val gen0Ivf = IndexTables.annIvfName(fix, 0L)
-    assert(spark.catalog.tableExists(gen0Ivf), "gen 0 must survive the swap for in-flight readers")
-    val dropped = IndexTables.gcAnnGenerations(spark, fix, "spec-gc-sweep")
-    assert(dropped.contains(2), s"expected the 2 gen-0 tables dropped, got $dropped")
-    assert(!spark.catalog.tableExists(gen0Ivf))
-    assert(spark.catalog.tableExists(IndexTables.annIvfName(fix, 1L)))
-    assert(Similarity.ivfPqTopK(spark, fix, nQueries = 4, k = 3).count() > 0)
-  }
 }

@@ -3,13 +3,13 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
 
-/** ANN tombstone deletes (round 11) — the third index mutation,
-  * completing the lifecycle: append ([[IndexTables.appendToIvfIndex]]),
-  * rebuild ([[IndexTables.rebuildAnnIndexes]]), delete
+/** ANN tombstone deletes — the third index mutation, completing the
+  * lifecycle: append ([[IndexTables.appendToIvfIndex]]), rebuild
+  * ([[IndexTables.rebuildAnnIndexes]]), delete
   * ([[IndexTables.deleteFromAnnIndex]]). Deletes land as per-generation
   * tombstone rows the serving paths anti-join away; the rebuild is the
   * purge (it retrains on the masked snapshot and the new generation
-  * starts clean); generation GC sweeps the mask with its generation.
+  * starts clean).
   * Every test runs against a FIXTURE embeddings dir (its own dir tag →
   * its own tables/generations), so the declared queries' shared tables
   * are never touched. */
@@ -127,40 +127,6 @@ class AnnTombstoneSpec extends SparkSuite {
     assert(ivf2.contains((1L, victim)), s"re-admitted vector not served: $ivf2")
   }
 
-  test("generation GC sweeps the superseded generation's tombstone table with its generation") {
-    assume(hasTestData)
-    val fix = mkFixture()
-    val victim = Similarity.ivfTopKIndexed(spark, fix, nQueries = 4, k = 3)
-      .select(col("neighbor_id")).head().getLong(0)
-    assert(IndexTables.deleteFromAnnIndex(spark, fix, Seq(victim)) == 1L)
-    assert(IndexTables.tombstoneExists(spark, fix, 0L))
-    assert(IndexTables.rebuildAnnIndexes(spark, fix, "tomb-gc").isDefined)
-    // gen 0: ivf + pq + tombstones = 3 tables swept
-    val dropped = IndexTables.gcAnnGenerations(spark, fix, "tomb-gc-sweep")
-    assert(dropped.contains(3), s"expected 3 gen-0 tables dropped (ivf, pq, tomb), got $dropped")
-    assert(!IndexTables.tombstoneExists(spark, fix, 0L))
-    assert(Similarity.ivfPqTopK(spark, fix, nQueries = 4, k = 3).count() > 0)
-  }
-
-  test("legitimate deletes do not read as drift: the gate's ground truth ranks only the servable corpus") {
-    assume(hasTestData)
-    val fix = mkFixture()
-    // delete every sample query's exact top-1 neighbor — the harshest
-    // delete for an unmasked truth (8 of the 8×5 truth pairs become
-    // permanently unservable, recall would read <= 0.8 forever)
-    val top1 = Similarity.bruteForceTopK(spark, fix, nQueries = 8, k = 1)
-      .select(col("neighbor_id")).collect().map(_.getLong(0)).distinct.toSeq
-    assert(IndexTables.deleteFromAnnIndex(spark, fix, top1) == top1.size.toLong)
-    // all lists probed + exhaustive shortlist: the served path is an
-    // exact scan of the servable corpus, so against a MASKED truth the
-    // recall is exactly 1.0 — a gate still comparing against the
-    // unfiltered corpus would read 0.8 and rebuild-spin on deletes
-    val r = IndexTables.maybeRebuildAnnIndexes(spark, fix, "tomb-drift",
-      recallFloor = 0.9, nprobe = 8, shortlist = 600)
-    assert(r.isEmpty, "the drift gate treated tombstoned vectors as recall loss and rebuilt")
-    assert(IndexTables.annGeneration(spark, fix) == 0L)
-  }
-
   test("tombstones survive a session-catalog restart: durable state, never registration-keyed") {
     assume(hasTestData)
     val fix = mkFixture()
@@ -242,9 +208,7 @@ class AnnTombstoneSpec extends SparkSuite {
   test("DataFrame-set delete (10% of corpus, no driver collect) masks every served path, prefix included") {
     assume(hasTestData)
     val fix = mkFixture()
-    // corpus-scale predicate set stays a DataFrame end to end — the
-    // round-13 verdict #6 shape (takedownEverywhere routes through
-    // this overload)
+    // corpus-scale predicate set stays a DataFrame end to end
     val delSet = Similarity.vectors(spark, fix)
       .filter(col("vec_id") % 10 === 0).select(col("vec_id"))
     val expected = delSet.count()

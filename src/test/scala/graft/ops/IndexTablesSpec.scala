@@ -164,85 +164,19 @@ class IndexTablesSpec extends SparkSuite {
     assert(plan.contains(name), s"expected a scan of $name in:\n$plan")
   }
 
-  test("chunk index maintains INCREMENTALLY: appended docs stay exchange-free and immediately findable") {
-    assume(hasTestData)
-    // nChunks=5 → a dedicated table; the shared nChunks=4 index other
-    // tests compare against the in-plan twin stays untouched
-    val name = IndexTables.ensureChunkIndex(spark, sf, 5)
-    val before = spark.table(name).count()
-    // the new doc is an exact text twin of an existing one: identical
-    // simhash, so the blocked join must surface the pair at distance 0
-    val existing = graft.ops.Tables.documents(spark, sf)
-      .select(col("doc_id"), col("text")).orderBy(col("doc_id")).limit(1).collect()(0)
-    val newId = 900000001L
-    val newDoc = spark.createDataFrame(Seq((newId, existing.getString(1))))
-      .toDF("doc_id", "text")
-    assert(IndexTables.appendToChunkIndex(spark, sf, 5, newDoc) == 5L)
-    val idx = spark.table(name)
-    assert(idx.count() == before + 5)
-    // bucket locality survives the append: the candidate self-join over
-    // the appended table still plans with no Exchange on either side
-    withNoBroadcast {
-      val joined = idx.as("a").join(idx.as("b"),
-        col("a.j") === col("b.j") && col("a.ck") === col("b.ck") &&
-        col("a.doc_id") < col("b.doc_id"))
-      joined.collect()
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin") && !plan.contains("Exchange"),
-        s"appended index lost bucket-join locality:\n$plan")
-    }
-    // and the appended doc is immediately findable as a near-dup
-    val hit = Dedup.candidates(idx, Dedup.Blocking(4, 5))
-      .filter(col("doc_b") === newId &&
-              col("doc_a") === existing.getLong(0))
-      .select(expr("CAST(bit_count(ha ^ hb) AS BIGINT)").as("dist"))
-      .collect()
-    assert(hit.length == 1 && hit(0).getLong(0) == 0L,
-      s"appended twin not found at distance 0: ${hit.toSeq}")
-  }
-
-  test("chunk-index compaction collapses replayed at-least-once rows and keeps the bucket join exchange-free") {
-    assume(hasTestData)
-    // nChunks=6 → a dedicated table; the shared nChunks=4/5 tables other
-    // tests mutate or compare against stay untouched
-    val name = IndexTables.ensureChunkIndex(spark, sf, 6)
-    val clean = spark.table(name).count()
-    val batch = graft.ops.Tables.documents(spark, sf)
-      .select(col("doc_id") + 800000000L as "doc_id", col("text"))
-      .orderBy(col("doc_id")).limit(3)
-    // the same batch lands twice — the streaming gate's replay shape
-    assert(IndexTables.appendToChunkIndex(spark, sf, 6, batch) == 18L)
-    assert(IndexTables.appendToChunkIndex(spark, sf, 6, batch) == 18L)
-    assert(spark.table(name).count() == clean + 36)
-    val pairsBefore = Dedup.candidates(spark.table(name), Dedup.Blocking(5, 6))
-      .select(col("doc_a"), col("doc_b")).distinct().count()
-    val (before, after) = IndexTables.compactChunkIndex(spark, sf, 6)
-    assert(before == clean + 36 && after == clean + 18,
-      s"compaction must keep exactly one copy of the replayed rows: $before -> $after")
-    // same candidates served, and the re-clustered table still joins
-    // with no Exchange (the rewrite restored the bucket layout)
-    val pairsAfter = Dedup.candidates(spark.table(name), Dedup.Blocking(5, 6))
-      .select(col("doc_a"), col("doc_b")).distinct().count()
-    assert(pairsAfter == pairsBefore, "compaction changed the candidate pair set")
-    withNoBroadcast {
-      val idx = spark.table(name)
-      val joined = idx.as("a").join(idx.as("b"),
-        col("a.j") === col("b.j") && col("a.ck") === col("b.ck") &&
-        col("a.doc_id") < col("b.doc_id"))
-      joined.collect()
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin") && !plan.contains("Exchange"),
-        s"compacted index lost bucket-join locality:\n$plan")
-    }
-  }
-
   test("a crashed compaction swap is repaired from the staged table, not rebuilt from dir") {
     assume(hasTestData)
     // nChunks=7 → dedicated table
     val name = IndexTables.ensureChunkIndex(spark, sf, 7)
-    val marker = spark.createDataFrame(Seq((700000001L, "staged swap survivor row")))
-      .toDF("doc_id", "text")
-    assert(IndexTables.appendToChunkIndex(spark, sf, 7, marker) == 7L)
+    // plant rows a from-dir rebuild cannot recompute: one doc's chunk
+    // rows copied under an id no corpus holds
+    val marker = spark.table(name)
+      .filter(col("doc_id") === spark.table(name).agg(min("doc_id")).head().getLong(0))
+      .withColumn("doc_id", lit(700000001L))
+      .localCheckpoint()
+    assert(marker.count() == 7L)
+    marker.write.mode("append").insertInto(name)
+    spark.catalog.refreshTable(name)
     val withMarker = spark.table(name).count()
     // simulate a crash between "DROP final" and "RENAME staged": the
     // complete replacement sits under _stage, the final name is gone
@@ -297,41 +231,6 @@ class IndexTablesSpec extends SparkSuite {
     val inPlan = Dedup.minhashLsh(spark, sf).collect().map(_.toSeq)
     assert(viaIndex.nonEmpty, "vacuous: no minhash near-dups at test scale")
     assert(viaIndex.toSeq === inPlan.toSeq)
-  }
-
-  test("minhash band index maintains INCREMENTALLY: a text twin lands in its twin's buckets") {
-    // mutates sf0.01's band table only — the sf0.001 twin-identity
-    // table above (and the declared query) stay untouched, same
-    // isolation rule as the IVF/PQ append tests
-    val dir = "/root/testdata/sf0.01"
-    assume(new java.io.File(s"$dir/documents.parquet").isFile)
-    val name = IndexTables.ensureMinhashIndex(spark, dir)
-    val existing = graft.ops.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text")).orderBy(col("doc_id")).limit(1).collect()(0)
-    val newId = 910000001L
-    val newDoc = spark.createDataFrame(Seq((newId, existing.getString(1))))
-      .toDF("doc_id", "text")
-    val before = spark.table(name).count()
-    assert(IndexTables.appendToMinhashIndex(spark, dir, newDoc) == 3L)
-    val after = spark.table(name)
-    assert(after.count() == before + 3)
-    def bandsOf(id: Long): Set[(Int, String)] =
-      after.filter(col("doc_id") === id)
-        .select(col("bi"), col("bk")).collect()
-        .map(r => (r.getInt(0), r.getString(1))).toSet
-    assert(bandsOf(newId) == bandsOf(existing.getLong(0)),
-      "appended twin's bands differ from its identical-text twin")
-    // bucket locality survives the append
-    withNoBroadcast {
-      val idx = spark.table(name)
-      val joined = idx.as("a").join(idx.as("b"),
-        col("a.bi") === col("b.bi") && col("a.bk") === col("b.bk") &&
-        col("a.doc_id") < col("b.doc_id"))
-      joined.collect()
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin") && !plan.contains("Exchange"),
-        s"appended band index lost bucket-join locality:\n$plan")
-    }
   }
 
   test("IVF-PQ search PRUNES the code table to exactly the probed lists") {

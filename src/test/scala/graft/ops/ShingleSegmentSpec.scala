@@ -3,13 +3,10 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
 
-/** The incremental (segment-merge) shingle index, round-9: appends land
-  * as segments of uncapped shingles + per-segment DF stats, and the
-  * corpus-relative 20% DF cap is applied at read/merge time over the
-  * summed stats. The contract proven here is ROW IDENTITY: an index
-  * built from a base corpus and grown by appends must serve exactly
-  * what a full rebuild over the union serves — including cap
-  * decisions that only become true because of the appended batch. */
+/** The segmented shingle index: uncapped shingles plus DF stats, with
+  * the corpus-relative 20% DF cap applied at read time over the summed
+  * stats. The contract proven here is ROW IDENTITY with the in-plan
+  * n-gram pairs, and a cap decided at read time for every doc. */
 class ShingleSegmentSpec extends SparkSuite {
 
   private val sf = "/root/testdata/sf0.001"
@@ -20,108 +17,37 @@ class ShingleSegmentSpec extends SparkSuite {
       spark.sql(s"DROP TABLE IF EXISTS $p${IndexTables.dirTag(sf)}")
     }
 
-  test("segment appends + read-time cap serve exactly the full-rebuild rows (planted twin)") {
+  test("segments serve exactly the in-plan rows, and the read-time cap drops a hot shingle from every doc") {
     assume(hasTestData)
-    dropSegmentTables() // a previous full-corpus build would mask the split
+    dropSegmentTables() // a previous build would mask the fixture
     val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
-    val base = docs.filter(col("doc_id") % 7 =!= 0)
-    val heldOut = docs.filter(col("doc_id") % 7 === 0)
-    IndexTables.ensureShingleSegmentsFrom(spark, sf, base)
-    assert(IndexTables.appendToShingleIndex(spark, sf, heldOut) > 0L,
-      "held-out batch appended no shingle rows — twin test is vacuous")
+    IndexTables.ensureShingleSegmentsFrom(spark, sf, docs)
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val segmented = pairs(Dedup.ngramJaccardSegmented(spark, sf))
-    val rebuilt = pairs(Dedup.ngramJaccard(spark, sf)) // the in-plan full-corpus twin
-    assert(segmented == rebuilt,
-      s"segmented=${segmented.size} rebuilt=${rebuilt.size} " +
-      s"diff=${(segmented diff rebuilt) ++ (rebuilt diff segmented)}")
-    assert(rebuilt.nonEmpty, "corpus produced no near-dup pairs — twin test is vacuous")
-  }
+    val inPlan = pairs(Dedup.ngramJaccard(spark, sf))
+    assert(segmented == inPlan,
+      s"segmented=${segmented.size} inPlan=${inPlan.size} " +
+      s"diff=${(segmented diff inPlan) ++ (inPlan diff segmented)}")
+    assert(inPlan.nonEmpty, "corpus produced no near-dup pairs — twin test is vacuous")
 
-  test("segment compaction folds DF stats and meta without changing served rows") {
-    assume(hasTestData)
+    // tiny synthetic corpus of 10 docs: "alpha beta gamma" in two docs
+    // is at, not above, the greatest(2, 20% of 10) floor → SERVED;
+    // "delta epsilon zeta" in eight docs is above it → capped for
+    // EVERY doc that holds it
     dropSegmentTables()
-    val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
-    IndexTables.ensureShingleSegmentsFrom(spark, sf, docs.filter(col("doc_id") % 7 =!= 0))
-    IndexTables.appendToShingleIndex(spark, sf, docs.filter(col("doc_id") % 7 === 0))
-    def pairs(): Set[(Long, Long, Double)] =
-      Dedup.ngramJaccardSegmented(spark, sf).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val metaBefore = spark.table(s"idx_shingle_meta_${IndexTables.dirTag(sf)}")
-    assert(metaBefore.count() == 2L, "base + one append must leave two segments")
-    val docsTotal = metaBefore.agg(sum(col("n_docs"))).head().getLong(0)
-    val servedBefore = pairs()
-    assert(servedBefore.nonEmpty, "no near-dup pairs — fold identity would be vacuous")
-    val (dfBefore, dfAfter) = IndexTables.compactShingleSegments(spark, sf)
-    // per-append DF rows folded to one per shingle; the planted split
-    // guarantees at least one shingle occurs in both segments
-    assert(dfAfter < dfBefore, s"fold did not shrink DF stats: $dfBefore -> $dfAfter")
-    val metaAfter = spark.table(s"idx_shingle_meta_${IndexTables.dirTag(sf)}").collect()
-    // meta rows are RETAINED per segment — each row is the append
-    // guard's replay memory — with the summed denominator unchanged
-    assert(metaAfter.length == 2 && metaAfter.map(_.getLong(1)).sum == docsTotal,
-      "meta must retain one distinct row per segment with the summed doc count unchanged")
-    assert(pairs() == servedBefore, "compaction changed the served pair set")
-    dropSegmentTables() // leave no partial-corpus index under the real dir tag
-  }
-
-  test("a redelivered append batch is a detected no-op, before AND after compaction") {
-    assume(hasTestData)
-    dropSegmentTables()
-    val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
-    val heldOut = docs.filter(col("doc_id") % 7 === 0)
-    IndexTables.ensureShingleSegmentsFrom(spark, sf, docs.filter(col("doc_id") % 7 =!= 0))
-    assert(IndexTables.appendToShingleIndex(spark, sf, heldOut) > 0L)
-    def state() = (
-      Dedup.ngramJaccardSegmented(spark, sf).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet,
-      spark.table(s"idx_shingle_df_${IndexTables.dirTag(sf)}").count(),
-      spark.table(s"idx_shingle_meta_${IndexTables.dirTag(sf)}")
-        .agg(sum(col("n_docs"))).head().getLong(0))
-    val before = state()
-    assert(before._1.nonEmpty, "no near-dup pairs — replay identity would be vacuous")
-    // at-least-once redelivery: the batch's doc-id digest already sits
-    // in the meta table, so the append must refuse to double-count
-    assert(IndexTables.appendToShingleIndex(spark, sf, heldOut) == 0L,
-      "redelivered batch was re-appended — DF stats and the cap denominator double-counted")
-    assert(state() == before, "replay changed index state")
-    // the guard must SURVIVE compaction: meta rows are retained per
-    // segment, so a batch redelivered after maintenance is still caught
-    IndexTables.compactShingleSegments(spark, sf)
-    assert(IndexTables.appendToShingleIndex(spark, sf, heldOut) == 0L,
-      "compaction erased the replay guard's memory")
-    assert(state()._1 == before._1, "post-compaction replay changed served rows")
-    dropSegmentTables()
-  }
-
-  test("a shingle crossing the DF cap because of an APPEND is dropped corpus-wide at read time") {
-    assume(hasTestData)
-    dropSegmentTables()
-    // tiny synthetic corpus: 4 base docs, two sharing the phrase "alpha
-    // beta gamma" (df=2, not above the greatest(2, ·) floor → SERVED);
-    // the appended batch floods the phrase to df=8 > 2 → the read-time
-    // cap must stop serving it for EVERY doc, including the base two —
-    // the corpus-relative decision a per-segment cap would get wrong
     val sp = spark
     import sp.implicits._
-    val baseDocs = Seq(
-      (1L, "alpha beta gamma one two three four"),
-      (2L, "alpha beta gamma five six seven eight"),
-      (3L, "unrelated tokens here entirely distinct"),
-      (4L, "other words that do not repeat anywhere")).toDF("doc_id", "text")
-    IndexTables.ensureShingleSegmentsFrom(spark, sf, baseDocs)
-    val capShingle = Dedup.shinglesOf(
-      Seq((99L, "alpha beta gamma")).toDF("doc_id", "text"))
-      .select(col("s")).head().getLong(0)
-    def served: Long = IndexTables.mergedShingleView(spark, sf)
-      .filter(col("s") === capShingle).count()
-    assert(served == 2L, "base corpus must serve the shared shingle (df=2 is at, not above, the floor)")
-    val flood = (10L to 15L).map(i =>
-      (i, s"alpha beta gamma filler$i tail$i more$i")).toDF("doc_id", "text")
-    assert(IndexTables.appendToShingleIndex(spark, sf, flood) > 0L)
-    assert(served == 0L,
-      "append pushed the shingle past the corpus-relative cap — it must vanish from every doc")
+    val small = ((1L to 2L).map(i => (i, s"alpha beta gamma one$i two$i")) ++
+      (3L to 10L).map(i => (i, s"delta epsilon zeta three$i four$i"))).toDF("doc_id", "text")
+    IndexTables.ensureShingleSegmentsFrom(spark, sf, small)
+    def served(phrase: String): Long = {
+      val sh = Dedup.shinglesOf(Seq((99L, phrase)).toDF("doc_id", "text"))
+        .select(col("s")).head().getLong(0)
+      IndexTables.mergedShingleView(spark, sf).filter(col("s") === sh).count()
+    }
+    assert(served("alpha beta gamma") == 2L, "a shingle at the floor must be served")
+    assert(served("delta epsilon zeta") == 0L, "a shingle above the cap must vanish from every doc")
     dropSegmentTables() // leave no synthetic index under the real dir tag
   }
 }

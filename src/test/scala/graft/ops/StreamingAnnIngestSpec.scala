@@ -129,7 +129,15 @@ class StreamingAnnIngestSpec extends SparkSuite {
     Tables.documents(spark, sf).write.parquet(s"$fix/documents.parquet")
     IndexTables.ensureIvfIndex(spark, fix)
     IndexTables.postingsIndexTables(spark, fix)
-    assert(IndexTables.hybridMembershipDrift(spark, fix) == ((0L, 0L)),
+    // (vector-only ids, lexical-only ids): the IVF table's ids against
+    // the postings dl membership
+    def drift(): (Set[Long], Set[Long]) = {
+      def ids(df: DataFrame): Set[Long] = df.distinct().collect().map(_.getLong(0)).toSet
+      val vec = ids(spark.table(IndexTables.currentIvfTable(spark, fix)).select(col("n_id")))
+      val lex = ids(spark.table(IndexTables.postingsIndexTables(spark, fix).dl).select(col("doc_id")))
+      (vec -- lex, lex -- vec)
+    }
+    assert(drift() == ((Set.empty[Long], Set.empty[Long])),
       "aligned fixture must start drift-free")
 
     val hybridSchema = StructType(Seq(
@@ -152,15 +160,15 @@ class StreamingAnnIngestSpec extends SparkSuite {
       assert(!q.isActive, "stream did not drain in time")
     }
 
-    // a MIS-WIRED deployment: only the vector family gets the append —
-    // the round-15 ADVICE staleness scenario. The audit must see it.
+    // a MIS-WIRED deployment: only the vector family gets the append,
+    // and the memberships must show it
     drain(tempDir("hybridstream-ckpt-a")) { batch =>
       IndexTables.appendToIvfIndex(spark, fix,
         batch.select(col("doc_id").as("vec_id"), col("embedding")))
       ()
     }
-    assert(IndexTables.hybridMembershipDrift(spark, fix) == ((1L, 0L)),
-      "drift audit missed a vector-only append")
+    assert(drift() == ((Set(nid), Set.empty[Long])),
+      "a vector-only append must leave exactly the streamed id vector-only")
 
     // the CORRECT wiring: both families in one foreachBatch (fresh
     // checkpoint redelivers the file; the IVF append's anti-join
@@ -172,7 +180,7 @@ class StreamingAnnIngestSpec extends SparkSuite {
         batch.select(col("doc_id"), col("text")))
       ()
     }
-    assert(IndexTables.hybridMembershipDrift(spark, fix) == ((0L, 0L)),
+    assert(drift() == ((Set.empty[Long], Set.empty[Long])),
       "paired appends left the hybrid memberships diverged")
     // both families physically carry the streamed doc
     assert(spark.table(IndexTables.currentIvfTable(spark, fix))

@@ -14,9 +14,10 @@ import graft.SparkSuite
   * per key while the watermark bounds the dedup state — the state store
   * holds only keys younger than the watermark, so state is O(window),
   * not O(stream). This is the streaming counterpart of the batch
-  * exact-dedup operator and composes with the durable-tag exactly-once
-  * publish in [[StreamingIngest]]: tags dedup whole replayed BATCHES,
-  * this dedups individual re-sent EVENTS. */
+  * exact-dedup operator and composes with the store's durable-tag
+  * exactly-once append ([[graft.storage.ManifestLog.appendIdempotent]]):
+  * tags dedup whole replayed BATCHES, this dedups individual re-sent
+  * EVENTS. */
 class StreamingDedupSpec extends SparkSuite {
 
   private val schema = StructType(Seq(

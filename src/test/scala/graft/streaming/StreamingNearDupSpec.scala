@@ -102,52 +102,6 @@ class StreamingNearDupSpec extends SparkSuite {
     assert(got.synchronized(got.sorted.toSeq) === expected)
   }
 
-  test("SELF-MAINTAINING gate: an admitted batch-1 doc catches its batch-2 near-dup") {
-    // The full ingest-gateway loop, per micro-batch: probe the
-    // persisted chunk index → flag near-dups → append the ADMITTED
-    // signatures back into the index (IndexTables.appendChunkSignatures)
-    // — so later batches near-dup-check against earlier STREAM batches,
-    // not just the static corpus. Mutates sf0.01's CHUNK index table
-    // only (idx_simhash_chunks_4_*); IndexTablesSpec's incremental
-    // tests mutate sf0.01's IVF table and sf0.001's nChunks=5 chunk
-    // table — disjoint from this one, so parallel suites cannot race.
-    val dir = "/root/testdata/sf0.01"
-    assume(new java.io.File(s"$dir/documents.parquet").isFile)
-    val novel = 0x0f0f5a5a3c3cc3c3L // far from any corpus signature
-    val hits = mutable.Buffer.empty[(Long, Long, Long)]
-    def gateBatch(batch: DataFrame): Unit = {
-      val found = Dedup.nearDupAgainstIndex(batch, spark, dir)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      hits.synchronized { hits ++= found }
-      val flagged = found.map(_._1).toSet
-      val admitted = batch.filter(!col("doc_id").isin(flagged.toSeq: _*))
-      graft.ops.IndexTables.appendChunkSignatures(spark, dir, 4, admitted)
-    }
-    def runGated(srcDir: String): Unit = {
-      val q = spark.readStream.schema(sigSchema).json(srcDir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", tempDir("neardup-maint-ckpt"))
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) => gateBatch(b); () }
-        .start()
-      q.awaitTermination(120000)
-    }
-    val in = tempDir("neardup-maint-in")
-    Files.write(Paths.get(in, "b1.json"),
-      s"""{"doc_id":9101,"simhash":$novel}""".getBytes)
-    runGated(in)
-    assert(hits.synchronized(hits.isEmpty),
-      s"batch 1's novel doc should admit cleanly, got $hits")
-    // batch 2: one bit away from the ADMITTED batch-1 doc — only the
-    // maintained index can catch it (it exists in no static corpus)
-    val in2 = tempDir("neardup-maint-in2")
-    Files.write(Paths.get(in2, "b2.json"),
-      s"""{"doc_id":9102,"simhash":${novel ^ 1L}}""".getBytes)
-    runGated(in2)
-    assert(hits.synchronized(hits.toSeq) === Seq((9102L, 9101L, 1L)),
-      s"batch 2 should near-dup against the batch-1 admission, got $hits")
-  }
-
   test("simhashExpr computes the identical signature as a streaming projection") {
     val textSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
