@@ -410,12 +410,13 @@ final class LogServer(spark: SparkSession, root: String, port: Int = 0,
       // before rendering — the one remaining unbounded driver-side
       // collect. LIMIT cap+1 keeps the bound inside the plan, and cap+1
       // distinguishes "exactly at the bound" from "over it" without a
-      // separate count job. A session within the store's driver-read
-      // budget is already decoded on this gateway (at most that budget
-      // of rows), and the optimizer folds filter and limit into its
-      // rows, so the collect starts no job; over the budget the limit
-      // stops the Spark scan early and nothing past the cap reaches the
-      // driver. Over the bound → 413 with the stream=true hint, matching
+      // separate count job. While the collect plans, the store decodes
+      // only the files the time range overlaps, on this gateway when they
+      // fit its driver-read budget (so at most that budget of rows), and
+      // the optimizer folds filter and limit into them: the collect
+      // starts no job. Over the budget the limit stops the Spark scan of
+      // those files early and nothing past the cap reaches the driver.
+      // Over the bound → 413 with the stream=true hint, matching
       // the reference's own stance that big reads stream
       // (reader.py:148-179); the chunked path has no row bound (its
       // memory is one partition via toLocalIterator, or the driver-read

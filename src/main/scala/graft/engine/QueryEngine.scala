@@ -10,12 +10,15 @@ import graft.storage.LogTier
   * Filters are conjunctive (col, op, value) triples — the reference's
   * entire predicate algebra (reader.py:30-59). Deviation (SURVEY §7.4.4):
   * unknown operators are REJECTED, not silently skipped. Time-range
-  * bounds are both inclusive (reader.py:457-473). A session within
-  * the store's driver-read budget comes back as driver-decoded rows (a
-  * `LocalRelation`): the optimizer applies the predicates, projection
-  * and any limit to them while planning, and `collect()` starts no
-  * Spark job. Only over that budget do the predicates reach a Parquet
-  * scan, where Catalyst pushes them into row-group stats.
+  * bounds are both inclusive (reader.py:457-473). The store's read is
+  * a plan over its files, not their rows; while planning, the time
+  * bounds pick the files they overlap, and when those fit the store's
+  * driver-read budget they are decoded into a `LocalRelation` of the
+  * rows inside the bounds. The optimizer applies the remaining
+  * predicates, projection and any limit to those rows, and `collect()`
+  * starts no Spark job. Only over that budget do the predicates reach a
+  * Parquet scan of those files, where Catalyst pushes them into
+  * row-group stats.
   */
 final class QueryEngine(store: LogTier) {
 

@@ -49,10 +49,6 @@ object IndexTables {
 
   private def ensureWith(s: SparkSession, name: String)
                         (persist: String => Unit): String = synchronized {
-    // a table left only as its complete `_stage` twin holds rows
-    // (appended batches) a from-dir rebuild could NOT recompute —
-    // complete the rename instead of rebuilding
-    repairStaged(s, name)
     if (!s.catalog.tableExists(name)) {
       deleteWarehouseDir(s, name)
       persist(name)
@@ -75,14 +71,6 @@ object IndexTables {
     val fs = warehouse.getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.exists(new org.apache.hadoop.fs.Path(warehouse, name))
   }
-
-  /** Complete a crashed staged swap: final table missing but its
-    * `_stage` twin present and complete → rename it into place. No
-    * writer in this engine stages a table; the repair keeps a catalog
-    * that holds one servable. */
-  private[ops] def repairStaged(s: SparkSession, name: String): Unit =
-    if (!s.catalog.tableExists(name) && s.catalog.tableExists(s"${name}_stage"))
-      s.sql(s"ALTER TABLE ${name}_stage RENAME TO $name")
 
   /** In-process serialization of index MUTATIONS per table: an
     * append's replay anti-join and its write must not interleave with

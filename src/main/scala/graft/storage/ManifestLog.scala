@@ -11,15 +11,22 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, SortOrder, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeSet, BoundReference, EqualTo,
+  Expression, GreaterThan, GreaterThanOrEqual, In, InSet, InterpretedOrdering, JoinedRow, LessThan, LessThanOrEqual,
+  Literal, PredicateHelper, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LocalRelation, LogicalPlan, Project, Statistics}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftShim
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StructType, TimestampType}
+import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.types.UTF8String
 import graft.model.LogSchema
 
@@ -42,14 +49,23 @@ import graft.model.LogSchema
   *    files are immutable and retired files are deleted only by
   *    [[expire]] after a grace window (the Iceberg/Delta snapshot-
   *    isolation recipe, from public designs).
-  *  - SMALL SESSIONS never start a Spark job. When the resolved files
-  *    decode to at most [[ManifestLog.DriverReadBytes]], reads and
-  *    compactions decode them on the calling thread with Spark's own
-  *    Parquet reader. A read returns a `LocalRelation`, whose filters,
-  *    projection and limit the optimizer folds, so its `collect()` runs
-  *    no job. Larger sessions keep the file-scan plan; a decode that
-  *    passes the budget stops there, so no read or compaction holds
-  *    more than the budget of decoded rows.
+  *  - A READ COSTS ITS ANSWER. A read's plan is a [[ManifestRelation]]
+  *    leaf that holds the version's files and their [[FileStats]], no
+  *    rows; at optimization [[FoldManifestReads]] replaces it. A filter's
+  *    timestamp bounds drop the files whose time range misses them; when
+  *    the rest decode to at most [[ManifestLog.DriverReadBytes]] they are
+  *    decoded on the calling thread with Spark's own Parquet reader into
+  *    a `LocalRelation` of the rows inside the bounds, whose filter,
+  *    projection and limit the optimizer folds, so the `collect()` runs
+  *    no job. Otherwise the leaf becomes a file scan of those files.
+  *    Compactions under the budget run on the calling thread too. A
+  *    decode that passes the budget stops there, so no read or
+  *    compaction holds more than the budget of decoded rows.
+  *  - FILE STATS are kept in process per session, from the code that
+  *    wrote a file or from a decode of all of it; a file without them
+  *    costs one `getFileStatus` and overlaps every range. The on-disk
+  *    manifest holds entries only: a restarted instance relearns the
+  *    stats on its first reads.
   *  - APPENDS publish an immutable file, then commit manifest N+1 =
   *    N ∪ {file}. The commit — not the file landing — is the
   *    visibility point.
@@ -106,6 +122,8 @@ final class ManifestLog(spark: SparkSession, root: String,
 
   private def fs: FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  FoldManifestReads.install(spark)
 
   // Orphaned staging dirs from a crashed writer are garbage (their data
   // was never referenced) — but this store has no single-instance-per-
@@ -295,17 +313,17 @@ final class ManifestLog(spark: SparkSession, root: String,
     * races a competing committer completing the very same slot and
     * would destroy a real commit. */
   private def commit(container: String, session: String)
-                    (update: Seq[String] => Seq[String]): Seq[String] =
+                    (update: Seq[String] => Seq[String]): (Long, Seq[String]) =
     manifestLocks.computeIfAbsent((container, session), _ => new Object).synchronized {
       val c = chain(container, session)
       var attempt = 0
       while (true) {
         val (v, cur) = resolve(container, session)
         val next = update(cur)
-        if (next eq cur) return cur // update declined — no new version
+        if (next eq cur) return (v, cur) // update declined — no new version
         if (c.claim(v, ManifestLog.encode(next))) {
           if ((v + 1) % hintFileEvery == 0) writeHintFile(manifestDir(container, session), v + 1)
-          return next
+          return (v + 1, next)
         }
         // refused: another instance took the slot, the predecessor was
         // swept, or an unreadable file holds the slot
@@ -402,12 +420,12 @@ final class ManifestLog(spark: SparkSession, root: String,
     }
     val staging = new Path(s"$root/.staging-${UUID.randomUUID()}")
     val batch = df.select("timestamp", "level", "message")
-    batch.queryExecution.optimizedPlan match {
+    val written = batch.queryExecution.optimizedPlan match {
       // Rows already on the driver (every HTTP ingest flush): write them
       // here. A Spark write of a local batch costs two jobs, a shuffle
       // and task serialization — ~100 ms for a few KB of rows.
       case local: LocalRelation =>
-        writeLocal(local.schema, local.data, new Path(staging, "part-00000.parquet"))
+        Some(writeLocal(local.schema, local.data, new Path(staging, "part-00000.parquet")))
       case _ =>
         batch
           // repartition(1), NOT coalesce(1): coalesce collapses the whole
@@ -422,6 +440,7 @@ final class ManifestLog(spark: SparkSession, root: String,
           // order-free, readers filter or sort).
           .repartition(1)
           .write.mode(SaveMode.Overwrite).parquet(staging.toString)
+        None
     }
     val st = walk(staging).headOption.getOrElse(
       throw new java.io.IOException(s"append: staging $staging produced no visible file"))
@@ -452,7 +471,7 @@ final class ManifestLog(spark: SparkSession, root: String,
       throw new java.io.IOException(s"append: publish ${st.getPath} -> $dst failed")
     fs.delete(staging, true)
     var committed = true
-    commit(container, session) { cur =>
+    val (version, entries) = commit(container, session) { cur =>
       idemTag match {
         case Some(t) if committedTags(cur).contains(t) => committed = false; cur
         case _ =>
@@ -470,15 +489,20 @@ final class ManifestLog(spark: SparkSession, root: String,
           cur :+ rel(dst)
       }
     }
-    if (committed) st.getLen else -1L
+    if (!committed) return -1L
+    noteCommitted(container, session, version, entries,
+      Map(rel(dst) -> written.fold(FileStats.measured(st.getLen))(_.copy(onDisk = st.getLen))))
+    st.getLen
   }
 
   /** Writes a driver-resident batch to one Parquet `file` on the calling
     * thread, through the writer a Spark write task would use. Running it
     * under the session's SQLConf applies the same codec, timestamp type,
     * time zone and rebase mode, so the file matches a Spark-written one
-    * (LocalAppendSpec compares the footers). */
-  private def writeLocal(schema: StructType, rows: Iterable[InternalRow], file: Path): Unit =
+    * (LocalAppendSpec compares the footers). Returns the file's stats as
+    * a read will decode them, all but its on-disk size, which the caller
+    * takes from the staging listing. */
+  private def writeLocal(schema: StructType, rows: Iterable[InternalRow], file: Path): FileStats =
     SQLConf.withExistingConf(spark.sessionState.conf) {
       val conf = spark.sessionState.newHadoopConf()
       if (fs.getScheme == "file") {
@@ -490,136 +514,230 @@ final class ManifestLog(spark: SparkSession, root: String,
       val task = new TaskAttemptContextImpl(job.getConfiguration,
         new TaskAttemptID(new TaskID(new JobID("graft-append", 0), TaskType.MAP, 0), 0))
       val writer = factory.newInstance(file.toString, schema, task)
-      try rows.foreach(writer.write) finally writer.close()
+      // a TIMESTAMP_MILLIS file reads back its timestamps floored to the millisecond
+      val stats = new ManifestLog.StatsTally(
+        SQLConf.get.parquetOutputTimestampType == SQLConf.ParquetOutputTimestampType.TIMESTAMP_MILLIS)
+      val toUnsafe = UnsafeProjection.create(ManifestLog.decodedSchema(new StructType()))
+      try rows.foreach { r =>
+        writer.write(r)
+        stats.add(r, (r match {
+          case u: UnsafeRow if u.numFields == LogSchema.fileSchema.size => u
+          case other => toUnsafe(other)
+        }).getSizeInBytes + ManifestLog.RowOverheadBytes)
+      } finally writer.close()
+      stats.result(onDisk = 0L)
     }
 
-  /** Data entries (no `#tag` tombstones) of the latest manifest. */
-  private[graft] def dataEntries(container: String, session: String): Seq[String] =
-    resolve(container, session)._2.filterNot(_.startsWith("#"))
-
   /** Budget of the driver path in decoded bytes ([[ManifestLog.DriverReadBytes]]).
-    * Test and bench seam: 0 keeps every non-empty session on the file scan. */
+    * Test and bench seam: 0 keeps every non-empty read on the file scan. */
   private[graft] var driverReadBytes: Long = ManifestLog.DriverReadBytes
 
-  /** The rows of `entries`, decoded on the calling thread with
-    * `partition` appended as the constant `values`; None when they would
-    * take more than [[driverReadBytes]]: their files already sum to more
-    * on disk, or the decoded rows pass it (decoding stops there). No
-    * entries is always an empty result: a file scan needs a path. */
-  private def decodeUnder(entries: Seq[String], partition: StructType,
-                          values: InternalRow): Option[Array[InternalRow]] = {
-    val budget = driverReadBytes
-    val files = entries.map(e => fs.getFileStatus(new Path(abs(e))))
-    if (files.iterator.map(_.getLen).sum > budget) None
-    else decode(files, partition, values, budget)
-  }
+  /** Decoded bytes that reading `files` with `extra` partition bytes a
+    * row takes at least: exact for files with complete stats. */
+  private def readBytes(files: Seq[(String, FileStats)], extra: Long): Long =
+    files.iterator.map { case (_, st) => st.decodedAtLeast + math.max(st.rows, 0L) * extra }.sum
 
-  /** The read twin of [[writeLocal]]: the reader a Spark scan task would
-    * use, run under the session's SQLConf, so INT96 conversion and the
-    * rebase modes match a Spark read. Rows are copied, because the
-    * reader reuses its buffers, and each counts its bytes plus
-    * [[ManifestLog.RowOverheadBytes]] against `budget`. */
-  private def decode(files: Seq[org.apache.hadoop.fs.FileStatus], partition: StructType,
-                     values: InternalRow, budget: Long): Option[Array[InternalRow]] =
+  /** Decodes `files` on the calling thread with the reader a Spark scan
+    * task would use, run under the session's SQLConf, so INT96
+    * conversion and the rebase modes match a Spark read. Keeps the rows
+    * whose timestamp lies in `range` (every row when there is none),
+    * with `values` appended as the `partition` columns. Every decoded
+    * row, kept or not, counts its bytes plus
+    * [[ManifestLog.RowOverheadBytes]] against `budget`; None once they
+    * pass it. Each file read hands `learn` its complete stats, or a
+    * lower bound where the budget stopped it. */
+  private def decode(files: Seq[(String, FileStats)], partition: StructType, values: Seq[String],
+                     range: Option[(Long, Long)], budget: Long,
+                     learn: (String, FileStats) => Unit): Option[Array[InternalRow]] =
     SQLConf.withExistingConf(spark.sessionState.conf) {
       val rows = Array.newBuilder[InternalRow]
       var bytes = 0L
       if (files.nonEmpty) {
-        val readFile = readerFor(partition)
-        val toUnsafe = UnsafeProjection.create(ManifestLog.decodedSchema(partition))
+        val readFile = reader()
+        val toOut = UnsafeProjection.create(ManifestLog.decodedSchema(partition))
+        val joined = new JoinedRow(null, InternalRow.fromSeq(values.map(UTF8String.fromString)))
+        val extra = ManifestLog.partitionBytes(values)
+        val (lo, hi) = range.getOrElse((Long.MinValue, Long.MaxValue))
         val it = files.iterator
         while (bytes <= budget && it.hasNext) {
-          val st = it.next()
-          val fileRows = readFile(PartitionedFile(values, SparkPath.fromPath(st.getPath), 0L, st.getLen,
-            fileSize = st.getLen))
-          try while (bytes <= budget && fileRows.hasNext) {
-            val row = toUnsafe(fileRows.next()).copy()
-            bytes += row.getSizeInBytes + ManifestLog.RowOverheadBytes
-            rows += row
-          } finally fileRows match { case c: java.io.Closeable => c.close(); case _ => () }
+          val (entry, st) = it.next()
+          val stats = new ManifestLog.StatsTally(millis = false)
+          val fileRows = readFile(PartitionedFile(InternalRow.empty, SparkPath.fromPath(new Path(abs(entry))),
+            0L, st.onDisk, fileSize = st.onDisk))
+          val whole =
+            try {
+              while (bytes <= budget && fileRows.hasNext) {
+                val row = toOut(joined.withLeft(fileRows.next()))
+                val size = row.getSizeInBytes + ManifestLog.RowOverheadBytes
+                stats.add(row, size - extra)
+                bytes += size
+                if (range.isEmpty || (!row.isNullAt(0) && row.getLong(0) >= lo && row.getLong(0) <= hi))
+                  rows += row.copy()
+              }
+              !fileRows.hasNext
+            } finally fileRows match { case c: java.io.Closeable => c.close(); case _ => () }
+          learn(entry, if (whole) stats.result(st.onDisk) else stats.lowerBound(st.onDisk))
         }
       }
       if (bytes > budget) None else Some(rows.result())
     }
 
-  /** The Parquet reader [[decode]] runs, per partition schema, kept while
+  /** The Parquet reader [[decode]] runs over the file columns, kept while
     * the session's SQL confs (which it captures) stay the same: building
     * one broadcasts the Hadoop conf, about 15 ms on a 4-core host. The
     * conf is a JobConf, which the reader's per-file task context takes
     * as is; it copies any other Configuration, about 0.7 ms a file. */
-  private val readers =
-    new ConcurrentHashMap[StructType, (Map[String, String], PartitionedFile => Iterator[InternalRow])]()
+  @volatile private var cachedReader: (Map[String, String], PartitionedFile => Iterator[InternalRow]) = (null, null)
 
-  private def readerFor(partition: StructType): PartitionedFile => Iterator[InternalRow] = {
+  private def reader(): PartitionedFile => Iterator[InternalRow] = {
     val confs = spark.sessionState.conf.getAllConfs
-    val hit = readers.get(partition)
-    if (hit != null && hit._1 == confs) hit._2
+    val hit = cachedReader
+    if (hit._1 == confs) hit._2
     else {
       val readFile = new ParquetFileFormat().buildReaderWithPartitionValues(
-        spark, LogSchema.fileSchema, partition, LogSchema.fileSchema, Nil,
+        spark, LogSchema.fileSchema, new StructType(), LogSchema.fileSchema, Nil,
         Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
         new org.apache.hadoop.mapred.JobConf(spark.sessionState.newHadoopConf()))
-      readers.put(partition, (confs, readFile))
+      cachedReader = (confs, readFile)
       readFile
     }
   }
 
-  /** The session's rows over `entries`: decoded on the driver under the
-    * budget, else a file-scan plan, which is handed to `keep` (the plan
-    * caches hold scans only, never decoded rows). */
-  private def toDf(entries: Seq[String], container: String, session: String, mayDecode: Boolean = true)
-                  (keep: DataFrame => Unit): DataFrame = {
-    val partition = ManifestLog.partitionSchema
-    val decoded = if (!mayDecode && entries.nonEmpty) None else decodeUnder(entries, partition,
-      InternalRow(UTF8String.fromString(container), UTF8String.fromString(session)))
-    decoded match {
-      case Some(rows) =>
-        GraftShim.ofRows(spark, LocalRelation(
-          DataTypeUtils.toAttributes(ManifestLog.decodedSchema(partition)), ArraySeq.unsafeWrapArray(rows)))
-      case None =>
-        val df = spark.read.schema(LogSchema.fileSchema).parquet(entries.map(abs): _*)
-          .withColumn("container", lit(container))
-          .withColumn("session", lit(session))
-          .select(LogSchema.schema.fieldNames.map(col): _*)
-        keep(df)
+  /** A file-scan relation over `entries` (the file columns only). */
+  private def scanRelation(entries: Seq[String]): LogicalPlan with MultiInstanceRelation =
+    GraftShim.analyzed(spark.read.schema(LogSchema.fileSchema).parquet(entries.map(abs): _*)) match {
+      case r: MultiInstanceRelation => r
+      case other => throw new IllegalStateException(s"a Parquet read planned as ${other.nodeName}")
+    }
+
+  /** One manifest version of a session as reads see it: its data
+    * entries and what is known of each file ([[FileStats]]), never rows.
+    * A read's [[ManifestRelation]] leaf points here; the optimizer turns
+    * it into rows or a scan through [[plan]]. Stats only grow more
+    * complete: files are immutable, so a learned value cannot go stale,
+    * and a snapshot of a newer version starts from the stats of the
+    * entries that survive. */
+  private[storage] final class Snapshot(val container: String, val session: String,
+                                        val version: Long, val entries: Seq[String],
+                                        known: Iterator[(String, FileStats)]) {
+    private val live = entries.toSet
+    private val stats = new ConcurrentHashMap[String, FileStats]()
+    known.foreach { case (e, st) => learn(e, st) }
+
+    /** What is known of `entry`; a file without stats costs one
+      * `getFileStatus`, once. */
+    def stat(entry: String): FileStats =
+      stats.computeIfAbsent(entry, e => FileStats.measured(fs.getFileStatus(new Path(abs(e))).getLen))
+
+    def learn(entry: String, st: FileStats): Unit =
+      if (live(entry)) stats.merge(entry, st, (a, b) => a.merge(b))
+
+    def knownStats: Iterator[(String, FileStats)] = {
+      import scala.jdk.CollectionConverters._
+      stats.asScala.iterator
+    }
+
+    def onDiskBytes(prefix: String = ""): Long =
+      entries.iterator.filter(_.startsWith(prefix)).map(stat(_).onDisk).sum
+
+    /** The whole version's file scan, built on first use. */
+    private lazy val fullScan = scanRelation(entries)
+
+    /** The read kept for reuse, once the whole version is over the
+      * budget. Its leaf scans when nothing narrows it, so a kept plan
+      * never holds decoded rows. */
+    @volatile private[storage] var kept: DataFrame = null
+
+    def dataFrame: DataFrame = {
+      val hit = kept
+      if (hit != null) hit
+      else {
+        val overBudget = readBytes(entries.map(e => e -> stat(e)), partitionExtra) > driverReadBytes
+        val df = GraftShim.ofRows(spark, ManifestRelation(
+          DataTypeUtils.toAttributes(ManifestLog.decodedSchema(ManifestLog.partitionSchema)), this,
+          scanWhole = overBudget))
+        if (overBudget && entries.nonEmpty) kept = df
         df
+      }
+    }
+
+    private def partitionExtra: Long = ManifestLog.partitionBytes(Seq(container, session))
+
+    /** The rows of the files that overlap `range` (every file when there
+      * is none): decoded on the calling thread when they fit the budget,
+      * keeping only rows inside the range, else a scan of those files.
+      * Either way the result outputs exactly `output`. */
+    def plan(output: Seq[Attribute], range: Option[(Long, Long)], scanWhole: Boolean): LogicalPlan = {
+      val files = entries.map(e => e -> stat(e))
+        .filter { case (_, st) => range.forall { case (lo, hi) => st.overlaps(lo, hi) } }
+      val rows =
+        if (files.isEmpty) Some(Array.empty[InternalRow])
+        else if ((scanWhole && range.isEmpty) || readBytes(files, partitionExtra) > driverReadBytes) None
+        else decode(files, ManifestLog.partitionSchema, Seq(container, session), range, driverReadBytes, learn)
+      rows match {
+        case Some(r) => LocalRelation(output, ArraySeq.unsafeWrapArray(r))
+        case None =>
+          val names = files.map(_._1)
+          val rel = (if (names == entries) fullScan else scanRelation(names)).newInstance()
+          val columns = rel.output ++ Seq(Literal(container), Literal(session))
+          Project(columns.zip(output).map { case (e, a) => Alias(e, a.name)(exprId = a.exprId) }, rel)
+      }
     }
   }
 
-  // Version-keyed cache of file-scan plans: without it a gateway GET
-  // over the driver-read budget re-resolves AND re-plans (spark.read →
-  // InMemoryFileIndex build + footer reads) on every request. A
-  // manifest version pins an immutable file set, so the VERSION is the
-  // cache key by construction: a hit reuses the plan, a version bump
-  // misses and rebuilds — staleness is impossible, no invalidation
-  // hooks needed. Bounded LRU; entries hold only the unexecuted plan.
-  // A driver-decoded read is never kept, so decoded rows live only as
-  // long as the read that decoded them. An entry for an OLDER version
-  // says the session passed the budget then; sessions only grow (a
-  // purge drops the entry), so a read of a newer version goes straight
-  // to the scan instead of decoding up to the budget on every commit.
+  // Per-session snapshot cache, LRU over 256 sessions. A manifest version
+  // pins an immutable file set, so the VERSION is the key by construction:
+  // a read of the same version reuses the snapshot (its stats, and its
+  // file-scan relation once built), a version bump starts a new one that
+  // carries the stats of the entries that survive. Staleness is impossible
+  // and nothing needs invalidating. A snapshot holds stats and at most an
+  // unexecuted plan, never decoded rows (see [[Snapshot.kept]]).
   private val ReadCacheMax = 256
   private val readCache =
     java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, String), (Long, DataFrame)](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, String), (Long, DataFrame)]): Boolean =
+      new java.util.LinkedHashMap[(String, String), Snapshot](64, 0.75f, true) {
+        override def removeEldestEntry(e: java.util.Map.Entry[(String, String), Snapshot]): Boolean =
           size() > ReadCacheMax
       })
 
-  /** The session's rows as of the latest manifest — lock-free; safe
-    * to materialize at any time, including mid-compaction. Plan
-    * construction is cached per (session, version) over the budget:
-    * repeated reads of an unchanged session skip the file-index build
-    * entirely. Under it every call decodes the files afresh. */
-  def read(container: String, session: String): DataFrame = {
-    val (v, entries) = resolve(container, session)
+  /** The snapshot of the session's latest manifest. */
+  private def current(container: String, session: String): Snapshot = {
+    val (v, all) = resolve(container, session)
     val key = (container, session)
-    val hit = readCache.get(key)
-    if (hit != null && hit._1 == v) hit._2
-    else toDf(entries.filterNot(_.startsWith("#")), container, session, mayDecode = hit == null)(
-      df => readCache.put(key, (v, df)))
+    readCache.synchronized {
+      val hit = readCache.get(key)
+      if (hit != null && hit.version == v) hit
+      else {
+        val snap = new Snapshot(container, session, v, all.filterNot(_.startsWith("#")),
+          if (hit == null) Iterator.empty else hit.knownStats)
+        if (hit == null || hit.version < v) readCache.put(key, snap)
+        snap
+      }
+    }
   }
+
+  /** Records a commit of this instance: version `version` holds
+    * `entries`, and `learned` the stats of the files it added. */
+  private def noteCommitted(container: String, session: String, version: Long,
+                            entries: Seq[String], learned: Map[String, FileStats]): Unit =
+    readCache.synchronized {
+      val key = (container, session)
+      val hit = readCache.get(key)
+      if (hit != null && hit.version >= version) learned.foreach { case (e, st) => hit.learn(e, st) }
+      else readCache.put(key, new Snapshot(container, session, version, entries.filterNot(_.startsWith("#")),
+        (if (hit == null) Iterator.empty else hit.knownStats) ++ learned))
+    }
+
+  /** Data entries (no `#tag` tombstones) of the latest manifest. */
+  private[graft] def dataEntries(container: String, session: String): Seq[String] =
+    current(container, session).entries
+
+  /** The session's rows as of the latest manifest — lock-free; safe
+    * to materialize at any time, including mid-compaction. The plan is a
+    * [[ManifestRelation]] leaf over the version's files; the optimizer
+    * turns it into the rows the query can return (see [[FoldManifestReads]]). */
+  def read(container: String, session: String): DataFrame =
+    current(container, session).dataFrame
 
   /** Committed manifest versions of a session, ascending — the
     * time-travel listing ([[readAt]] pins one). Corrupt versions are
@@ -638,49 +756,52 @@ final class ManifestLog(spark: SparkSession, root: String,
     * would defeat the reproducibility contract. */
   def readAt(container: String, session: String, version: Long): DataFrame = {
     val c = chain(container, session)
-    // Plan cache keyed by the typed (container, session, version)
-    // triple: a pinned version is an immutable file set, so the PLAN is
-    // reusable by construction; the lifecycle runs re-plan the same
-    // pinned prior-run snapshot on every invocation, and the seal's
-    // replay citation plans the identical version twice per run. Only
-    // an unexecuted file-scan plan is cached — every execution still
-    // reads the files, and a driver-decoded read decodes them on every
-    // call — so the seal's replay proof keeps reading disk.
-    // The hit path checks only that the manifest file still exists: an
-    // expired version fails as loudly as the uncached path, but a
-    // manifest damaged after its first read keeps serving the cached
-    // plan instead of failing its integrity check. A plan enters the
+    // Snapshots of pinned versions are cached by (container, session,
+    // version): the lifecycle runs re-read the same pinned prior-run
+    // snapshot on every invocation, and the seal's replay citation reads
+    // the identical version twice per run. Every execution still reads
+    // the files, so the seal's replay proof keeps reading disk. The hit
+    // path checks only that the manifest file still exists: an expired
+    // version fails as loudly as the uncached path, but a manifest
+    // damaged after its first read keeps serving the cached snapshot
+    // instead of failing its integrity check. A snapshot enters the
     // cache only once the manifest has decoded.
     val key = (container, session, version)
     val hit = readAtCache.get(key)
-    if (hit != null && fs.exists(c.pathOf(version))) hit
-    else {
-      val entries =
-        try c.read(version).getOrElse(
-          throw new ManifestLog.IncompleteManifestException(c.pathOf(version).toString))
-        catch {
-          case _: java.io.FileNotFoundException =>
-            throw new java.io.IOException(
-              s"snapshot v$version of $container/$session does not exist " +
-              "(never committed, or expired past the GC grace window)")
-        }
-      toDf(entries.filterNot(_.startsWith("#")), container, session)(readAtCache.put(key, _))
-    }
+    val snap =
+      if (hit != null && fs.exists(c.pathOf(version))) hit
+      else {
+        val entries =
+          try c.read(version).getOrElse(
+            throw new ManifestLog.IncompleteManifestException(c.pathOf(version).toString))
+          catch {
+            case _: java.io.FileNotFoundException =>
+              throw new java.io.IOException(
+                s"snapshot v$version of $container/$session does not exist " +
+                "(never committed, or expired past the GC grace window)")
+          }
+        val latest = readCache.get((container, session))
+        val s = new Snapshot(container, session, version, entries.filterNot(_.startsWith("#")),
+          if (latest == null) Iterator.empty else latest.knownStats)
+        readAtCache.put(key, s)
+        s
+      }
+    snap.dataFrame
   }
 
   /** Test seam: every plan the two read caches hold. */
   private[storage] def cachedPlans: Seq[DataFrame] = {
     import scala.jdk.CollectionConverters._
-    readCache.synchronized(readCache.values.asScala.map(_._2).toList) ++
-      readAtCache.synchronized(readAtCache.values.asScala.toList)
+    (readCache.synchronized(readCache.values.asScala.toList) ++
+      readAtCache.synchronized(readAtCache.values.asScala.toList)).flatMap(s => Option(s.kept))
   }
 
-  /** Bounded LRU of [[readAt]] plans — see the cache note there. */
+  /** Bounded LRU of [[readAt]] snapshots — see the cache note there. */
   private val readAtCache =
     java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, String, Long), DataFrame](64, 0.75f, true) {
+      new java.util.LinkedHashMap[(String, String, Long), Snapshot](64, 0.75f, true) {
         override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, String, Long), DataFrame]): Boolean =
+            e: java.util.Map.Entry[(String, String, Long), Snapshot]): Boolean =
           size() > ReadCacheMax
       })
 
@@ -701,48 +822,43 @@ final class ManifestLog(spark: SparkSession, root: String,
 
   /** (cold files, cold bytes, hot files, hot bytes) of the CURRENT
     * manifest — the [[LogTier]] summary surface. Counts come straight
-    * off the entry list; sizes are one file-status call per live entry
-    * (on a cluster the manifest would carry sizes inline — the
-    * reference's SQLite catalog does exactly that — but the contract
-    * is the same: never a data scan). Inherits the trait's no-op
+    * off the entry list and sizes from the file stats, so a file this
+    * instance wrote or has read costs nothing and any other one
+    * `getFileStatus`, once; never a data scan. Inherits the trait's no-op
     * [[withReadSnapshot]]: manifest reads are snapshot-isolated by
     * construction. */
   def tierStats(container: String, session: String): (Long, Long, Long, Long) =
-    statsOf(dataEntries(container, session))
+    statsOf(current(container, session))
 
   /** Hot-tier bytes of the CURRENT manifest — the rotation trigger's
-    * input: one file status per hot entry, no cold stat, no data scan. */
+    * input, from the file stats: no data scan. */
   override def hotBytes(container: String, session: String): Long =
-    sizeOf(dataEntries(container, session).filter(_.startsWith("hot/")))
+    current(container, session).onDiskBytes("hot/")
 
-  /** Summed on-disk size of data entries (one file status each). */
-  private def sizeOf(entries: Seq[String]): Long =
-    entries.iterator.map(e => fs.getFileStatus(new Path(abs(e))).getLen).sum
-
-  private def statsOf(entries: Seq[String]): (Long, Long, Long, Long) = {
-    def stats(prefix: String): (Long, Long) = {
-      val sel = entries.filter(_.startsWith(prefix))
-      (sel.size.toLong, sizeOf(sel))
-    }
-    val (cf, cb) = stats("cold/")
-    val (hf, hb) = stats("hot/")
-    (cf, cb, hf, hb)
+  private def statsOf(snap: Snapshot): (Long, Long, Long, Long) = {
+    def count(prefix: String): Long = snap.entries.count(_.startsWith(prefix)).toLong
+    (count("cold/"), snap.onDiskBytes("cold/"), count("hot/"), snap.onDiskBytes("hot/"))
   }
 
   /** Stats AND row count off ONE manifest resolve — the summary
     * consistency contract ([[LogTier.statsAndRows]]): a concurrent
     * append or compaction between two independent resolves can no
     * longer mix file counts and row totals from different snapshots.
-    * Rows are summed from the Parquet footers: exact, and no Spark job. */
+    * Rows come from the file stats, or the Parquet footer of a file
+    * without them: exact, and no Spark job. */
   override def statsAndRows(container: String, session: String)
       : ((Long, Long, Long, Long), Long) = {
-    val entries = dataEntries(container, session)
-    val conf = spark.sessionState.newHadoopConf()
-    val rows = entries.iterator.map { e =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(abs(e)), conf))
-      try r.getRecordCount finally r.close()
+    val snap = current(container, session)
+    lazy val conf = spark.sessionState.newHadoopConf()
+    val rows = snap.entries.iterator.map { e =>
+      val st = snap.stat(e)
+      if (st.complete) st.rows
+      else {
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(abs(e)), conf))
+        try r.getRecordCount finally r.close()
+      }
     }.sum
-    (statsOf(entries), rows)
+    (statsOf(snap), rows)
   }
 
   /** Compact the manifest's current hot subset into sized, range-
@@ -754,13 +870,18 @@ final class ManifestLog(spark: SparkSession, root: String,
     * (0 when the swap declined). */
   def compact(container: String, session: String): Long =
     compactLocks.computeIfAbsent((container, session), _ => new Object).synchronized {
-      val snapshot = resolve(container, session)._2.filter(_.startsWith("hot/"))
-      if (snapshot.isEmpty) return 0L
-      val stage = decodeUnder(snapshot, new StructType(), InternalRow.empty) match {
-        case Some(rows) => stageSorted(rows) _
-        case None => stageScan(spark.read.schema(LogSchema.fileSchema).parquet(snapshot.map(abs): _*)) _
+      val snap = current(container, session)
+      val hot = snap.entries.filter(_.startsWith("hot/"))
+      if (hot.isEmpty) return 0L
+      val files = hot.map(e => e -> snap.stat(e))
+      val rows =
+        if (readBytes(files, 0L) > driverReadBytes) None
+        else decode(files, new StructType(), Nil, None, driverReadBytes, snap.learn)
+      val stage = rows match {
+        case Some(r) => stageSorted(r) _
+        case None => stageScan(spark.read.schema(LogSchema.fileSchema).parquet(hot.map(abs): _*)) _
       }
-      rewrite(container, session, "compact", snapshot, Some(stage))
+      rewrite(snap, "compact", hot, Some(stage))
     }
 
   /** PHYSICAL ROW-LEVEL PURGE (right-to-be-forgotten for the data
@@ -795,7 +916,8 @@ final class ManifestLog(spark: SparkSession, root: String,
   def rewriteExcluding(container: String, session: String,
                        pred: org.apache.spark.sql.Column): Long =
     compactLocks.computeIfAbsent((container, session), _ => new Object).synchronized {
-      val live = dataEntries(container, session)
+      val snap = current(container, session)
+      val live = snap.entries
       if (live.isEmpty) return 0L
       val hit = pred <=> lit(true) // null-safe: NULL keeps the row
       val affectedPaths = spark.read.schema(LogSchema.fileSchema)
@@ -808,9 +930,8 @@ final class ManifestLog(spark: SparkSession, root: String,
       val aff = spark.read.schema(LogSchema.fileSchema).parquet(snapshot.map(abs): _*)
       val purged = aff.filter(hit).count()
       val survivors = aff.filter(!hit)
-      if (rewrite(container, session, "purge", snapshot,
-                  Some(survivors).filter(!_.isEmpty).map(stageScan)) == 0L) return 0L
-      readCache.remove((container, session)) // it may fit the driver-read budget again
+      if (rewrite(snap, "purge", snapshot, Some(survivors).filter(!_.isEmpty).map(stageScan)) == 0L)
+        return 0L
       // the purge is the engine's only in-store MUTATOR: memoized
       // derived relations over this root (any session) now hold rows
       // the store no longer does — drop them so the next read
@@ -829,16 +950,19 @@ final class ManifestLog(spark: SparkSession, root: String,
     * because each buffer flush is one contiguous ingest slice,
     * writer.py:300-335). Message is the range tiebreak: a snapshot whose
     * rows share one timestamp must still split into nOut sized files. */
-  private def stageScan(df: DataFrame)(staging: Path, nOut: Int): Unit =
+  private def stageScan(df: DataFrame)(staging: Path, nOut: Int): Map[String, FileStats] = {
     df.repartitionByRange(nOut, col("timestamp"), col("message"))
       .sortWithinPartitions(col("timestamp"))
       .write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    Map.empty
+  }
 
   /** [[stageScan]]'s layout for decoded file rows, on the calling thread:
     * sort them in place by (timestamp, message), then write `nOut`
     * contiguous runs of equal row count (fewer when there are fewer
-    * rows; an empty snapshot still writes one file). */
-  private def stageSorted(rows: Array[InternalRow])(staging: Path, nOut: Int): Unit = {
+    * rows; an empty snapshot still writes one file). Returns each
+    * staged file's stats by name. */
+  private def stageSorted(rows: Array[InternalRow])(staging: Path, nOut: Int): Map[String, FileStats] = {
     val schema = ManifestLog.decodedSchema(new StructType())
     def key(name: String): SortOrder = {
       val i = schema.fieldIndex(name)
@@ -847,16 +971,18 @@ final class ManifestLog(spark: SparkSession, root: String,
     java.util.Arrays.sort(rows, new InterpretedOrdering(Seq(key("timestamp"), key("message"))))
     val n = rows.length
     val runs = math.max(1, math.min(nOut, n))
-    (0 until runs).foreach { i =>
-      writeLocal(schema, rows.view.slice((i.toLong * n / runs).toInt, ((i + 1L) * n / runs).toInt),
-        new Path(staging, f"part-$i%05d.parquet"))
-    }
+    (0 until runs).map { i =>
+      val name = f"part-$i%05d.parquet"
+      name -> writeLocal(schema, rows.view.slice((i.toLong * n / runs).toInt, ((i + 1L) * n / runs).toInt),
+        new Path(staging, name))
+    }.toMap
   }
 
   /** The staged rewrite-then-swap [[compact]] and [[rewriteExcluding]]
     * share: `stage` writes the surviving rows (None: no row survives)
     * into a staging directory as the given number of range-clustered
-    * files; they are published under names no manifest references, then
+    * files, returning the stats it knows of them by file name; they are
+    * published under names no manifest references, then
     * a manifest commit swaps them in for `snapshot` as the LAST step. A
     * crash anywhere before that commit leaves `snapshot` fully
     * referenced (no loss, no duplicate) and the staged files as
@@ -864,13 +990,14 @@ final class ManifestLog(spark: SparkSession, root: String,
     * retired, or 0 when a competing rewrite already retired part of it
     * (the staged files are deleted; the caller re-runs against the new
     * file set). */
-  private def rewrite(container: String, session: String, what: String,
-                      snapshot: Seq[String], stage: Option[(Path, Int) => Unit]): Long = {
-    val bytes = sizeOf(snapshot)
+  private def rewrite(snap: Snapshot, what: String, snapshot: Seq[String],
+                      stage: Option[(Path, Int) => Map[String, FileStats]]): Long = {
+    val (container, session) = (snap.container, snap.session)
+    val bytes = snapshot.iterator.map(snap.stat(_).onDisk).sum
     val staged = stage.toSeq.flatMap { write =>
       val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
       val staging = new Path(s"$root/.staging-${UUID.randomUUID()}")
-      write(staging, nOut)
+      val stats = write(staging, nOut)
       val files = walk(staging)
       if (files.isEmpty)
         throw new java.io.IOException(
@@ -881,7 +1008,7 @@ final class ManifestLog(spark: SparkSession, root: String,
         val dst = new Path(target, s"$what-${UUID.randomUUID()}.parquet")
         if (!publishExclusive(st.getPath, dst))
           throw new java.io.IOException(s"$what: publish ${st.getPath} -> $dst failed")
-        rel(dst)
+        rel(dst) -> stats.get(st.getPath.getName).fold(FileStats.measured(st.getLen))(_.copy(onDisk = st.getLen))
       }
       fs.delete(staging, true)
       published
@@ -895,7 +1022,7 @@ final class ManifestLog(spark: SparkSession, root: String,
     val retired = snapshot.toSet
     val tombstones = snapshot.flatMap(fileTag).map(tagEntry)
     var applied = false
-    commit(container, session) { cur =>
+    val (version, entries) = commit(container, session) { cur =>
       // Cross-instance guard: compactLocks is in-process only, so a
       // rewrite on ANOTHER instance can race this one through the
       // commit CAS. If any file of the snapshot is gone from the
@@ -910,18 +1037,18 @@ final class ManifestLog(spark: SparkSession, root: String,
         // [[expire]], which sweeps under the same lock; a remote node's
         // sweep is excluded by the horizon contract) and abort with the
         // snapshot fully intact — a re-run re-reads it, no loss.
-        staged.foreach { e =>
+        staged.foreach { case (e, _) =>
           if (!fs.exists(new Path(abs(e))))
             throw new java.io.IOException(
               s"$what: staged file $e vanished before the swap " +
               "(publish stalled past the GC grace window); snapshot retained")
         }
         applied = true
-        cur.filterNot(retired) ++ staged ++ tombstones
+        cur.filterNot(retired) ++ staged.map(_._1) ++ tombstones
       }
     }
-    if (applied) bytes
-    else { staged.foreach(e => fs.delete(new Path(abs(e)), false)); 0L }
+    if (applied) { noteCommitted(container, session, version, entries, staged.toMap); bytes }
+    else { staged.foreach { case (e, _) => fs.delete(new Path(abs(e)), false) }; 0L }
   }
 
   /** Snapshot GC. `olderThan` is the reader grace window: any scan (or
@@ -999,28 +1126,61 @@ final class ManifestLog(spark: SparkSession, root: String,
 
 object ManifestLog {
   /** The columns a read adds after the file columns: container, session. */
-  private val partitionSchema: StructType =
+  private[storage] val partitionSchema: StructType =
     StructType(LogSchema.schema.fields.drop(LogSchema.fileSchema.size))
 
   /** The rows the driver path decodes: the file columns, nullable as a
     * Parquet read makes them, then `partition`. */
-  private def decodedSchema(partition: StructType): StructType =
+  private[storage] def decodedSchema(partition: StructType): StructType =
     StructType(LogSchema.fileSchema.fields.map(_.copy(nullable = true)) ++ partition.fields)
 
-  /** Decoded bytes up to which a session is read and compacted on the
-    * driver instead of by a Spark job, and so the most decoded rows one
-    * read or compaction holds. It is the measured crossover of a capped
-    * time-range GET: on a 4-core host the driver path costs about 5 ms
-    * per 1,000 log rows (about 210 bytes each decoded) over a base of
-    * about 60 ms, the Spark path 130–210 ms at 10k–66k rows, and they
-    * cross between 5.3 and 6.9 MiB (`ServiceScaleCheck.driverReadBench`).
-    * A compaction was 2–4× faster on the driver at every size measured;
-    * the budget holds it to the same heap. */
-  private[graft] val DriverReadBytes: Long = 6L * 1024 * 1024
+  /** Bytes the string `values` add to a decoded row: an 8-byte slot each
+    * plus the string's bytes rounded up to a word (the `UnsafeRow`
+    * layout; the null bitset stays one word up to 64 columns). */
+  private[storage] def partitionBytes(values: Seq[String]): Long =
+    values.iterator.map(v => 8L + ByteArrayMethods.roundNumberOfBytesToNearestWord(
+      UTF8String.fromString(v).numBytes)).sum
+
+  /** Accumulates a file's [[FileStats]] from its rows, timestamp
+    * first. `millis`: the file stores milliseconds, so its timestamps
+    * read back floored to one. */
+  private[storage] final class StatsTally(millis: Boolean) {
+    private var rows, bytes = 0L
+    private var min = Long.MaxValue
+    private var max = Long.MinValue
+
+    /** Adds a row whose file columns decode to `decoded` bytes. */
+    def add(row: InternalRow, decoded: Long): Unit = {
+      rows += 1
+      bytes += decoded
+      if (!row.isNullAt(0)) {
+        val t = if (millis) Math.floorDiv(row.getLong(0), 1000L) * 1000L else row.getLong(0)
+        min = math.min(min, t)
+        max = math.max(max, t)
+      }
+    }
+
+    def result(onDisk: Long): FileStats = FileStats(rows, onDisk, bytes, min, max)
+    /** What the rows so far say of a file read only in part. */
+    def lowerBound(onDisk: Long): FileStats = FileStats.measured(onDisk).copy(decoded = bytes)
+  }
+
+  /** Decoded bytes up to which the files a read needs are decoded on the
+    * driver instead of scanned by a Spark job, and a compaction runs on
+    * the driver; so the most decoded rows one read or compaction holds.
+    * It is the measured crossover of a capped GET whose range covers
+    * every file of its session: on a 4-core host the driver path costs
+    * about 0.65 ms per 1,000 log rows (about 210 bytes each decoded) over
+    * a base of about 55 ms, the Spark path 90–200 ms at 10k–66k rows,
+    * and they cross between 10.4 and 13.8 MiB in two runs
+    * (`ServiceScaleCheck.driverReadBench`). A compaction was 2–4× faster
+    * on the driver at every size measured; the budget holds it to the
+    * same heap. */
+  private[graft] val DriverReadBytes: Long = 12L * 1024 * 1024
 
   /** Heap a decoded row takes beyond its bytes: the `UnsafeRow` object,
     * its byte array's header and the reference to it. */
-  private val RowOverheadBytes = 64L
+  private[storage] val RowOverheadBytes = 64L
 
   /** Format header (FIRST line): its presence declares "a matching
     * footer must follow", which is what makes tail truncation — the
@@ -1073,5 +1233,140 @@ object ManifestLog {
         java.nio.file.attribute.PosixFilePermissions.fromString(
           Seq(permission.getUserAction, permission.getGroupAction, permission.getOtherAction)
             .map(_.SYMBOL).mkString))
+  }
+}
+
+/** What the store knows of one immutable data file. Complete stats
+  * (`rows` >= 0) come from the code that produced the file or from a
+  * decode of all of it: row count, on-disk bytes, decoded bytes (what
+  * [[ManifestLog]]'s driver path holds for its rows, file columns only)
+  * and the least and greatest timestamp a read returns (an empty range,
+  * min > max, for a file without one). Otherwise only the on-disk size
+  * is known, `decoded` is a lower bound, and the file overlaps every
+  * time range. */
+private[storage] final case class FileStats(rows: Long, onDisk: Long, decoded: Long,
+                                            minTs: Long, maxTs: Long) {
+  def complete: Boolean = rows >= 0
+
+  /** Decoded bytes at least: exact when complete, else the larger of
+    * the lower bound and the on-disk size. */
+  def decodedAtLeast: Long = if (complete) decoded else math.max(decoded, onDisk)
+
+  def overlaps(lo: Long, hi: Long): Boolean = maxTs >= lo && minTs <= hi
+
+  def merge(o: FileStats): FileStats =
+    if (complete) this else if (o.complete) o else copy(decoded = math.max(decoded, o.decoded))
+}
+
+private[storage] object FileStats {
+  /** A file of which only the on-disk size is known. */
+  def measured(onDisk: Long): FileStats = FileStats(-1L, onDisk, 0L, Long.MinValue, Long.MaxValue)
+}
+
+/** The plan leaf of a [[ManifestLog]] read: the resolved version's
+  * files and their stats, no rows, so analysis and the optimizer's main
+  * batches see a plan of constant size. [[FoldManifestReads]] replaces
+  * it before physical planning. `scanWhole`: with nothing narrowing it,
+  * the leaf becomes the file scan, never decoded rows. */
+private[storage] final case class ManifestRelation(output: Seq[Attribute],
+                                                   files: ManifestLog#Snapshot,
+                                                   scanWhole: Boolean)
+    extends LeafNode with MultiInstanceRelation {
+
+  override def producedAttributes: AttributeSet = outputSet
+
+  override def newInstance(): LogicalPlan = copy(output = output.map(_.newInstance()))
+
+  override def computeStats(): Statistics = Statistics(sizeInBytes = BigInt(math.max(1L, files.onDiskBytes())))
+
+  override def doCanonicalize(): LogicalPlan = copy(output = output.map(QueryPlan.normalizeExpressions(_, output)))
+
+  override def simpleString(maxFields: Int): String =
+    s"ManifestRelation ${files.container}/${files.session} v${files.version}, " +
+      s"${files.entries.size} files [${output.mkString(", ")}]"
+}
+
+/** The optimizer rule that turns every [[ManifestRelation]] into the
+  * rows its query can return. Under a Filter (through attribute-only
+  * projections) the timestamp bounds of the filter's conjuncts select the
+  * files whose time range they overlap; a leaf nothing filters reads every
+  * file. Files that fit the store's driver-read budget are decoded on the
+  * calling thread into a `LocalRelation` of the rows inside the bounds;
+  * otherwise the leaf becomes a Parquet scan of those files, aliased to
+  * its attributes, into which `FileSourceStrategy` pushes the filter.
+  *
+  * It runs in the "User Provided Optimizers" batch, after the batch that
+  * folds Filter, Project and Limit into a `LocalRelation`, so it applies
+  * `ConvertToLocalRelation` itself: a capped GET's `collect()` then
+  * starts no job. */
+private[storage] object FoldManifestReads extends Rule[LogicalPlan] with PredicateHelper {
+
+  /** Adds the rule to `spark`'s optimizer once. */
+  def install(spark: SparkSession): Unit = spark.experimental.synchronized {
+    if (!spark.experimental.extraOptimizations.contains(this))
+      spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ this
+  }
+
+  def apply(plan: LogicalPlan): LogicalPlan =
+    if (!plan.exists(_.isInstanceOf[ManifestRelation])) plan
+    else {
+      val replaced = plan.transformDown {
+        case f @ Filter(cond, child @ LeafUnder(leaf)) if cond.deterministic =>
+          val range = timeRange(splitConjunctivePredicates(cond), leaf.output.head)
+          f.copy(child = child.transformUp {
+            case l: ManifestRelation => l.files.plan(l.output, Some(range), l.scanWhole)
+          })
+      }.transformUp { case l: ManifestRelation => l.files.plan(l.output, None, l.scanWhole) }
+      var folded = replaced
+      var next = ConvertToLocalRelation(folded)
+      while (!next.fastEquals(folded)) { folded = next; next = ConvertToLocalRelation(folded) }
+      folded
+    }
+
+  /** The leaf under attribute-only projections. */
+  private object LeafUnder {
+    def unapply(plan: LogicalPlan): Option[ManifestRelation] = plan match {
+      case l: ManifestRelation => Some(l)
+      case Project(list, child) if list.forall(_.isInstanceOf[Attribute]) => unapply(child)
+      case _ => None
+    }
+  }
+
+  private object TsLiteral {
+    def unapply(e: Expression): Option[Long] = e match {
+      case Literal(v: Long, TimestampType) => Some(v)
+      case _ => None
+    }
+  }
+
+  /** The inclusive [lo, hi] that the conjuncts comparing `ts` with a
+    * literal allow (lo > hi: none); other conjuncts leave it unbounded. */
+  private def timeRange(conjuncts: Seq[Expression], ts: Attribute): (Long, Long) = {
+    def isTs(e: Expression): Boolean = e match {
+      case a: Attribute => a.exprId == ts.exprId
+      case _ => false
+    }
+    val (min, max) = (Long.MinValue, Long.MaxValue)
+    def above(v: Long) = if (v == max) (max, min) else (v + 1, max)
+    def below(v: Long) = if (v == min) (max, min) else (min, v - 1)
+    conjuncts.map {
+      case GreaterThanOrEqual(a, TsLiteral(v)) if isTs(a) => (v, max)
+      case GreaterThan(a, TsLiteral(v)) if isTs(a) => above(v)
+      case LessThanOrEqual(a, TsLiteral(v)) if isTs(a) => (min, v)
+      case LessThan(a, TsLiteral(v)) if isTs(a) => below(v)
+      case EqualTo(a, TsLiteral(v)) if isTs(a) => (v, v)
+      case GreaterThanOrEqual(TsLiteral(v), a) if isTs(a) => (min, v)
+      case GreaterThan(TsLiteral(v), a) if isTs(a) => below(v)
+      case LessThanOrEqual(TsLiteral(v), a) if isTs(a) => (v, max)
+      case LessThan(TsLiteral(v), a) if isTs(a) => above(v)
+      case EqualTo(TsLiteral(v), a) if isTs(a) => (v, v)
+      case In(a, list) if isTs(a) && list.nonEmpty && list.forall(TsLiteral.unapply(_).isDefined) =>
+        val vs = list.flatMap(TsLiteral.unapply)
+        (vs.min, vs.max)
+      case InSet(a, set) if isTs(a) && set.nonEmpty && set.forall(_.isInstanceOf[Long]) =>
+        val vs = set.iterator.map(_.asInstanceOf[Long]).toSeq
+        (vs.min, vs.max)
+      case _ => (min, max)
+    }.foldLeft((min, max)) { case ((lo, hi), (l, h)) => (math.max(lo, l), math.min(hi, h)) }
   }
 }

@@ -164,33 +164,6 @@ class IndexTablesSpec extends SparkSuite {
     assert(plan.contains(name), s"expected a scan of $name in:\n$plan")
   }
 
-  test("a crashed compaction swap is repaired from the staged table, not rebuilt from dir") {
-    assume(hasTestData)
-    // nChunks=7 → dedicated table
-    val name = IndexTables.ensureChunkIndex(spark, sf, 7)
-    // plant rows a from-dir rebuild cannot recompute: one doc's chunk
-    // rows copied under an id no corpus holds
-    val marker = spark.table(name)
-      .filter(col("doc_id") === spark.table(name).agg(min("doc_id")).head().getLong(0))
-      .withColumn("doc_id", lit(700000001L))
-      .localCheckpoint()
-    assert(marker.count() == 7L)
-    marker.write.mode("append").insertInto(name)
-    spark.catalog.refreshTable(name)
-    val withMarker = spark.table(name).count()
-    // simulate a crash between "DROP final" and "RENAME staged": the
-    // complete replacement sits under _stage, the final name is gone
-    spark.sql(s"ALTER TABLE $name RENAME TO ${name}_stage")
-    // the next ensure must complete the swap — a from-dir rebuild would
-    // silently lose the appended marker doc
-    IndexTables.ensureChunkIndex(spark, sf, 7)
-    assert(spark.table(name).count() == withMarker,
-      "repair lost rows that only existed in the staged table")
-    assert(spark.table(name).filter(col("doc_id") === 700000001L).count() == 7L,
-      "appended rows not recovered from the staged table")
-    assert(!spark.catalog.tableExists(s"${name}_stage"))
-  }
-
   test("IVF index maintains INCREMENTALLY: new vectors land in their frozen-quantizer lists") {
     // mutates sf0.01's IVF table only — disjoint from the sf0.001
     // twin-identity tables and from StreamingNearDupSpec's sf0.01

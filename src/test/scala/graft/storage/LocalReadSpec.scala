@@ -20,13 +20,16 @@ import graft.api.LogServer
 import graft.engine.QueryEngine
 import graft.model.LogSchema
 
-/** A session whose rows decode to at most `ManifestLog.DriverReadBytes`
-  * is read and compacted on the driver (a `LocalRelation`, no Spark
-  * job); a larger one, or any session of a store whose
-  * `driverReadBytes` seam is 0, keeps the file-scan plan. Both paths
-  * must serve the same rows. */
+/** A read whose files decode to at most `ManifestLog.DriverReadBytes`
+  * is served from rows decoded on the driver (a `LocalRelation`, no
+  * Spark job), a filtered read from the files its time bounds overlap;
+  * a larger one, or any read of a store whose `driverReadBytes` seam is
+  * 0, keeps the file-scan plan. Compaction takes the same budget. Every
+  * path must serve the rows a plain Parquet read of the same files
+  * does. */
 class LocalReadSpec extends SparkSuite {
   import LocalAppendSpec.{rowsIn, writeConfs, writerSession}
+  import LocalReadSpec.{multiset, plainTier}
 
   private val Gate = ManifestLog.DriverReadBytes
   private val Levels = Seq("INFO", "WARN", "ERROR", "DEBUG")
@@ -39,14 +42,9 @@ class LocalReadSpec extends SparkSuite {
     log
   }
 
+  /** Whether the optimizer turns `df` into driver-decoded rows. */
   private def isLocal(df: DataFrame): Boolean =
-    GraftShim.analyzed(df).isInstanceOf[LocalRelation]
-
-  private def multiset(df: DataFrame): Seq[String] =
-    df.collect().toSeq.map(_.toSeq.map {
-      case t: Timestamp => t.toInstant.toString
-      case v => String.valueOf(v)
-    }.mkString("|")).sorted
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
 
   /** Instants the random rows draw from: the fixture's (a pre-1900 one,
     * micros, 2038) plus a few seconds apart, so rows tie and time
@@ -55,15 +53,23 @@ class LocalReadSpec extends SparkSuite {
     rowsIn.map(_.getTimestamp(0).toInstant).distinct ++
       (0 until 6).map(i => Instant.parse("2024-03-01T00:00:00Z").plusSeconds(i * 7L).plusNanos(i * 1000L))
 
-  private def randomRows(r: Random, n: Int): Seq[Row] =
-    Seq.fill(n)(Row(Timestamp.from(instants(r.nextInt(instants.size))),
-      Levels(r.nextInt(Levels.size)), s"m${r.nextInt(12)}")) ++ rowsIn
+  /** `n` random rows on three adjacent instants, so each batch's file
+    * covers its own time slice, plus the fixture rows if `fixture`. */
+  private def randomRows(r: Random, n: Int, fixture: Boolean): Seq[Row] = {
+    val sorted = instants.sorted
+    val from = r.nextInt(sorted.size - 2)
+    Seq.fill(n)(Row(Timestamp.from(sorted(from + r.nextInt(3))),
+      Levels(r.nextInt(Levels.size)), s"m${r.nextInt(12)}")) ++ (if (fixture) rowsIn else Nil)
+  }
 
   /** Writes session `shape` through `writer`, alternating driver-local
-    * and derived (Spark-written) batches. */
+    * and derived (Spark-written) batches; the first carries the fixture
+    * rows. */
   private def fill(writer: ManifestLog, ws: SparkSession, shape: String, r: Random): Unit = {
+    var first = true
     def append(): Unit = {
-      val rows = randomRows(r, 5 + r.nextInt(40))
+      val rows = randomRows(r, 5 + r.nextInt(40), first)
+      first = false
       val batch =
         if (r.nextBoolean()) ws.createDataFrame(rows.asJava, LogSchema.fileSchema)
         else ws.createDataFrame(ws.sparkContext.parallelize(rows, 2), LogSchema.fileSchema)
@@ -81,14 +87,20 @@ class LocalReadSpec extends SparkSuite {
 
   private def pick[T](r: Random, xs: Seq[T]): T = xs(r.nextInt(xs.size))
 
-  /** A random `readLogs` request: inclusive bounds on row instants,
-    * filters including `in`, and a projection (empty = all columns). */
+  /** A random `readLogs` request: inclusive bounds on row instants (one
+    * in eight empty, one in eight outside every row), filters including
+    * `in`, and a projection (empty = all columns). */
   private def randomQuery(r: Random)
       : (Option[Instant], Option[Instant], Seq[(String, String, Any)], Seq[String]) = {
     val sorted = instants.sorted
     val lo = r.nextInt(sorted.size)
-    val start = if (r.nextBoolean()) Some(sorted(lo)) else None
-    val end = if (r.nextBoolean()) Some(sorted(lo + r.nextInt(sorted.size - lo))) else None
+    val (start, end) = r.nextInt(8) match {
+      case 0 => (Some(sorted(lo)), Some(sorted(lo).minusNanos(1000))) // empty: end before start
+      case 1 => (Some(Instant.parse("2100-01-01T00:00:00Z")), None) // after every row
+      case _ =>
+        (if (r.nextBoolean()) Some(sorted(lo)) else None,
+         if (r.nextBoolean()) Some(sorted(lo + r.nextInt(sorted.size - lo))) else None)
+    }
     val candidates: Seq[(String, String, Any)] = Seq(
       ("level", "==", pick(r, Levels)),
       ("level", "in", Seq(pick(r, Levels), pick(r, Levels))),
@@ -111,20 +123,29 @@ class LocalReadSpec extends SparkSuite {
       shapes.foreach(fill(writer, ws, _, r))
       val driverLog = store(spark, root, Gate)
       val sparkLog = store(spark, root, 0L)
-      val (viaDriver, viaSpark) = (new QueryEngine(driverLog), new QueryEngine(sparkLog))
+      // about one file's rows: narrow ranges decode, wide ones scan
+      val smallLog = store(spark, root, 2048L)
+      // the writer knows its files' stats from writing them, the others
+      // learn them from their first decode
+      val engines = Seq("driver" -> new QueryEngine(driverLog), "small" -> new QueryEngine(smallLog),
+        "writer" -> new QueryEngine(store(ws, root, Gate)))
+      val plainRead = new QueryEngine(plainTier(spark, root, driverLog))
       for (shape <- shapes) {
         assert(isLocal(driverLog.read("c", shape)), s"$shape: under the gate, not a LocalRelation")
         assert(isLocal(sparkLog.read("c", shape)) === (shape == "empty"),
           s"$shape: a budget of 0 must keep the file scan")
-        val all = multiset(viaSpark.readLogs("c", shape))
-        assert(multiset(viaDriver.readLogs("c", shape)) === all, s"$shape: full read")
+        val all = multiset(plainRead.readLogs("c", shape))
+        assert(multiset(new QueryEngine(sparkLog).readLogs("c", shape)) === all, s"$shape: full scan")
+        for ((name, engine) <- engines)
+          assert(multiset(engine.readLogs("c", shape)) === all, s"$shape: full read, $name")
         assert(all.isEmpty === (shape == "empty"))
         if (shape != "empty") assert(all.exists(_.contains("1850-06-01T00:00:00.123456Z")))
-        for (_ <- 1 to 12) {
+        for (_ <- 1 to 16) {
           val (start, end, filters, columns) = randomQuery(r)
-          assert(multiset(viaDriver.readLogs("c", shape, start, end, filters, columns)) ===
-            multiset(viaSpark.readLogs("c", shape, start, end, filters, columns)),
-            s"$shape: start=$start end=$end filters=$filters columns=$columns")
+          val expected = multiset(plainRead.readLogs("c", shape, start, end, filters, columns))
+          for ((name, engine) <- engines)
+            assert(multiset(engine.readLogs("c", shape, start, end, filters, columns)) === expected,
+              s"$shape via $name: start=$start end=$end filters=$filters columns=$columns")
         }
       }
     }
@@ -166,25 +187,27 @@ class LocalReadSpec extends SparkSuite {
       val rows = (0 until 500).map(i => Row(Timestamp.from(t0.plusSeconds(b * 500L + i)), "INFO", msg))
       log.append(spark.createDataFrame(rows.asJava, LogSchema.fileSchema), "c", session)
     }
-    fill("under", 2) // 1,000 rows, about 4.2 MB decoded
-    fill("over", 4) // 2,000 rows, about 8.4 MB decoded
+    val perBatch = 500L * (4096 + 80) // decoded bytes of a batch, about 2.1 MB
+    val (under, over) = ((Gate / perBatch / 2).toInt, (Gate / perBatch + 1).toInt)
+    fill("under", under) // under half the budget
+    fill("over", over) // past it
     for (session <- Seq("under", "over")) {
       val (_, _, _, onDisk) = log.tierStats("c", session)
       assert(onDisk < Gate / 16, s"$session: $onDisk bytes on disk; the on-disk size alone must not decide")
     }
-    GraftShim.analyzed(log.read("c", "under")) match {
+    log.read("c", "under").queryExecution.optimizedPlan match {
       case local: LocalRelation =>
         val held = local.data.iterator.map(_.asInstanceOf[org.apache.spark.sql.catalyst.expressions.UnsafeRow]
           .getSizeInBytes + 64L).sum
-        assert(local.data.size === 1000)
+        assert(local.data.size === under * 500)
         assert(held <= Gate, s"a driver read holds $held decoded bytes, over the $Gate budget")
       case other => fail(s"under the budget, not a LocalRelation: ${other.getClass.getSimpleName}")
     }
     assert(!isLocal(log.read("c", "over")), "over the budget in decoded bytes, yet decoded on the driver")
-    assert(log.read("c", "over").count() === 2000L)
+    assert(log.read("c", "over").count() === over * 500L)
     assert(jobsDuring(log.compact("c", "under"))._2 === 0)
     assert(jobsDuring(log.compact("c", "over"))._2 >= 1, "an over-budget compaction ran on the driver")
-    assert(log.read("c", "over").filter(col("message") === msg).count() === 2000L)
+    assert(log.read("c", "over").filter(col("message") === msg).count() === over * 500L)
   }
 
   test("a gated compaction writes as many cold files as the Spark path, in disjoint time slices") {
@@ -267,12 +290,45 @@ class LocalReadSpec extends SparkSuite {
         val logs = (0 until 4).map(i => s"""{"level":"INFO","message":"r$i","timestamp":"2025-01-01T00:00:0${i}Z"}""")
         assert(req("POST", "/api/logs/cap/s", Some(logs.mkString("""{"logs":[""", ",", "]}")), token)
           .statusCode === 201)
+        // a second file whose rows lie after the range: the range folds to the first
+        val later = (0 until 2).map(i => s"""{"level":"WARN","message":"q$i","timestamp":"2025-01-02T00:00:0${i}Z"}""")
+        assert(req("POST", "/api/logs/cap/s", Some(later.mkString("""{"logs":[""", ",", "]}")), token)
+          .statusCode === 201)
         val at = req("GET", "/api/logs/cap/s?start_ts=2025-01-01T00:00:00Z&end_ts=2025-01-01T00:00:02Z", None, token)
         assert(at.statusCode === 200, s"budget $gate: ${at.body}")
         assert(mapper.readTree(at.body).get("total_rows").asInt === 3)
+        val ranged = req("GET", "/api/logs/cap/s?start_ts=2025-01-01T00:00:00Z&end_ts=2025-01-01T00:00:03Z", None, token)
+        assert(ranged.statusCode === 413, s"budget $gate, a range one row past the cap: ${ranged.body}")
         val over = req("GET", "/api/logs/cap/s", None, token)
         assert(over.statusCode === 413, s"budget $gate: ${over.body}")
       } finally server.close()
     }
+  }
+}
+
+object LocalReadSpec {
+  /** A DataFrame's rows as sorted strings: its multiset. */
+  private[storage] def multiset(df: DataFrame): Seq[String] =
+    df.collect().toSeq.map(_.toSeq.map {
+      case t: Timestamp => t.toInstant.toString
+      case v => String.valueOf(v)
+    }.mkString("|")).sorted
+
+  /** The rows of `files` of `root` by a plain Parquet read on `s`, with
+    * the partition columns a store read adds. */
+  private[storage] def plainRead(s: SparkSession, root: String, files: Seq[String],
+                                 c: String, sess: String): DataFrame =
+    if (files.isEmpty) s.createDataFrame(java.util.List.of[Row](), LogSchema.schema)
+    else s.read.schema(LogSchema.fileSchema).parquet(files.map(e => s"$root/$e"): _*)
+      .withColumn("container", lit(c)).withColumn("session", lit(sess))
+
+  /** A `LogTier` whose reads are plain Parquet reads of `log`'s current files. */
+  private[storage] def plainTier(s: SparkSession, root: String, log: ManifestLog): LogTier = new LogTier {
+    def read(c: String, sess: String): DataFrame = plainRead(s, root, log.dataEntries(c, sess), c, sess)
+    def append(df: DataFrame, c: String, sess: String): Long = throw new UnsupportedOperationException
+    def tierStats(c: String, sess: String): (Long, Long, Long, Long) = log.tierStats(c, sess)
+    def sessions(): Seq[(String, String)] = log.sessions()
+    def compact(c: String, sess: String): Long = throw new UnsupportedOperationException
+    def statsAndRows(c: String, sess: String): ((Long, Long, Long, Long), Long) = log.statsAndRows(c, sess)
   }
 }
