@@ -134,24 +134,7 @@ object ScaleCheck {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
     def indexBuilds(dir: String): Seq[(String, Double)] = {
-      // fixture for the tombstone-delete pricing, built up front (its
-      // gen-0 index builds are excluded from every timed entry) and
-      // torn down after the sweep — the shared warehouse is persistent
-      // across processes, so the copy and its tables must not leak
-      val tombFixture = {
-        val fix = java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get(Scratch.localDir), "sc-tomb").toString
-        ops.Tables.embeddings(spark, dir)
-          .write.mode("overwrite").parquet(fix + "/embeddings.parquet")
-        ops.IndexTables.ensureIvfIndex(spark, fix)
-        ops.IndexTables.ensurePqIndex(spark, fix)
-        fix
-      }
-      // fixture teardown MUST survive a failing timed entry: any throw
-      // below — a require on the rebuild or the delete count — would
-      // otherwise leak the corpus copy plus three tables into the
-      // shared persistent warehouse
-      val r = try { Seq(
+      val r = Seq(
         "build chunk index"   -> timed(ops.IndexTables.ensureChunkIndex(spark, dir, 4)),
         "build shingle index" -> timed(ops.IndexTables.ensureShingleIndex(spark, dir)),
         "build IVF index"     -> timed(ops.IndexTables.ensureIvfIndex(spark, dir)),
@@ -168,43 +151,6 @@ object ScaleCheck {
           timed(ops.IndexTables.ensurePqIndex(spark, dir)),
         "consume: ann_ivf_pq" ->
           timed(SparkEntry.queries("ann_ivf_pq")(spark, dir).count()),
-        // ANN lifecycle: the per-batch append an ingest pays
-        // under the frozen quantizer vs the full retrain+swap a
-        // maintenance cadence pays when the corpus drifts — the rebuild
-        // re-trains (farthest-point seeds + one quantized-Lloyd step)
-        // and re-encodes EVERY current vector, so its cost is the
-        // index's size while the append's is the batch's
-        "append IVF+PQ batch (1% vecs)" -> timed {
-          val batch = ops.Tables.embeddings(spark, dir)
-            .filter(col("vec_id") % 100 === 0)
-            .select((col("vec_id") + 600000000L).as("vec_id"), col("embedding"))
-          ops.IndexTables.appendToIvfIndex(spark, dir, batch)
-          ops.IndexTables.appendToPqIndex(spark, dir, batch)
-        },
-        "rebuild ANN generation (retrain + swap)" ->
-          timed(require(
-            ops.IndexTables.rebuildAnnIndexes(spark, dir, "scalecheck").isDefined,
-            "scalecheck rebuild lease contended")),
-        "consume after rebuild: ann_ivf_pq" ->
-          timed(SparkEntry.queries("ann_ivf_pq")(spark, dir).count()),
-        // tombstone DELETE: the delete's cost is the batch
-        // (one tombstone write), never a table rewrite, and the masked
-        // consume adds one broadcast anti-join. Priced on the FIXTURE
-        // copy of the embeddings: tombstoning the real dir would mask
-        // every later Verify/Bench run's serving of the same tables
-        // (the isolation rule AnnTombstoneSpec follows). The fixture's
-        // gen-0 builds ran before the sweep — only the delete itself
-        // is timed.
-        "delete 1% ids (tombstone write)" -> {
-          val ids = ops.Tables.embeddings(spark, tombFixture)
-            .filter(col("vec_id") % 100 === 1).select(col("vec_id"))
-            .collect().map(_.getLong(0)).toSeq
-          timed(require(
-            ops.IndexTables.deleteFromAnnIndex(spark, tombFixture, ids) == ids.size.toLong,
-            "tombstone batch not fully applied"))
-        },
-        "consume after delete: ann_ivf_pq (masked)" ->
-          timed(SparkEntry.queries("ann_ivf_pq")(spark, tombFixture).count()),
         // segmented shingle index: build ≈ the v2 build minus
         // denormalization; the consume pays the read-time cap
         "build shingle segments" ->
@@ -220,12 +166,6 @@ object ScaleCheck {
           timed(ops.IndexTables.ensureBpeVocab(spark, dir, 10)),
         "consume: text_bpe_encode_table" ->
           timed(SparkEntry.queries("text_bpe_encode_table")(spark, dir).count()))
-      } finally {
-        // tear the pricing fixture down: tables out of the shared
-        // persistent warehouse, the corpus copy off disk
-        ops.IndexTables.dropAnnFixtureTables(spark, tombFixture)
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tombFixture))
-      }
       r.foreach { case (n, t) =>
         System.err.println(f"[scalecheck] $dir%-24s $n%-32s $t%8.3f s") }
       clean()

@@ -46,8 +46,6 @@ object CurationRun {
   private val DeltaShardsTag = "delta2-shards"
   private val TakedownKeepDropTag = "takedown1-keepdrop"
   private val TakedownShardsTag = "takedown2-shards"
-  private val AdmitKeepDropTag = "admit1-keepdrop"
-  private val AdmitShardsTag = "admit2-shards"
   private val RunTs = "2024-01-01 00:00:00"
 
   def run(s: SparkSession, dir: String, root: String, runId: String,
@@ -323,11 +321,11 @@ object CurationRun {
     * takedown ∘ prior ≡ full-on-filtered: the receipt equals a full
     * run over the corpus minus the removed set (the declared oracle
     * proves it value-by-value; the keeper-re-election path is
-    * spec-proven on a crafted corpus). The persisted-index side of a
-    * takedown is the ANN tombstone path ([[IndexTables
-    * .deleteFromAnnIndex]]); the shingle admission indexes recompute
-    * DF at their next merge, exactly as their compaction contract
-    * states. Resumable like every run flavor here. */
+    * spec-proven on a crafted corpus). A persisted index is derived
+    * from its corpus and never edited after its build, so the index
+    * side of a takedown is to drop the affected index tables: the next
+    * `ensure` rebuilds each from the purged corpus. Resumable like
+    * every run flavor here. */
   private[graft] def takedownRun(s: SparkSession, dir: String, root: String,
                                priorRunId: String, runId: String, mod: Long,
                                nShards: Int, failAfterStage: Int): DataFrame = {
@@ -399,103 +397,6 @@ object CurationRun {
         regexp_extract(col("message"), " n=(\\d+)", 1).cast("long").as("n_docs"),
         regexp_extract(col("message"), "tok=(\\d+)", 1).cast("long").as("total_tokens"),
         regexp_extract(col("message"), "dg=([0-9a-f]+)", 1).as("content_digest"))
-      .withColumn("pinned_version", lit(pinned))
-      .orderBy(col("shard_id"))
-  }
-
-  /** ADMISSION run — the O(batch) sibling of [[deltaRun]]:
-    * admit the post-`thr` batch against the prior chain's FROZEN
-    * statistics ([[Pipeline.admissionFrozenIndexed]] — persisted
-    * digest index + base-slice shingle segments) and commit the
-    * working-set artifact a trainer reads BETWEEN exact
-    * reconciliations:
-    *
-    *   A1. ADMIT_KEEP_DROP — the batch's frozen-rule decisions, one
-    *       tagged append. NO base corrections, by construction: the
-    *       freeze means the prior corpus's decisions are immutable
-    *       until the next delta/full run — that immutability is what
-    *       makes the stage O(batch). After the commit, the admitted
-    *       batch's digests are appended to the admission digest index
-    *       ([[IndexTables.appendToAdmissionDigests]]) so the NEXT
-    *       batch gates against everything already accepted
-    *       (replay-safe: a resumed run re-appends nothing).
-    *   A2. SHARD — the combined working-set receipt (prior keeps +
-    *       admitted keeps, batch rows flagged `new=` like the delta's),
-    *       derived purely from COMMITTED artifacts.
-    *   A3. CITE — the replay-proven citation, chained to the prior pin
-    *       with the frozen-basis threshold recorded.
-    *
-    * The artifact is EXPECTED to drift from a delta run's (the
-    * staleness `pipe_curation_admit` prices as n_divergent); the next
-    * [[deltaRun]] against the same prior chain is the reconciliation.
-    * Resumable exactly like every run flavor here. */
-  private[graft] def admitRun(s: SparkSession, dir: String, root: String,
-                              priorRunId: String, runId: String, thr: Long,
-                              nShards: Int, failAfterStage: Int): DataFrame = {
-    val log = new graft.storage.ManifestLog(s, root)
-    def msgRows(level: String, messages: DataFrame): DataFrame =
-      messages.select(lit(RunTs).cast("timestamp").as("timestamp"),
-        lit(level).as("level"), col("message"))
-    val priorPinned = committedPin(log, priorRunId).getOrElse(throw new IllegalStateException(
-      s"prior run $priorRunId has no committed citation — complete it before the admission"))
-    val priorDec = log.readAt(Container, priorRunId, priorPinned)
-      .filter(col("level") === "KEEP_DROP")
-      .select(regexp_extract(col("message"), "doc=(\\d+)", 1).cast("long").as("doc_id"),
-              regexp_extract(col("message"), "dec=(\\w+)", 1).as("prior_dec"))
-
-    // ---- stage A1: frozen-rule batch admissions ----------------------
-    val admitted = Pipeline.admissionFrozenOf(s, dir, thr,
-      Tables.documents(s, dir).filter(col("doc_id") > thr))
-    log.appendIdempotent(msgRows("ADMIT_KEEP_DROP",
-      admitted.select(concat(lit("doc="), col("doc_id"), lit(" src="), col("source"),
-                             lit(" dec="), col("decision")).as("message"))),
-      Container, runId, AdmitKeepDropTag)
-    // gate evolution: later batches see this batch's ADMITTED digests
-    // (keeps only, per the stage doc — a rejected doc's digest must NOT
-    // enter the accepted set, or a later copy of it would be classified
-    // exact_dup instead of by its own gate, skewing the decision mix
-    // and n_divergent). Replay-safe: A1 is committed
-    // above, and the append's own idempotency makes a resumed-run
-    // re-append a no-op.
-    IndexTables.appendToAdmissionDigests(s, dir, thr,
-      Tables.documents(s, dir).filter(col("doc_id") > thr)
-        .join(admitted.filter(col("decision") === "keep").select(col("doc_id")),
-          Seq("doc_id"))
-        .select(col("text")))
-    if (failAfterStage <= 1)
-      throw new IllegalStateException("injected crash after admit stage 1")
-
-    // ---- stage A2: working-set receipt from COMMITTED artifacts ------
-    val a1 = log.read(Container, runId)
-      .filter(col("level") === "ADMIT_KEEP_DROP")
-      .select(regexp_extract(col("message"), "doc=(\\d+)", 1).cast("long").as("doc_id"),
-              regexp_extract(col("message"), "dec=(\\w+)", 1).as("dec"))
-    val keepIds = priorDec.filter(col("prior_dec") === "keep").select(col("doc_id"))
-      .unionByName(a1.filter(col("dec") === "keep").select(col("doc_id")))
-    val kept = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      .join(keepIds, Seq("doc_id"))
-      .withColumn("is_new", col("doc_id") > thr)
-    log.appendIdempotent(msgRows("SHARD",
-      Pipeline.shardManifestWithNew(kept, nShards).select(
-        concat(lit("shard="), col("shard_id"), lit(" n="), col("n_docs"),
-               lit(" tok="), col("total_tokens"), lit(" dg="), col("content_digest"),
-               lit(" new="), col("n_new")).as("message"))),
-      Container, runId, AdmitShardsTag)
-    if (failAfterStage <= 2)
-      throw new IllegalStateException("injected crash after admit stage 2")
-
-    // ---- stage A3: citation, chained to the prior run's pin ----------
-    val pinned = sealChain(s, log, runId,
-      extra = Seq(s"chain prior_run=$priorRunId prior_version=$priorPinned frozen_thr=$thr"))
-
-    log.readAt(Container, runId, pinned)
-      .filter(col("level") === "SHARD")
-      .select(
-        regexp_extract(col("message"), "shard=(\\d+)", 1).cast("long").as("shard_id"),
-        regexp_extract(col("message"), " n=(\\d+)", 1).cast("long").as("n_docs"),
-        regexp_extract(col("message"), "tok=(\\d+)", 1).cast("long").as("total_tokens"),
-        regexp_extract(col("message"), "dg=([0-9a-f]+)", 1).as("content_digest"),
-        regexp_extract(col("message"), "new=(\\d+)", 1).cast("long").as("n_new"))
       .withColumn("pinned_version", lit(pinned))
       .orderBy(col("shard_id"))
   }

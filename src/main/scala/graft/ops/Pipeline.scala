@@ -94,8 +94,8 @@ object Pipeline {
     balancedMixtureOver(Tables.documents(s, dir)
       .select(col("doc_id"), col("source"), lit(1L).as("n_tokens")))
 
-  /** [[balancedMixture]] denominated in TRAINED-TOKENIZER tokens
-    * (round-12 verdict #4, final leg): "balanced" for a trainer means
+  /** [[balancedMixture]] denominated in TRAINED-TOKENIZER tokens:
+    * "balanced" for a trainer means
     * balanced TOKEN mass, not document counts — a source of long
     * documents is over-represented per document. Target budget = half
     * the smallest source's BPE token mass; each source's keep rate is
@@ -190,8 +190,8 @@ object Pipeline {
       .orderBy(col("source"), col("shard_id"))
   }
 
-  /** [[tokenShards]] denominated in TRAINED-TOKENIZER tokens (round-12
-    * verdict #3): the packing/budget family counted whitespace tokens
+  /** [[tokenShards]] denominated in TRAINED-TOKENIZER tokens: the
+    * packing/budget family counted whitespace tokens
     * while the engine's own BPE trainer owns real subword counts — a
     * trainer provisions shards in the tokens it will actually consume,
     * so the budget denominators must agree. Per-document counts come
@@ -535,7 +535,7 @@ object Pipeline {
     * `docs` carries an `is_new` flag (batch-origin rows) so a delta
     * run's receipt shows where the admitted batch landed. Same shard
     * assignment, digest fold and ordering as the plain recipe BY
-    * CONSTRUCTION (one shared builder — review-caught duplication):
+    * CONSTRUCTION (one shared builder):
     * a delta receipt and a full receipt over the same keep set are
     * identical in the shared columns. */
   private[ops] def shardManifestWithNew(docs: DataFrame, nShards: Int): DataFrame =
@@ -576,7 +576,7 @@ object Pipeline {
       .orderBy(col("shard_id"))
   }
 
-  /** PHYSICAL shard export + verification (round-12 verdict #4) — the
+  /** PHYSICAL shard export + verification — the
     * loop [[shardManifest]]'s receipt exists FOR, closed: write one
     * parquet file per shard_id under `outDir`, RE-READ the written
     * bytes, re-derive every shard's digest from them, and REQUIRE
@@ -643,12 +643,11 @@ object Pipeline {
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getString(3))))
       .toMap
     // layout AND content epoch are part of the NAME: nShards
-    // (review-caught: with layout-agnostic names, an nShards=4
-    // re-export over an nShards=8 dir trusted the existing shard-0..3
-    // files and the verify failed on content that was never this
-    // layout's) plus a prefix of the shard's receipt digest (round-12
-    // advice: with content-agnostic names, a re-export after ANY
-    // keep-set change at the SAME nShards could never converge —
+    // (with layout-agnostic names, an nShards=4 re-export over an
+    // nShards=8 dir would trust the existing shard-0..3 files and the
+    // verify would fail on content that was never this layout's) plus
+    // a prefix of the shard's receipt digest (with content-agnostic
+    // names, a re-export after ANY keep-set change at the SAME nShards could never converge —
     // every file "existed", nothing was rewritten, and the verify
     // failed forever on the stale bytes). Content-addressed names make
     // re-export idempotent by construction: unchanged shards keep
@@ -658,7 +657,7 @@ object Pipeline {
     // keeps a consistent view of the old content.
     def shardFile(k: Long) =
       new Path(out, f"shard-$k%05d-of-$nShards%d-${receipt(k)._3.take(8)}%s.parquet")
-    // STALE-SHARD SWEEP (review-caught): a prior export of the same
+    // STALE-SHARD SWEEP: a prior export of the same
     // dir under a different layout (or a shrunken keep set) left shard
     // files the current receipt never names — the verify pass only
     // reads receipt-named files, so without the sweep a consumer
@@ -666,14 +665,14 @@ object Pipeline {
     // "verified" return value said nothing about. The export owns its
     // output names; after a COMPLETED export the dir equals exactly
     // the receipt. Layout-distinct names never collide, so the sweep
-    // can run AFTER the new export verifies (second review pass: an
-    // eager sweep would destroy the previous complete export when a
+    // can run AFTER the new export verifies (an eager sweep would
+    // destroy the previous complete export when a
     // re-export fails mid-write — availability first; the purge path
     // for must-delete-now content is rewriteExcluding, not re-export).
     // Retention bookkeeping, captured at entry BEFORE this export's
     // own flip: the PRIOR manifest's publish mtime and its file list.
-    // A stale file splits into two cases (fifth review pass — the
-    // first grace anchored to the wrong flip):
+    // A stale file splits into two cases, each with its own grace
+    // anchor:
     //  - named by the PRIOR manifest: it is being retired by THIS
     //    flip, and a reader can have fetched that manifest any moment
     //    up to the flip — deletable only `staleGrace` AFTER NOW, i.e.
@@ -710,8 +709,7 @@ object Pipeline {
         }
       }
     }
-    // ATOMIC export manifest — the consumer contract (third review
-    // pass): between a failed re-export and its converging re-run the
+    // ATOMIC export manifest — the consumer contract: between a failed re-export and its converging re-run the
     // dir can transiently hold the old complete layout PLUS partial
     // new-layout files, so a consumer must never glob
     // shard-*.parquet; it reads `_export_manifest.json`, which is
@@ -926,8 +924,8 @@ object Pipeline {
 
   /** [[epochsPlan]] denominated in TRAINED-TOKENIZER tokens — an epoch
     * budget is consumed in the tokens the trainer reads, so the
-    * repeat/cap math must count them ([[tokenShardsBpe]]'s rationale;
-    * round-12 verdict #4). Shared body, shared [[bpeTokenRelation]]
+    * repeat/cap math must count them ([[tokenShardsBpe]]'s rationale).
+    * Shared body, shared [[bpeTokenRelation]]
     * denominator — the budget family agrees on one token definition. */
   def epochsPlanBpe(s: SparkSession, dir: String, budget: Long = 1000000L,
                     nMerges: Int = 10): DataFrame =
@@ -1048,7 +1046,7 @@ object Pipeline {
     // on a constant key — the cappedShingles pattern): the previous
     // .cache() + eager .head dispatched a job at plan-construction
     // time and pinned one cache entry per invocation, never released
-    // (review-caught leak). The relation is re-derived per consumer
+    // (a leak). The relation is re-derived per consumer
     // instead — a hash join against the memoized signature index, far
     // cheaper than a leaked cache entry squeezing execution memory.
     val th = withSh.agg(expr("(max(doc_id) + 1) * 4 div 5").as("th"))
@@ -1086,8 +1084,8 @@ object Pipeline {
     * per-doc rollup → one per-source rollup; at 100 TB the only
     * shuffles are on (doc_id, token) and doc_id, both well-spread. */
   /** Per-document rule flags — the unit [[gopherQuality]] aggregates and
-    * [[curationManifest]] folds into its keep/drop decision. MEMOIZED
-    * (round-17, guide §2.4): the flags are per-document and
+    * [[curationManifest]] folds into its keep/drop decision. MEMOIZED:
+    * the flags are per-document and
     * corpus-independent, and every decision derivation ([[decisionsFrom]]
     * via the full/UpTo/Excluding/Seg variants — curation manifest, data
     * cards, admit divergence, the lifecycle runs) plus [[gopherQuality]]
@@ -1151,7 +1149,7 @@ object Pipeline {
     * [[curationManifest]]'s unit, factored out so [[CurationRun]] can
     * persist the decisions themselves as the keep/drop artifact. */
   private[ops] def curationDecisions(s: SparkSession, dir: String): DataFrame =
-    // MEMOIZED (round-17, guide §2.4): the full-corpus decision relation
+    // MEMOIZED: the full-corpus decision relation
     // has ≥6 declared consumers (curation manifest, both data cards, the
     // divergence column of both admit twins, the one-shot run and the
     // lifecycle fixtures) and each re-derived the keeper window +
@@ -1215,7 +1213,7 @@ object Pipeline {
   }
 
   /** BATCH-BOUNDED curation admission against FROZEN prior statistics
-    * (round-12 verdict #1) — the O(batch) decision path the exact
+    * — the O(batch) decision path the exact
     * delta run deliberately lacks: [[CurationRun.deltaRun]] re-derives
     * decisions over the COMBINED corpus per batch (exact, but
     * SCALECHECK shows delta-only costing more than a full run), while
@@ -1275,32 +1273,12 @@ object Pipeline {
     * .ensureShingleSegmentsFrom]] — the committed statistics, not a
     * re-derivation). Identical rows to the in-plan form BY the shared
     * decision body (AdmissionFrozenSpec proves it), which is why the
-    * declared twin shares one oracle text. The digest probe is pinned
-    * to `origin = 'base'` rows (round-13 advice): gate evolution
-    * ([[IndexTables.appendToAdmissionDigests]]) on the same (dir, thr)
-    * appends 'batch' rows the declared twin can never see, so the
-    * oracle contract holds structurally rather than by fixture-dir
-    * convention. */
-  private[graft] def admissionFrozenIndexed(s: SparkSession, dir: String, thr: Long): DataFrame =
-    admissionFrozenOf(s, dir, thr,
-      Tables.documents(s, dir).filter(col("doc_id") > thr), baseOnly = true)
-
-  /** The index-served frozen gate over an EXPLICIT batch relation
-    * (doc_id, source, text, ...) — the streaming/orchestration seam:
-    * a micro-batch probes the same persisted assets regardless of how
-    * its ids relate to the split threshold, and the gate works
-    * unchanged inside a `foreachBatch` (StreamingAdmissionSpec drives
-    * exactly that). The digest table may have GROWN past the base
-    * slice via [[IndexTables.appendToAdmissionDigests]] — the gate
-    * evolution that catches cross-batch exact dups. */
-  private[graft] def admissionFrozenOf(s: SparkSession, dir: String, thr: Long,
-                                       batch: DataFrame,
-                                       baseOnly: Boolean = false): DataFrame = {
+    * declared twin shares one oracle text. */
+  private[graft] def admissionFrozenIndexed(s: SparkSession, dir: String, thr: Long): DataFrame = {
+    val batch = Tables.documents(s, dir).filter(col("doc_id") > thr)
     val key = admissionKey(dir, thr)
     ensureAdmissionAssets(s, dir, thr)
-    val digestsAll = s.table(IndexTables.ensureAdmissionDigests(s, dir, thr))
-    val digests = (if (baseOnly) digestsAll.filter(col("origin") === "base")
-                   else digestsAll).select(col("digest"))
+    val digests = s.table(IndexTables.ensureAdmissionDigests(s, dir, thr))
     // batch shingles capped by the INDEX's committed hot set — the
     // same frozen asymmetry as the in-plan form
     val hot = IndexTables.segmentHotSet(s, key)
@@ -1340,11 +1318,11 @@ object Pipeline {
       .withColumn("batch_keep", min(col("doc_id")).over(wDigest))
       .join(baseDigests.select(col("digest")).withColumn("in_base", lit(1L)),
         Seq("digest"), "left")
-    // NOT checkpointed (round-17 negative result, measured in the full
-    // bench): materializing batchCapped/baseCapped for their two
-    // consumers regressed both admit twins ~40-85% at sf0.1 — the
-    // eager materialization costs more than the duplicated O(batch)
-    // derivation it removes (the text_phrase_topk trade from r16).
+    // NOT checkpointed (a measured negative result, full bench):
+    // materializing batchCapped/baseCapped for their two consumers
+    // regressed both admit twins ~40-85% at sf0.1 — the eager
+    // materialization costs more than the duplicated O(batch)
+    // derivation it removes (the text_phrase_topk trade).
     val bsz = baseCapped.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val tsz = batchCapped.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     // batch→base candidates on shared informative shingles: bounded by
@@ -1433,7 +1411,7 @@ object Pipeline {
   /** [[dataCard]] with the token-budget columns (kept_tokens,
     * mean_keep_tokens) denominated in TRAINED-TOKENIZER tokens — the
     * datasheet a release ships quotes the budget a trainer will consume
-    * ([[tokenShardsBpe]]'s rationale; round-12 verdict #4). The curation
+    * ([[tokenShardsBpe]]'s rationale). The curation
     * decisions are token-denomination-independent and shared verbatim;
     * only the token join changes, through [[bpeTokenRelation]]. */
   def dataCardBpe(s: SparkSession, dir: String, nMerges: Int = 10): DataFrame =

@@ -32,23 +32,13 @@ object Similarity {
     // Memoized (NORMED VECTOR INDEX): 18 similarity/embedding queries
     // start here; the cast + norm run at scan rate but each consumer
     // otherwise re-reads the embedding parquet and re-norms every row.
+    // the cast and norm are oracle contract
     Tables.memoized("vectors", s, dir) {
-      normify(Tables.embeddings(s, dir).select(col("vec_id"), col("label"), col("embedding")))
+      Tables.embeddings(s, dir).select(col("vec_id"), col("label"), col("embedding"))
+        .withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
+        .drop("embedding")
+        .withColumn("norm", expr("sqrt(graft_dot(v, v))"))
     }
-  }
-
-  /** THE normed-vector projection — one definition, because the cast
-    * and norm are oracle contract: a drifted copy would score new
-    * vectors under a different norm convention than the persisted
-    * index rows. Registers `graft_dot` on the input's OWN session
-    * (which, inside a foreachBatch, is a clone with its own function
-    * registry). */
-  private def normify(emb: DataFrame): DataFrame = {
-    graft.functions.DotProduct.register(emb.sparkSession)
-    emb
-      .withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-      .drop("embedding")
-      .withColumn("norm", expr("sqrt(graft_dot(v, v))"))
   }
 
   private def dot(a: String, b: String): Column = expr(s"graft_dot($a, $b)")
@@ -83,15 +73,8 @@ object Similarity {
     * and the [[topK]] finisher aggregates map-side, so the only shuffled
     * rows are k pairs per query, never the N scored candidates. */
   def bruteForceTopK(s: SparkSession, dir: String,
-                     nQueries: Int = 8, k: Int = 5): DataFrame =
-    bruteForceTopKOver(vectors(s, dir), nQueries, k)
-
-  /** [[bruteForceTopK]] over an arbitrary slice of the vector relation
-    * — the seam the drift gate needs: its ground truth must rank only
-    * the SERVABLE corpus (tombstoned vectors excluded), or legitimate
-    * deletes read as index drift. */
-  private[ops] def bruteForceTopKOver(vs: DataFrame,
-                                      nQueries: Int, k: Int): DataFrame = {
+                     nQueries: Int = 8, k: Int = 5): DataFrame = {
+    val vs = vectors(s, dir)
     val q = vs.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("norm").as("qnorm"))
     topK(vs.join(broadcast(q), col("vec_id") =!= col("query_id"))
@@ -269,15 +252,14 @@ object Similarity {
     * int8 codes (the 64 B/vector scan an int8 tier runs with one SIMD
     * kernel — 4× less bandwidth than float32), stage 2 reranks the
     * shortlist with the exact full-dim cosine — the one
-    * [[fullDimRerank]] every two-stage server here shares. Tombstones
-    * mask the candidate side like every served path
-    * ([[tombstoneCorpusMask]]); stage-1 ordering is pure integer with
-    * id tiebreaks, so the oracle replays both stages bit-for-bit. */
+    * [[fullDimRerank]] every two-stage server here shares. Stage-1
+    * ordering is pure integer with id tiebreaks, so the oracle replays
+    * both stages bit-for-bit. */
   def sq8TopK(s: SparkSession, dir: String, nQueries: Int = 8, k: Int = 5,
               shortlist: Int = 64): DataFrame =
     fullDimRerank(s, dir, sq8Shortlist(s, dir, nQueries, shortlist), nQueries, k)
 
-  /** Stage 1 of [[sq8TopK]] ALONE — the masked int8 scan + bounded
+  /** Stage 1 of [[sq8TopK]] ALONE — the int8 scan + bounded
     * top-`shortlist`, no rerank. Public so SCALECHECK can price the
     * two stages separately; the server composes
     * exactly this with [[fullDimRerank]], so the priced stage IS the
@@ -285,10 +267,9 @@ object Similarity {
   def sq8Shortlist(s: SparkSession, dir: String, nQueries: Int = 8,
                    shortlist: Int = 64): DataFrame = {
     val codes = sq8Codes(s, dir)
-    val corpus = tombstoneCorpusMask(s, dir)(codes)
     val q = codes.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("q8").as("qq"))
-    topK(corpus.join(broadcast(q), col("vec_id") =!= col("query_id"))
+    topK(codes.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         aggregate(zip_with(col("q8"), col("qq"), (a, b) => a * b),
           lit(0L), (acc, e) => acc + e).cast("double").as("cos")), shortlist)
@@ -324,7 +305,7 @@ object Similarity {
   def prefixTopK(s: SparkSession, dir: String, nQueries: Int = 8, k: Int = 5,
                  prefixDims: Int = 32, shortlist: Int = 64): DataFrame =
     prefixTopKOver(s, dir, prefixVectors(s, dir, prefixDims), nQueries, k,
-      shortlist, tombstoneCorpusMask(s, dir))
+      shortlist, identity)
 
   /** [[prefixTopK]] with stage 1 reading the PERSISTED prefix table
     * ([[IndexTables.ensurePrefixIndex]]) — the claim in the in-plan
@@ -340,18 +321,15 @@ object Similarity {
     graft.functions.TopKPairs.register(s)
     prefixTopKOver(s, dir,
       s.table(IndexTables.ensurePrefixIndex(s, dir, prefixDims)),
-      nQueries, k, shortlist, tombstoneCorpusMask(s, dir))
+      nQueries, k, shortlist, identity)
   }
 
   /** The declared TOMBSTONE TWIN of [[prefixTopK]]
-    * (`ann_prefix_deleted`): the two-stage prefix server with the deterministic
-    * delete set `vec_id ≡ 0 mod 7` masked out of the CANDIDATE side,
-    * the declared-oracle replay of "prefix serving after
-    * `deleteFromAnnIndex` of that set" ([[ivfTopKDeleted]]'s pattern,
-    * applied to the prefix family). One shared body
-    * ([[prefixTopKOver]]) means the twin and the served path cannot
-    * drift: AnnTombstoneSpec proves row equality between this and
-    * [[prefixTopK]] after the same physical deletes on a fixture. */
+    * (`ann_prefix_deleted`): the two-stage prefix server with the
+    * deterministic delete set `vec_id ≡ 0 mod 7` masked out of the
+    * CANDIDATE side ([[ivfTopKDeleted]]'s pattern, applied to the
+    * prefix family). One shared body ([[prefixTopKOver]]) means the
+    * masked and the unmasked server cannot drift. */
   def prefixTopKDeleted(s: SparkSession, dir: String, nQueries: Int = 8, k: Int = 5,
                         prefixDims: Int = 32, shortlist: Int = 64,
                         deleteMod: Long = 7): DataFrame = {
@@ -375,10 +353,9 @@ object Similarity {
     * relation — shortlist by prefix cosine, exact full-dim rerank.
     * `corpusMask` filters the NEIGHBOR side before the shortlist is
     * taken (queries are never masked — ivfTopKDeleted's convention):
-    * serving passes the tombstone mask, the declared deleted twin the
-    * explicit mod-set anti-join — one body, so the twin IS the served
-    * path's semantics (a masked-out vector never consumes a shortlist
-    * slot; the top-k refills from survivors). */
+    * serving passes `identity`, the declared deleted twin the explicit
+    * mod-set anti-join — one body, so a masked-out vector never
+    * consumes a shortlist slot and the top-k refills from survivors. */
   private def prefixTopKOver(s: SparkSession, dir: String, pv: DataFrame,
                              nQueries: Int, k: Int, shortlist: Int,
                              corpusMask: DataFrame => DataFrame): DataFrame =
@@ -395,13 +372,12 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"))
   }
 
-  /** Stage 1 of [[prefixTopK]] ALONE — the masked prefix-cosine scan +
+  /** Stage 1 of [[prefixTopK]] ALONE — the prefix-cosine scan +
     * bounded top-`shortlist`, no rerank (SCALECHECK stage pricing;
     * same shared body the server composes). */
   def prefixShortlist(s: SparkSession, dir: String, nQueries: Int = 8,
                       prefixDims: Int = 32, shortlist: Int = 64): DataFrame =
-    prefixShortlistOver(prefixVectors(s, dir, prefixDims), nQueries, shortlist,
-      tombstoneCorpusMask(s, dir))
+    prefixShortlistOver(prefixVectors(s, dir, prefixDims), nQueries, shortlist, identity)
 
   /** Stage 1 of [[prefixTopKIndexed]] ALONE — the shortlist read off
     * the persisted NARROW prefix table (SCALECHECK stage pricing). */
@@ -410,31 +386,8 @@ object Similarity {
     graft.functions.DotProduct.register(s)
     graft.functions.TopKPairs.register(s)
     prefixShortlistOver(s.table(IndexTables.ensurePrefixIndex(s, dir, prefixDims)),
-      nQueries, shortlist, tombstoneCorpusMask(s, dir))
+      nQueries, shortlist, identity)
   }
-
-  /** THE serving-path tombstone mask: current-generation tombstones
-    * anti-joined out
-    * of a candidate relation BEFORE any shortlist is taken — identity
-    * when no tombstone set exists, so clean dirs keep every declared
-    * oracle untouched. EVERY top-k SERVING path applies this at its
-    * candidate stage (in-plan and indexed alike — a deployment's
-    * "which index backs this query" choice must not change which
-    * vectors are deleted): ivf/lsh/prefix/pq/maxsim/filtered/sq8 and
-    * their indexed twins. Deliberately NOT masked: the ground-truth
-    * REPORT scans (bruteForceTopK — recall evaluations compare methods
-    * against it; the drift gate builds its own masked truth) and the
-    * corpus-analysis ops (knn graph, hard negatives, semantic dedup,
-    * moments/PCA, cell stats), whose deletion surface is the store
-    * purge, not the index mask — the takedown audit checks both. */
-  private def servingMask(s: SparkSession, dir: String,
-                          rel: DataFrame, idCol: String): DataFrame =
-    IndexTables.maskTombstonesAt(s, dir,
-      IndexTables.annGeneration(s, dir), rel, idCol)
-
-  private def tombstoneCorpusMask(s: SparkSession, dir: String)
-                                 (rel: DataFrame): DataFrame =
-    servingMask(s, dir, rel, "vec_id")
 
   /** IVF over the PREFIX space — the two scale levers COMPOSED: the
     * stage-1 shortlist scans only the PROBED inverted lists
@@ -465,27 +418,18 @@ object Similarity {
       .select(col("vec_id"), col("pv").as("v"), col("pnorm").as("norm"))
     val cents = pv.filter(col("vec_id") >= 100 && col("vec_id") < 100 + IvfNList)
       .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("norm").as("cnorm"))
-    // tombstones mask the NEIGHBOR assignment before candidates are
-    // drawn (ivfTopKIndexed's convention — a deleted vector never
-    // consumes a shortlist slot); identity on clean dirs
-    val neighbors = IndexTables.maskTombstonesAt(s, dir,
-      IndexTables.annGeneration(s, dir),
-      nearestCentroids(pv, cents, 1, "n"), "n_id")
     ivfSearchWithProbes(
       nearestCentroids(pv.filter(col("vec_id") < nQueries), cents, nprobe, "q"),
-      neighbors, shortlist)
+      nearestCentroids(pv, cents, 1, "n"), shortlist)
       .select(col("query_id"), col("neighbor_id"))
   }
 
   /** Stage 2 of every two-stage prefix server: exact full-dim cosine
     * over a (query_id, neighbor_id) shortlist — hash equi-joins on
-    * plain ids, shortlist·Q rows, one definition. Tombstones are
-    * already masked UPSTREAM, at each server's candidate stage
-    * (see [[tombstoneCorpusMask]] and
-    * [[prefixIvfTopK]]'s neighbor mask) — before the shortlist is
-    * taken, so a deleted vector never consumes a rerank slot and the
-    * top-k refills from survivors, the same semantics as the IVF/PQ
-    * serving paths. */
+    * plain ids, shortlist·Q rows, one definition. A deleted twin
+    * masks its candidates UPSTREAM, before the shortlist is taken
+    * ([[prefixTopKDeleted]]), so a deleted vector never consumes a
+    * rerank slot and the top-k refills from survivors. */
   private def fullDimRerank(s: SparkSession, dir: String, short: DataFrame,
                             nQueries: Int, k: Int): DataFrame = {
     val vs = vectors(s, dir)
@@ -520,20 +464,11 @@ object Similarity {
                     pool: Int = 20, k0: Int = 60): DataFrame = {
     // lexical leg off the persisted postings table — row-identical to
     // the in-plan form (BM25 twin identity, spec-proven), and the
-    // tokenize pass is the index build's cost, not this query's.
-    // MEMBERSHIP CONTRACT: docs ingested after the build
-    // reach this leg via IndexTables.appendToPostingsIndex — a
-    // deployment appends it in the SAME foreachBatch as the ANN
-    // appends (StreamingAnnIngestSpec's pattern), so the two legs see
-    // one corpus; append→serve identity is PostingsIndexSpec-proven
+    // tokenize pass is the index build's cost, not this query's; both
+    // legs read the one corpus at `dir`
     val lex = TextAnalysis.bm25TopKIndexed(s, dir, nQueries, pool)
       .select(col("query_id"), col("doc_id"), col("rk").as("lex_rk"))
-    // vector leg masked at the candidate stage like every served ANN
-    // path (identity on clean dirs — the declared-oracle contract);
-    // ANN tombstones are generation-scoped and cannot cover the
-    // lexical leg: its postings table has no delete path
-    val vec = bruteForceTopKOver(
-        tombstoneCorpusMask(s, dir)(vectors(s, dir)), nQueries, pool)
+    val vec = bruteForceTopK(s, dir, nQueries, pool)
       .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rk").as("vec_rk"))
     rrfFuse(lex, vec, k, k0)
   }
@@ -632,7 +567,7 @@ object Similarity {
     val q = vs.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
               col("norm").as("qnorm"), col("bucket").as("qbucket"))
-    topK(servingMask(s, dir, vs, "vec_id")
+    topK(vs
       .join(broadcast(q), col("bucket") === col("qbucket") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
               (dot("qv", "v") / (col("qnorm") * col("norm"))).as("cos")), k)
@@ -655,7 +590,7 @@ object Similarity {
         col("qbucket"),
         expr("CAST(qbucket ^ 1 AS BIGINT)"), expr("CAST(qbucket ^ 2 AS BIGINT)"),
         expr("CAST(qbucket ^ 4 AS BIGINT)"), expr("CAST(qbucket ^ 8 AS BIGINT)"))))
-    topK(servingMask(s, dir, vs, "vec_id")
+    topK(vs
       .join(broadcast(q), col("bucket") === col("pbucket") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
               (dot("qv", "v") / (col("qnorm") * col("norm"))).as("cos")), k)
@@ -672,8 +607,7 @@ object Similarity {
   def ivfTopK(s: SparkSession, dir: String,
               nQueries: Int = 8, k: Int = 5, nprobe: Int = 2): DataFrame = {
     val vs = vectors(s, dir)
-    ivfSearch(vs, seedCentroids(vs),
-      servingMask(s, dir, seedAssignment(s, dir), "n_id"), nQueries, k, nprobe)
+    ivfSearch(vs, seedCentroids(vs), seedAssignment(s, dir), nQueries, k, nprobe)
   }
 
   /** Inverted-list count of the deterministic seed quantizer — the ONE
@@ -701,7 +635,7 @@ object Similarity {
       // assignment, Lloyd re-assignment, label confusion): a window
       // here shuffled and sorted all N·nlist scored rows, where one
       // argmax per vector is a map-side-combining aggregate shipping
-      // ONE row per vector (review-caught; the same window→bounded-
+      // ONE row per vector (the same window→bounded-
       // aggregate replacement as topK). The (ccos DESC, cent_id ASC)
       // tiebreak is oracle contract — max_by over (ccos, -cent_id)
       // reproduces it exactly.
@@ -735,220 +669,6 @@ object Similarity {
       nearestCentroids(vs, seedCentroids(vs), 1, "n")
     }
 
-  /** Assign NEWLY-INGESTED embeddings under generation `g`'s FROZEN
-    * quantizer (standard IVF serving: the centroid set never moves at
-    * ingest time, only at retrain) — the incremental-maintenance seam
-    * for [[IndexTables.appendToIvfIndex]], whose retry loop resolves
-    * the generation once and encodes under exactly it. `newVecs` is
-    * (vec_id, embedding) in the embeddings-table shape; output matches
-    * the persisted index columns (n_id, list_id, n_v, n_norm). */
-  private[ops] def assignNewAt(s: SparkSession, dir: String, newVecs: DataFrame,
-                               g: Long): DataFrame =
-    // normify registers graft_dot on newVecs' OWN session — inside a
-    // foreachBatch that is a clone whose registry predates any main-
-    // session registration, and the expressions analyze there
-    nearestCentroids(normify(newVecs.select(col("vec_id"), col("embedding"))),
-                     servingCentroidsAt(s, dir, g), 1, "n")
-
-  /** The coarse quantizer of ANN generation `g` — the deterministic
-    * seed set at generation 0 (identical values to [[seedCentroids]],
-    * which is what keeps every oracle row exact), the persisted
-    * retrained centroid table after a
-    * [[IndexTables.rebuildAnnIndexes]] swap. The UNINDEXED twins
-    * (ivfTopK, SemDeDup...) stay seed-based by design: they ARE the
-    * build-from-corpus pipeline, not the served index ([[ivfCellStats]]
-    * is the exception — a balance report prices the
-    * layout being served, so it follows the generation).
-    *
-    * Callers resolve the generation ONCE per operation
-    * ([[IndexTables.annGeneration]]) and derive every relation —
-    * centroids, codebook, both index tables — from that one `g`: a
-    * swap landing mid-construction must never mix generations (gen-0
-    * probes filtering a gen-1 code table silently match nothing). */
-  private[ops] def servingCentroidsAt(s: SparkSession, dir: String, g: Long): DataFrame =
-    if (g == 0L) seedCentroids(vectors(s, dir))
-    else s.table(IndexTables.annCentsName(dir, g))
-
-  /** The PQ codebook of generation `g` — same single-resolution
-    * contract as [[servingCentroidsAt]] (gen 0 = the seed codebook,
-    * value-identical to [[pqCodebook]]). */
-  private[ops] def servingCodebookAt(s: SparkSession, dir: String, g: Long): DataFrame =
-    if (g == 0L) { val subs = pqSubvectors(vectors(s, dir)); pqCodebook(subs) }
-    else s.table(IndexTables.annCwName(dir, g))
-
-  /** Deterministic farthest-point (Gonzalez) seeding over the CURRENT
-    * corpus, cosine geometry — the retrain init. Starting a retrain
-    * from the OLD parameters cannot adapt to a drifted corpus: a
-    * region the old quantizer collapsed into one cell stays one cell
-    * under any number of Lloyd updates (update steps never split a
-    * cell), which is exactly the recall decay a retrain exists to fix.
-    * Farthest-point seeding places the k seeds in the k most mutually
-    * distant regions of the corpus AS IT IS NOW — a drifted cluster
-    * gets a seed by construction — and is RNG-free (anchor = lowest
-    * vec_id; every round's pick breaks ties by vec_id), so a rebuild
-    * is exactly reproducible. Cost: k bounded aggregate passes over N
-    * (k = nlist, small); at 100 TB a deployment trains on a
-    * deterministic sample first (vec_id mod p), the same move FAISS
-    * makes — the seeding is linear either way. Zero-norm vectors
-    * carry no cosine direction and are excluded from TRAINING only
-    * (they still get assigned and served). */
-  private def maxminSeeds(s: SparkSession, curVs: DataFrame, k: Int): DataFrame = {
-    val pool = curVs.filter(col("norm") > 0)
-      .select(col("vec_id"), col("v"), col("norm"))
-    val anchor = pool.orderBy(col("vec_id")).limit(1).collect()
-    require(anchor.nonEmpty, "cannot retrain an empty index")
-    val chosen = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row](anchor(0))
-    while (chosen.size < k) {
-      val seedDf = s.createDataFrame(
-        java.util.Arrays.asList(chosen.toSeq: _*), pool.schema)
-        .select(col("v").as("cv"), col("norm").as("cnorm"))
-      // farthest = the vector whose NEAREST chosen seed is most distant
-      // (min over its max cosine); ties by vec_id ASC. Duplicate picks
-      // (a degenerate all-equal corpus) are tolerated: a repeated seed
-      // just wastes a slot, and the assignment tiebreak is stable.
-      val pick = pool.crossJoin(broadcast(seedDf))
-        .withColumn("ccos", dot("cv", "v") / (col("cnorm") * col("norm")))
-        .groupBy(col("vec_id"))
-        .agg(max(col("ccos")).as("near"),
-             first(col("v")).as("v"), first(col("norm")).as("norm"))
-        .agg(expr("""min_by(named_struct('vec_id', vec_id, 'v', v, 'norm', norm),
-                    |       named_struct('c', near, 't', vec_id))""".stripMargin).as("p"))
-        .select(col("p.vec_id"), col("p.v"), col("p.norm"))
-        .head()
-      chosen += pick
-    }
-    s.createDataFrame(java.util.Arrays.asList(chosen.toSeq: _*), pool.schema)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("norm").as("cnorm"))
-  }
-
-  /** Per-subspace farthest-point codebook seeding (L2 geometry — PQ
-    * encodes by argmin ‖x−c‖², so the init must match). All PqM
-    * subspaces seed simultaneously: each of the k rounds is ONE
-    * aggregate pass over the exploded subvectors picking every
-    * subspace's farthest point at once. Same determinism contract as
-    * [[maxminSeeds]] (anchor = lowest vec_id per subspace, vec_id
-    * tiebreaks, duplicates tolerated). */
-  private def maxminCodebook(s: SparkSession, subs: DataFrame, k: Int): DataFrame = {
-    val anchors = subs.groupBy(col("m"))
-      .agg(expr("min_by(sv, vec_id)").as("cw")).withColumn("code_id", lit(0L))
-      .select(col("m"), col("code_id"), col("cw")).collect()
-    var chosen = anchors.toSeq
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("m",
-        org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("code_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("cw",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType), nullable = false)))
-    (1 until k).foreach { t =>
-      val cwDf = s.createDataFrame(java.util.Arrays.asList(chosen: _*), schema)
-      val picks = subs.join(broadcast(cwDf), Seq("m"))
-        .withColumn("d2", expr(
-          "graft_dot(sv, sv) - 2 * graft_dot(sv, cw) + graft_dot(cw, cw)"))
-        .groupBy(col("m"), col("vec_id"))
-        .agg(min(col("d2")).as("near"), first(col("sv")).as("sv"))
-        .groupBy(col("m"))
-        .agg(expr("""max_by(named_struct('sv', sv),
-                    |       named_struct('d', near, 't', -vec_id))""".stripMargin).as("p"))
-        .select(col("m"), lit(t.toLong).as("code_id"), col("p.sv").as("cw"))
-        .collect()
-      chosen = chosen ++ picks
-    }
-    s.createDataFrame(java.util.Arrays.asList(chosen: _*), schema)
-      .withColumn("cn2", expr("graft_dot(cw, cw)"))
-  }
-
-  /** Rebuild-time inverted-list budget: the
-    * retrained quantizer sizes nlist from the CORPUS IT RETRAINS ON —
-    * ⌈√N⌉, the standard IVF dimensioning (probe cost ∝ N/nlist per
-    * list × nprobe, balanced against nlist centroid scores at √N) —
-    * clamped to [IvfNList, 65536] (the floor keeps degenerate corpora
-    * at the seed layout; the cap is the practical codebook bound
-    * SURVEY §11's O(10⁴-10⁵) deployment figure states). Generation 0
-    * NEVER re-dimensions: the seed quantizer's fixed [[IvfNList]] is
-    * the oracle contract — re-dimensioning happens exactly where
-    * retraining already does, at the staged generation swap, so
-    * generations grow their layout as the corpus grows. */
-  private[ops] def rebuildNList(n: Long): Int =
-    math.min(65536L, math.max(IvfNList.toLong,
-      math.ceil(math.sqrt(n.toDouble)).toLong)).toInt
-
-  /** Deterministic SAMPLED seeding for large k: the top-k vectors in
-    * md5(vec_id) order — one top-k job regardless of k. Farthest-point
-    * ([[maxminSeeds]]) pays one driver round PER SEED, the right trade
-    * at the seed-layout scale (its drift-adaptation quality is what
-    * the rebuild spec pins) but infeasible at the ⌈√N⌉ budget a grown
-    * corpus earns (10⁴ seeds = 10⁴ jobs); a hash-ordered sample is the
-    * standard sampled k-means init, deterministic across runs and
-    * engines, and the quantized-Lloyd step below refines it exactly as
-    * it refines the farthest-point seeds. */
-  private def hashSeeds(curVs: DataFrame, k: Int): DataFrame =
-    curVs.filter(col("norm") > 0)
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(k)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("norm").as("cnorm"))
-
-  /** RETRAIN the coarse quantizer from the index's CURRENT content:
-    * seeds over the live vectors (farthest-point at the seed-layout
-    * scale — the step that lets a drifted cluster earn its own
-    * inverted list; hash-sampled once the ⌈√N⌉ budget outgrows
-    * per-seed driver rounds — [[rebuildNList]]), then one
-    * quantized-Lloyd refinement (assign under the seeds, re-center
-    * each list on the micro-quantized mean of its members — the
-    * engine's one centroid contract). `cur` is the live index
-    * relation (n_id, list_id, n_v, n_norm) — base corpus plus every
-    * appended batch. Lists that attract no members disappear
-    * (standard Lloyd degeneracy; nlist shrinks). */
-  private[ops] def retrainCentroids(s: SparkSession, cur: DataFrame): DataFrame = {
-    val curVs = cur.select(col("n_id").as("vec_id"),
-                           col("n_v").as("v"), col("n_norm").as("norm"))
-    val k = rebuildNList(curVs.count())
-    val seeds =
-      if (k <= 2 * IvfNList) maxminSeeds(s, curVs, k)
-      else hashSeeds(curVs, k)
-    val assigned = nearestCentroids(curVs, seeds, 1, "n")
-    assembleCentroids(
-      quantizedMeans(assigned.select(col("list_id"), col("n_v").as("v")), "list_id"),
-      "list_id")
-      .select(col("list_id").as("cent_id"), col("cv"), col("cnorm"))
-  }
-
-  /** RETRAIN the PQ codebook from the index's current vectors:
-    * per-subspace farthest-point seeding ([[maxminCodebook]]) + one
-    * quantized-Lloyd refinement — encode every current subvector under
-    * the seed codewords, then each (m, code_id) cell's new codeword is
-    * the micro-quantized mean of its members. `curVs` is (vec_id, v,
-    * norm); returns the (m, code_id, cw, cn2) codebook shape. */
-  private[ops] def retrainCodebook(s: SparkSession, curVs: DataFrame): DataFrame = {
-    // checkpoint: the exploded subvectors feed the k seeding rounds,
-    // the encode, and the mean pass — one execution of the explode
-    val subs = pqSubvectors(curVs).localCheckpoint()
-    try {
-      val init = maxminCodebook(s, subs, PqNCodes)
-      val members = subs.join(pqEncode(subs, init), Seq("vec_id", "m"))
-        .select(col("m"), col("code_id"), col("sv").as("v"))
-      assembleCentroids(quantizedMeans(members, Seq("m", "code_id")), Seq("m", "code_id"))
-        .select(col("m"), col("code_id"), col("cv").as("cw"))
-        .withColumn("cn2", expr("graft_dot(cw, cw)"))
-        .localCheckpoint() // sever lineage: subs is unpersisted below
-    } finally Tables.unpersistCheckpoint(subs)
-  }
-
-  /** Re-assign + re-encode the index's current vectors under a NEW
-    * quantizer + codebook — the staged-generation build inside
-    * [[IndexTables.rebuildAnnIndexes]]. Returns (ivf, pq): the new
-    * generation's two table payloads, shaped exactly like the gen-0
-    * builds so consumers can't tell a rebuilt index from a fresh one. */
-  private[ops] def reindexUnder(curVs: DataFrame, newCents: DataFrame,
-                                newCw: DataFrame): (DataFrame, DataFrame) = {
-    val ivf = nearestCentroids(curVs, newCents, 1, "n")
-    val pq = pqEncode(pqSubvectors(curVs), newCw)
-      .join(ivf.select(col("n_id"), col("list_id")), col("vec_id") === col("n_id"))
-      .select(col("n_id"), col("list_id"), col("m"), col("code_id"))
-    (ivf, pq)
-  }
-
   /** [[ivfTopK]] reading the PERSISTED inverted-list table
     * ([[IndexTables.ensureIvfIndex]]) instead of the memoized
     * assignment — the serving shape of an IVF deployment: the
@@ -959,17 +679,10 @@ object Similarity {
     * same driver oracle. */
   def ivfTopKIndexed(s: SparkSession, dir: String,
                      nQueries: Int = 8, k: Int = 5, nprobe: Int = 2): DataFrame = {
-    // ONE generation resolution per query: probes AND the table must
-    // come from the same generation (single-resolution contract)
-    val g = IndexTables.annGeneration(s, dir)
-    val (probes, lists) = probeSelection(s, dir, nQueries, nprobe, g)
-    // deleted vectors are masked at the candidate stage (tombstone
-    // anti-join — identity when the generation has no deletes)
-    val assigned = IndexTables.maskTombstonesAt(s, dir, g,
-      s.table(IndexTables.annIvfTableAt(s, dir, g))
-        .filter(col("list_id").isin(lists: _*))
-        .select(col("n_id"), col("list_id"), col("n_v"), col("n_norm")),
-      "n_id")
+    val (probes, lists) = probeSelection(s, dir, nQueries, nprobe)
+    val assigned = s.table(IndexTables.ensureIvfIndex(s, dir))
+      .filter(col("list_id").isin(lists: _*))
+      .select(col("n_id"), col("list_id"), col("n_v"), col("n_norm"))
     ivfSearchWithProbes(probes, assigned, k)
   }
 
@@ -1012,19 +725,17 @@ object Similarity {
     val nTotal = vs.count()
     def scenario(name: String, pred: Column): DataFrame = {
       val cand = vs.filter(pred)
-      // strategy selection stays on the UNMASKED pass-rate (the
-      // selectivity statistic); the served candidates are masked below
       val brute = cand.count() * 2 <= nTotal
       val ranked =
         if (brute)
-          topK(servingMask(s, dir, cand, "vec_id")
+          topK(cand
             .join(broadcast(q), col("vec_id") =!= col("query_id"))
             .select(col("query_id"), col("vec_id").as("neighbor_id"),
                     (dot("qv", "v") / (col("qnorm") * col("norm"))).as("cos")), k)
         else {
           val probes = nearestCentroids(
             vs.filter(col("vec_id") < nQueries), seedCentroids(vs), nprobe * 2, "q")
-          topK(servingMask(s, dir, seedAssignment(s, dir), "n_id")
+          topK(seedAssignment(s, dir)
             .join(broadcast(probes), Seq("list_id"))
             .filter(col("q_id") =!= col("n_id"))
             .join(cand.select(col("vec_id").as("n_id")), Seq("n_id"), "left_semi")
@@ -1041,18 +752,12 @@ object Similarity {
       .orderBy(col("scenario"), col("query_id"), col("rk"))
   }
 
-  /** Tombstone-masked IVF search — the in-plan TWIN of the deleted
-    * serving path ([[IndexTables.deleteFromAnnIndex]] +
-    * `maskTombstonesAt`): candidates anti-joined against a tombstone
-    * id relation before ranking, exactly the plan shape the persisted
-    * path serves (broadcast anti-join on the id, never a rewrite of
-    * the index). The declared tombstone set is deterministic
-    * (vec_id ≡ 0 mod `deleteMod`) so the oracle replays it; the
-    * persisted path's full lifecycle — idempotent deletes, redelivery
-    * that cannot resurrect, rebuild-as-purge, generation GC of the
-    * mask — mutates shared tables and is therefore spec'd on fixture
-    * dirs (AnnTombstoneSpec), the same oracle/spec split as
-    * ManifestLog. */
+  /** Tombstone-masked IVF search: candidates anti-joined against a
+    * tombstone id relation before ranking (a broadcast anti-join on
+    * the id, never a rewrite of the inverted lists), so a deleted
+    * vector never consumes a top-k slot. The declared tombstone set is
+    * deterministic (vec_id ≡ 0 mod `deleteMod`) so the oracle replays
+    * it. Queries are never masked. */
   def ivfTopKDeleted(s: SparkSession, dir: String,
                      nQueries: Int = 8, k: Int = 5, nprobe: Int = 2,
                      deleteMod: Long = 7): DataFrame = {
@@ -1088,7 +793,7 @@ object Similarity {
     val vs = vectors(s, dir)
     val probes = nearestCentroids(
       vs.filter(col("vec_id") < nQueries), seedCentroids(vs), nprobe, "q")
-    val scored = servingMask(s, dir, seedAssignment(s, dir), "n_id")
+    val scored = seedAssignment(s, dir)
       .join(broadcast(probes), Seq("list_id"))
       .filter(col("q_id") =!= col("n_id"))
       .select(col("q_id").as("query_id"), col("n_id").as("neighbor_id"),
@@ -1133,26 +838,10 @@ object Similarity {
     * 10⁹ vectors and nlist=10⁵ this is the difference between scanning
     * nprobe inverted lists and scanning the corpus. */
   private def probeSelection(s: SparkSession, dir: String,
-                             nQueries: Int, nprobe: Int, g: Long): (DataFrame, Seq[Long]) = {
+                             nQueries: Int, nprobe: Int): (DataFrame, Seq[Long]) = {
     val vs = vectors(s, dir)
-    val cents = servingCentroidsAt(s, dir, g)
-    // FRACTION-PRESERVING probe scaling: nprobe is
-    // calibrated against the seed layout (nprobe of IvfNList lists). A
-    // re-dimensioned generation (rebuildNList: ⌈√N⌉ lists) would
-    // silently shrink the probed fraction from nprobe/8 to
-    // nprobe/nlist — measured recall collapses after the first grown
-    // rebuild, and the drift gate (which probes at production knobs)
-    // would then retrain every cadence without ever recovering it.
-    // Scaling by nlist/IvfNList keeps the probed FRACTION — and with
-    // it the scanned-candidate count (≈ nprobe/IvfNList × N) and the
-    // recall operating point — invariant across re-dimensioning.
-    // Generation 0 IS the seed layout: unscaled, oracle-exact, and no
-    // count job runs. For g ≥ 1 the count is one scan of the tiny
-    // persisted centroid table, inside a path that collects probes
-    // driver-side anyway.
     val probesPlan = nearestCentroids(
-      vs.filter(col("vec_id") < nQueries), cents,
-      effectiveNprobe(nprobe, g, if (g == 0L) 0L else nlistAt(s, dir, g, cents)), "q")
+      vs.filter(col("vec_id") < nQueries), seedCentroids(vs), nprobe, "q")
     val probeRows = probesPlan.collect()
     val probes = s.createDataFrame(
       java.util.Arrays.asList(probeRows: _*), probesPlan.schema)
@@ -1162,42 +851,15 @@ object Similarity {
     (probes, lists)
   }
 
-  /** The ONE probe-count resolution (review-caught: the test seam and
-    * the serving path must compute it identically or pruning
-    * assertions diverge at g ≥ 1): generation 0 is the seed layout —
-    * unscaled, oracle-exact, no count job; a retrained generation
-    * scales by nlist/IvfNList to preserve the probed fraction across
-    * [[rebuildNList]] re-dimensioning. */
-  private def effectiveNprobe(nprobe: Int, g: Long, nlist: Long): Int =
-    if (g == 0L) nprobe
-    else math.max(nprobe.toLong,
-      math.ceil(nprobe.toDouble * nlist / IvfNList).toLong).toInt
-
-  /** Memoized centroid count per (dir, generation). A generation's
-    * centroid table is immutable once its claim flips (write-then-flip,
-    * claims never reused), so the count can never go stale; without the
-    * memo every probe resolution at g ≥ 1 ran a count job over the
-    * centroid table — and paths that consult both the serving side and
-    * the [[probedLists]] seam paid it twice per operation. Gen 0
-    * never reaches here (no count job, by contract).
-    * The map is bounded by rebuild count × index dirs per process. */
-  private val nlistCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]()
-  private def nlistAt(s: SparkSession, dir: String, g: Long, cents: => DataFrame): Long =
-    nlistCache.computeIfAbsent((dir, g), _ => cents.count()).longValue()
-
   /** Test seam: the distinct inverted lists the indexed search probes
     * for a given query set — what the partitioned-scan pruning must
-    * reduce the table read to (IndexTablesSpec). Shares
-    * [[effectiveNprobe]] with the serving path, so it predicts the
-    * REAL probed set at every generation. */
+    * reduce the table read to (IndexTablesSpec). The same probe
+    * assignment as [[probeSelection]], so it predicts the REAL probed
+    * set. */
   private[ops] def probedLists(s: SparkSession, dir: String,
                                nQueries: Int, nprobe: Int): Seq[Long] = {
     val vs = vectors(s, dir)
-    val g = IndexTables.annGeneration(s, dir)
-    val cents = servingCentroidsAt(s, dir, g)
-    nearestCentroids(vs.filter(col("vec_id") < nQueries), cents,
-        effectiveNprobe(nprobe, g, if (g == 0L) 0L else nlistAt(s, dir, g, cents)), "q")
+    nearestCentroids(vs.filter(col("vec_id") < nQueries), seedCentroids(vs), nprobe, "q")
       .select(col("list_id").cast("long")).distinct()
       .collect().map(_.getLong(0)).toSeq.sorted
   }
@@ -1240,9 +902,7 @@ object Similarity {
     val vs = vectors(s, dir)
     val refined = assembleCentroids(centroidUpdate(s, dir), "list_id")
       .select(col("list_id").as("cent_id"), col("cv"), col("cnorm"))
-    ivfSearch(vs, refined,
-      servingMask(s, dir, nearestCentroids(vs, refined, 1, "n"), "n_id"),
-      nQueries, k, nprobe)
+    ivfSearch(vs, refined, nearestCentroids(vs, refined, 1, "n"), nQueries, k, nprobe)
   }
 
   /** IVF inverted-LIST balance report — the pre-flight an ANN
@@ -1259,29 +919,10 @@ object Similarity {
     * contract); the total-count divisor rides the same constant-key
     * broadcast as every in-plan scalar. */
   def ivfCellStats(s: SparkSession, dir: String): DataFrame = {
-    // GENERATION-AWARE: the report prices the
-    // layout the queries actually hit. At generation 0 this is the
-    // in-plan seed assignment under the fixed IvfNList — byte-
-    // identical to the oracle, which hardcodes 8 and says so. After a
-    // rebuild swap it reads the SERVED generation's table + persisted
-    // centroids, and the load-factor divisor is that generation's own
-    // nlist (⌈√N⌉-dimensioned — rebuildNList), so the forecast follows
-    // the re-dimensioned layout instead of describing a quantizer
-    // nobody serves anymore.
-    val g = IndexTables.annGeneration(s, dir)
-    val (assigned, cents, nLists, totalSrc) =
-      if (g == 0L)
-        (seedAssignment(s, dir), seedCentroids(vectors(s, dir)), IvfNList.toLong,
-         vectors(s, dir))
-      else {
-        val c = servingCentroidsAt(s, dir, g)
-        val t = s.table(IndexTables.annIvfTableAt(s, dir, g))
-          .select(col("n_id"), col("list_id"), col("n_v"), col("n_norm"))
-        (t, c, c.count(), t)
-      }
-    val total = totalSrc.agg(count(lit(1)).as("n_total")).withColumn("k", lit(1))
-    assigned
-      .join(broadcast(cents), col("list_id") === col("cent_id"))
+    val vs = vectors(s, dir)
+    val total = vs.agg(count(lit(1)).as("n_total")).withColumn("k", lit(1))
+    seedAssignment(s, dir)
+      .join(broadcast(seedCentroids(vs)), col("list_id") === col("cent_id"))
       .withColumn("cosq",
         floor(dot("cv", "n_v") / (col("cnorm") * col("n_norm")) * 1000000.0).cast("long"))
       .groupBy(col("list_id"))
@@ -1291,7 +932,7 @@ object Similarity {
       .withColumn("k", lit(1))
       .join(broadcast(total), Seq("k"))
       .withColumn("load_factor", Tables.trunc6(
-        col("n_vectors").cast("double") * lit(nLists) / col("n_total")))
+        col("n_vectors").cast("double") * lit(IvfNList.toLong) / col("n_total")))
       .select(col("list_id"), col("n_vectors"), col("mean_cos"), col("load_factor"))
       .orderBy(col("list_id"))
   }
@@ -1340,25 +981,17 @@ object Similarity {
     * floor-div), shared by every centroid computation so the oracle-
     * contract quantization scheme exists exactly once. */
   private def quantizedMeans(rel: DataFrame, key: String): DataFrame =
-    quantizedMeans(rel, Seq(key))
-
-  /** Multi-key form — the PQ codebook retrain groups by (m, code_id);
-    * one definition so the quantization scheme can't fork. */
-  private def quantizedMeans(rel: DataFrame, keys: Seq[String]): DataFrame =
-    rel.select(keys.map(col) :+ posexplode(col("v")).as(Seq("pos", "x")): _*)
-      .select(keys.map(col) ++ Seq(col("pos").cast("long").as("pos"),
-              floor(col("x") * 1000000.0).cast("long").as("xq")): _*)
-      .groupBy((keys.map(col) :+ col("pos")): _*)
+    rel.select(col(key), posexplode(col("v")).as(Seq("pos", "x")))
+      .select(col(key), col("pos").cast("long").as("pos"),
+              floor(col("x") * 1000000.0).cast("long").as("xq"))
+      .groupBy(col(key), col("pos"))
       .agg(count(lit(1)).as("n_members"), sum(col("xq")).as("sum_q"))
       .withColumn("mean", floor(col("sum_q").cast("double") / col("n_members")) / 1000000.0)
 
   /** Reassemble exploded (key, pos, mean) rows into centroid vectors
     * with norms — the other half of the shared centroid contract. */
   private def assembleCentroids(means: DataFrame, key: String): DataFrame =
-    assembleCentroids(means, Seq(key))
-
-  private def assembleCentroids(means: DataFrame, keys: Seq[String]): DataFrame =
-    means.groupBy(keys.map(col): _*)
+    means.groupBy(col(key))
       .agg(expr("transform(array_sort(collect_list(struct(pos, mean))), x -> x.mean)").as("cv"))
       .withColumn("cnorm", expr("sqrt(graft_dot(cv, cv))"))
 
@@ -1456,7 +1089,7 @@ object Similarity {
       .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
       .agg(sum(col("pq")).as("iscore"))
     pqRerank(vs,
-      pqShortlist(servingMask(s, dir, cands, "neighbor_id"), shortlist),
+      pqShortlist(cands, shortlist),
       nQueries, k)
   }
 
@@ -1554,20 +1187,6 @@ object Similarity {
       .select(col("n_id"), col("list_id"), col("m"), col("code_id"))
   }
 
-  /** PQ codes for NEWLY-INGESTED embeddings under generation `g`'s
-    * FROZEN codebook and coarse quantizer (standard IVFPQ serving:
-    * neither moves at ingest time, only at retrain) — the incremental
-    * seam for [[IndexTables.appendToPqIndex]], mirroring
-    * [[assignNewAt]]. */
-  private[ops] def pqCodesForNewAt(s: SparkSession, dir: String, newVecs: DataFrame,
-                                   g: Long): DataFrame = {
-    val newSubs = pqSubvectors(normify(newVecs.select(col("vec_id"), col("embedding"))))
-    pqEncode(newSubs, servingCodebookAt(s, dir, g))
-      .join(assignNewAt(s, dir, newVecs, g).select(col("n_id"), col("list_id")),
-            col("vec_id") === col("n_id"))
-      .select(col("n_id"), col("list_id"), col("m"), col("code_id"))
-  }
-
   /** IVF-PQ with exact refine — the composition a 100 TB ANN service
     * actually serves (the FAISS `IVFPQ + refine` shape): the coarse
     * quantizer prunes the scan to `nprobe` inverted lists, the PQ codes
@@ -1587,38 +1206,24 @@ object Similarity {
                 nQueries: Int = 8, k: Int = 5, nprobe: Int = 2,
                 shortlist: Int = 100): DataFrame = {
     val vs = vectors(s, dir)
-    // ONE generation resolution per query: probes, LUT codebook, code
-    // table and rerank table must all come from the same generation —
-    // a swap between two resolutions would filter a gen-g+1 code table
-    // by gen-g list ids and silently match nothing
-    val g = IndexTables.annGeneration(s, dir)
-    val (probes, lists) = probeSelection(s, dir, nQueries, nprobe, g)
-    // mask deletes at the ADC stage: a tombstoned vector must not
-    // occupy a shortlist slot (masking only at rerank would silently
-    // shrink k). The rerank join below then never sees it either.
-    val codes = IndexTables.maskTombstonesAt(s, dir, g,
-      s.table(IndexTables.annPqTableAt(s, dir, g))
-        .filter(col("list_id").isin(lists: _*))
-        .select(col("n_id"), col("list_id"), col("m"), col("code_id")),
-      "n_id")
-    val lut = pqLut(pqSubvectors(vs), servingCodebookAt(s, dir, g), nQueries)
+    val (probes, lists) = probeSelection(s, dir, nQueries, nprobe)
+    val codes = s.table(IndexTables.ensurePqIndex(s, dir))
+      .filter(col("list_id").isin(lists: _*))
+      .select(col("n_id"), col("list_id"), col("m"), col("code_id"))
+    val subs = pqSubvectors(vs)
+    val lut = pqLut(subs, pqCodebook(subs), nQueries)
     val cands = codes
       .join(broadcast(probes.select(col("q_id").as("query_id"), col("list_id"))), Seq("list_id"))
       .filter(col("n_id") =!= col("query_id"))
       .join(broadcast(lut), Seq("query_id", "m", "code_id"))
       .groupBy(col("query_id"), col("n_id").as("neighbor_id"))
       .agg(sum(col("pq")).as("iscore"))
-    // Rerank vectors come from the persisted IVF INDEX (pruned to the
-    // same probed lists — shortlist members can only live there), NOT
-    // the base embeddings relation: the index is what appendToIvfIndex
-    // maintains, so a vector appended through the PQ+IVF append pair
-    // is end-to-end servable (review-caught — against the base
-    // relation, appended codes ADC-scored into the shortlist and then
-    // silently vanished at the rerank inner join). Same n_v/n_norm
-    // values by construction (the assignment carries the vector), so
-    // the oracle is unchanged; the rerank scan is also partition-
-    // pruned instead of corpus-wide.
-    val nv = s.table(IndexTables.annIvfTableAt(s, dir, g))
+    // Rerank vectors come from the persisted IVF index, pruned to the
+    // same probed lists (shortlist members can only live there): the
+    // same n_v/n_norm values as the base relation (the assignment
+    // carries the vector), read from a partition-pruned scan instead
+    // of a corpus-wide one.
+    val nv = s.table(IndexTables.ensureIvfIndex(s, dir))
       .filter(col("list_id").isin(lists: _*))
       .select(col("n_id").as("neighbor_id"), col("n_v").as("nv"), col("n_norm").as("nnorm"))
     pqRerank(vs, pqShortlist(cands, shortlist), nQueries, k, nv)
@@ -1911,7 +1516,7 @@ object Similarity {
     // analysis time — keep the old contract instead of crashing. The
     // guard runs BEFORE the moment relation: its memoized build is an
     // EAGER corpus scan + checkpoint, and a disabled report must cost
-    // nothing (review-caught)
+    // nothing
     if (k <= 0)
       return s.createDataFrame(Seq.empty[(Long, Long, Double, Long)])
         .toDF("i", "j", "cov", "rk")
@@ -2168,7 +1773,7 @@ object Similarity {
     val d = pcaPower(s, dir).collect().sortBy(_.getLong(0)).map(_.getDouble(1))
     // d·d once on the driver with graft_dot's exact left-to-right fold
     // (== DuckDB's list_dot_product over the same values) — the scan
-    // must not recompute a constant per row (review-caught)
+    // must not recompute a constant per row
     val ddot = d.foldLeft(0.0)((acc, x) => acc + x * x)
     val vs = vectors(s, dir).filter(col("norm") > 0)
     vs.select(col("label"), col("v"), col("norm"))
@@ -2224,7 +1829,7 @@ object Similarity {
     * evidence tail of [[allButTop]] and [[whitenTopK]], factored to
     * ONE definition because the micro-quantized centroid + integer
     * cosine-mean recipe is oracle contract on BOTH declared queries
-    * (review-caught duplication: a quantization tweak applied to one
+    * (a quantization tweak applied to one
     * copy would silently break the other's oracle). Input carries
     * (label, v, norm, residCol, residNormCol); rows at residNorm = 0
     * are excluded from the after-side only. */

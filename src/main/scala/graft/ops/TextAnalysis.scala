@@ -121,16 +121,7 @@ object TextAnalysis {
     * index's row set and the one tokenize+count pass every lexical
     * scorer here shares. */
   private[ops] def unigramPostings(s: SparkSession, dir: String): DataFrame =
-    unigramPostingsOf(Tables.documents(s, dir))
-
-  /** [[unigramPostings]] over an arbitrary (doc_id, text) relation —
-    * the incremental form the postings-index APPEND path tokenizes a
-    * newly-ingested batch with ([[IndexTables.appendToPostingsIndex]]):
-    * one derivation for builds and appends, so the two can never
-    * diverge on tokenization (the same single-definition rule every
-    * signature family here follows — simhashOf, shinglesOf). */
-  private[ops] def unigramPostingsOf(docs: DataFrame): DataFrame =
-    docs
+    Tables.documents(s, dir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .filter(col("term") =!= "")
       .groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("tf"))
@@ -176,14 +167,12 @@ object TextAnalysis {
     * length, bucketed by doc_id), df (per-term document frequency,
     * bucketed by term) and the (n, tl) corpus totals are READ, never
     * re-derived — the probe pays no corpus-sized aggregate. The stat
-    * tables are delta relations maintained by the same append path as
-    * the postings rows ([[IndexTables.appendToPostingsIndex]]);
-    * [[bm25Over]] sums df
+    * tables are built with the postings table, from its rows
+    * ([[IndexTables.postingsIndexTables]]); [[bm25Over]] sums df
     * AFTER the query-term join (query-sized) and the corpus totals
-    * over the handful of delta rows, so incremental segments never
-    * cost a table-wide pass at probe time. Identical rows BY the
-    * shared body; shares `text_bm25_topk`'s oracle text (the
-    * twin-alias contract). */
+    * over the corp rows, so the stats never cost a table-wide pass at
+    * probe time. Identical rows BY the shared body; shares
+    * `text_bm25_topk`'s oracle text (the twin-alias contract). */
   def bm25TopKIndexed(s: SparkSession, dir: String, nQueries: Int = 8, k: Int = 5): DataFrame = {
     val t = IndexTables.postingsIndexTables(s, dir)
     bm25Over(s, s.table(t.postings), s.table(t.dl), s.table(t.df),
@@ -191,11 +180,10 @@ object TextAnalysis {
   }
 
   /** The shared BM25 body. `dl` is one (doc_id, dl) row per document
-    * (the stat tables' append gate guarantees it); `dfr` may carry
-    * DELTA rows per term (incremental segments) — df is summed after
-    * the query-term join, so deltas merge at query cost; `corpDeltas`
-    * is any number of (n, tl) delta rows, totaled here (bounded by
-    * segment count, never corpus size). */
+    * (both callers aggregate it per doc); df is summed per term after
+    * the query-term join, at query cost, and `corpDeltas`' (n, tl)
+    * rows are totaled here — for both callers today that is one row
+    * per term and one corpus row. */
   private def bm25Over(s: SparkSession, posts: DataFrame, dl: DataFrame,
                        dfr: DataFrame, corpDeltas: DataFrame,
                        nQueries: Int, k: Int): DataFrame = {
@@ -209,8 +197,7 @@ object TextAnalysis {
       .select(col("doc_id").as("query_id"), col("term"))
       .localCheckpoint()
     // idf of QUERY terms only — query-sized, broadcastable; the df sum
-    // lands AFTER the join, so a delta-segmented df table merges at
-    // query size (for the in-plan single-row-per-term form the sum is
+    // lands AFTER the join, at query size (with one row per term it is
     // the identity)
     val idf = q.select(col("term")).distinct()
       .join(dfr, Seq("term"))
@@ -248,13 +235,7 @@ object TextAnalysis {
     * position-bearing sibling of [[unigramPostings]]: phrase/adjacency
     * queries need WHERE a term sits, not just how often. */
   private[ops] def positionalPostings(s: SparkSession, dir: String): DataFrame =
-    positionalPostingsOf(Tables.documents(s, dir))
-
-  /** [[positionalPostings]] over an arbitrary (doc_id, text) relation —
-    * the incremental form the positional-index append path uses (one
-    * derivation for builds and appends, like [[unigramPostingsOf]]). */
-  private[ops] def positionalPostingsOf(docs: DataFrame): DataFrame =
-    docs
+    Tables.documents(s, dir)
       .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos0", "term")))
       .filter(col("term") =!= "")
       .select(col("doc_id"), (col("pos0") + lit(1)).cast("long").as("pos"), col("term"))
@@ -509,7 +490,7 @@ object TextAnalysis {
     val docs = Tables.documents(s, dir)
     // corpus total derived IN-PLAN (constant-key 1-row broadcast, the
     // cappedShingles pattern) — the previous docs.count() dispatched an
-    // eager job on every invocation (review-caught)
+    // eager job on every invocation
     val total = docs.agg(count(lit(1)).as("n_docs_total")).withColumn("k", lit(1))
     val toks = docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok")).distinct()

@@ -226,13 +226,9 @@ final class ManifestLog(spark: SparkSession, root: String,
   private def hintFilePath(dir: Path): Path = new Path(dir, "hint")
 
   private def writeHintFile(dir: Path, v: Long): Unit =
-    try {
-      val tmp = new Path(dir, s".tmp-hint-${java.util.UUID.randomUUID()}")
-      val out = fs.create(tmp, true)
-      try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-      fs.delete(hintFilePath(dir), false) // rename-over portability; last-wins race is safe
-      if (!fs.rename(tmp, hintFilePath(dir))) fs.delete(tmp, false)
-    } catch {
+    try Cas.publishOverwrite(fs, spark.sparkContext.hadoopConfiguration,
+      hintFilePath(dir), v.toString.getBytes("UTF-8")) // last-wins race is safe
+    catch {
       // advisory only — and it runs AFTER the manifest published, so a
       // failure here must never make a durable commit look failed (the
       // caller would retry and double-append). Object-store clients

@@ -59,7 +59,10 @@ class PropertySpec extends SparkSuite {
     }, trials = 30)
   }
 
-  test("random append/compact interleavings preserve the multiset exactly once") {
+  // run once per compaction stager: the driver one these tiny sessions
+  // take at the default budget, and the Spark one (`driverReadBytes = 0`)
+  for ((suffix, budget) <- Seq("" -> None, " (Spark stager: driverReadBytes = 0)" -> Some(0L)))
+  test("random append/compact interleavings preserve the multiset exactly once" + suffix) {
     // op schedule: for each step, append k rows then maybe compact
     val genSchedule = Gen.listOfN(5, for {
       k <- Gen.choose(1, 6); doCompact <- Gen.oneOf(true, false)
@@ -69,6 +72,7 @@ class PropertySpec extends SparkSuite {
     check(Prop.forAll(genSchedule) { schedule =>
       caseNo += 1
       val store = new ManifestLog(spark, tempDir("propsched"), targetFileBytes = 2048)
+      budget.foreach(store.driverReadBytes = _)
       var expected = Vector.empty[String]
       var n = 0
       schedule.foreach { case (k, doCompact) =>

@@ -164,29 +164,6 @@ class IndexTablesSpec extends SparkSuite {
     assert(plan.contains(name), s"expected a scan of $name in:\n$plan")
   }
 
-  test("IVF index maintains INCREMENTALLY: new vectors land in their frozen-quantizer lists") {
-    // mutates sf0.01's IVF table only — disjoint from the sf0.001
-    // twin-identity tables and from StreamingNearDupSpec's sf0.01
-    // CHUNK-index mutation, so parallel suites cannot race
-    val dir = "/root/testdata/sf0.01"
-    assume(new java.io.File(s"$dir/embeddings.parquet").isFile)
-    val name = IndexTables.ensureIvfIndex(spark, dir)
-    val before = spark.table(name).count()
-    // the new vector is an exact copy of an existing non-centroid
-    // vector: the frozen quantizer must assign it to its twin's list
-    val twin = graft.ops.Tables.embeddings(spark, dir)
-      .filter(col("vec_id") === 0L).select(col("embedding")).head().getSeq[Float](0)
-    val newId = 900000001L
-    val newDf = spark.createDataFrame(Seq((newId, twin))).toDF("vec_id", "embedding")
-    assert(IndexTables.appendToIvfIndex(spark, dir, newDf) == 1L)
-    val idx = spark.table(name)
-    assert(idx.count() == before + 1)
-    def listOf(id: Long): Long =
-      idx.filter(col("n_id") === id).select(col("list_id").cast("long")).head().getLong(0)
-    assert(listOf(newId) == listOf(0L),
-      "appended twin vector not assigned to its twin's inverted list")
-  }
-
   test("minhash band index: exchange-free self-join, twin identity, incremental append") {
     assume(hasTestData)
     val name = IndexTables.ensureMinhashIndex(spark, sf)
@@ -241,65 +218,6 @@ class IndexTablesSpec extends SparkSuite {
     val partitionsRead = scan.metrics("numPartitions").value
     assert(partitionsRead == expected.size.toLong,
       s"scanned $partitionsRead partitions, expected ${expected.size} (lists $expected)")
-  }
-
-  test("PQ code table maintains INCREMENTALLY: a twin vector gets its twin's codes in its twin's list") {
-    // mutates sf0.01's PQ table only (same isolation note as the IVF
-    // append test above)
-    val dir = "/root/testdata/sf0.01"
-    assume(new java.io.File(s"$dir/embeddings.parquet").isFile)
-    val name = IndexTables.ensurePqIndex(spark, dir)
-    val before = spark.table(name).count()
-    // PqM code rows per vector, one per subspace
-    assert(before == graft.ops.Tables.embeddings(spark, dir).count() * Similarity.PqM)
-    val twin = graft.ops.Tables.embeddings(spark, dir)
-      .filter(col("vec_id") === 1L).select(col("embedding")).head().getSeq[Float](0)
-    val newId = 900000002L
-    val newDf = spark.createDataFrame(Seq((newId, twin))).toDF("vec_id", "embedding")
-    assert(IndexTables.appendToPqIndex(spark, dir, newDf) == 1L)
-    val idx = spark.table(name)
-    assert(idx.count() == before + Similarity.PqM)
-    // the frozen codebook + frozen quantizer must reproduce the twin's
-    // exact (m → code_id) encoding AND its inverted list
-    def codesOf(id: Long): Seq[(Long, Long, Long)] =
-      idx.filter(col("n_id") === id)
-        .select(col("m").cast("long"), col("code_id").cast("long"),
-                col("list_id").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
-    assert(codesOf(newId) == codesOf(1L),
-      "appended twin's codes/list differ from its identical-vector twin")
-    // END-TO-END serving: the PAIRED append (codes + vectors — the
-    // documented IVFPQ ingest contract) must surface the new vector in
-    // SERVED results, not just in the code table: pick a twin source
-    // that lives in a list the default query set actually probes, so
-    // the appended id reaches the ADC scan, the shortlist, AND the
-    // rerank (which reads the IVF index — codes appended alone would
-    // be shortlisted and then dropped at the rerank join)
-    val probed = Similarity.probedLists(spark, dir, nQueries = 8, nprobe = 2).toSet
-    val ivfIdx = spark.table(IndexTables.ensureIvfIndex(spark, dir))
-    val srcId = ivfIdx
-      .filter(col("list_id").cast("long").isin(probed.toSeq: _*) && col("n_id") >= 200L)
-      .select(col("n_id").cast("long")).orderBy(col("n_id")).head().getLong(0)
-    val srcEmb = graft.ops.Tables.embeddings(spark, dir)
-      .filter(col("vec_id") === srcId).select(col("embedding")).head().getSeq[Float](0)
-    val servedId = 900000003L
-    val servedDf = spark.createDataFrame(Seq((servedId, srcEmb))).toDF("vec_id", "embedding")
-    assert(IndexTables.appendToPqIndex(spark, dir, servedDf) == 1L)
-    assert(IndexTables.appendToIvfIndex(spark, dir, servedDf) == 1L)
-    // wide k + shortlist so presence, not rank, is what's asserted
-    val served = Similarity.ivfPqTopK(spark, dir, nQueries = 8, k = 4000, shortlist = 100000)
-      .filter(col("neighbor_id") === servedId || col("neighbor_id") === srcId)
-      .select(col("query_id"), col("neighbor_id"), col("cos"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val byQuery = served.groupBy(_._1)
-    assert(byQuery.nonEmpty, "neither twin served — probe/list selection broken")
-    val twinned = byQuery.values.filter(_.map(_._2).toSet == Set(servedId, srcId))
-    assert(twinned.nonEmpty,
-      s"appended vector never served next to its twin: ${served.toSeq.take(10)}")
-    twinned.foreach { rows =>
-      assert(rows.map(_._3).distinct.length == 1,
-        s"identical twin vectors served with different cosines: ${rows.toSeq}")
-    }
   }
 
   test("index builds are idempotent per catalog (second ensure is a no-op)") {

@@ -99,20 +99,6 @@ class MaintenanceLeaseSpec extends SparkSuite {
     assert(maxActive.get == 1, s"observed ${maxActive.get} concurrent maintenance windows")
   }
 
-  test("index compactionLease: the per-data-dir lease excludes a second process's compaction") {
-    val dir = "/root/testdata/sf0.001"
-    assume(new java.io.File(s"$dir/documents.parquet").isFile)
-    val p1 = graft.ops.IndexTables.compactionLease(spark, dir, "proc-1")
-    val p2 = graft.ops.IndexTables.compactionLease(spark, dir, "proc-2")
-    val out = p1.withLease {
-      assert(!p2.tryAcquire(), "second compactor entered the maintenance window")
-      "compacted"
-    }
-    assert(out.contains("compacted"))
-    assert(p2.tryAcquire(), "lease not handed over after the window closed")
-    p2.release()
-  }
-
   test("two gateways, one manifest root: only the lease owner runs the GC sweep; ownership migrates on close") {
     val root = tempDir("mroot")
     val leaseDir = new Path(root, "_maintenance/gc-sweep")

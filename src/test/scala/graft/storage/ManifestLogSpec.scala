@@ -872,9 +872,17 @@ class ManifestLogSpec extends SparkSuite {
     assert(log2.read("c", "s").count() == 1L)
   }
 
-  test("compact range-clusters by timestamp: cold files cover disjoint time slices (footer-prunable)") {
+  // Each layout test runs twice: at the default budget these tiny
+  // sessions compact through the driver stager (`stageSorted`); with
+  // `driverReadBytes = 0` the same compaction takes the Spark stager
+  // (`stageScan`), so both layouts are held to one contract.
+  private val stagers = Seq("" -> None, " (Spark stager: driverReadBytes = 0)" -> Some(0L))
+
+  for ((suffix, budget) <- stagers)
+  test("compact range-clusters by timestamp: cold files cover disjoint time slices (footer-prunable)" + suffix) {
     val root = tempDir("mlog-cluster")
     val log = new ManifestLog(spark, root, targetFileBytes = 1L)
+    budget.foreach(log.driverReadBytes = _)
     // 40 rows over 40 distinct minutes, appended in SHUFFLED order —
     // clustering must come from compaction, not ingest order
     val rows = new scala.util.Random(7).shuffle((0 until 40).toVector)
@@ -908,8 +916,10 @@ class ManifestLogSpec extends SparkSuite {
     assert(log.read("c", "s").count() == 40L)
   }
 
-  test("compact sizes output files by targetFileBytes") {
+  for ((suffix, budget) <- stagers)
+  test("compact sizes output files by targetFileBytes" + suffix) {
     val log = new ManifestLog(spark, tempDir("mlog"), targetFileBytes = 1L) // 1 file per byte-bucket
+    budget.foreach(log.driverReadBytes = _)
     log.append(batch((1 to 50).map(i => ("2024-01-01T10:00:00Z", "INFO", s"m$i")): _*), "c", "s")
     log.compact("c", "s")
     val (coldFiles, _, _, _) = log.tierStats("c", "s")

@@ -20,15 +20,23 @@ the names in the defining file besides the def itself, and `specs`
 lists the src/test suites that name it (a def only specs reach is
 kept alive by tests alone).
 
+It iterates to a fixed point, so a dead cluster shows up in one run.
+A def is DEAD when nothing in the program names it except its own body
+or the bodies of dead defs: first the defs nothing names at all, then,
+round by round, the defs named only from inside those. Every dead def
+is listed; one found in a later round ends in `reached-by=`, naming the
+dead def(s) that still name it. A def's extent runs from its line to
+the next member of its template (or the template's end), so a name used
+in a val declared after the last def of a template counts against that
+def.
+
 NAME-BASED, not a call graph. Two defs with the same name (overloads,
 or one name in two objects) share their references, so one reached
-def hides an unreached namesake; a def reached only through an
-unreached caller in its own file shows up only once that caller is
-gone. So delete, re-run, and repeat until it finds nothing new; the
-final word is `sbt compile` (main only) after each deletion. Names the
-JVM calls by convention (main, apply, unapply, toString, equals,
-hashCode) and `override` members are never listed. Dev-only tool: the
-shipped library is pure Scala/Spark.
+def hides an unreached namesake. The final word is `sbt compile`
+(main only) after each deletion. Names the JVM calls by convention
+(main, apply, unapply, toString, equals, hashCode) and `override`
+members are never listed. Dev-only tool: the shipped library is pure
+Scala/Spark.
 """
 import os
 import re
@@ -37,6 +45,8 @@ from collections import defaultdict
 
 CONVENTIONAL = {"main", "apply", "unapply", "toString", "equals", "hashCode"}
 DEF_RE = re.compile(r"^(\s*)((?:[a-z]+(?:\[\w+\])?\s+)*)def\s+([A-Za-z_][A-Za-z0-9_]*)")
+MEMBER_RE = re.compile(r"^\s*(?:@\w+(?:\([^)]*\))?\s+)*(?:[a-z]+(?:\[\w+\])?\s+)*"
+                       r"(?:def|val|var|type|object|class|trait)\b")
 TEMPLATE_RE = re.compile(r"\b(object|class|trait)\s+\w+")
 WORD_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
@@ -88,15 +98,27 @@ def strip(text):
 
 
 def member_defs(lines):
-    """(line number, name, modifiers) of every def directly inside an
-    object, class or trait body. Brace tracking is lexical: a `{` opens
-    a template body when an object/class/trait header is pending and
-    no parenthesis is open, anything else opens a block."""
-    stack, pending, parens, found = [], False, 0, []
+    """(line number, name, modifiers, last line) of every def directly
+    inside an object, class or trait body. Brace tracking is lexical: a
+    `{` opens a template body when an object/class/trait header is
+    pending and no parenthesis is open, anything else opens a block. A
+    def's extent ends before the next member of its template (def, val,
+    var, type, object, class or trait) or where its template closes."""
+    stack, pending, parens, found, open_defs = [], False, 0, [], []
+
+    def close(pred, last):
+        for entry in [e for e in open_defs if pred(e[1])]:
+            entry[0][3] = last
+            open_defs.remove(entry)
+
     for no, line in enumerate(lines, 1):
-        m = DEF_RE.match(line)
-        if m and all(stack) and "override" not in m.group(2):
-            found.append((no, m.group(3), m.group(2)))
+        if all(stack) and MEMBER_RE.match(line):
+            depth = len(stack)
+            close(lambda d: d >= depth, no - 1)
+            m = DEF_RE.match(line)
+            if m and "override" not in m.group(2):
+                found.append([no, m.group(3), m.group(2), None])
+                open_defs.append([found[-1], depth])
         if TEMPLATE_RE.search(line) and not line.lstrip().startswith("import"):
             pending = True
         for ch in line:
@@ -110,9 +132,12 @@ def member_defs(lines):
             elif ch == "}":
                 if stack:
                     stack.pop()
+                    depth = len(stack)
+                    close(lambda d: d > depth, no)
             elif ch == "=" and parens == 0:
                 pending = False
-    return found
+    close(lambda d: True, len(lines))
+    return [tuple(d) for d in found]
 
 
 def scala_files(root):
@@ -122,14 +147,17 @@ def scala_files(root):
                 yield os.path.join(d, f)
 
 
-def word_counts(paths):
+def word_lines(paths):
+    """Per file: stripped lines, and name -> line numbers of its uses."""
     per_file = {}
     for p in paths:
-        counts = defaultdict(int)
         with open(p, encoding="utf-8") as fh:
-            for w in WORD_RE.findall(strip(fh.read())):
-                counts[w] += 1
-        per_file[p] = counts
+            lines = strip(fh.read()).split("\n")
+        uses = defaultdict(list)
+        for no, line in enumerate(lines, 1):
+            for w in WORD_RE.findall(line):
+                uses[w].append(no)
+        per_file[p] = (lines, uses)
     return per_file
 
 
@@ -139,31 +167,68 @@ def main(argv):
     main_files = list(scala_files(os.path.join(repo, "src", "main")))
     program = main_files + list(scala_files(os.path.join(repo, "perfbench", "src")))
     tests = list(scala_files(os.path.join(repo, "src", "test")))
-    prog_words, test_words = word_counts(program), word_counts(tests)
+    prog, test_uses = word_lines(program), word_lines(tests)
 
-    hits = []
+    defs = []  # (path, line, name, modifiers, last line)
     for path in main_files:
-        with open(path, encoding="utf-8") as fh:
-            defs = member_defs(strip(fh.read()).split("\n"))
-        own_defs = defaultdict(int)
-        for _, name, _ in defs:
-            own_defs[name] += 1
-        for no, name, mods in defs:
-            if name in CONVENTIONAL:
-                continue
-            outside = sum(c.get(name, 0) for p, c in prog_words.items() if p != path)
-            if outside:
-                continue
-            in_file = prog_words[path].get(name, 0) - own_defs[name]
-            if "private" in mods and in_file > 0:
-                continue
-            specs = sorted(os.path.basename(p)[:-6] for p, c in test_words.items()
-                           if c.get(name, 0))
-            hits.append((os.path.relpath(path, repo), no, name, in_file, specs))
+        defs += [(path,) + d for d in member_defs(prog[path][0])]
+    own_defs = defaultdict(int)
+    for path, _, name, _, _ in defs:
+        own_defs[(path, name)] += 1
 
-    for rel, no, name, in_file, specs in hits:
-        print(f"{rel}:{no}  {name}  in-file={in_file}  specs={','.join(specs) or '-'}")
-    print(f"{len(hits)} unreached")
+    # a def is DEAD when every use of its name lies inside its own
+    # extent or inside a dead def's; iterate to the fixed point
+    decls = defaultdict(list)
+    for path, no, name, _, _ in defs:
+        decls[name].append((path, no))
+    dead = {}  # def -> names of the dead defs that use it
+    spans = defaultdict(list)  # path -> (first, last, name) of dead defs
+
+    def holder(path, no):
+        return next((n for a, b, n in spans[path] if a <= no <= b), None)
+
+    while True:
+        found = {}
+        for d in defs:
+            path, no, name, _, last = d
+            if d in dead or name in CONVENTIONAL:
+                continue
+            uses = [(p, n) for p, (_, u) in prog.items() for n in u.get(name, ())]
+            for decl in decls[name]:
+                uses.remove(decl)
+            via = set()
+            for p, n in uses:
+                if p == path and no <= n <= last:
+                    continue
+                h = holder(p, n)
+                if h is None:
+                    break
+                via.add(h)
+            else:
+                found[d] = sorted(via)
+        if not found:
+            break
+        dead.update(found)
+        for path, no, name, _, last in found:
+            spans[path].append((no, last, name))
+
+    listed = 0
+    for d in defs:
+        path, no, name, mods, _ = d
+        if name in CONVENTIONAL:
+            continue
+        outside = sum(len(u.get(name, ())) for p, (_, u) in prog.items() if p != path)
+        in_file = len(prog[path][1].get(name, ())) - sum(1 for p, _ in decls[name] if p == path)
+        plain = not outside and ("private" not in mods or in_file == 0)
+        if not plain and d not in dead:
+            continue
+        listed += 1
+        specs = sorted(os.path.basename(p)[:-6] for p, (_, u) in test_uses.items()
+                       if u.get(name))
+        line = (f"{os.path.relpath(path, repo)}:{no}  {name}  in-file={in_file}"
+                f"  specs={','.join(specs) or '-'}")
+        print(line + (f"  reached-by={','.join(dead[d])}" if dead.get(d) else ""))
+    print(f"{listed} unreached")
 
 
 if __name__ == "__main__":
